@@ -74,6 +74,24 @@ def _rows(df, limit: int):
     return [r.asDict() for r in df.limit(limit).collect()]
 
 
+def _field_index_spec(spec: str):
+    """``NAME=DIR:WEIGHT`` -> (name, dir, weight), or ValueError. The
+    weight splits off the LAST ':' and only when that suffix is a
+    number, so URI dirs (``s3a://bucket/idx:2.0``) keep their scheme;
+    a spec without a numeric weight is rejected, never defaulted."""
+    name, eq, rest = spec.partition("=")
+    if not eq or not name or not rest:
+        raise ValueError(f"expected NAME=DIR:WEIGHT, got {spec!r}")
+    fdir, colon, fw = rest.rpartition(":")
+    try:
+        weight = float(fw) if colon and fdir else None
+    except ValueError:
+        weight = None
+    if weight is None:
+        raise ValueError(f"missing :WEIGHT after the index dir in {spec!r}")
+    return name, fdir, weight
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="spark_search")
     p.add_argument("--cpus", default=None,
@@ -135,7 +153,7 @@ def main(argv=None) -> int:
     )
     mf.add_argument("--index", required=True, help="content-field index")
     mf.add_argument("--field-index", required=True,
-                    help="NAME=DIR[:WEIGHT] for the second field, "
+                    help="NAME=DIR:WEIGHT for the second field, "
                          "e.g. path=/idx/path:2.0")
     mf.add_argument("--weight", type=float, default=1.0,
                     help="weight of the content field")
@@ -275,6 +293,12 @@ def main(argv=None) -> int:
             normalize_queries(qset)
         except (OSError, ValueError, TypeError) as exc:
             p.error(f"search-many: bad query set: {exc}")
+    field_index = None
+    if args.cmd == "multifield":
+        try:
+            field_index = _field_index_spec(args.field_index)
+        except ValueError as exc:
+            p.error(f"--field-index: {exc}")
     spark = _session(args)
     t0 = time.time()
 
@@ -363,12 +387,10 @@ def main(argv=None) -> int:
     if args.cmd == "multifield":
         from .query import IndexReader, search_multifield
 
-        spec = args.field_index
-        name, rest = spec.split("=", 1)
-        fdir, _, fw = rest.partition(":")
+        name, fdir, fw = field_index
         readers = {
             "content": (rd, float(args.weight)),
-            name: (IndexReader(spark, fdir), float(fw) if fw else 2.0),
+            name: (IndexReader(spark, fdir), fw),
         }
         terms = [t for t in args.terms.split(",") if t]
         res = search_multifield(readers, terms, k=args.k)

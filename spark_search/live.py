@@ -31,26 +31,15 @@ import os
 import time
 from typing import Callable, Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .frames import RESULT_FIELDS, literal_frame
 from .pipeline import EXACT_MATCH
 from .query import IndexReader
 
 ADD = "ADD"
 UPDATE = "UPDATE"
 REMOVE = "REMOVE"
-
-DIFF_SCHEMA = T.StructType(
-    [
-        T.StructField("query", T.StringType()),
-        T.StructField("event", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("rank", T.IntegerType()),
-        T.StructField("old_score", T.DoubleType()),
-        T.StructField("old_rank", T.IntegerType()),
-    ]
-)
 
 _DIFF_FIELDS = [
     ("query", "string"), ("event", "string"), ("doc_id", "long"),
@@ -197,15 +186,13 @@ class LiveResults:
     def results(self, name: str) -> DataFrame:
         """The tracked query's current result snapshot."""
         q = self._state[name]
-        from .query import _rows_literal_df
-
-        return _rows_literal_df(
+        return literal_frame(
             self.spark,
             [
                 (int(r["doc_id"]), float(r["score"]), int(r["rank"]))
                 for r in q["results"]
             ],
-            [("doc_id", "long"), ("score", "double"), ("rank", "int")],
+            RESULT_FIELDS,
         )
 
     def _snapshots_batched(
@@ -315,13 +302,7 @@ class LiveResults:
                 q["results"] = new
                 q["generation"] = d
                 all_rows.extend(rows)
-        from .query import _rows_literal_df
-
-        diff = (
-            _rows_literal_df(self.spark, all_rows, _DIFF_FIELDS)
-            if all_rows
-            else self.spark.createDataFrame([], DIFF_SCHEMA)
-        )
+        diff = literal_frame(self.spark, all_rows, _DIFF_FIELDS)
         # event log BEFORE the snapshot save: persisting the advanced
         # generation first would make a crash in between drop these
         # diffs forever (the restarted refresh would see nothing
@@ -424,12 +405,8 @@ class LiveResults:
         self._recover_log()
         log_dir = self._log_dir()
         if not os.path.isdir(log_dir):
-            schema = T.StructType(
-                DIFF_SCHEMA.fields
-                + [
-                    T.StructField("refresh_ts", T.LongType()),
-                    T.StructField("generation", T.StringType()),
-                ]
+            return literal_frame(
+                self.spark, [],
+                _DIFF_FIELDS + [("refresh_ts", "long"), ("generation", "string")],
             )
-            return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(log_dir)

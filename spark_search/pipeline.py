@@ -28,6 +28,7 @@ from typing import Dict, Iterable, List, Mapping, Union
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .frames import RESULT_FIELDS, literal_frame
 from .tokenizer import tokens_col
 
 K1 = 1.2
@@ -478,7 +479,7 @@ def more_like_this(
             dl=dl,
         )
         rows = ranked.collect()
-        return corpus.sparkSession.createDataFrame(rows, ranked.schema)
+        return literal_frame(corpus.sparkSession, rows, RESULT_FIELDS)
     finally:
         dl.unpersist()
 
@@ -533,9 +534,7 @@ def bm25_prf_topk(
         fb_rows = _bm25_rank(tf0, corpus, int(fb_docs), tokenizer, dl=dl).collect()
         fb_ids = [int(r["doc_id"]) for r in fb_rows]
         if not fb_ids:
-            return corpus.sparkSession.createDataFrame(
-                [], "doc_id long, score double, rank int"
-            )
+            return literal_frame(corpus.sparkSession, [], RESULT_FIELDS)
         cand_terms = (
             tok.where(F.col("doc_id").isin(fb_ids))
             .where(~F.col("term").isin(qterms))
@@ -576,7 +575,7 @@ def bm25_prf_topk(
             )
         ranked = _bm25_rank(tf_final, corpus, k, tokenizer, dl=dl)
         rows = ranked.collect()
-        return corpus.sparkSession.createDataFrame(rows, ranked.schema)
+        return literal_frame(corpus.sparkSession, rows, RESULT_FIELDS)
     finally:
         tf0.unpersist()
         dl.unpersist()
@@ -619,9 +618,7 @@ def bm25_bool_topk(
     )
     require = None
     if len(groups) > 1:
-        from .query import _rows_literal_df  # lazy: query.py imports us
-
-        gmap = _rows_literal_df(
+        gmap = literal_frame(
             corpus.sparkSession,
             [(t, gi) for gi, g in enumerate(groups) for t in g],
             [("term", "string"), ("_gid", "int")],
@@ -943,9 +940,7 @@ def bm25_topk_many(
     # per-query df of a shared term is the same number by definition
     dfreq = doc_freq(tf)
 
-    from .query import _rows_literal_df  # lazy: query.py imports us
-
-    qlit = _rows_literal_df(
+    qlit = literal_frame(
         corpus.sparkSession, pairs,
         [("query_id", "string"), ("qterm", "string")],
     )
@@ -985,7 +980,7 @@ def bm25_topk_many(
         .agg(F.sum("contrib").alias("score"), F.count("*").alias("_nt"))
     )
     if mode == AND_MATCH:
-        need = _rows_literal_df(
+        need = literal_frame(
             corpus.sparkSession,
             [(qid, len(ts)) for qid, ts in qmap.items()],
             [("query_id", "string"), ("_need", "int")],
@@ -1112,13 +1107,11 @@ def snippets(
             .withColumn("first_pos", F.lit(0))
             .withColumn("snippet", F.lit(""))
         )
-    from .query import _rows_literal_df  # lazy: query.py imports us
-
-    lit = _rows_literal_df(
+    lit = literal_frame(
         corpus.sparkSession,
         [(int(r["doc_id"]), float(r["score"]), int(r["rank"]))
          for r in top_rows],
-        [("doc_id", "long"), ("score", "double"), ("rank", "int")],
+        RESULT_FIELDS,
     )
     ids = [int(r["doc_id"]) for r in top_rows]
     rows = (

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .build import IndexPaths, bucket_col
 from .checkpoint import BuildManifest
 from .codec import decode_block, decode_positions
+from .frames import RESULT_FIELDS, literal_frame
 from .pipeline import (
     AND_MATCH,
     B,
@@ -89,15 +90,8 @@ _DELS_CACHE_CAP = 2_000_000
 _DELS_BROADCAST_CAP = 5_000_000
 _DOCLENS_CACHE_CHUNKS = 512
 
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("rank", T.IntegerType()),
-    ]
-)
-
-_RESULT_FIELDS = [("doc_id", "long"), ("score", "double"), ("rank", "int")]
+_DOCS_TERMS_FIELDS = [("doc_id", "long"), ("term", "string"), ("tf", "int")]
+_META_FIELDS = [("term", "string"), ("idf", "double"), ("term_ub", "double")]
 
 _LOCAL_SCHEMA = T.StructType(
     [
@@ -250,29 +244,6 @@ def _levenshtein_within(a: str, b: str, max_dist: int) -> bool:
             return False
         prev = cur
     return prev[lb] <= max_dist
-
-
-def _rows_literal_df(spark: SparkSession, rows, fields) -> DataFrame:
-    """Tiny-result DataFrame built from JVM literals:
-    range(1) -> inline(array(struct...)) — a pure plan, ONE task, no
-    Python-RDD parallelize (plain createDataFrame(list) ships rows
-    through a Python pickle RDD and schedules defaultParallelism
-    Python-worker tasks — measured as the dominant cost of a warm
-    driver-local query). Only ever used for driver-bounded row sets
-    (top-k results, ≤_META_COLLECT_CAP term metadata)."""
-    if not rows:
-        ddl = ", ".join(f"{n} {t}" for n, t in fields)
-        return spark.createDataFrame([], ddl)
-    structs = [
-        F.struct(
-            *[
-                F.lit(v).cast(t).alias(n)
-                for v, (n, t) in zip(row, fields)
-            ]
-        )
-        for row in rows
-    ]
-    return spark.range(1).select(F.inline(F.array(*structs)))
 
 
 class IndexReader:
@@ -670,7 +641,7 @@ class IndexReader:
         if dels is not None and dels.where(
             F.col("doc_id") == doc_id
         ).count():
-            return self.spark.createDataFrame([], "term string, tf int")
+            return self._no_hits(_DOCS_TERMS_FIELDS[1:])
         target = doc_id
 
         @F.pandas_udf("int")
@@ -714,6 +685,11 @@ class IndexReader:
 
     # ------------------------------------------------------------- search
 
+    def _no_hits(self, fields=RESULT_FIELDS) -> DataFrame:
+        """Typed zero-row result — built at the ``return`` that needs
+        it, a zero-job LocalRelation."""
+        return literal_frame(self.spark, [], fields)
+
     def search(
         self,
         terms: Iterable[str],
@@ -756,15 +732,12 @@ class IndexReader:
         qterms = list(dict.fromkeys(terms))
         excl = [t for t in dict.fromkeys(exclude_terms or []) if t]
         n_query_terms = len(qterms)
-        empty = (
-            self.spark.createDataFrame([], RESULT_SCHEMA)
-            if _group is None
-            else self.spark.createDataFrame(
-                [], f"{_group} string, doc_id long, score double, rank int"
-            )
+        out_fields = (
+            RESULT_FIELDS if _group is None
+            else [(_group, "string")] + RESULT_FIELDS
         )
         if not qterms:
-            return empty
+            return self._no_hits(out_fields)
 
         # ---- term metadata. With the cached dictionary the expansion
         # (incl. idf / upper bounds, computed driver-side in python —
@@ -835,15 +808,7 @@ class IndexReader:
                 ).collect()[0]
                 n_matched, buckets = int(info["n"]), sorted(info["buckets"] or [])
         if n_matched == 0 or (mode == AND_MATCH and n_matched < n_query_terms):
-            return empty
-        if meta is None:
-            # bounded-size metadata as a pure-JVM literal plan (broadcast
-            # below) — no Python-RDD parallelize, no metadata scan job
-            meta = _rows_literal_df(
-                self.spark,
-                [(r["term"], r["idf"], r["term_ub"]) for r in head],
-                [("term", "string"), ("idf", "double"), ("term_ub", "double")],
-            )
+            return self._no_hits(out_fields)
 
         if (
             local_max_postings
@@ -860,6 +825,14 @@ class IndexReader:
             )
             if out is not None:
                 return out
+        if meta is None:
+            # bounded-size metadata as a LocalRelation (broadcast below),
+            # built only now that the distributed plan needs it
+            meta = literal_frame(
+                self.spark,
+                [(r["term"], r["idf"], r["term_ub"]) for r in head],
+                _META_FIELDS,
+            )
 
         # postings scan: bucket partition pruning + the original (small)
         # term predicate pushed to parquet; idf/ub arrive via the join
@@ -1030,8 +1003,8 @@ class IndexReader:
             )
         if _scored:
             # full scored match set as a LAZY frame (multifield combine):
-            # no chunk-local cut above, no collect, no literal-plan tail
-            # (a k=n_docs literal inline plan measured seconds of codegen)
+            # no chunk-local cut above, no collect, no literal-frame tail
+            # (literal frames are for driver-bounded rows, not k=n_docs)
             return local.select("doc_id", "score")
         topk = (
             local.orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -1041,7 +1014,7 @@ class IndexReader:
         out = [
             (r["doc_id"], float(r["score"]), i + 1) for i, r in enumerate(topk)
         ]
-        return _rows_literal_df(self.spark, out, _RESULT_FIELDS) if out else empty
+        return literal_frame(self.spark, out, RESULT_FIELDS)
 
     def search_after(
         self,
@@ -1112,21 +1085,19 @@ class IndexReader:
         from .tokenizer import tokens_col
 
         qterms = list(dict.fromkeys(terms))
-        empty = self.spark.createDataFrame(
-            [],
-            "doc_id long, score double, rank int, first_pos long, "
-            "snippet string",
-        )
+        snippet_fields = RESULT_FIELDS + [
+            ("first_pos", "long"), ("snippet", "string"),
+        ]
         if not qterms:
-            return empty
+            return self._no_hits(snippet_fields)
         top_rows = self.search(qterms, mode, k=k).collect()
         if not top_rows:
-            return empty
-        top = _rows_literal_df(
+            return self._no_hits(snippet_fields)
+        top = literal_frame(
             self.spark,
             [(int(r["doc_id"]), float(r["score"]), int(r["rank"]))
              for r in top_rows],
-            _RESULT_FIELDS,
+            RESULT_FIELDS,
         )
         ids = [int(r["doc_id"]) for r in top_rows]
         cand = top.select("doc_id")
@@ -1141,7 +1112,7 @@ class IndexReader:
         if "plists" in self.postings_df().columns:
             meta = self.match_terms(qterms, mode)
             if not meta:
-                return empty
+                return self._no_hits(snippet_fields)
             names = [t for t, _, _, _ in meta]
             buckets = sorted({b for _, _, _, b in meta})
             pl = (
@@ -1277,9 +1248,7 @@ class IndexReader:
         from .pipeline import normalize_queries, topk_per_query
 
         qmap = normalize_queries(queries)
-        empty = self.spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int"
-        )
+        many_fields = [("query_id", "string")] + RESULT_FIELDS
         # Empty terms can never match as exact terms — kept out of the
         # term map but still counted by AND_MATCH's need_map (same as
         # search()'s n_query_terms, which counts every deduped input
@@ -1295,7 +1264,7 @@ class IndexReader:
             if t or keep_empty
         ]
         if not pairs:
-            return empty
+            return self._no_hits(many_fields)
         union_terms = sorted({t for _, t in pairs})
 
         stats = self.stats
@@ -1306,17 +1275,14 @@ class IndexReader:
         expanded_terms: Optional[List[str]] = None
         if expansion is not None and len(expansion) <= _META_COLLECT_CAP:
             if not expansion:
-                return empty
+                return self._no_hits(many_fields)
             rows = []
             for t, df_, mtf_, b_ in expansion:
                 idf = _idf(float(stats.n_docs), float(df_))
                 rows.append((t, idf, _term_ub(idf, mtf_)))
             buckets = sorted({b for _, _, _, b in expansion})
             expanded_terms = [t for t, _, _, _ in expansion]
-            meta = _rows_literal_df(
-                self.spark, rows,
-                [("term", "string"), ("idf", "double"), ("term_ub", "double")],
-            )
+            meta = literal_frame(self.spark, rows, _META_FIELDS)
         elif expansion is not None:
             # cached dictionary, expansion too wide for plan literals:
             # bucket list still bounded driver-side; idf/ub distributed
@@ -1332,7 +1298,7 @@ class IndexReader:
             meta = self._meta_scan_df(pred, stats)
             raw = meta.limit(_META_COLLECT_CAP + 1).collect()
             if not raw:
-                return empty
+                return self._no_hits(many_fields)
             if len(raw) <= _META_COLLECT_CAP:
                 rows = []
                 for r in raw:
@@ -1340,11 +1306,7 @@ class IndexReader:
                     rows.append((r["term"], idf, _term_ub(idf, int(r["max_tf"]))))
                 buckets = sorted({int(r["bucket"]) for r in raw})
                 expanded_terms = [r["term"] for r in raw]
-                meta = _rows_literal_df(
-                    self.spark, rows,
-                    [("term", "string"), ("idf", "double"),
-                     ("term_ub", "double")],
-                )
+                meta = literal_frame(self.spark, rows, _META_FIELDS)
             else:
                 info = meta.agg(
                     F.collect_set("bucket").alias("buckets")
@@ -1390,7 +1352,7 @@ class IndexReader:
             # wide-prefix fallback: expand (query_id, term) distributed
             # via a broadcast prefix map; postings rows duplicate per
             # query using them
-            qlit = _rows_literal_df(
+            qlit = literal_frame(
                 self.spark, pairs,
                 [("query_id", "string"), ("qterm", "string")],
             )
@@ -1624,7 +1586,6 @@ class IndexReader:
         Accumulation order and arithmetic match score_chunk exactly.
         Returns None (caller falls back to the distributed plan) if the
         touched-chunk count would exceed the driver-memory gate."""
-        empty = self.spark.createDataFrame([], RESULT_SCHEMA)
         idf_by_term = {r["term"]: float(r["idf"]) for r in head}
         rows = (
             self.postings_df()
@@ -1634,7 +1595,7 @@ class IndexReader:
             .collect()
         )
         if not rows:
-            return empty
+            return self._no_hits()
         chunks = sorted({int(r["chunk"]) for r in rows})
         if len(chunks) > _LOCAL_MAX_CHUNKS:
             return None
@@ -1690,7 +1651,7 @@ class IndexReader:
                 out_ids.append((hit + base).astype(np.int64))
                 out_scores.append(scores[hit])
         if not out_ids:
-            return empty
+            return self._no_hits()
         ids = np.concatenate(out_ids)
         sc = np.concatenate(out_scores)
         # top-k with (score desc, doc_id asc): lexsort is stable
@@ -1699,7 +1660,7 @@ class IndexReader:
             (int(ids[i]), float(sc[i]), rank + 1)
             for rank, i in enumerate(order)
         ]
-        return _rows_literal_df(self.spark, out, _RESULT_FIELDS)
+        return literal_frame(self.spark, out, RESULT_FIELDS)
 
     def _bootstrap_theta(self, post: DataFrame, k: int) -> float:
         """Decode the single most-promising chunk driver-side and return
@@ -1822,9 +1783,8 @@ class IndexReader:
         up front. Volume is Σ (chunk vocab of the touched chunks),
         independent of how many target docs share a chunk."""
         ids = sorted({int(d) for d in doc_ids})
-        empty = self.spark.createDataFrame([], "doc_id long, term string, tf int")
         if not ids:
-            return empty
+            return self._no_hits(_DOCS_TERMS_FIELDS)
         dels = self.deletes_df()
         if dels is not None:
             gone = {
@@ -1833,14 +1793,15 @@ class IndexReader:
             }
             ids = [d for d in ids if d not in gone]
             if not ids:
-                return empty
+                return self._no_hits(_DOCS_TERMS_FIELDS)
         span = self.chunk_span
         by_chunk: Dict[int, list] = {}
         for d in ids:
             by_chunk.setdefault(d // span, []).append(d)
-        bounds = self.spark.createDataFrame(
+        bounds = literal_frame(
+            self.spark,
             [(c, min(v), max(v)) for c, v in by_chunk.items()],
-            "chunk long, _lo long, _hi long",
+            [("chunk", "long"), ("_lo", "long"), ("_hi", "long")],
         )
         post = (
             self.postings_df()
@@ -1914,7 +1875,7 @@ class IndexReader:
         ]
         groups = [g for g in groups if g]
         if not groups:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return self._no_hits()
         all_terms = list(dict.fromkeys(t for g in groups for t in g))
         require = (
             [self.match_docs(g, EXACT_MATCH) for g in groups]
@@ -1957,13 +1918,12 @@ class IndexReader:
         contract: dictionary df counts tombstoned docs until
         ``compact()``, like every dictionary-driven path."""
         qterms = [t for t in dict.fromkeys(terms) if t]
-        empty = self.spark.createDataFrame([], RESULT_SCHEMA)
         if not qterms:
-            return empty
+            return self._no_hits()
         fb = self.search(qterms, WITH_SUGGESTIONS, k=int(fb_docs)).collect()
         fb_ids = [int(r["doc_id"]) for r in fb]
         if not fb_ids:
-            return empty
+            return self._no_hits()
         cand = (
             self.docs_terms(fb_ids)
             .where(~F.col("term").isin(qterms))
@@ -2022,10 +1982,9 @@ class IndexReader:
         counts tombstoned docs until ``compact()`` — identical to every
         other dictionary-driven path (match_terms docstring)."""
         src = int(doc_id)
-        empty = self.spark.createDataFrame([], RESULT_SCHEMA)
         rows = self.doc_terms(src).collect()
         if not rows:
-            return empty
+            return self._no_hits()
         meta = self.match_terms([r["term"] for r in rows], EXACT_MATCH)
         dfm = {t: d for t, d, _, _ in meta}
         n = float(self.stats.n_docs)
@@ -2040,7 +1999,7 @@ class IndexReader:
         )
         sel = [t for _, t in wts[: int(m_terms)]]
         if not sel:
-            return empty
+            return self._no_hits()
         if doc_filter is None:
             # single-doc exclusion fast path (round 5): filtering ONE
             # doc through the generic registry-filter channel forces an
@@ -2052,13 +2011,13 @@ class IndexReader:
             # 1.32 → ~0.9 s warm at sf0.1.
             rows = self.search(sel, WITH_SUGGESTIONS, k=k + 1).collect()
             keep = [r for r in rows if int(r["doc_id"]) != src][:k]
-            return _rows_literal_df(
+            return literal_frame(
                 self.spark,
                 [
                     (int(r["doc_id"]), float(r["score"]), i + 1)
                     for i, r in enumerate(keep)
                 ],
-                _RESULT_FIELDS,
+                RESULT_FIELDS,
             )
         flt = (
             F.expr(doc_filter) if isinstance(doc_filter, str) else doc_filter
@@ -2079,12 +2038,11 @@ class IndexReader:
         query term (countDistinct over matched terms); tombstoned docs
         are anti-joined out. Volume is Σ df(term), never corpus size."""
         qterms = list(dict.fromkeys(terms))
-        empty = self.spark.createDataFrame([], "doc_id long")
         expansion = self.match_terms(qterms, mode)
         if not expansion:
-            return empty
+            return self._no_hits([("doc_id", "long")])
         if mode == AND_MATCH and len(expansion) < len(qterms):
-            return empty
+            return self._no_hits([("doc_id", "long")])
         buckets = sorted({b for _, _, _, b in expansion})
         names = [t for t, _, _, _ in expansion]
         post = (
@@ -2254,9 +2212,8 @@ class IndexReader:
         expansion = self._dict_expand(uniq, EXACT_MATCH)
         if expansion is None:
             return None
-        empty = self.spark.createDataFrame([], RESULT_SCHEMA)
         if len(expansion) < len(uniq):
-            return empty  # a term absent from the index: no AND match
+            return self._no_hits()  # a term absent from the index: no AND match
         # Gate on what the collect actually materializes. Unlike
         # _search_local (blocks only, bytes ~ Σ df), this path pulls
         # POSITION lists: a term contributes up to tf positions per
@@ -2282,7 +2239,7 @@ class IndexReader:
             .collect()
         )
         if not rows:
-            return empty
+            return self._no_hits()
         docs_by_term: Dict[str, List[np.ndarray]] = {}
         for r in rows:
             acc = docs_by_term.setdefault(r["term"], [])
@@ -2297,7 +2254,7 @@ class IndexReader:
         for t in uniq:
             got = docs_by_term.get(t)
             if not got:
-                return empty
+                return self._no_hits()
             ids = np.unique(np.concatenate(got)) if len(got) > 1 else got[0]
             cand = (
                 ids
@@ -2305,12 +2262,12 @@ class IndexReader:
                 else np.intersect1d(cand, ids, assume_unique=True)
             )
             if cand.size == 0:
-                return empty
+                return self._no_hits()
         if dels:
             tomb = np.concatenate(list(dels.values()))
             cand = cand[~np.isin(cand, tomb)]
             if cand.size == 0:
-                return empty
+                return self._no_hits()
         # positions per (candidate doc, term); cand is sorted, so
         # membership is a searchsorted probe per plists entry
         pos_map: Dict[Tuple[int, str], List[np.ndarray]] = {}
@@ -2346,7 +2303,7 @@ class IndexReader:
                 out_ids.append(d)
                 out_tfs.append(int(starts.size))
         if not out_ids:
-            return empty
+            return self._no_hits()
         return self._phrase_finish_local(
             np.asarray(out_ids, dtype=np.int64),
             np.asarray(out_tfs, dtype=np.float64),
@@ -2381,7 +2338,7 @@ class IndexReader:
             (int(ids[i]), float(sc[i]), rank + 1)
             for rank, i in enumerate(order)
         ]
-        return _rows_literal_df(self.spark, out, _RESULT_FIELDS)
+        return literal_frame(self.spark, out, RESULT_FIELDS)
 
     def search_phrase(
         self,
@@ -2426,9 +2383,8 @@ class IndexReader:
         )
 
         phrase = [t for t in phrase if t]
-        empty = self.spark.createDataFrame([], RESULT_SCHEMA)
         if not phrase:
-            return empty
+            return self._no_hits()
         positional = (
             self.has_positions if use_positions is None else bool(use_positions)
         )
@@ -2475,7 +2431,7 @@ class IndexReader:
             head = tf.limit(local_max_postings + 1).collect()
             if len(head) <= local_max_postings:
                 if not head:
-                    return empty
+                    return self._no_hits()
                 out = self._phrase_finish_local(
                     np.asarray([r["doc_id"] for r in head], dtype=np.int64),
                     np.asarray([r["tf"] for r in head], dtype=np.float64),
@@ -2525,7 +2481,7 @@ class IndexReader:
             (r["doc_id"], float(r["score"]), i + 1)
             for i, r in enumerate(scored)
         ]
-        return _rows_literal_df(self.spark, out, _RESULT_FIELDS) if out else empty
+        return literal_frame(self.spark, out, RESULT_FIELDS)
 
     # ----------------------------------------------------- verification
 
@@ -2634,13 +2590,13 @@ def search_multifield(
     qterms = [t for t in dict.fromkeys(terms) if t]
     if not qterms or not field_readers:
         spark = next(iter(field_readers.values()))[0].spark if field_readers else None
-        return spark.createDataFrame([], RESULT_SCHEMA) if spark else None
+        return literal_frame(spark, [], RESULT_FIELDS) if spark else None
     parts = []
     for fld in sorted(field_readers):
         rd, w = field_readers[fld]
         # full match-set ranking: k = n_docs with the driver-local
-        # fast path OFF — at full k that path would compile the whole
-        # match set into a literal plan (measured seconds of planning);
+        # fast path OFF — at full k that path would collect the whole
+        # match set and render it as one literal frame;
         # the distributed scorer streams the same rows instead
         full = rd.search(
             qterms,

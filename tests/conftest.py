@@ -35,3 +35,29 @@ def fixture_corpus(spark):
     df = with_doc_ids(reference_fixture_corpus(spark)).cache()
     df.count()
     return df
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> (fn's result, number of Spark jobs fn ran).
+    fn runs under a fresh ``search_group`` job group; the status store
+    is fed asynchronously, so the count is read once no job is active
+    and the listener has had time to catch up."""
+    import itertools
+    import time
+
+    from spark_search.query import search_group
+
+    tracker = spark.sparkContext.statusTracker()
+    tags = itertools.count()
+
+    def run(fn):
+        with search_group(spark, f"jobs-of-{id(run)}-{next(tags)}") as group:
+            out = fn()
+        deadline = time.time() + 10
+        while time.time() < deadline and tracker.getActiveJobsIds():
+            time.sleep(0.05)
+        time.sleep(0.5)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run

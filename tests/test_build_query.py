@@ -165,6 +165,30 @@ def test_local_fast_path_matches_distributed(synth_index):
             assert lr["score"] == pytest.approx(dr["score"], rel=1e-12)
 
 
+def test_local_path_job_counts(synth_index, jobs_of):
+    """On a warm reader (dictionary, doclens and tombstones cached) a
+    driver-local search costs exactly its postings scan; the result
+    frame, the skipped metadata frame and every empty result are
+    zero-job local relations."""
+    terms = ["import", "return"]
+    synth_index.search(terms, P.WITH_SUGGESTIONS, k=10).collect()  # warm
+    assert synth_index._dict_expand(terms, P.WITH_SUGGESTIONS) is not None
+    rows, n_jobs = jobs_of(
+        lambda: synth_index.search(terms, P.WITH_SUGGESTIONS, k=10).collect()
+    )
+    assert len(rows) == 10 and n_jobs == 1
+    rows, n_jobs = jobs_of(
+        lambda: synth_index.search([], P.EXACT_MATCH, k=10).collect()
+    )
+    assert rows == [] and n_jobs == 0
+    rows, n_jobs = jobs_of(
+        lambda: synth_index.search(
+            ["nosuchterm", "zzqq"], P.WITH_SUGGESTIONS, k=10
+        ).collect()
+    )
+    assert rows == [] and n_jobs == 0
+
+
 def test_random_word_property(synth_index, synth):
     """∀ token t of doc d: d ∈ match_set(t) — the reference's e2e
     property (SearchEngineAppTest.java:55-102), 30 sampled words."""

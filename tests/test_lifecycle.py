@@ -147,3 +147,73 @@ def test_build_progress_events_and_stage_metrics(spark, fixture_corpus, tmp_path
         assert rec.get("bytes", 0) > 0, name
     assert m.stages["docs"]["rows"] == 4
     assert m.stages["terms"]["rows"] > 0
+
+
+def _record_threads(monkeypatch):
+    """Patch pyspark.InheritableThread so the build's docs-branch
+    thread can be inspected after build_index returns or raises."""
+    import pyspark
+
+    started = []
+
+    class Recorded(pyspark.InheritableThread):
+        def start(self):
+            started.append(self)
+            super().start()
+
+    monkeypatch.setattr(pyspark, "InheritableThread", Recorded)
+    return started
+
+
+def test_failed_postings_stage_joins_docs_thread(
+    spark, fixture_corpus, tmp_path, monkeypatch
+):
+    """A postings-stage failure must not return while the concurrent
+    docs branch is still writing into the index dir, and a clean
+    rebuild into the same dir must then succeed."""
+    import spark_search.build as B
+
+    started = _record_threads(monkeypatch)
+
+    def boom(block_size):
+        raise RuntimeError("forced postings failure")
+
+    monkeypatch.setattr(B, "_encode_udf", boom)
+    d = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError, match="forced postings failure"):
+        build_index(spark, fixture_corpus, d, num_buckets=4, chunk_span=8)
+    assert len(started) == 1
+    assert not started[0].is_alive()
+    assert BuildManifest.load(d) is None
+
+    monkeypatch.undo()
+    abort_build(d)
+    build_index(spark, fixture_corpus, d, num_buckets=4, chunk_span=8)
+    got = IndexReader(spark, d).search(["mila"], P.EXACT_MATCH, k=10).collect()
+    assert [r["doc_id"] for r in got] == [4, 3]
+
+
+def test_failed_build_chains_docs_branch_error(
+    spark, fixture_corpus, tmp_path, monkeypatch
+):
+    """When both branches fail, the postings error is raised with the
+    docs branch's error chained as its cause, not dropped."""
+    import spark_search.build as B
+
+    started = _record_threads(monkeypatch)
+
+    def docs_boom(df):
+        raise ValueError("forced docs failure")
+
+    def postings_boom(block_size):
+        raise RuntimeError("forced postings failure")
+
+    monkeypatch.setattr(B, "with_content_hash", docs_boom)
+    monkeypatch.setattr(B, "_encode_udf", postings_boom)
+    with pytest.raises(RuntimeError) as info:
+        build_index(
+            spark, fixture_corpus, str(tmp_path / "idx"),
+            num_buckets=4, chunk_span=8,
+        )
+    assert isinstance(info.value.__cause__, ValueError)
+    assert not started[0].is_alive()
