@@ -436,7 +436,10 @@ def more_like_this(
     persists (shared by stats and the scoring join). The final ≤ ``k``
     ranked rows are collected (parameter-bounded) so the dl frame
     releases before returning; the result is a local-relation frame
-    with the standard (doc_id, score, rank) schema."""
+    with the standard (doc_id, score, rank) schema.
+
+    Runs eagerly: both passes execute when this function is called,
+    not when the returned frame is consumed."""
     src = int(src_doc_id)
     corpus = _floor(corpus)
     tok = tokens(corpus, tokenizer)
@@ -1093,7 +1096,11 @@ def snippets(
     still streamed every content row through the join probe. Tokenize
     + posexplode run over only those k rows, the min(pos) agg sees at
     most k groups, and the window slice is a per-row codegen
-    expression. Cost = bm25_topk + a k-row-group scan."""
+    expression. Cost = bm25_topk + a k-row-group scan.
+
+    Runs eagerly: the bm25_topk pass executes (and is collected) when
+    this function is called; the returned frame's highlight pass is
+    still lazy."""
     qterms = list(dict.fromkeys(terms))
     top_rows = bm25_topk(
         corpus, qterms, mode=mode, k=k, tokenizer=tokenizer

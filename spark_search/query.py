@@ -9,8 +9,26 @@ with the north-star BM25 ranking the reference lacks.
 Query lifecycle (SURVEY.md §3.1 Spark plan):
 
   1. term-dictionary lookup (tiny: df, max_tf per query term; prefix
-     queries expand to the matching dictionary range) -> driver
+     queries expand to the matching dictionary range) -> driver. Zero
+     jobs from the cached dictionary; otherwise ONE filtered terms/
+     scan with no shuffle, merged across segments on the driver.
   2. idf + upper bounds computed driver-side (a few floats)
+
+  When Σ df ≤ ``_LOCAL_MAX_POSTINGS`` (2^20) and the matched rows touch
+  ≤ ``_LOCAL_MAX_CHUNKS`` chunks, the rest runs on the driver: one
+  postings scan collects the matched blocks, each (chunk, term) row
+  decodes in one batched pass (``codec.decode_blocks``) and scores in
+  numpy. A warm query then costs 1 job with the cached dictionary and
+  2 without it (lookup, postings scan), none of them shuffling. Only
+  larger queries take the distributed plan below. Measured crossover
+  on serve_scale (270k docs, 17 chunks, 4 cores; raw ms, identical
+  top-k):
+
+      Σ df    local      distributed unpruned   distributed pruned
+      82k     268-363    784-941                -
+      282k    559        1411                   2080
+      563k    660        1440                   2140
+
   3. bootstrap threshold θ: the single most-promising chunk is decoded
      driver-side; θ = its k-th best score.  θ is broadcast as the
      block-max pruning bar — chunks whose summed term upper bounds
@@ -44,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .build import IndexPaths, bucket_col
 from .checkpoint import BuildManifest
-from .codec import decode_block, decode_positions
+from .codec import decode_block, decode_blocks, decode_positions
 from .frames import RESULT_FIELDS, literal_frame
 from .pipeline import (
     AND_MATCH,
@@ -63,14 +81,19 @@ _META_COLLECT_CAP = 1024
 # skip the θ-bootstrap jobs when fewer matched postings than this —
 # pruning can't win back its own cost below it
 _PRUNE_MIN_POSTINGS = 200_000
-# small-query fast path: when the dictionary lookup proves the total
-# matched postings (Σ df) and touched chunk count are bounded, the
-# matched posting rows are collected and scored driver-side in numpy —
-# no shuffle, no Python-worker stage, 2 short scan jobs total. Hot
-# terms at corpus scale exceed the gate and keep the distributed path.
-# 64k postings × ~16 B and 64 doclen chunks × 64 KiB ≈ 5 MB driver max.
-_LOCAL_MAX_POSTINGS = 65_536
+# driver-local path: when the term lookup proves the total matched
+# postings (Σ df) and touched chunk count are bounded, the matched
+# posting rows are collected and scored driver-side in numpy — no
+# shuffle, no Python-worker stage, one postings scan job. It beat the
+# distributed plan (pruned or not) at every Σ df measured up to 563k
+# (module docstring); queries past the gate stay distributed.
+# 1M postings × ~3 B of varint bytes + 16 B decoded, and 64 doclen
+# chunks × 64 KiB, stay within ~25 MB of driver memory.
+_LOCAL_MAX_POSTINGS = 1 << 20
 _LOCAL_MAX_CHUNKS = 64
+# search_phrase's local gate: its collect holds per-(term, doc) plists
+# rows, not blocks, so it keeps the smaller bound
+_PHRASE_LOCAL_MAX_POSTINGS = 65_536
 # driver-side cap on COLLECTED PHRASE POSITIONS (Σ df·max_tf over the
 # phrase's terms): ~4 M int32 positions ≈ tens of MB of Row overhead,
 # the same order of driver memory the _search_local gates allow
@@ -78,8 +101,8 @@ _LOCAL_MAX_POSITIONS = 4_000_000
 # driver-side caches (all hard-gated so a 10^12-file index never tries
 # to pull cluster-scale state onto the driver):
 #   * term dictionary — cached iff vocab ≤ cap (~25 MB). A warm exact/
-#     prefix lookup then costs ZERO Spark jobs instead of a terms scan
-#     + groupBy shuffle per query.
+#     prefix lookup then costs ZERO Spark jobs instead of one terms
+#     scan per query.
 #   * doclens — per-chunk int32 arrays, LRU-bounded (~512 × span×4 B).
 #   * deletes — chunk → sorted doc_id arrays iff |deletes| ≤ cap.
 # Caches never go stale: maintain/compact/streaming always publish NEW
@@ -212,6 +235,22 @@ def _score_np(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.nd
 
 def _idf(n_docs: float, df: float) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _merge_segments(rows) -> Dict[str, List[int]]:
+    """term -> [df, max_tf, bucket] from per-segment terms/ rows: df
+    sums and max_tf maxes across the segments a term appears in. df
+    counts tombstoned docs until compact() — the standard Lucene-style
+    staleness, exact again after segment merge."""
+    agg: Dict[str, List[int]] = {}
+    for r in rows:
+        cur = agg.get(r["term"])
+        if cur is None:
+            agg[r["term"]] = [int(r["df"]), int(r["max_tf"]), int(r["bucket"])]
+        else:
+            cur[0] += int(r["df"])
+            cur[1] = max(cur[1], int(r["max_tf"]))
+    return agg
 
 
 def _levenshtein_within(a: str, b: str, max_dist: int) -> bool:
@@ -484,16 +523,7 @@ class IndexReader:
                 if len(rows) > _DICT_CACHE_CAP:
                     self._dict_state = -1
                 else:
-                    agg: Dict[str, List[int]] = {}
-                    for r in rows:  # sum df / max tf across segments
-                        cur = agg.get(r["term"])
-                        if cur is None:
-                            agg[r["term"]] = [
-                                int(r["df"]), int(r["max_tf"]), int(r["bucket"])
-                            ]
-                        else:
-                            cur[0] += int(r["df"])
-                            cur[1] = max(cur[1], int(r["max_tf"]))
+                    agg = _merge_segments(rows)
                     self._dict = agg
                     self._dict_terms = sorted(agg)
                     self._dict_state = 1
@@ -527,6 +557,42 @@ class IndexReader:
         else:
             matched = [t for t in qterms if t in d]
         return [(t, d[t][0], d[t][1], d[t][2]) for t in matched]
+
+    def _expand(
+        self, qterms: List[str], mode: str, cap: Optional[int] = None
+    ) -> Optional[List[Tuple[str, int, int, int]]]:
+        """The query's term expansion [(term, df, max_tf, bucket)]: zero
+        jobs from the cached dictionary, else ONE filtered terms/ scan —
+        no groupBy, so no shuffle: the per-segment rows are merged on
+        the driver with the dictionary cache's own arithmetic
+        (``_merge_segments``), in ``_dict_expand``'s order.
+
+        Exact/OR/AND scans are bounded by |qterms| × segments and
+        collect whole. With a ``cap``, a prefix/contains scan is
+        limited to (cap+1) × segments rows: a term sits at most once
+        per segment, so reaching that limit proves more than ``cap``
+        distinct terms, and None is returned (the caller keeps that
+        expansion distributed, ``_meta_scan_df``)."""
+        cached = self._dict_expand(qterms, mode)
+        if cached is not None:
+            return cached
+        # same predicate helper the postings scan pushes — the two
+        # must never diverge (metadata lookup and scan see one filter)
+        t = self.terms_df().where(_term_predicate(qterms, mode))
+        if "bucket" not in t.columns:  # pre-v2 index layout
+            t = t.withColumn("bucket", bucket_col(F.col("term"), self.num_buckets))
+        sel = t.select("term", "df", "max_tf", "bucket")
+        wide = mode in (START_WITH, CONTAINS_MATCH)
+        if wide and cap is not None:
+            limit = (cap + 1) * len(self.segments)
+            rows = sel.limit(limit).collect()
+            if len(rows) >= limit:
+                return None
+        else:
+            rows = sel.collect()
+        agg = _merge_segments(rows)
+        matched = sorted(agg) if wide else [q for q in qterms if q in agg]
+        return [(t, *agg[t]) for t in matched]
 
     def _doclens_for(self, chunks: List[int]) -> Dict[int, np.ndarray]:
         """chunk -> float64 dl array, LRU-cached (bounded driver memory;
@@ -598,34 +664,13 @@ class IndexReader:
         """Expand the query against the term dictionary ->
         [(term, df, max_tf, bucket)]. Exact modes are an IN-list point
         lookup; START_WITH is the Q2 prefix range scan (terms/ files are
-        term-sorted, so parquet min/max stats prune row groups)."""
+        term-sorted, so parquet min/max stats prune row groups). Zero
+        jobs from the cached dictionary, else one shuffle-free scan;
+        df sums across segments (``_merge_segments``)."""
         qterms = list(dict.fromkeys(terms))
         if not qterms:
             return []
-        cached = self._dict_expand(qterms, mode)
-        if cached is not None:
-            return cached
-        # same predicate helper the postings scan pushes — the two
-        # must never diverge (metadata lookup and scan see one filter)
-        t = self.terms_df().where(_term_predicate(qterms, mode))
-        if "bucket" not in t.columns:  # pre-v2 index layout
-            t = t.withColumn("bucket", bucket_col(F.col("term"), self.num_buckets))
-        # sum across segments (a term may appear in several); df counts
-        # tombstoned docs until compact() — the standard Lucene-style
-        # staleness, exact again after segment merge
-        rows = (
-            t.groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.max("max_tf").alias("max_tf"),
-                F.first("bucket").alias("bucket"),
-            )
-            .collect()
-        )
-        return [
-            (r["term"], int(r["df"]), int(r["max_tf"]), int(r["bucket"]))
-            for r in rows
-        ]
+        return self._expand(qterms, mode)
 
     def doc_terms(self, doc_id: int) -> DataFrame:
         """(term, tf) of one document — the O3 reverse lookup (the
@@ -713,9 +758,10 @@ class IndexReader:
         Resolved through the index itself (match-set anti-join, volume
         Σ df over the excluded terms); composes with ``doc_filter``.
 
-        ``local_max_postings`` gates the driver-side small-query fast
-        path (0/None disables it; the distributed plan is always the
-        fallback and produces identical results).
+        ``local_max_postings`` gates the driver-local path on the
+        query's matched postings Σ df (default 2^20; 0/None disables
+        it; the distributed plan is always the fallback and produces
+        identical results).
 
         ``doc_filter`` (Column or SQL-expression string over the doc
         REGISTRY columns: repo, path, commit, lang) scopes the result
@@ -739,21 +785,23 @@ class IndexReader:
         if not qterms:
             return self._no_hits(out_fields)
 
-        # ---- term metadata. With the cached dictionary the expansion
-        # (incl. idf / upper bounds, computed driver-side in python —
-        # the SAME floats both the local fast path and the distributed
-        # scorer consume) costs zero jobs. Past the vocab cache gate, a
-        # prefix query can expand to millions of dictionary terms at
-        # corpus scale; their idf/ub must never become driver-side
-        # literals — only the *bucket list* (bounded by num_buckets)
-        # and two counters are ever collected on that path.
+        # ---- term metadata. The expansion costs zero jobs with the
+        # cached dictionary and one shuffle-free terms scan without it
+        # (``_expand``); idf / upper bounds are then computed
+        # driver-side in python — the SAME floats both the local path
+        # and the distributed scorer consume. A prefix query can expand
+        # to millions of dictionary terms at corpus scale; their idf/ub
+        # must never become driver-side literals — past the cap only
+        # the *bucket list* (bounded by num_buckets) and two counters
+        # are ever collected.
         stats = self.stats
         pred = _term_predicate(qterms, mode)
         cap = _META_COLLECT_CAP
         meta: Optional[DataFrame] = None
-        expansion = self._dict_expand(qterms, mode)
+        head: List[dict] = []
+        total_df: Optional[int] = None
+        expansion = self._expand(qterms, mode, cap)
         if expansion is not None and len(expansion) <= cap:
-            head: List[dict] = []
             for t, df_, mtf_, b_ in expansion:
                 idf = _idf(float(stats.n_docs), float(df_))
                 head.append(
@@ -762,51 +810,25 @@ class IndexReader:
                         "idf": idf, "term_ub": _term_ub(idf, mtf_),
                     }
                 )
-            n_matched = len(head)
-            buckets = sorted({int(r["bucket"]) for r in head})
-            total_df = sum(int(r["df"]) for r in head)
-        elif expansion is not None:
-            # dictionary cached but the expansion is too wide to carry
-            # as plan literals: keep the driver-side gating counters
-            # (total_df IS in hand — it gates the theta bootstrap and
-            # the local fast path for free), compute per-term idf/ub
-            # distributed (scan + expressions)
-            head = []
+        if expansion is not None:
+            # an expansion too wide for plan literals still keeps the
+            # driver-side gating counters (total_df gates the θ
+            # bootstrap and the local path for free); its per-term
+            # idf/ub are computed distributed (scan + expressions)
             n_matched = len(expansion)
             buckets = sorted({b for _, _, _, b in expansion})
             total_df = sum(df_ for _, df_, _, _ in expansion)
-            meta = self._meta_scan_df(pred, stats)
+            if len(expansion) > cap:
+                meta = self._meta_scan_df(pred, stats)
         else:
+            # a prefix/contains expansion proven wider than the cap:
+            # fully distributed metadata, never collected
             meta = self._meta_scan_df(pred, stats)
-            # Collect the expansion in ONE job when it is small; use the
-            # total matched-postings count to decide whether block-max
-            # pruning (whose θ bootstrap costs extra jobs) will pay for
-            # itself. Expansions past the cap keep the fully-distributed
-            # path (metadata never collected).
-            raw = meta.limit(cap + 1).collect()
-            total_df = None
-            head = []
-            if len(raw) <= cap:
-                for r in raw:
-                    idf = _idf(float(stats.n_docs), float(r["df"]))
-                    head.append(
-                        {
-                            "term": r["term"], "df": int(r["df"]),
-                            "max_tf": int(r["max_tf"]),
-                            "bucket": int(r["bucket"]), "idf": idf,
-                            "term_ub": _term_ub(idf, int(r["max_tf"])),
-                        }
-                    )
-                n_matched = len(head)
-                buckets = sorted({int(r["bucket"]) for r in head})
-                total_df = sum(int(r["df"]) for r in head)
-                meta = None
-            else:
-                info = meta.agg(
-                    F.count("*").alias("n"),
-                    F.collect_set("bucket").alias("buckets"),
-                ).collect()[0]
-                n_matched, buckets = int(info["n"]), sorted(info["buckets"] or [])
+            info = meta.agg(
+                F.count("*").alias("n"),
+                F.collect_set("bucket").alias("buckets"),
+            ).collect()[0]
+            n_matched, buckets = int(info["n"]), sorted(info["buckets"] or [])
         if n_matched == 0 or (mode == AND_MATCH and n_matched < n_query_terms):
             return self._no_hits(out_fields)
 
@@ -817,7 +839,6 @@ class IndexReader:
             and not _require_docs
             and not _scored
             and head  # wide expansions carry counters but no metadata
-            and total_df is not None
             and total_df <= local_max_postings
         ):
             out = self._search_local(
@@ -932,19 +953,22 @@ class IndexReader:
             for i in range(len(pdf)):
                 t_idf = float(pdf["idf"].iloc[i])
                 rest = total_ub - float(ubs[i])
-                for blk in pdf["blocks"].iloc[i]:
-                    if theta > 0.0:
-                        blk_ub = _term_ub(t_idf, int(blk["max_tf"]))
-                        if blk_ub + rest <= theta:
-                            continue  # block-max skip
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]), bytes(blk["deltas"]), bytes(blk["tfs"])
-                    )
-                    pos = doc_ids - base
-                    scores[pos] += _score_np(
-                        tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                    )
-                    counts[pos] += 1
+                blocks = pdf["blocks"].iloc[i]
+                if theta > 0.0:
+                    # block-max skip
+                    blocks = [
+                        b for b in blocks
+                        if _term_ub(t_idf, int(b["max_tf"])) + rest > theta
+                    ]
+                # one batched decode and one scatter-add per (chunk,
+                # term): a term's positions are unique, so this adds
+                # each posting once, exactly as a per-block loop would
+                doc_ids, tfs = decode_blocks(blocks)
+                pos = doc_ids - base
+                scores[pos] += _score_np(
+                    tfs.astype(np.float64), dls[pos], t_idf, avgdl
+                )
+                counts[pos] += 1
             dels_val = pdf["_dels"].iloc[0]
             if dels_val is not None and len(dels_val):
                 dp = np.asarray(dels_val, dtype=np.int64) - base
@@ -1080,7 +1104,11 @@ class IndexReader:
         (semi-join before any varint decode); the window-text read goes
         through a literal ``doc_id IN (...)`` predicate pushed to the
         corpus parquet scan (row-group pruning — round 5, the
-        pipeline.snippets mirror). Corpus content is never shuffled."""
+        pipeline.snippets mirror). Corpus content is never shuffled.
+
+        Runs eagerly: the top-k search executes (and is collected)
+        when this method is called; the returned frame's highlight
+        pass is still lazy."""
         from .pipeline import _match_filter
         from .tokenizer import tokens_col
 
@@ -1269,9 +1297,12 @@ class IndexReader:
 
         stats = self.stats
         pred = _term_predicate(union_terms, mode)
-        expansion = self._dict_expand(union_terms, mode)
-        meta: Optional[DataFrame] = None
-        buckets: Optional[List[int]] = None
+        # same expansion as search(): collected in zero or one
+        # shuffle-free job when small, so the idf/ub floats are the
+        # SAME driver-computed values (Python math.log) search() uses
+        # (bit-identical contract); wider expansions keep idf
+        # distributed and collect only the bounded bucket list
+        expansion = self._expand(union_terms, mode, _META_COLLECT_CAP)
         expanded_terms: Optional[List[str]] = None
         if expansion is not None and len(expansion) <= _META_COLLECT_CAP:
             if not expansion:
@@ -1283,30 +1314,10 @@ class IndexReader:
             buckets = sorted({b for _, _, _, b in expansion})
             expanded_terms = [t for t, _, _, _ in expansion]
             meta = literal_frame(self.spark, rows, _META_FIELDS)
-        elif expansion is not None:
-            # cached dictionary, expansion too wide for plan literals:
-            # bucket list still bounded driver-side; idf/ub distributed
-            buckets = sorted({b for _, _, _, b in expansion})
-            meta = self._meta_scan_df(pred, stats)
         else:
-            # no cached dictionary: same two-tier bootstrap as search()
-            # — collect the expansion in ONE job when it is small so the
-            # idf/ub floats are the SAME driver-computed values (Python
-            # math.log) search() would use (bit-identical contract);
-            # wider expansions keep idf distributed and collect only the
-            # bounded bucket list
             meta = self._meta_scan_df(pred, stats)
-            raw = meta.limit(_META_COLLECT_CAP + 1).collect()
-            if not raw:
-                return self._no_hits(many_fields)
-            if len(raw) <= _META_COLLECT_CAP:
-                rows = []
-                for r in raw:
-                    idf = _idf(float(stats.n_docs), float(r["df"]))
-                    rows.append((r["term"], idf, _term_ub(idf, int(r["max_tf"]))))
-                buckets = sorted({int(r["bucket"]) for r in raw})
-                expanded_terms = [r["term"] for r in raw]
-                meta = literal_frame(self.spark, rows, _META_FIELDS)
+            if expansion is not None:
+                buckets = sorted({b for _, _, _, b in expansion})
             else:
                 info = meta.agg(
                     F.collect_set("bucket").alias("buckets")
@@ -1480,23 +1491,11 @@ class IndexReader:
                 if not qids:
                     continue
                 t_idf = float(pdf["idf"].iloc[i])
-                pos_parts: List[np.ndarray] = []
-                contrib_parts: List[np.ndarray] = []
-                for blk in pdf["blocks"].iloc[i]:
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]), bytes(blk["deltas"]),
-                        bytes(blk["tfs"]),
-                    )
-                    pos = doc_ids - base
-                    pos_parts.append(pos)
-                    contrib_parts.append(
-                        _score_np(tfs.astype(np.float64), dls[pos], t_idf, avgdl)
-                    )
+                doc_ids, tfs = decode_blocks(pdf["blocks"].iloc[i])
+                pos = doc_ids - base
                 ti = len(decoded)
                 decoded.append(
-                    (np.concatenate(pos_parts), np.concatenate(contrib_parts))
-                    if len(pos_parts) != 1
-                    else (pos_parts[0], contrib_parts[0])
+                    (pos, _score_np(tfs.astype(np.float64), dls[pos], t_idf, avgdl))
                 )
                 for qid in qids:
                     terms_by_q.setdefault(qid, []).append(ti)
@@ -1540,16 +1539,12 @@ class IndexReader:
             )
             for i in range(len(pdf)):
                 t_idf = float(pdf["idf"].iloc[i])
-                for blk in pdf["blocks"].iloc[i]:
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]), bytes(blk["deltas"]),
-                        bytes(blk["tfs"]),
-                    )
-                    pos = doc_ids - base
-                    scores[pos] += _score_np(
-                        tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                    )
-                    counts[pos] += 1
+                doc_ids, tfs = decode_blocks(pdf["blocks"].iloc[i])
+                pos = doc_ids - base
+                scores[pos] += _score_np(
+                    tfs.astype(np.float64), dls[pos], t_idf, avgdl
+                )
+                counts[pos] += 1
             out = _finish_query(
                 qid, scores, counts, pdf["_dels"].iloc[0],
                 pdf["_allow"].iloc[0] if has_allow else None, base,
@@ -1579,10 +1574,12 @@ class IndexReader:
         k: int,
         n_query_terms: int,
     ) -> Optional[DataFrame]:
-        """Small-query fast path: score the (proven-small) matched
-        postings driver-side. Two scan jobs — postings rows with the
-        term predicate + bucket pruning pushed to parquet, then the
-        doclen chunks those rows touch — and pure numpy after that.
+        """Driver-local path: score the matched postings (Σ df within
+        ``_LOCAL_MAX_POSTINGS``) driver-side. One postings scan job
+        (term predicate + bucket pruning pushed to parquet), plus a
+        doclens scan for chunks not yet cached, and pure numpy after
+        that: each (chunk, term) row decodes in one batched pass
+        (``decode_blocks``) and scatter-adds once.
         Accumulation order and arithmetic match score_chunk exactly.
         Returns None (caller falls back to the distributed plan) if the
         touched-chunk count would exceed the driver-memory gate."""
@@ -1625,20 +1622,16 @@ class IndexReader:
             scores = np.zeros(dls.size, dtype=np.float64)
             counts = np.zeros(dls.size, dtype=np.int32)
             base = chunk * span
-            # sorted by term: deterministic float accumulation order
+            # sorted by term: deterministic float accumulation order;
+            # one batched decode and one scatter-add per (chunk, term)
             for r in sorted(by_chunk[chunk], key=lambda x: x["term"]):
-                t_idf = idf_by_term[r["term"]]
-                for blk in r["blocks"]:
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]),
-                        bytes(blk["deltas"]),
-                        bytes(blk["tfs"]),
-                    )
-                    pos = doc_ids - base
-                    scores[pos] += _score_np(
-                        tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                    )
-                    counts[pos] += 1
+                doc_ids, tfs = decode_blocks(r["blocks"])
+                pos = doc_ids - base
+                scores[pos] += _score_np(
+                    tfs.astype(np.float64), dls[pos],
+                    idf_by_term[r["term"]], avgdl,
+                )
+                counts[pos] += 1
             dels = dels_by_chunk.get(chunk)
             if dels is not None and dels.size:
                 dp = dels - base
@@ -1698,15 +1691,12 @@ class IndexReader:
                     dp = np.asarray(drow[0]["_dels"], dtype=np.int64) - base
                     deleted = dp[(dp >= 0) & (dp < dls.size)]
         for r in rows:
-            t_idf = float(r["idf"])
-            for blk in r["blocks"]:
-                doc_ids, tfs = decode_block(
-                    int(blk["first_doc"]), bytes(blk["deltas"]), bytes(blk["tfs"])
-                )
-                pos = doc_ids - base
-                scores[pos] += _score_np(
-                    tfs.astype(np.float64), dls[pos], t_idf, self.stats.avgdl
-                )
+            doc_ids, tfs = decode_blocks(r["blocks"])
+            pos = doc_ids - base
+            scores[pos] += _score_np(
+                tfs.astype(np.float64), dls[pos], float(r["idf"]),
+                self.stats.avgdl,
+            )
         if deleted.size:
             scores[deleted] = 0.0  # a tombstone must not inflate θ
         hit = scores[scores > 0]
@@ -1980,7 +1970,11 @@ class IndexReader:
         ``doc_filter`` (registry columns) ANDs with the exclusion.
         Staleness contract: after deletes, df from the dictionary
         counts tombstoned docs until ``compact()`` — identical to every
-        other dictionary-driven path (match_terms docstring)."""
+        other dictionary-driven path (match_terms docstring).
+
+        Runs eagerly: the term lookup and the weights pass execute when
+        this method is called; the returned frame is the final
+        :meth:`search`'s."""
         src = int(doc_id)
         rows = self.doc_terms(src).collect()
         if not rows:
@@ -2057,14 +2051,9 @@ class IndexReader:
                 terms_out: List[str] = []
                 ids_out: List[np.ndarray] = []
                 for t, blocks in zip(pdf["term"], pdf["blocks"]):
-                    for blk in blocks:
-                        ids, _ = decode_block(
-                            int(blk["first_doc"]),
-                            bytes(blk["deltas"]),
-                            bytes(blk["tfs"]),
-                        )
-                        ids_out.append(ids)
-                        terms_out.extend([t] * ids.size)
+                    ids, _ = decode_blocks(blocks)
+                    ids_out.append(ids)
+                    terms_out.extend([t] * ids.size)
                 if ids_out:
                     yield pd.DataFrame(
                         {
@@ -2242,14 +2231,9 @@ class IndexReader:
             return self._no_hits()
         docs_by_term: Dict[str, List[np.ndarray]] = {}
         for r in rows:
-            acc = docs_by_term.setdefault(r["term"], [])
-            for blk in r["blocks"]:
-                ids, _ = decode_block(
-                    int(blk["first_doc"]),
-                    bytes(blk["deltas"]),
-                    bytes(blk["tfs"]),
-                )
-                acc.append(ids)
+            docs_by_term.setdefault(r["term"], []).append(
+                decode_blocks(r["blocks"])[0]
+            )
         cand: Optional[np.ndarray] = None
         for t in uniq:
             got = docs_by_term.get(t)
@@ -2346,7 +2330,7 @@ class IndexReader:
         corpus: Optional[DataFrame] = None,
         k: int = 10,
         use_positions: Optional[bool] = None,
-        local_max_postings: Optional[int] = _LOCAL_MAX_POSTINGS,
+        local_max_postings: Optional[int] = _PHRASE_LOCAL_MAX_POSTINGS,
         doc_filter=None,
     ) -> DataFrame:
         """Index-accelerated exact-phrase BM25. The index prunes to docs
@@ -2495,8 +2479,15 @@ class IndexReader:
         """Q5 analog (reference SimpleSearchManager.java:187-214): join
         the top-k back to the source table, re-check the per-row
         content sha256 invariant (BASELINE input_hint), and recompute
-        match rows/positions by re-tokenizing content."""
-        res = self.search(terms, mode, k)
+        match rows/positions by re-tokenizing content.
+
+        Runs eagerly: the top-k search executes (and is collected)
+        when this method is called, not when the returned frame is
+        consumed. Its ≤ k collected rows feed both the literal
+        ``doc_id IN`` pushdown and the joined result, so the search
+        runs once."""
+        top_rows = self.search(terms, mode, k).collect()
+        res = literal_frame(self.spark, top_rows, RESULT_FIELDS)
         docs = self.docs_df().select("doc_id", "content_sha256")
         qterms = list(dict.fromkeys(terms))
 
@@ -2531,12 +2522,12 @@ class IndexReader:
         )(_positions)
 
         # literal doc_id IN pushdown for the content re-read (round 5,
-        # the snippets pattern): res is k-bounded, so the id list is a
-        # driver literal and the corpus scan row-group-prunes
-        ids = [int(r["doc_id"]) for r in res.select("doc_id").collect()]
-        src = corpus.select("doc_id", "repo", "path", "content")
-        if ids:
-            src = src.where(F.col("doc_id").isin(ids))
+        # the snippets pattern): the top-k is k-bounded, so the id list
+        # is a driver literal and the corpus scan row-group-prunes
+        ids = [int(r["doc_id"]) for r in top_rows]
+        src = corpus.select("doc_id", "repo", "path", "content").where(
+            F.col("doc_id").isin(ids)
+        )
         joined = (
             F.broadcast(res).join(src, "doc_id")
             .join(docs, "doc_id")

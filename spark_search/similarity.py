@@ -28,6 +28,9 @@ DuckDB oracle (list_dot_product-based) matches to ~1e-15.
 
 from __future__ import annotations
 
+import hashlib
+import weakref
+from collections import OrderedDict
 from typing import List
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -79,31 +82,68 @@ def _with_norm(emb: DataFrame, d: "int | None" = None) -> DataFrame:
 # / hybrid entry point needs (vec_id, v:double[], norm) — recomputing
 # the cast + norm per query re-scans the embeddings table each time
 # (clustering already persists its unit frame, clustering.py). Keyed by
-# (session id, DataFrame semanticHash) so textually different reads of
-# the same logical plan share one persisted frame; bounded LRU — the
-# oldest entry is unpersisted when a 5th distinct embeddings frame
-# appears. The cache holds the FLOORED layout (persist bakes the
-# parallelism floor in, the bench-corpus pattern).
-_NORM_CACHE: "dict[tuple[int, int], tuple[DataFrame, int | None]]" = {}
+# (session id, DataFrame semanticHash, input-file fingerprint) so
+# textually different reads of the same logical plan share one
+# persisted frame, while a re-read of a parquet dir whose files were
+# replaced (same plan, new files) misses and evicts the stale frame.
+# Bounded LRU: a hit moves to the end, and the least recently used
+# entry is unpersisted when a 5th distinct embeddings frame appears. Entries of a stopped or collected session
+# are dropped (a new session may reuse the old one's id). The cache
+# holds the FLOORED layout (persist bakes the parallelism floor in,
+# the bench-corpus pattern).
+_NORM_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
 _NORM_CACHE_MAX = 4
 
 
+def invalidate_norm_cache() -> None:
+    """Unpersist and forget every cached normalized embeddings frame —
+    for callers that rewrite embeddings in place in a way the
+    input-file fingerprint cannot see."""
+    while _NORM_CACHE:
+        _unpersist(_NORM_CACHE.popitem()[1])
+
+
+def _unpersist(entry) -> None:
+    frame, _d, session_ref = entry
+    if _session_alive(session_ref()):
+        frame.unpersist()
+
+
+def _session_alive(session) -> bool:
+    return session is not None and session.sparkContext._jsc is not None
+
+
+def _drop_dead_sessions() -> None:
+    for key in [k for k, v in _NORM_CACHE.items() if not _session_alive(v[2]())]:
+        del _NORM_CACHE[key]
+
+
 def _norm_cached(emb: DataFrame) -> "tuple[DataFrame, int | None]":
+    _drop_dead_sessions()
+    session = emb.sparkSession
     try:
-        key = (id(emb.sparkSession), emb.semanticHash())
+        files = hashlib.sha256(
+            "\n".join(sorted(emb.inputFiles())).encode()
+        ).hexdigest()
+        key = (id(session), emb.semanticHash(), files)
     except Exception:
         # local-relation / unsupported plans: no caching, same semantics
         d = _probe_dim(emb)
         return _with_norm(emb, d), d
     hit = _NORM_CACHE.get(key)
     if hit is not None:
-        return hit
+        _NORM_CACHE.move_to_end(key)
+        return hit[0], hit[1]
+    # the same plan over other files: those files were replaced, and
+    # Spark's cache manager would answer the new plan from the stale
+    # persisted frame until it is unpersisted
+    for stale in [k for k in _NORM_CACHE if k[:2] == key[:2]]:
+        _unpersist(_NORM_CACHE.pop(stale))
     d = _probe_dim(emb)
     e = _with_norm(emb, d).persist()
     if len(_NORM_CACHE) >= _NORM_CACHE_MAX:
-        old_key = next(iter(_NORM_CACHE))
-        _NORM_CACHE.pop(old_key)[0].unpersist()
-    _NORM_CACHE[key] = (e, d)
+        _unpersist(_NORM_CACHE.popitem(last=False)[1])
+    _NORM_CACHE[key] = (e, d, weakref.ref(session))
     return e, d
 
 

@@ -38,11 +38,13 @@ def fixture_corpus(spark):
 
 
 @pytest.fixture
-def jobs_of(spark):
-    """``jobs_of(fn)`` -> (fn's result, number of Spark jobs fn ran).
-    fn runs under a fresh ``search_group`` job group; the status store
-    is fed asynchronously, so the count is read once no job is active
-    and the listener has had time to catch up."""
+def job_stages_of(spark):
+    """``job_stages_of(fn)`` -> (fn's result, [stage count of each
+    Spark job fn ran]). fn runs under a fresh ``search_group`` job
+    group; the status store is fed asynchronously, so the jobs are read
+    once none is active and the listener has had time to catch up. A
+    job that reads a shuffle also lists the shuffle's map stage (run or
+    skipped), so a count above 1 marks a shuffle."""
     import itertools
     import time
 
@@ -58,6 +60,18 @@ def jobs_of(spark):
         while time.time() < deadline and tracker.getActiveJobsIds():
             time.sleep(0.05)
         time.sleep(0.5)
-        return out, len(tracker.getJobIdsForGroup(group))
+        jobs = sorted(tracker.getJobIdsForGroup(group))
+        return out, [len(tracker.getJobInfo(j).stageIds) for j in jobs]
+
+    return run
+
+
+@pytest.fixture
+def jobs_of(job_stages_of):
+    """``jobs_of(fn)`` -> (fn's result, number of Spark jobs fn ran)."""
+
+    def run(fn):
+        out, stages = job_stages_of(fn)
+        return out, len(stages)
 
     return run

@@ -18,6 +18,7 @@ from spark_search.codec import decode_block
 from spark_search.corpus import synthetic_corpus
 from spark_search.ids import with_doc_ids
 from spark_search.oracle.bm25 import OracleEngine
+from spark_search import query as Q
 from spark_search.query import IndexReader
 
 REL = 1e-9
@@ -187,6 +188,122 @@ def test_local_path_job_counts(synth_index, jobs_of):
         ).collect()
     )
     assert rows == [] and n_jobs == 0
+
+
+# ------------------------------------------- uncached-dictionary lookup
+
+
+def _uncached_reader(spark, reader, monkeypatch):
+    """A fresh reader of ``reader``'s index with the dictionary cache
+    gated below the vocabulary, so term metadata comes from terms/
+    scans."""
+    monkeypatch.setattr(Q, "_DICT_CACHE_CAP", 8)
+    r = IndexReader(spark, reader.paths.root)
+    assert r._ensure_dict() is None
+    return r
+
+
+def _ranked(rows):
+    return [(r["doc_id"], r["score"], r["rank"]) for r in rows]
+
+
+def test_uncached_local_search_runs_two_shuffle_free_jobs(
+    spark, synth_index, monkeypatch, job_stages_of
+):
+    """Without the cached dictionary a warm driver-local search costs
+    the shuffle-free term lookup and the postings scan: two jobs of one
+    stage each, and the cached-dictionary reader's exact answer."""
+    terms = ["import", "return", "def"]
+    want = _ranked(synth_index.search(terms, P.WITH_SUGGESTIONS, k=10).collect())
+    r = _uncached_reader(spark, synth_index, monkeypatch)
+    r.search(terms, P.WITH_SUGGESTIONS, k=10).collect()  # warm doclens
+    rows, stages = job_stages_of(
+        lambda: r.search(terms, P.WITH_SUGGESTIONS, k=10).collect()
+    )
+    assert _ranked(rows) == want and len(want) == 10
+    assert stages == [1, 1]
+    for mode in (P.EXACT_MATCH, P.AND_MATCH, P.START_WITH):
+        q = ["im"] if mode == P.START_WITH else terms[:2]
+        got = _ranked(r.search(q, mode, k=10).collect())
+        assert got == _ranked(synth_index.search(q, mode, k=10).collect()), mode
+
+
+def test_uncached_prefix_past_cap_stays_distributed(
+    spark, synth_index, monkeypatch
+):
+    """A prefix expansion that reaches the scan limit proves more than
+    ``_META_COLLECT_CAP`` terms: its metadata stays distributed
+    (``_meta_scan_df``), with the same top-k."""
+    want = synth_index.search(["c"], P.START_WITH, k=10).collect()
+    r = _uncached_reader(spark, synth_index, monkeypatch)
+    monkeypatch.setattr(Q, "_META_COLLECT_CAP", 2)
+    assert r._expand(["c"], P.START_WITH, 2) is None
+    assert len(r.match_terms(["c"], P.START_WITH)) > 2
+    calls = []
+    meta_scan = IndexReader._meta_scan_df
+
+    def spy(self, pred, stats):
+        calls.append(1)
+        return meta_scan(self, pred, stats)
+
+    monkeypatch.setattr(IndexReader, "_meta_scan_df", spy)
+    got = r.search(["c"], P.START_WITH, k=10).collect()
+    assert calls
+    assert [(x["doc_id"], x["rank"]) for x in got] == [
+        (x["doc_id"], x["rank"]) for x in want
+    ]
+    for g, w in zip(got, want):
+        # Spark-side idf vs driver-side idf may differ by 1 ulp
+        assert g["score"] == pytest.approx(w["score"], rel=1e-12)
+
+
+def test_match_terms_sums_segments_like_grouped_scan(
+    spark, synth, tmp_path, monkeypatch
+):
+    """On a 2-segment index the shuffle-free lookup's df / max_tf /
+    bucket equal the grouped per-term aggregate over terms/, for the
+    cached and the uncached dictionary alike."""
+    from pyspark.sql import functions as F
+
+    from spark_search.corpus import CORPUS_SCHEMA
+    from spark_search.maintain import upsert_docs
+
+    d0, d1 = str(tmp_path / "i0"), str(tmp_path / "i1")
+    build_index(spark, synth, d0, num_buckets=8, chunk_span=64, block_size=16)
+    new_docs = spark.createDataFrame(
+        [
+            ("r2", f"new/{i}.py", "v2", "python",
+             "import import import return camelCase zzonly" + " def" * i)
+            for i in range(5)
+        ],
+        CORPUS_SCHEMA,
+    )
+    upsert_docs(spark, d0, d1, new_docs)
+    cached = IndexReader(spark, d1)
+    assert len(cached.segments) == 2
+    terms = ["import", "return", "def", "camelCase", "zzonly", "nosuchterm"]
+    grouped = {
+        r["term"]: (int(r["df"]), int(r["max_tf"]), int(r["bucket"]))
+        for r in cached.terms_df()
+        .where(F.col("term").isin(terms) | F.col("term").startswith("ca"))
+        .groupBy("term")
+        .agg(
+            F.sum("df").alias("df"),
+            F.max("max_tf").alias("max_tf"),
+            F.first("bucket").alias("bucket"),
+        )
+        .collect()
+    }
+    assert grouped["import"][0] > 5 and "zzonly" in grouped
+    uncached = _uncached_reader(spark, cached, monkeypatch)
+    for reader in (cached, uncached):
+        got = {t: (df, mtf, b) for t, df, mtf, b in reader.match_terms(
+            terms, P.WITH_SUGGESTIONS)}
+        assert got == {t: v for t, v in grouped.items() if t in terms}
+        got = {t: (df, mtf, b) for t, df, mtf, b in reader.match_terms(
+            ["ca"], P.START_WITH)}
+        assert got == {t: v for t, v in grouped.items() if t.startswith("ca")}
+        assert got
 
 
 def test_random_word_property(synth_index, synth):

@@ -6,6 +6,7 @@ from hypothesis import strategies as st
 
 from spark_search.codec import (
     decode_block,
+    decode_blocks,
     encode_blocks,
     varint_decode,
     varint_encode,
@@ -99,3 +100,70 @@ def test_encode_blocks_batch_equals_per_list():
             assert got == want
 
     check()
+
+
+def _block_structs(doc_ids, tfs, block_size):
+    """encode_blocks output shaped like the index's block structs."""
+    return [
+        {"first_doc": f, "last_doc": last, "n": n, "max_tf": m,
+         "deltas": d, "tfs": t}
+        for f, last, n, m, d, t in encode_blocks(doc_ids, tfs, block_size)
+    ]
+
+
+def _concat_decode_block(blocks):
+    parts = [decode_block(b["first_doc"], b["deltas"], b["tfs"]) for b in blocks]
+    return (
+        np.concatenate([p[0] for p in parts]),
+        np.concatenate([p[1] for p in parts]),
+    )
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=2**40),  # gaps reach 2^35+
+            st.integers(min_value=1, max_value=2**20),
+        ),
+        min_size=1,
+        max_size=700,
+    ),
+    st.integers(min_value=1, max_value=200),
+)
+def test_decode_blocks_equals_concatenated_decode_block(postings, block_size):
+    gaps = np.array([g for g, _ in postings], dtype=np.int64)
+    doc_ids = np.cumsum(gaps)
+    tfs = np.array([t for _, t in postings], dtype=np.int64)
+    blocks = _block_structs(doc_ids, tfs, block_size)
+    got_ids, got_tfs = decode_blocks(blocks)
+    want_ids, want_tfs = _concat_decode_block(blocks)
+    assert got_ids.dtype == want_ids.dtype == np.int64
+    assert got_tfs.dtype == want_tfs.dtype == np.int64
+    assert np.array_equal(got_ids, want_ids)
+    assert np.array_equal(got_tfs, want_tfs)
+    assert np.array_equal(got_ids, doc_ids) and np.array_equal(got_tfs, tfs)
+
+
+def test_decode_blocks_edge_cases():
+    # the empty list
+    ids, tfs = decode_blocks([])
+    assert ids.dtype == tfs.dtype == np.int64 and ids.size == tfs.size == 0
+    # single-posting blocks, huge deltas (>= 2^35) and tf up to 2^20
+    doc_ids = np.array([7, 2**35 + 7, 2**36 + 9, 2**62], dtype=np.int64)
+    tf = np.array([1, 2**20, 3, 2**20 - 1], dtype=np.int64)
+    for block_size in (1, 2, 3, 200):
+        blocks = _block_structs(doc_ids, tf, block_size)
+        got = decode_blocks(blocks)
+        want = _concat_decode_block(blocks)
+        assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
+        assert got[0].tolist() == doc_ids.tolist()
+    # one single-posting block alone
+    got = decode_blocks(_block_structs(doc_ids[:1], tf[:1], 1))
+    assert got[0].tolist() == [7] and got[1].tolist() == [1]
+    # block structs as the index stores them: bytearray payloads
+    blocks = [
+        dict(b, deltas=bytearray(b["deltas"]), tfs=bytearray(b["tfs"]))
+        for b in _block_structs(doc_ids, tf, 2)
+    ]
+    assert decode_blocks(blocks)[0].tolist() == doc_ids.tolist()

@@ -113,3 +113,60 @@ def test_rrf_ranks_and_score(corpus, emb):
 def test_rrf_drops_unembedded(corpus, emb):
     cand = P.bm25_topk(corpus, ["durian"], P.EXACT_MATCH, k=10)
     assert SIM.hybrid_rrf(cand, emb, 9).collect() == []
+
+
+# ------------------------------------------------- normalized-frame cache
+
+
+def _cos_top(spark, path):
+    out = SIM.cosine_topk(spark.read.parquet(path), [9], k=3).collect()
+    return [(r["vec_id"], r["score"]) for r in sorted(out, key=lambda r: r["rank"])]
+
+
+def test_norm_cache_sees_overwritten_embeddings(spark, tmp_path):
+    """Another writer replaces the embeddings dir's files (Spark's own
+    overwrite would re-cache by path; an outside one cannot). The
+    re-read is the same logical plan with new files: the input-file
+    fingerprint must miss the cache, and the stale persisted frame
+    must not answer for it, so the second query scores the new
+    vectors."""
+    import shutil
+
+    schema = "vec_id long, embedding array<float>"
+    path, staged = str(tmp_path / "emb"), str(tmp_path / "staged")
+    spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (9, [1.0, 0.0])], schema
+    ).write.parquet(path)
+    assert _cos_top(spark, path) == [(1, 1.0), (9, 1.0), (2, 0.0)]
+    assert _cos_top(spark, path) == [(1, 1.0), (9, 1.0), (2, 0.0)]  # hit
+    spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [1.0, 0.0]), (9, [1.0, 0.0])], schema
+    ).write.parquet(staged)
+    shutil.rmtree(path)
+    shutil.move(staged, path)
+    assert _cos_top(spark, path) == [(2, 1.0), (9, 1.0), (1, 0.0)]
+    SIM.invalidate_norm_cache()
+
+
+def test_norm_cache_is_lru_and_invalidates(spark, monkeypatch):
+    """A hit moves its entry to the end, so the least recently USED
+    frame is evicted; invalidate_norm_cache() empties the cache."""
+    monkeypatch.setattr(SIM, "_NORM_CACHE_MAX", 2)
+    SIM.invalidate_norm_cache()
+    a, b, c = (
+        spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(1, n + 2)],
+            "vec_id long, embedding array<float>",
+        )
+        for n in (1, 2, 3)
+    )
+    ea, _ = SIM._norm_cached(a)
+    SIM._norm_cached(b)
+    assert SIM._norm_cached(a)[0] is ea  # hit: a is now most recent
+    SIM._norm_cached(c)  # evicts b, not a
+    assert SIM._norm_cached(a)[0] is ea
+    assert len(SIM._NORM_CACHE) == 2
+    SIM.invalidate_norm_cache()
+    assert len(SIM._NORM_CACHE) == 0
+    assert SIM._norm_cached(a)[0] is not ea
+    SIM.invalidate_norm_cache()
