@@ -97,6 +97,73 @@ def bucket_col(term_col, num_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(num_buckets)).cast("int")
 
 
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return (_rotl64((acc + lane * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+
+
+def bucket_of(term: str, num_buckets: int) -> int:
+    """``bucket_col`` computed on the driver: Spark's ``xxhash64``
+    (XXH64, seed 42, over the term's UTF-8 bytes) as a signed long,
+    then ``pmod``. Lets a query route a term to its postings partition
+    without a terms/ lookup job."""
+    data = term.encode("utf-8")
+    n = len(data)
+    seed = 42
+    i = 0
+    if n >= 32:
+        v = [
+            (seed + _XXH_P1 + _XXH_P2) & _M64,
+            (seed + _XXH_P2) & _M64,
+            seed,
+            (seed - _XXH_P1) & _M64,
+        ]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v[j] = _xxh64_round(v[j], lane)
+            i += 32
+        h = (
+            _rotl64(v[0], 1) + _rotl64(v[1], 7)
+            + _rotl64(v[2], 12) + _rotl64(v[3], 18)
+        ) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_round(0, x)) * _XXH_P1 + _XXH_P4) & _M64
+    else:
+        h = (seed + _XXH_P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl64(h, 27) * _XXH_P1 + _XXH_P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= (int.from_bytes(data[i : i + 4], "little") * _XXH_P1) & _M64
+        h = (_rotl64(h, 23) * _XXH_P2 + _XXH_P3) & _M64
+        i += 4
+    while i < n:
+        h ^= (data[i] * _XXH_P5) & _M64
+        h = (_rotl64(h, 11) * _XXH_P1) & _M64
+        i += 1
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _M64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _M64
+    h ^= h >> 32
+    signed = h - (1 << 64) if h >> 63 else h
+    return signed % num_buckets  # Python's % is pmod for num_buckets > 0
+
+
 def _encode_udf(block_size: int):
     @F.pandas_udf(BLOCKS_SCHEMA)
     def encode(doc_ids: pd.Series, tfs: pd.Series) -> pd.Series:

@@ -16,13 +16,18 @@ Query lifecycle (SURVEY.md §3.1 Spark plan):
 
   When Σ df ≤ ``_LOCAL_MAX_POSTINGS`` (2^20) and the matched rows touch
   ≤ ``_LOCAL_MAX_CHUNKS`` chunks, the rest runs on the driver: one
-  postings scan collects the matched blocks, each (chunk, term) row
+  postings scan collects the matched blocks and their ``n_docs`` (df
+  is their sum, so idf needs no metadata), each (chunk, term) row
   decodes in one batched pass (``codec.decode_blocks``) and scores in
-  numpy. A warm query then costs 1 job with the cached dictionary and
-  2 without it (lookup, postings scan), none of them shuffling. Only
-  larger queries take the distributed plan below. Measured crossover
-  on serve_scale (270k docs, 17 chunks, 4 cores; raw ms, identical
-  top-k):
+  numpy. Past the full-dictionary cap an exact/OR/AND query skips the
+  lookup: the cached df ≥ T dictionary head bounds its Σ df and
+  ``build.bucket_of`` routes its terms (``_DICT_CACHE_CAP``). A warm
+  exact/OR/AND local query therefore costs 1 job whether or not the
+  full dictionary fits, none shuffling; a missing-term query costs 0
+  jobs with the full dictionary and 1 with the head. Prefix/contains
+  queries past the cap keep the lookup (2 jobs). Only larger queries
+  take the distributed plan below. Measured crossover on serve_scale
+  (270k docs, 17 chunks, 4 cores; raw ms, identical top-k):
 
       Σ df    local      distributed unpruned   distributed pruned
       82k     268-363    784-941                -
@@ -60,7 +65,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .build import IndexPaths, bucket_col
+from .build import IndexPaths, bucket_col, bucket_of
 from .checkpoint import BuildManifest
 from .codec import decode_block, decode_blocks, decode_positions
 from .frames import RESULT_FIELDS, literal_frame
@@ -100,9 +105,19 @@ _PHRASE_LOCAL_MAX_POSTINGS = 65_536
 _LOCAL_MAX_POSITIONS = 4_000_000
 # driver-side caches (all hard-gated so a 10^12-file index never tries
 # to pull cluster-scale state onto the driver):
-#   * term dictionary — cached iff vocab ≤ cap (~25 MB). A warm exact/
-#     prefix lookup then costs ZERO Spark jobs instead of one terms
-#     scan per query.
+#   * term dictionary — the full dictionary, or its df ≥ T head. The
+#     full dictionary is cached iff vocab ≤ cap (~25 MB); a warm
+#     exact/prefix lookup then costs ZERO Spark jobs instead of one
+#     terms scan per query. Past the cap the reader caches the terms/
+#     rows with df ≥ T, T = max(2, ⌈total_dl / cap⌉): Σ df ≤ total_dl,
+#     so at most cap rows qualify (a limit(cap+1) guard catches the
+#     tombstone-inflated case and caches nothing). A term without a
+#     head row in a segment has df ≤ T−1 there, so the head bounds an
+#     exact/OR/AND query's Σ df with no terms/ job, and rare terms are
+#     routed to their bucket by ``build.bucket_of``. The head path
+#     stops applying once (T−1) × the number of rare query terms
+#     exceeds the 2^20 local gate: roughly total_dl > 5·10^10 for
+#     5-term queries.
 #   * doclens — per-chunk int32 arrays, LRU-bounded (~512 × span×4 B).
 #   * deletes — chunk → sorted doc_id arrays iff |deletes| ≤ cap.
 # Caches never go stale: maintain/compact/streaming always publish NEW
@@ -340,6 +355,10 @@ class IndexReader:
         self._dict: Optional[Dict[str, List[int]]] = None
         self._dict_terms: Optional[List[str]] = None
         self._dict_state = 0  # 0 unknown, 1 cached, -1 too big / old layout
+        # past the cap: term -> (Σ df of its head rows, head row count)
+        self._head: Optional[Dict[str, Tuple[int, int]]] = None
+        self._head_min_df = 0
+        self._head_state = 0  # 0 unknown, 1 cached, -1 unavailable
         self._doclens_cache: "OrderedDict[int, np.ndarray]" = OrderedDict()
         self._dels_arrays_state = 0  # 0 unknown, 1 cached, -1 too big
         self._dels_arrays: Dict[int, np.ndarray] = {}
@@ -499,7 +518,8 @@ class IndexReader:
         """Load the term dictionary driver-side iff it fits the cache
         gate. One job on first use; every later exact/prefix expansion
         costs zero jobs. Returns None when the vocabulary exceeds the
-        cap (corpus-scale indexes keep the distributed dictionary path)."""
+        cap (corpus-scale indexes keep the terms/ lookup; exact/OR/AND
+        queries may skip it through the head, ``_head_bound``)."""
         with self._cache_lock:
             return self._ensure_dict_locked()
 
@@ -528,6 +548,48 @@ class IndexReader:
                     self._dict_terms = sorted(agg)
                     self._dict_state = 1
         return self._dict if self._dict_state == 1 else None
+
+    def _head_bound(self, qterms: List[str]) -> Optional[int]:
+        """Upper bound on an exact/OR/AND query's Σ df from the cached
+        dictionary head (see ``_DICT_CACHE_CAP``): each term counts its
+        head df plus T−1 for every segment without a head row for it.
+        None when the full dictionary is cached or no head is. The head
+        (``term``, ``df`` of rows with df ≥ T) loads on first use."""
+        with self._cache_lock:
+            if self._head_state == 0:
+                self._head_state = -1
+                total_dl = self.stats.total_dl
+                if (
+                    self._ensure_dict_locked() is None
+                    and total_dl >= 0
+                    and _DICT_CACHE_CAP > 0
+                    and "bucket" in self.terms_df().columns
+                ):
+                    t_min = max(2, -(-total_dl // _DICT_CACHE_CAP))
+                    rows = (
+                        self.terms_df()
+                        .where(F.col("df") >= t_min)
+                        .select("term", "df")
+                        .limit(_DICT_CACHE_CAP + 1)
+                        .collect()
+                    )
+                    if len(rows) <= _DICT_CACHE_CAP:
+                        head: Dict[str, Tuple[int, int]] = {}
+                        for r in rows:
+                            df, n = head.get(r["term"], (0, 0))
+                            head[r["term"]] = (df + int(r["df"]), n + 1)
+                        self._head = head
+                        self._head_min_df = t_min
+                        self._head_state = 1
+            if self._head_state != 1:
+                return None
+            head, slack = self._head, self._head_min_df - 1
+        n_seg = len(self.segments)
+        bound = 0
+        for t in qterms:
+            df, n = head.get(t, (0, 0))
+            bound += df + slack * (n_seg - n)
+        return bound
 
     def _dict_expand(
         self, qterms: List[str], mode: str
@@ -796,19 +858,40 @@ class IndexReader:
         # are ever collected.
         stats = self.stats
         pred = _term_predicate(qterms, mode)
+        local_ok = bool(
+            local_max_postings
+            and doc_filter is None
+            and not excl
+            and not _require_docs
+            and not _scored
+        )
+        if local_ok and mode not in (START_WITH, CONTAINS_MATCH):
+            # past the full-dictionary cap: when the dictionary head
+            # bounds Σ df within the gate, the postings scan is the
+            # query's only job (bucket_of routes the terms, the scan's
+            # own n_docs give df). A chunk-gate decline falls through
+            # to the lookup + distributed plan.
+            bound = self._head_bound(qterms)
+            if bound is not None and bound <= local_max_postings:
+                buckets = sorted(
+                    {bucket_of(t, self.num_buckets) for t in qterms}
+                )
+                out = self._search_local(
+                    pred, buckets, mode, k, n_query_terms
+                )
+                if out is not None:
+                    return out
+                local_ok = False
         cap = _META_COLLECT_CAP
         meta: Optional[DataFrame] = None
-        head: List[dict] = []
+        meta_rows: List[dict] = []
         total_df: Optional[int] = None
         expansion = self._expand(qterms, mode, cap)
         if expansion is not None and len(expansion) <= cap:
             for t, df_, mtf_, b_ in expansion:
                 idf = _idf(float(stats.n_docs), float(df_))
-                head.append(
-                    {
-                        "term": t, "df": df_, "max_tf": mtf_, "bucket": b_,
-                        "idf": idf, "term_ub": _term_ub(idf, mtf_),
-                    }
+                meta_rows.append(
+                    {"term": t, "idf": idf, "term_ub": _term_ub(idf, mtf_)}
                 )
         if expansion is not None:
             # an expansion too wide for plan literals still keeps the
@@ -833,17 +916,11 @@ class IndexReader:
             return self._no_hits(out_fields)
 
         if (
-            local_max_postings
-            and doc_filter is None
-            and not excl
-            and not _require_docs
-            and not _scored
-            and head  # wide expansions carry counters but no metadata
+            local_ok
+            and meta is None  # wide expansions stay distributed
             and total_df <= local_max_postings
         ):
-            out = self._search_local(
-                head, pred, buckets, mode, k, n_query_terms
-            )
+            out = self._search_local(pred, buckets, mode, k, n_query_terms)
             if out is not None:
                 return out
         if meta is None:
@@ -851,7 +928,7 @@ class IndexReader:
             # built only now that the distributed plan needs it
             meta = literal_frame(
                 self.spark,
-                [(r["term"], r["idf"], r["term_ub"]) for r in head],
+                [(r["term"], r["idf"], r["term_ub"]) for r in meta_rows],
                 _META_FIELDS,
             )
 
@@ -1567,7 +1644,6 @@ class IndexReader:
 
     def _search_local(
         self,
-        head,
         pred,
         buckets: List[int],
         mode: str,
@@ -1579,20 +1655,31 @@ class IndexReader:
         (term predicate + bucket pruning pushed to parquet), plus a
         doclens scan for chunks not yet cached, and pure numpy after
         that: each (chunk, term) row decodes in one batched pass
-        (``decode_blocks``) and scatter-adds once.
+        (``decode_blocks``) and scatter-adds once. A term's df is the
+        Σ ``n_docs`` of its collected rows — the integer its terms/
+        rows hold (terms/ aggregates postings), so idf is the lookup's.
         Accumulation order and arithmetic match score_chunk exactly.
         Returns None (caller falls back to the distributed plan) if the
         touched-chunk count would exceed the driver-memory gate."""
-        idf_by_term = {r["term"]: float(r["idf"]) for r in head}
         rows = (
             self.postings_df()
             .where(F.col("bucket").isin(buckets))
             .where(pred)
-            .select("term", "chunk", "blocks")
+            .select("term", "chunk", "n_docs", "blocks")
             .collect()
         )
-        if not rows:
+        df_by_term: Dict[str, int] = {}
+        for r in rows:
+            t = r["term"]
+            df_by_term[t] = df_by_term.get(t, 0) + int(r["n_docs"])
+        if not rows or (
+            mode == AND_MATCH and len(df_by_term) < n_query_terms
+        ):
             return self._no_hits()
+        n_docs = float(self.stats.n_docs)
+        idf_by_term = {
+            t: _idf(n_docs, float(df)) for t, df in df_by_term.items()
+        }
         chunks = sorted({int(r["chunk"]) for r in rows})
         if len(chunks) > _LOCAL_MAX_CHUNKS:
             return None
@@ -1902,6 +1989,12 @@ class IndexReader:
            query terms excluded; top ``fb_terms`` by (wt DESC, term
            ASC);
         3. final = the standard OR search over query ∪ expansion.
+
+        Feedback scope: the feedback docs and the expansion weights
+        come from the UNFILTERED corpus; ``doc_filter`` scopes only the
+        final search (step 3), with filter-query semantics. The result
+        equals ``search(query ∪ unfiltered expansion, doc_filter=…)``,
+        and the declarative and indexed forms stay oracle-equal.
 
         Driver traffic is parameter-bounded (fb ids, the feedback
         vocabulary's aggregated weights, the final top-k). Staleness

@@ -193,11 +193,13 @@ def test_local_path_job_counts(synth_index, jobs_of):
 # ------------------------------------------- uncached-dictionary lookup
 
 
-def _uncached_reader(spark, reader, monkeypatch):
-    """A fresh reader of ``reader``'s index with the dictionary cache
-    gated below the vocabulary, so term metadata comes from terms/
-    scans."""
-    monkeypatch.setattr(Q, "_DICT_CACHE_CAP", 8)
+def _uncached_reader(spark, reader, monkeypatch, cap=8):
+    """A fresh reader of ``reader``'s index with the full-dictionary
+    cache gated below the vocabulary (``reader`` keeps its full
+    dictionary), so term lookups are terms/ scans and exact/OR/AND
+    queries may route through the df ≥ T dictionary head."""
+    assert reader._ensure_dict() is not None
+    monkeypatch.setattr(Q, "_DICT_CACHE_CAP", cap)
     r = IndexReader(spark, reader.paths.root)
     assert r._ensure_dict() is None
     return r
@@ -207,12 +209,13 @@ def _ranked(rows):
     return [(r["doc_id"], r["score"], r["rank"]) for r in rows]
 
 
-def test_uncached_local_search_runs_two_shuffle_free_jobs(
+def test_uncached_local_search_runs_one_shuffle_free_job(
     spark, synth_index, monkeypatch, job_stages_of
 ):
-    """Without the cached dictionary a warm driver-local search costs
-    the shuffle-free term lookup and the postings scan: two jobs of one
-    stage each, and the cached-dictionary reader's exact answer."""
+    """Without the full cached dictionary a warm driver-local search
+    costs only its postings scan (the dictionary head bounds Σ df and
+    ``bucket_of`` routes the terms): one job of one stage, and the
+    cached-dictionary reader's exact answer."""
     terms = ["import", "return", "def"]
     want = _ranked(synth_index.search(terms, P.WITH_SUGGESTIONS, k=10).collect())
     r = _uncached_reader(spark, synth_index, monkeypatch)
@@ -221,7 +224,7 @@ def test_uncached_local_search_runs_two_shuffle_free_jobs(
         lambda: r.search(terms, P.WITH_SUGGESTIONS, k=10).collect()
     )
     assert _ranked(rows) == want and len(want) == 10
-    assert stages == [1, 1]
+    assert stages == [1]
     for mode in (P.EXACT_MATCH, P.AND_MATCH, P.START_WITH):
         q = ["im"] if mode == P.START_WITH else terms[:2]
         got = _ranked(r.search(q, mode, k=10).collect())
@@ -257,30 +260,44 @@ def test_uncached_prefix_past_cap_stays_distributed(
         assert g["score"] == pytest.approx(w["score"], rel=1e-12)
 
 
+@pytest.fixture(scope="module")
+def two_seg_index(spark, synth, tmp_path_factory):
+    """synth plus an upserted segment that replaces 3 docs (tombstones
+    in segment 0) and adds 3: 'import' is hot in segment 0 and rare in
+    segment 1, 'zzonly' exists only in segment 1."""
+    from spark_search.corpus import CORPUS_SCHEMA
+    from spark_search.maintain import upsert_docs
+
+    base = tmp_path_factory.mktemp("idx")
+    d0, d1 = str(base / "two0"), str(base / "two1")
+    build_index(spark, synth, d0, num_buckets=8, chunk_span=64, block_size=16)
+    keys = [
+        (r["repo"], r["path"])
+        for r in synth.orderBy("doc_id").limit(3).collect()
+    ] + [("r2", f"new/{i}.py") for i in range(3)]
+    new_docs = spark.createDataFrame(
+        [
+            (repo, path, "v2", "python",
+             "import import return camelCase zzonly" + " def" * i)
+            for i, (repo, path) in enumerate(keys)
+        ],
+        CORPUS_SCHEMA,
+    )
+    upsert_docs(spark, d0, d1, new_docs)
+    r = IndexReader(spark, d1)
+    assert len(r.segments) == 2 and r.n_tombstones == 3
+    return r
+
+
 def test_match_terms_sums_segments_like_grouped_scan(
-    spark, synth, tmp_path, monkeypatch
+    spark, two_seg_index, monkeypatch
 ):
     """On a 2-segment index the shuffle-free lookup's df / max_tf /
     bucket equal the grouped per-term aggregate over terms/, for the
     cached and the uncached dictionary alike."""
     from pyspark.sql import functions as F
 
-    from spark_search.corpus import CORPUS_SCHEMA
-    from spark_search.maintain import upsert_docs
-
-    d0, d1 = str(tmp_path / "i0"), str(tmp_path / "i1")
-    build_index(spark, synth, d0, num_buckets=8, chunk_span=64, block_size=16)
-    new_docs = spark.createDataFrame(
-        [
-            ("r2", f"new/{i}.py", "v2", "python",
-             "import import import return camelCase zzonly" + " def" * i)
-            for i in range(5)
-        ],
-        CORPUS_SCHEMA,
-    )
-    upsert_docs(spark, d0, d1, new_docs)
-    cached = IndexReader(spark, d1)
-    assert len(cached.segments) == 2
+    cached = two_seg_index
     terms = ["import", "return", "def", "camelCase", "zzonly", "nosuchterm"]
     grouped = {
         r["term"]: (int(r["df"]), int(r["max_tf"]), int(r["bucket"]))
@@ -304,6 +321,108 @@ def test_match_terms_sums_segments_like_grouped_scan(
             ["ca"], P.START_WITH)}
         assert got == {t: v for t, v in grouped.items() if t.startswith("ca")}
         assert got
+
+
+# ------------------------------------------------ dictionary head
+
+
+_HEAD_CAP = 512  # below the synth vocabulary; T = ⌈total_dl / 512⌉ ≈ 46
+
+
+def test_head_search_matches_full_dictionary(
+    spark, two_seg_index, monkeypatch, jobs_of
+):
+    """Past the cap, warm EXACT/OR/AND queries run one postings scan
+    and return the full-dictionary reader's ids and bit-equal scores,
+    tombstones and a segment-local term included."""
+    full = two_seg_index
+    r = _uncached_reader(spark, full, monkeypatch, cap=_HEAD_CAP)
+    assert r._head_bound(["import"]) is not None and r._head
+    for terms, mode in [
+        (["import"], P.EXACT_MATCH),
+        (["zzonly"], P.EXACT_MATCH),
+        (["import", "zzonly", "return"], P.WITH_SUGGESTIONS),
+        (["import", "def"], P.AND_MATCH),
+        (["import", "zzonly"], P.AND_MATCH),
+        (["import", "nosuchterm"], P.AND_MATCH),
+        (["nosuchterm", "zzqq"], P.WITH_SUGGESTIONS),
+    ]:
+        want = _ranked(full.search(terms, mode, k=10).collect())
+        r.search(terms, mode, k=10).collect()  # warm doclens
+        rows, n_jobs = jobs_of(lambda: r.search(terms, mode, k=10).collect())
+        assert _ranked(rows) == want, (terms, mode)
+        assert n_jobs == 1, (terms, mode)
+    assert r._ensure_dict() is None
+
+
+def test_head_bound_covers_segments_without_a_head_row(
+    spark, two_seg_index, monkeypatch
+):
+    """A term in one segment's head and not the other's is bounded by
+    its head df plus T−1 for the other segment, never below its df."""
+    from pyspark.sql import functions as F
+
+    r = _uncached_reader(spark, two_seg_index, monkeypatch, cap=_HEAD_CAP)
+    r._head_bound([])  # load the head
+    t_min = r._head_min_df
+    seg_df = [
+        {
+            x["term"]: int(x["df"])
+            for x in spark.read.parquet(os.path.join(seg, "terms"))
+            .where(F.col("term").isin("import", "zzonly"))
+            .collect()
+        }
+        for seg in r.segments
+    ]
+    assert seg_df[0]["import"] >= t_min > seg_df[1]["import"] > 0
+    assert r._head["import"] == (seg_df[0]["import"], 1)
+    assert r._head_bound(["import"]) == seg_df[0]["import"] + t_min - 1
+    terms = ["import", "zzonly", "return", "def", "nosuchterm"]
+    true_df = {t: df for t, df, _, _ in r.match_terms(terms, P.EXACT_MATCH)}
+    for t in terms:
+        assert r._head_bound([t]) >= true_df.get(t, 0), t
+    assert r._head_bound(terms) >= sum(true_df.values())
+
+
+def test_head_past_gate_keeps_lookup_and_distributed_path(
+    spark, two_seg_index, monkeypatch
+):
+    """A head bound past ``local_max_postings``, or a chunk-gate
+    decline of the one-scan path, keeps the terms/ lookup and the
+    distributed plan, with the full-dictionary reader's answer."""
+    full = two_seg_index
+    q = ["import", "zzonly"]
+    want = _ranked(full.search(q, P.WITH_SUGGESTIONS, k=10,
+                               local_max_postings=8).collect())
+    want_local = _ranked(full.search(q, P.WITH_SUGGESTIONS, k=10).collect())
+    r = _uncached_reader(spark, full, monkeypatch, cap=_HEAD_CAP)
+    assert r._head_bound(q) > 8
+    calls = []
+    expand, search_local = IndexReader._expand, IndexReader._search_local
+
+    def spy_expand(self, *a, **kw):
+        calls.append("expand")
+        return expand(self, *a, **kw)
+
+    def spy_local(self, *a, **kw):
+        calls.append("local")
+        return search_local(self, *a, **kw)
+
+    monkeypatch.setattr(IndexReader, "_expand", spy_expand)
+    monkeypatch.setattr(IndexReader, "_search_local", spy_local)
+    got = _ranked(r.search(q, P.WITH_SUGGESTIONS, k=10,
+                           local_max_postings=8).collect())
+    assert got == want and calls == ["expand"]
+    calls.clear()
+    monkeypatch.setattr(Q, "_LOCAL_MAX_CHUNKS", 0)
+    got = r.search(q, P.WITH_SUGGESTIONS, k=10).collect()
+    assert calls == ["local", "expand"]
+    assert [x[:1] + x[2:] for x in _ranked(got)] == [
+        x[:1] + x[2:] for x in want_local
+    ]
+    for g, w in zip(_ranked(got), want_local):
+        # per-term float accumulation order may differ by 1 ulp
+        assert g[1] == pytest.approx(w[1], rel=1e-12)
 
 
 def test_random_word_property(synth_index, synth):

@@ -252,3 +252,40 @@ def test_filtered_accepts_column_predicate(spark, synth, synth_index):
     assert [(r["doc_id"], r["score"]) for r in a] == [
         (r["doc_id"], r["score"]) for r in b
     ]
+
+
+def test_prf_feedback_is_unfiltered_and_filter_scopes_final_search(
+    spark, synth, synth_index, monkeypatch
+):
+    """``search_prf`` takes its feedback docs and expansion weights from
+    the unfiltered corpus; ``doc_filter`` scopes only the final search.
+    The filtered result therefore equals ``search(q ∪ unfiltered
+    expansion, doc_filter=…)``."""
+    q, flt = ["tokenizer", "postings"], "lang = 'java'"
+    allowed = _allowed_ids(synth, flt)
+    fb = synth_index.search(q, P.WITH_SUGGESTIONS, k=4).collect()
+    # some feedback docs fall outside the filter, so a filter-scoped
+    # feedback set would differ from the unfiltered one
+    assert any(r["doc_id"] not in allowed for r in fb)
+
+    search = IndexReader.search
+    finals = []
+
+    def spy(self, terms, mode=P.EXACT_MATCH, k=10, **kw):
+        finals.append(list(terms))
+        return search(self, terms, mode, k, **kw)
+
+    monkeypatch.setattr(IndexReader, "search", spy)
+    synth_index.search_prf(q, k=10, fb_docs=4, fb_terms=4).collect()
+    expanded = finals[-1]
+    assert expanded[:2] == q and len(expanded) > 2
+    got = synth_index.search_prf(
+        q, k=10, fb_docs=4, fb_terms=4, doc_filter=flt
+    ).collect()
+    want = search(
+        synth_index, expanded, P.WITH_SUGGESTIONS, k=10, doc_filter=flt
+    ).collect()
+    assert got and {r["doc_id"] for r in got} <= allowed
+    assert [(r["doc_id"], r["score"], r["rank"]) for r in got] == [
+        (r["doc_id"], r["score"], r["rank"]) for r in want
+    ]
