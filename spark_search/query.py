@@ -43,7 +43,9 @@ Query lifecycle (SURVEY.md §3.1 Spark plan):
   4. postings scan: ``bucket`` partition pruning + ``term`` predicate
      pushed to parquet, so only query-term rows are ever deserialized
   5. per-chunk numpy scoring inside ``applyInPandas`` (Arrow batches,
-     no per-row Python), emitting ≤k local winners per chunk
+     no per-row Python), emitting ≤k local winners per chunk. Every
+     scoring path — this one, the driver-local path, the θ bootstrap
+     and ``search_many`` — runs the one chunk kernel in ``kernel.py``
   6. global TakeOrderedAndProject -> (doc_id, score, rank)
 
 Scale: every stage's volume is bounded by (query terms × matched
@@ -59,16 +61,18 @@ import os
 import threading
 from collections import OrderedDict
 from contextlib import contextmanager
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Dict, Iterable, List, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import kernel
 from .build import IndexPaths, bucket_col, bucket_of
 from .checkpoint import BuildManifest
 from .codec import decode_block, decode_blocks, decode_positions
 from .frames import RESULT_FIELDS, literal_frame
+from .kernel import _term_ub
 from .pipeline import (
     AND_MATCH,
     B,
@@ -131,17 +135,8 @@ _DOCLENS_CACHE_CHUNKS = 512
 _DOCS_TERMS_FIELDS = [("doc_id", "long"), ("term", "string"), ("tf", "int")]
 _META_FIELDS = [("term", "string"), ("idf", "double"), ("term_ub", "double")]
 
-_LOCAL_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("nterms", T.IntegerType()),
-    ]
-)
-
-_MULTI_LOCAL_SCHEMA = T.StructType(
-    [T.StructField("query_id", T.StringType())] + _LOCAL_SCHEMA.fields
-)
+_LOCAL_SCHEMA = "doc_id long, score double"
+_MULTI_LOCAL_SCHEMA = "query_id string, " + _LOCAL_SCHEMA
 
 
 def search_job_group(tag: str) -> str:
@@ -224,30 +219,6 @@ def _term_predicate(qterms: List[str], mode: str):
     return F.col("term").isin(qterms)
 
 
-def _term_ub(idf: float, max_tf: int) -> float:
-    """Upper bound of a term's BM25 contribution given its max tf.
-    The dl-dependent denominator is minimized at dl -> 0
-    (tf + k1*(1-b)), so this bounds every real contribution.
-
-    Clamped at 0: idf goes NEGATIVE when a term's df exceeds live
-    n_docs (tombstoned deletes inflate df until compact), and a
-    negative "upper bound" would make every chunk_ub / rest-of-terms
-    sum UNDERestimate achievable scores — block-max pruning would then
-    drop chunks holding true top-k docs. A negative-idf term's real
-    contribution is <= 0, so 0 is the tight sound bound."""
-    return max(
-        0.0, idf * max_tf * (K1 + 1.0) / (max_tf + K1 * (1.0 - B))
-    )
-
-
-def _score_np(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
-    # avgdl == 0 only when every live doc is empty/deleted; any match then
-    # has tf == 0 so the score is 0 regardless — substitute 1.0 rather
-    # than emit a numpy divide warning on the degenerate index.
-    denom = tf + K1 * (1.0 - B + B * dl / (avgdl if avgdl > 0 else 1.0))
-    return idf * tf * (K1 + 1.0) / denom
-
-
 def _idf(n_docs: float, df: float) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
@@ -298,6 +269,84 @@ def _levenshtein_within(a: str, b: str, max_dist: int) -> bool:
             return False
         prev = cur
     return prev[lb] <= max_dist
+
+
+class _Plan(NamedTuple):
+    """One search, resolved once by its entry point: how the scored
+    hits are cut and which documents may be hits."""
+
+    cut: str = "topk"  # topk | after (cursor) | group (column) | scored
+    arg: object = None  # the (score, doc_id) cursor or the group column
+    doc_filter: object = None
+    exclude: Tuple[str, ...] = ()
+    require: Optional[list] = None  # must-group match sets (search_bool)
+
+    @classmethod
+    def of(cls, cut, arg, doc_filter=None, exclude_terms=None, require=None):
+        excl = tuple(t for t in dict.fromkeys(exclude_terms or []) if t)
+        return cls(cut, arg, doc_filter, excl, require or None)
+
+    @property
+    def membership(self) -> bool:
+        return bool(
+            self.doc_filter is not None or self.exclude or self.require
+        )
+
+    @property
+    def chunk_cut(self) -> bool:
+        """Whether each chunk may cut to its k best: a cursor or a group
+        needs hits below the global top k, a scored frame all of them."""
+        return self.cut == "topk" or (self.cut == "after" and self.arg is None)
+
+    def paths(self, mode: str, prune: bool, local_max_postings) -> tuple:
+        """(prune, local gate): the caller's limits, kept only for a
+        plain top-k over the whole corpus. A θ bar from unconstrained
+        scores could prune constrained winners or the hits past a
+        cursor or in a small group; the driver-local path implements
+        only the plain cut. AND gates chunks by term count instead."""
+        plain = self.cut == "topk" and not self.membership
+        return (
+            bool(prune) and plain and mode != AND_MATCH,
+            (local_max_postings or 0) if plain else 0,
+        )
+
+
+def _hits_frame(ids: np.ndarray, scores: np.ndarray, qid=None) -> pd.DataFrame:
+    out = {"doc_id": ids, "score": scores}
+    return pd.DataFrame(out if qid is None else {"query_id": qid, **out})
+
+
+def _chunk_of(pdf: pd.DataFrame, span: int) -> Tuple[int, np.ndarray]:
+    """A chunk group's (first doc id, doc lengths)."""
+    dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32)
+    return int(pdf["chunk"].iloc[0]) * span, dls.astype(np.float64)
+
+
+def _kernel_rows(pdf: pd.DataFrame):
+    """A chunk group's postings rows as kernel rows; ``term_ub`` is only
+    read when pruning, so frames without it carry 0."""
+    ubs = pdf["term_ub"] if "term_ub" in pdf else np.zeros(len(pdf))
+    return zip(pdf["term"], pdf["idf"], pdf["blocks"], ubs)
+
+
+def _chunk_scorer(span: int, avgdl: float, keep, need=None, theta=0.0):
+    """``applyInPandas`` body: one chunk's (or one (query_id, chunk)'s)
+    ``_kernel_inputs`` rows -> its hits via ``kernel.score``. ``need``
+    maps the group's query_id (None for a single query) to its AND term
+    count; a query_id column is kept on the output."""
+
+    def body(pdf: pd.DataFrame) -> pd.DataFrame:
+        base, dls = _chunk_of(pdf, span)
+        qid = pdf["query_id"].iloc[0] if "query_id" in pdf else None
+        ids, scores = kernel.score(
+            _kernel_rows(pdf), dls, base, avgdl,
+            pdf["_dels"].iloc[0],
+            pdf["_allow"].iloc[0] if "_allow" in pdf else None,
+            need[qid] if need else 0, keep, theta,
+        )
+        return _hits_frame(ids, scores, qid)
+
+    return body
 
 
 class IndexReader:
@@ -720,6 +769,37 @@ class IndexReader:
                     self._dels_arrays_state = 1
         return self._dels_arrays if self._dels_arrays_state == 1 else None
 
+    def _dels_for(self, chunks: List[int]) -> Dict[int, np.ndarray]:
+        """chunk -> sorted tombstoned doc_ids for ``chunks``: the cached
+        arrays, else one collect of those chunks' tombstone lists."""
+        cached = self._dels_cached()
+        if cached is not None:
+            return cached
+        dbc = self._dels_by_chunk()
+        if dbc is None:
+            return {}
+        return {
+            int(r["chunk"]): np.asarray(r["_dels"], dtype=np.int64)
+            for r in dbc.where(F.col("chunk").isin(chunks)).collect()
+        }
+
+    def _kernel_inputs(self, post: DataFrame, allow=None) -> DataFrame:
+        """Postings rows joined with what the chunk kernel reads besides
+        them: the chunk's doclens (``_dls``), its tombstones (``_dels``,
+        NULL without any) and, when given, its allowed positions
+        (``_allow``, an inner join: chunks without any drop out)."""
+        joined = post.join(
+            self.doclens_df().withColumnRenamed("dls", "_dls"), "chunk"
+        )
+        dels = self._dels_by_chunk()
+        if dels is not None:
+            joined = joined.join(dels, "chunk", "left")
+        else:
+            joined = joined.withColumn(
+                "_dels", F.lit(None).cast("array<long>")
+            )
+        return joined if allow is None else joined.join(allow, "chunk")
+
     def match_terms(
         self, terms: Iterable[str], mode: str
     ) -> List[Tuple[str, int, int, int]]:
@@ -806,10 +886,6 @@ class IndexReader:
         local_max_postings: Optional[int] = _LOCAL_MAX_POSTINGS,
         doc_filter=None,
         exclude_terms=None,
-        _group: Optional[str] = None,
-        _after: Optional[Tuple[float, int]] = None,
-        _require_docs: Optional[list] = None,
-        _scored: bool = False,
     ) -> DataFrame:
         """BM25 top-k -> DataFrame (doc_id, score, rank).
 
@@ -837,15 +913,34 @@ class IndexReader:
         pruning is disabled under a filter: a θ bar bootstrapped from
         unfiltered scores could prune docs that belong in the FILTERED
         top-k."""
+        return self._run(
+            terms, mode, k, _Plan.of("topk", None, doc_filter, exclude_terms),
+            prune, local_max_postings,
+        )
+
+    def _run(
+        self,
+        terms: Iterable[str],
+        mode: str,
+        k: int,
+        plan: "_Plan",
+        prune: bool = True,
+        local_max_postings: Optional[int] = _LOCAL_MAX_POSTINGS,
+    ) -> DataFrame:
+        """Execute a resolved ``_Plan``: term metadata, then the
+        driver-local path or the distributed chunk kernel, then the
+        plan's cut. ``prune``/``local_max_postings`` are upper limits;
+        ``_Plan.paths`` turns them off where the plan needs it."""
         qterms = list(dict.fromkeys(terms))
-        excl = [t for t in dict.fromkeys(exclude_terms or []) if t]
         n_query_terms = len(qterms)
+        group = plan.arg if plan.cut == "group" else None
         out_fields = (
-            RESULT_FIELDS if _group is None
-            else [(_group, "string")] + RESULT_FIELDS
+            RESULT_FIELDS if group is None
+            else [(group, "string")] + RESULT_FIELDS
         )
         if not qterms:
             return self._no_hits(out_fields)
+        prune, local_max = plan.paths(mode, prune, local_max_postings)
 
         # ---- term metadata. The expansion costs zero jobs with the
         # cached dictionary and one shuffle-free terms scan without it
@@ -858,21 +953,14 @@ class IndexReader:
         # are ever collected.
         stats = self.stats
         pred = _term_predicate(qterms, mode)
-        local_ok = bool(
-            local_max_postings
-            and doc_filter is None
-            and not excl
-            and not _require_docs
-            and not _scored
-        )
-        if local_ok and mode not in (START_WITH, CONTAINS_MATCH):
+        if local_max and mode not in (START_WITH, CONTAINS_MATCH):
             # past the full-dictionary cap: when the dictionary head
             # bounds Σ df within the gate, the postings scan is the
             # query's only job (bucket_of routes the terms, the scan's
             # own n_docs give df). A chunk-gate decline falls through
             # to the lookup + distributed plan.
             bound = self._head_bound(qterms)
-            if bound is not None and bound <= local_max_postings:
+            if bound is not None and bound <= local_max:
                 buckets = sorted(
                     {bucket_of(t, self.num_buckets) for t in qterms}
                 )
@@ -881,7 +969,7 @@ class IndexReader:
                 )
                 if out is not None:
                     return out
-                local_ok = False
+                local_max = 0
         cap = _META_COLLECT_CAP
         meta: Optional[DataFrame] = None
         meta_rows: List[dict] = []
@@ -916,9 +1004,9 @@ class IndexReader:
             return self._no_hits(out_fields)
 
         if (
-            local_ok
+            local_max
             and meta is None  # wide expansions stay distributed
-            and total_df <= local_max_postings
+            and total_df <= local_max
         ):
             out = self._search_local(pred, buckets, mode, k, n_query_terms)
             if out is not None:
@@ -945,13 +1033,11 @@ class IndexReader:
         )
 
         theta = 0.0
-        if (prune and mode != AND_MATCH and doc_filter is None
-                and not excl and not _require_docs and not _scored):
-            # θ bootstrap costs extra driver jobs; only worth it when
-            # enough postings could be skipped (unknown-size expansions
-            # always bootstrap — they are the heavy ones)
-            if total_df is None or total_df >= _PRUNE_MIN_POSTINGS:
-                theta = self._bootstrap_theta(post, k)
+        # θ bootstrap costs extra driver jobs; only worth it when enough
+        # postings could be skipped (unknown-size expansions always
+        # bootstrap — they are the heavy ones)
+        if prune and (total_df is None or total_df >= _PRUNE_MIN_POSTINGS):
+            theta = self._bootstrap_theta(post, k)
         need_all = mode == AND_MATCH
 
         if theta > 0.0:
@@ -972,141 +1058,46 @@ class IndexReader:
             )
             post = post.join(F.broadcast(w_n), "chunk")
 
-        joined = post.join(
-            self.doclens_df().withColumnRenamed("dls", "_dls"), "chunk"
+        joined = self._kernel_inputs(
+            post,
+            self._allow_by_chunk(plan.doc_filter, plan.exclude, plan.require)
+            if plan.membership else None,
         )
-        dels_by_chunk = self._dels_by_chunk()
-        if dels_by_chunk is not None:
-            joined = joined.join(dels_by_chunk, "chunk", "left")
-        else:
-            joined = joined.withColumn(
-                "_dels", F.lit(None).cast("array<long>")
-            )
-        has_allow = (
-            doc_filter is not None or bool(excl) or bool(_require_docs)
+        local = joined.groupBy("chunk").applyInPandas(
+            _chunk_scorer(
+                self.chunk_span, stats.avgdl,
+                k if plan.chunk_cut else None,
+                {None: n_query_terms} if need_all else None,
+                theta,
+            ),
+            _LOCAL_SCHEMA,
         )
-        if has_allow:
-            joined = joined.join(
-                self._allow_by_chunk(doc_filter, excl, _require_docs),
-                "chunk",
-            )
-
-        avgdl = stats.avgdl
-        span = self.chunk_span
-        # grouped/cursored modes keep the chunk's WHOLE hit set: a
-        # chunk-local global-score cut could drop a small group's best
-        # doc (grouped) or every doc below the cursor (search_after).
-        # Volume stays bounded by Σ df (the match set) — match_docs.
-        loc_k = (
-            k
-            if (_group is None and _after is None and not _scored)
-            else (1 << 62)
-        )
-        n_query = n_query_terms
-
-        def score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame(
-                    {"doc_id": [], "score": [], "nterms": []}
-                ).astype({"doc_id": "int64", "score": "float64", "nterms": "int32"})
-            chunk = int(pdf["chunk"].iloc[0])
-            dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32).astype(
-                np.float64
-            )
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
-            base = chunk * span
-            # sorted by term: deterministic float accumulation order —
-            # within-group row order after a shuffle is NOT guaranteed,
-            # and float addition is not associative; sorting pins this
-            # path 1-ulp-identical to _search_local and search_many
-            pdf = pdf.sort_values("term", kind="mergesort").reset_index(
-                drop=True
-            )
-            # rest_ub[i]: chunk-level ub of every row except i — the
-            # slack available from other terms when testing row i's blocks
-            ubs = pdf["term_ub"].to_numpy(dtype=np.float64)
-            total_ub = float(ubs.sum())
-            for i in range(len(pdf)):
-                t_idf = float(pdf["idf"].iloc[i])
-                rest = total_ub - float(ubs[i])
-                blocks = pdf["blocks"].iloc[i]
-                if theta > 0.0:
-                    # block-max skip
-                    blocks = [
-                        b for b in blocks
-                        if _term_ub(t_idf, int(b["max_tf"])) + rest > theta
-                    ]
-                # one batched decode and one scatter-add per (chunk,
-                # term): a term's positions are unique, so this adds
-                # each posting once, exactly as a per-block loop would
-                doc_ids, tfs = decode_blocks(blocks)
-                pos = doc_ids - base
-                scores[pos] += _score_np(
-                    tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                )
-                counts[pos] += 1
-            dels_val = pdf["_dels"].iloc[0]
-            if dels_val is not None and len(dels_val):
-                dp = np.asarray(dels_val, dtype=np.int64) - base
-                dp = dp[(dp >= 0) & (dp < counts.size)]
-                counts[dp] = 0  # tombstoned docs never match
-            if has_allow:
-                ap = np.asarray(pdf["_allow"].iloc[0], dtype=np.int64)
-                ok = np.zeros(counts.size, dtype=bool)
-                ok[ap[ap < counts.size]] = True
-                counts[~ok] = 0  # docs outside the filter never match
-            hit = np.flatnonzero(counts)
-            if need_all:
-                hit = hit[counts[hit] == n_query]
-            if hit.size == 0:
-                return pd.DataFrame(
-                    {"doc_id": [], "score": [], "nterms": []}
-                ).astype({"doc_id": "int64", "score": "float64", "nterms": "int32"})
-            if hit.size > loc_k:
-                # local bounded top-k: keep the loc_k best (ties kept by
-                # taking extras with equal score so the global merge stays
-                # exact)
-                sc = scores[hit]
-                kth = np.partition(sc, sc.size - loc_k)[sc.size - loc_k]
-                hit = hit[sc >= kth]
-            return pd.DataFrame(
-                {
-                    "doc_id": (hit + base).astype("int64"),
-                    "score": scores[hit],
-                    "nterms": counts[hit].astype("int32"),
-                }
-            )
-
-        local = joined.groupBy("chunk").applyInPandas(score_chunk, _LOCAL_SCHEMA)
-        if need_all:
-            local = local.where(F.col("nterms") == n_query_terms)
-        if _after is not None:
-            s_a, d_a = float(_after[0]), int(_after[1])
+        if plan.cut == "after" and plan.arg is not None:
+            s_a, d_a = plan.arg
             local = local.where(
                 (F.col("score") < s_a)
                 | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
             )
-        if _group is not None:
+        if group is not None:
             from .pipeline import topk_per_query
 
-            scored = local.select("doc_id", "score").join(
-                self.docs_df().select("doc_id", _group), "doc_id"
+            scored = local.join(
+                self.docs_df().select("doc_id", group), "doc_id"
             )
             cut = topk_per_query(
                 scored.select(
-                    F.col(_group).alias("query_id"), "doc_id", "score"
+                    F.col(group).alias("query_id"), "doc_id", "score"
                 ),
                 k,
             )
             return cut.select(
-                F.col("query_id").alias(_group), "doc_id", "score", "rank"
+                F.col("query_id").alias(group), "doc_id", "score", "rank"
             )
-        if _scored:
+        if plan.cut == "scored":
             # full scored match set as a LAZY frame (multifield combine):
             # no chunk-local cut above, no collect, no literal-frame tail
             # (literal frames are for driver-bounded rows, not k=n_docs)
-            return local.select("doc_id", "score")
+            return local
         topk = (
             local.orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
@@ -1147,15 +1138,8 @@ class IndexReader:
                 int(after_doc if after_doc is not None else -1),
             )
         )
-        return self.search(
-            terms,
-            mode,
-            k=k,
-            prune=False,
-            local_max_postings=0,
-            doc_filter=doc_filter,
-            exclude_terms=exclude_terms,
-            _after=cursor,
+        return self._run(
+            terms, mode, k, _Plan.of("after", cursor, doc_filter, exclude_terms)
         )
 
     def search_snippets(
@@ -1285,8 +1269,8 @@ class IndexReader:
         """Diversified results off the index: top-``k`` BM25 hits
         within every value of one REGISTRY column (lang / repo / ...),
         one query -> (group, doc_id, score, rank). The declarative twin
-        is ``pipeline.bm25_topk_grouped``; scores are bit-identical to
-        ``search`` (same sorted-term per-chunk accumulation).
+        is ``pipeline.bm25_topk_grouped``; scores are ``search``'s
+        (``kernel.py``).
 
         Plan deltas vs ``search``: block-max pruning off and the
         chunk-local cut disabled (either could drop a small group's
@@ -1294,15 +1278,8 @@ class IndexReader:
         the full match set (Σ df, the ``match_docs`` bound); the
         per-group cut then runs through the salted two-phase
         tournament, never a whole-group sort."""
-        return self.search(
-            terms,
-            mode,
-            k=k,
-            prune=False,
-            local_max_postings=0,
-            doc_filter=doc_filter,
-            exclude_terms=exclude_terms,
-            _group=group,
+        return self._run(
+            terms, mode, k, _Plan.of("group", group, doc_filter, exclude_terms)
         )
 
     # ------------------------------------------------ batched queries
@@ -1333,9 +1310,8 @@ class IndexReader:
         (query_id, term) join. Per-query exact top-k runs as
         pipeline.topk_per_query's two-phase tournament, so no single
         task ever sorts a hot query's full match set. Scores are
-        bit-identical to per-query :meth:`search` (same driver-computed
-        idf floats, same kernel arithmetic, same sorted-term float
-        accumulation order; pinned by test).
+        per-query :meth:`search`'s: the same driver-computed idf floats
+        through the same kernel (``kernel.py``).
 
         ``queries``: {query_id: [terms...]} or a sequence of term lists
         (auto ids q00, q01, ...). ``mode`` applies to the whole batch:
@@ -1355,7 +1331,7 @@ class IndexReader:
         qmap = normalize_queries(queries)
         many_fields = [("query_id", "string")] + RESULT_FIELDS
         # Empty terms can never match as exact terms — kept out of the
-        # term map but still counted by AND_MATCH's need_map (same as
+        # term map but still counted by AND_MATCH's need (same as
         # search()'s n_query_terms, which counts every deduped input
         # term). Under START_WITH an empty PREFIX matches every term
         # (startswith('') — exactly what search()'s predicate and
@@ -1459,74 +1435,18 @@ class IndexReader:
         else:
             post = post.join(F.broadcast(meta.select("term", "idf")), "term")
 
-        joined = post.join(
-            self.doclens_df().withColumnRenamed("dls", "_dls"), "chunk"
+        joined = self._kernel_inputs(
+            post,
+            self._allow_by_chunk(doc_filter) if doc_filter is not None else None,
         )
-        dels_by_chunk = self._dels_by_chunk()
-        if dels_by_chunk is not None:
-            joined = joined.join(dels_by_chunk, "chunk", "left")
-        else:
-            joined = joined.withColumn(
-                "_dels", F.lit(None).cast("array<long>")
-            )
-        has_allow = doc_filter is not None
-        if has_allow:
-            joined = joined.join(self._allow_by_chunk(doc_filter), "chunk")
-
         avgdl = stats.avgdl
         span = self.chunk_span
-        loc_k = k
-        # AND semantics must gate BEFORE the per-chunk top-k cut (as in
-        # search()'s kernel): a high-scoring partial match must never
-        # evict a complete match from a chunk's k survivors. The map is
-        # bounded by the batch size.
-        need_map = (
+        # AND_MATCH's term count per query, bounded by the batch size
+        need = (
             {qid: len(ts) for qid, ts in qmap.items()}
             if mode == AND_MATCH
             else None
         )
-
-        _EMPTY_OUT = {
-            "query_id": "object", "doc_id": "int64",
-            "score": "float64", "nterms": "int32",
-        }
-
-        def _empty_many_out() -> pd.DataFrame:
-            """Typed zero-row frame both kernels return — one
-            definition so a schema change cannot drift between the
-            five call sites inside the serialized closures."""
-            return pd.DataFrame({c: [] for c in _EMPTY_OUT}).astype(_EMPTY_OUT)
-
-        def _finish_query(qid, scores, counts, dels_val, allow_val, base):
-            """Shared tail of both kernels: tombstone/filter zeroing,
-            AND gating, bounded tie-kept top-k — identical arithmetic
-            to search()'s score_chunk."""
-            if dels_val is not None and len(dels_val):
-                dp = np.asarray(dels_val, dtype=np.int64) - base
-                dp = dp[(dp >= 0) & (dp < counts.size)]
-                counts[dp] = 0
-            if allow_val is not None:
-                ap = np.asarray(allow_val, dtype=np.int64)
-                ok = np.zeros(counts.size, dtype=bool)
-                ok[ap[ap < counts.size]] = True
-                counts[~ok] = 0
-            hit = np.flatnonzero(counts)
-            if need_map is not None:
-                hit = hit[counts[hit] == need_map[qid]]
-            if hit.size == 0:
-                return None
-            if hit.size > loc_k:
-                sc = scores[hit]
-                kth = np.partition(sc, sc.size - loc_k)[sc.size - loc_k]
-                hit = hit[sc >= kth]
-            return pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "doc_id": (hit + base).astype("int64"),
-                    "score": scores[hit],
-                    "nterms": counts[hit].astype("int32"),
-                }
-            )
 
         def score_chunk_shared(pdf: pd.DataFrame) -> pd.DataFrame:
             """One chunk, ALL queries: decode each term's blocks ONCE
@@ -1540,95 +1460,30 @@ class IndexReader:
             alternative (a span pair per query, filled during the term
             fan-out) is O(|queries| x chunk_span) per task — ~100 MB
             transient per task slot at 500 registered queries — which
-            defeats the kernel's own many-queries purpose.
-
-            Bit-identity: a term's postings positions are unique within
-            the term (blocks partition the docID range), so the single
-            fancy-index add per (query, term) applies each position's
-            contribution exactly once, in sorted-term order — the same
-            float accumulation order as search()'s kernel,
-            _search_local, and the per-(query, chunk) fallback."""
-            if pdf.empty:
-                return _empty_many_out()
-            chunk = int(pdf["chunk"].iloc[0])
-            dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32).astype(
-                np.float64
-            )
-            base = chunk * span
-            # sorted by term: each query's terms then accumulate in
-            # sorted order — the same deterministic float addition order
-            # as search()'s kernel and _search_local (bit-identical)
-            pdf = pdf.sort_values("term", kind="mergesort").reset_index(
-                drop=True
-            )
-            decoded: List[Tuple[np.ndarray, np.ndarray]] = []
-            terms_by_q: Dict[str, List[int]] = {}
-            for i in range(len(pdf)):
-                qids = q_by_term.get(pdf["term"].iloc[i])
-                if not qids:
-                    continue
-                t_idf = float(pdf["idf"].iloc[i])
-                doc_ids, tfs = decode_blocks(pdf["blocks"].iloc[i])
-                pos = doc_ids - base
-                ti = len(decoded)
-                decoded.append(
-                    (pos, _score_np(tfs.astype(np.float64), dls[pos], t_idf, avgdl))
-                )
-                for qid in qids:
-                    terms_by_q.setdefault(qid, []).append(ti)
-            dels_val = pdf["_dels"].iloc[0]
-            allow_val = pdf["_allow"].iloc[0] if has_allow else None
+            defeats the kernel's own many-queries purpose."""
+            base, dls = _chunk_of(pdf, span)
+            rows = [r for r in _kernel_rows(pdf) if r[0] in q_by_term]
+            parts_by_q: Dict[str, list] = {}
+            for part in kernel.contributions(rows, dls, base, avgdl):
+                for qid in q_by_term[part[0]]:
+                    parts_by_q.setdefault(qid, []).append(part)
+            dels = pdf["_dels"].iloc[0]
+            allow = pdf["_allow"].iloc[0] if "_allow" in pdf else None
             scores = np.zeros(dls.size, dtype=np.float64)
             counts = np.zeros(dls.size, dtype=np.int32)
             outs = []
-            for qid in sorted(terms_by_q):
+            for qid in sorted(parts_by_q):
                 scores.fill(0.0)
                 counts.fill(0)
-                for ti in terms_by_q[qid]:
-                    pos, contrib = decoded[ti]
-                    scores[pos] += contrib
-                    counts[pos] += 1
-                out = _finish_query(
-                    qid, scores, counts, dels_val, allow_val, base
+                kernel.add(scores, counts, parts_by_q[qid])
+                ids, sc = kernel.finish(
+                    scores, counts, base, dels, allow,
+                    need[qid] if need else 0, k,
                 )
-                if out is not None:
-                    outs.append(out)
+                outs.append(_hits_frame(ids, sc, qid))
             if not outs:
-                return _empty_many_out()
+                return _hits_frame(np.empty(0, np.int64), np.empty(0), "")
             return pd.concat(outs, ignore_index=True)
-
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            """Fallback kernel: one (query_id, chunk) group per call."""
-            if pdf.empty:
-                return _empty_many_out()
-            qid = pdf["query_id"].iloc[0]
-            chunk = int(pdf["chunk"].iloc[0])
-            dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32).astype(
-                np.float64
-            )
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
-            base = chunk * span
-            # sorted by term: same deterministic accumulation order as
-            # search()'s kernel and _search_local — scores bit-identical
-            pdf = pdf.sort_values("term", kind="mergesort").reset_index(
-                drop=True
-            )
-            for i in range(len(pdf)):
-                t_idf = float(pdf["idf"].iloc[i])
-                doc_ids, tfs = decode_blocks(pdf["blocks"].iloc[i])
-                pos = doc_ids - base
-                scores[pos] += _score_np(
-                    tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                )
-                counts[pos] += 1
-            out = _finish_query(
-                qid, scores, counts, pdf["_dels"].iloc[0],
-                pdf["_allow"].iloc[0] if has_allow else None, base,
-            )
-            if out is None:
-                return _empty_many_out()
-            return out
 
         if q_by_term is not None:
             local = joined.groupBy("chunk").applyInPandas(
@@ -1636,11 +1491,9 @@ class IndexReader:
             )
         else:
             local = joined.groupBy("query_id", "chunk").applyInPandas(
-                score_group, _MULTI_LOCAL_SCHEMA
+                _chunk_scorer(span, avgdl, k, need), _MULTI_LOCAL_SCHEMA
             )
-        return topk_per_query(
-            local.select("query_id", "doc_id", "score"), k
-        )
+        return topk_per_query(local, k)
 
     def _search_local(
         self,
@@ -1653,13 +1506,11 @@ class IndexReader:
         """Driver-local path: score the matched postings (Σ df within
         ``_LOCAL_MAX_POSTINGS``) driver-side. One postings scan job
         (term predicate + bucket pruning pushed to parquet), plus a
-        doclens scan for chunks not yet cached, and pure numpy after
-        that: each (chunk, term) row decodes in one batched pass
-        (``decode_blocks``) and scatter-adds once. A term's df is the
-        Σ ``n_docs`` of its collected rows — the integer its terms/
-        rows hold (terms/ aggregates postings), so idf is the lookup's.
-        Accumulation order and arithmetic match score_chunk exactly.
-        Returns None (caller falls back to the distributed plan) if the
+        doclens scan for chunks not yet cached, then the chunk kernel
+        per chunk and one top-k. A term's df is the Σ ``n_docs`` of its
+        collected rows — the integer its terms/ rows hold (terms/
+        aggregates postings), so idf is the lookup's. Returns None
+        (caller falls back to the distributed plan) if the
         touched-chunk count would exceed the driver-memory gate."""
         rows = (
             self.postings_df()
@@ -1684,68 +1535,47 @@ class IndexReader:
         if len(chunks) > _LOCAL_MAX_CHUNKS:
             return None
         dls_by_chunk = self._doclens_for(chunks)
-        dels_by_chunk = self._dels_cached()
-        if dels_by_chunk is None:  # uncacheably many tombstones
-            dels_by_chunk = {}
-            dbc = self._dels_by_chunk()
-            if dbc is not None:
-                for r in dbc.where(F.col("chunk").isin(chunks)).collect():
-                    dels_by_chunk[int(r["chunk"])] = np.asarray(
-                        r["_dels"], dtype=np.int64
-                    )
-
-        span = self.chunk_span
-        avgdl = self.stats.avgdl
-        need_all = mode == AND_MATCH
-        out_ids: List[np.ndarray] = []
-        out_scores: List[np.ndarray] = []
+        dels_by_chunk = self._dels_for(chunks)
         by_chunk: Dict[int, list] = {}
         for r in rows:
-            by_chunk.setdefault(int(r["chunk"]), []).append(r)
-        for chunk in chunks:
-            dls = dls_by_chunk.get(chunk)
-            if dls is None:
-                continue
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
-            base = chunk * span
-            # sorted by term: deterministic float accumulation order;
-            # one batched decode and one scatter-add per (chunk, term)
-            for r in sorted(by_chunk[chunk], key=lambda x: x["term"]):
-                doc_ids, tfs = decode_blocks(r["blocks"])
-                pos = doc_ids - base
-                scores[pos] += _score_np(
-                    tfs.astype(np.float64), dls[pos],
-                    idf_by_term[r["term"]], avgdl,
-                )
-                counts[pos] += 1
-            dels = dels_by_chunk.get(chunk)
-            if dels is not None and dels.size:
-                dp = dels - base
-                dp = dp[(dp >= 0) & (dp < counts.size)]
-                counts[dp] = 0
-            hit = np.flatnonzero(counts)
-            if need_all:
-                hit = hit[counts[hit] == n_query_terms]
-            if hit.size:
-                out_ids.append((hit + base).astype(np.int64))
-                out_scores.append(scores[hit])
-        if not out_ids:
-            return self._no_hits()
-        ids = np.concatenate(out_ids)
-        sc = np.concatenate(out_scores)
-        # top-k with (score desc, doc_id asc): lexsort is stable
-        order = np.lexsort((ids, -sc))[:k]
-        out = [
-            (int(ids[i]), float(sc[i]), rank + 1)
-            for rank, i in enumerate(order)
+            by_chunk.setdefault(int(r["chunk"]), []).append(
+                (r["term"], idf_by_term[r["term"]], r["blocks"], 0.0)
+            )
+        need = n_query_terms if mode == AND_MATCH else 0
+        hits = [
+            kernel.score(
+                by_chunk[c], dls_by_chunk[c], c * self.chunk_span,
+                self.stats.avgdl, dels_by_chunk.get(c), need=need,
+            )
+            for c in chunks
+            if c in dls_by_chunk
         ]
-        return literal_frame(self.spark, out, RESULT_FIELDS)
+        if not hits:
+            return self._no_hits()
+        return self._ranked_frame(
+            *kernel.topk(
+                np.concatenate([h[0] for h in hits]),
+                np.concatenate([h[1] for h in hits]),
+                k,
+            )
+        )
+
+    def _ranked_frame(self, ids: np.ndarray, scores: np.ndarray) -> DataFrame:
+        """(doc_id, score, rank) of hits already in rank order."""
+        return literal_frame(
+            self.spark,
+            [
+                (int(i), float(s), rank + 1)
+                for rank, (i, s) in enumerate(zip(ids, scores))
+            ],
+            RESULT_FIELDS,
+        )
 
     def _bootstrap_theta(self, post: DataFrame, k: int) -> float:
-        """Decode the single most-promising chunk driver-side and return
-        its k-th best score (0 if it holds < k docs). One tiny collect —
-        bounded by (query terms × blocks-in-one-chunk)."""
+        """Score the single most-promising chunk driver-side with the
+        chunk kernel and return its k-th best live score (0 if it holds
+        < k live hits). One tiny collect — bounded by (query terms ×
+        blocks-in-one-chunk)."""
         agg = (
             post.groupBy("chunk")
             .agg(F.count("*").alias("m"))
@@ -1755,41 +1585,19 @@ class IndexReader:
         )
         if not agg:
             return 0.0
-        best_chunk = agg[0]["chunk"]
-        rows = post.where(F.col("chunk") == best_chunk).collect()
-        got = self._doclens_for([int(best_chunk)])
-        if int(best_chunk) not in got:
+        chunk = int(agg[0]["chunk"])
+        rows = post.where(F.col("chunk") == chunk).collect()
+        dls = self._doclens_for([chunk]).get(chunk)
+        if dls is None:
             return 0.0
-        dls = got[int(best_chunk)]
-        scores = np.zeros(dls.size, dtype=np.float64)
-        base = int(best_chunk) * self.chunk_span
-        deleted = np.empty(0, dtype=np.int64)
-        cached_dels = self._dels_cached()
-        if cached_dels is not None:
-            arr = cached_dels.get(int(best_chunk))
-            if arr is not None and arr.size:
-                dp = arr - base
-                deleted = dp[(dp >= 0) & (dp < dls.size)]
-        else:
-            dbc = self._dels_by_chunk()
-            if dbc is not None:
-                drow = dbc.where(F.col("chunk") == best_chunk).collect()
-                if drow:
-                    dp = np.asarray(drow[0]["_dels"], dtype=np.int64) - base
-                    deleted = dp[(dp >= 0) & (dp < dls.size)]
-        for r in rows:
-            doc_ids, tfs = decode_blocks(r["blocks"])
-            pos = doc_ids - base
-            scores[pos] += _score_np(
-                tfs.astype(np.float64), dls[pos], float(r["idf"]),
-                self.stats.avgdl,
-            )
-        if deleted.size:
-            scores[deleted] = 0.0  # a tombstone must not inflate θ
-        hit = scores[scores > 0]
-        if hit.size < k:
-            return 0.0
-        return float(np.partition(hit, hit.size - k)[hit.size - k])
+        _, scores = kernel.score(
+            [(r["term"], r["idf"], r["blocks"], 0.0) for r in rows],
+            dls, chunk * self.chunk_span, self.stats.avgdl,
+            self._dels_for([chunk]).get(chunk), keep=k,
+        )
+        # the cut keeps the k best and their ties: its minimum is the
+        # k-th best score; a non-positive bar prunes nothing
+        return max(0.0, float(scores.min())) if scores.size >= k else 0.0
 
     # ----------------------------------------------- suggestion expansion
 
@@ -1959,13 +1767,11 @@ class IndexReader:
             if len(groups) > 1
             else None
         )
-        return self.search(
+        return self._run(
             all_terms,
             WITH_SUGGESTIONS,
-            k=k,
-            doc_filter=doc_filter,
-            exclude_terms=must_not,
-            _require_docs=require,
+            k,
+            _Plan.of("topk", None, doc_filter, must_not, require),
         )
 
     def search_prf(
@@ -2409,13 +2215,9 @@ class IndexReader:
             m = chunk_arr == c
             dls[m] = dls_by_chunk[c][ids[m] - c * span]
         idf = _idf(float(self.stats.n_docs), float(ids.size))
-        sc = _score_np(tfs, dls, idf, self.stats.avgdl)
-        order = np.lexsort((ids, -sc))[:k]
-        out = [
-            (int(ids[i]), float(sc[i]), rank + 1)
-            for rank, i in enumerate(order)
-        ]
-        return literal_frame(self.spark, out, RESULT_FIELDS)
+        return self._ranked_frame(
+            *kernel.rank_term(ids, tfs, dls, idf, self.stats.avgdl, k)
+        )
 
     def search_phrase(
         self,
@@ -2664,7 +2466,7 @@ def search_multifield(
     per-field inverted-index layout).
 
     Every field contributes its FULL scored match set as a lazy frame
-    (``search(_scored=True)``: exact, bounded by Σ df of the query
+    (a ``scored`` plan: exact, bounded by Σ df of the query
     terms, never corpus volume — no collect, no literal-plan tail),
     rounded to 6 dp per field before the weighted full-outer combine —
     the shared ``combine_field_scores`` protocol. Cost ≈ one plain
@@ -2678,15 +2480,12 @@ def search_multifield(
     parts = []
     for fld in sorted(field_readers):
         rd, w = field_readers[fld]
-        # full match-set ranking: k = n_docs with the driver-local
-        # fast path OFF — at full k that path would collect the whole
-        # match set and render it as one literal frame;
-        # the distributed scorer streams the same rows instead
-        full = rd.search(
-            qterms,
-            WITH_SUGGESTIONS,
-            k=int(rd.stats.n_docs),
-            _scored=True,
+        # full match-set ranking: the scored plan never runs the
+        # driver-local path, which would collect the whole match set
+        # and render it as one literal frame; the distributed scorer
+        # streams the same rows instead
+        full = rd._run(
+            qterms, WITH_SUGGESTIONS, int(rd.stats.n_docs), _Plan("scored")
         ).select("doc_id", F.round("score", 6).alias("score"))
         parts.append((full, float(w)))
     return combine_field_scores(parts, k)

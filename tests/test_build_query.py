@@ -143,27 +143,29 @@ def test_pruning_matches_exhaustive(synth_index):
         ]
 
 
-def test_local_fast_path_matches_distributed(synth_index):
+def test_local_fast_path_matches_distributed(
+    synth_index, two_seg_index, monkeypatch
+):
     """The driver-side small-query fast path must be plan-invisible:
-    identical (doc_id, score, rank) to the distributed plan for every
-    mode, including prefix expansion and AND."""
-    for terms, mode in [
-        (["import"], P.EXACT_MATCH),
-        (["import", "return", "def"], P.WITH_SUGGESTIONS),
-        (["import", "return"], P.AND_MATCH),
-        (["im"], P.START_WITH),
-        (["nosuchterm"], P.EXACT_MATCH),
-    ]:
-        local = synth_index.search(terms, mode, k=10).collect()
-        dist = synth_index.search(
-            terms, mode, k=10, local_max_postings=0
-        ).collect()
-        assert [(r["doc_id"], r["rank"]) for r in local] == [
-            (r["doc_id"], r["rank"]) for r in dist
-        ], (terms, mode)
-        for lr, dr in zip(local, dist):
-            # per-term float accumulation order may differ by 1 ulp
-            assert lr["score"] == pytest.approx(dr["score"], rel=1e-12)
+    bit-identical (doc_id, score, rank) to the distributed plan, with
+    and without a bootstrapped θ, for every mode, including prefix
+    expansion and AND, on a fresh and on a tombstoned index."""
+    monkeypatch.setattr(Q, "_PRUNE_MIN_POSTINGS", 0)
+    for reader in (synth_index, two_seg_index):
+        for terms, mode in [
+            (["import"], P.EXACT_MATCH),
+            (["import", "return", "def"], P.WITH_SUGGESTIONS),
+            (["import", "return"], P.AND_MATCH),
+            (["im"], P.START_WITH),
+            (["nosuchterm"], P.EXACT_MATCH),
+        ]:
+            for k in (10, 50):
+                local = _ranked(reader.search(terms, mode, k=k).collect())
+                for prune in (False, True):
+                    dist = reader.search(
+                        terms, mode, k=k, prune=prune, local_max_postings=0
+                    ).collect()
+                    assert _ranked(dist) == local, (terms, mode, k, prune)
 
 
 def test_local_path_job_counts(synth_index, jobs_of):
@@ -417,12 +419,7 @@ def test_head_past_gate_keeps_lookup_and_distributed_path(
     monkeypatch.setattr(Q, "_LOCAL_MAX_CHUNKS", 0)
     got = r.search(q, P.WITH_SUGGESTIONS, k=10).collect()
     assert calls == ["local", "expand"]
-    assert [x[:1] + x[2:] for x in _ranked(got)] == [
-        x[:1] + x[2:] for x in want_local
-    ]
-    for g, w in zip(_ranked(got), want_local):
-        # per-term float accumulation order may differ by 1 ulp
-        assert g[1] == pytest.approx(w[1], rel=1e-12)
+    assert _ranked(got) == want_local
 
 
 def test_random_word_property(synth_index, synth):

@@ -2,9 +2,8 @@
 
 The batch contract: (query_id, doc_id, score, rank) per-query top-k,
 with scores BIT-IDENTICAL to running the single-query path per query —
-same idf floats, same kernel arithmetic, and (since all three scoring
-paths accumulate per-term contributions in sorted-term order) the same
-float addition order. The batch exists to amortize the shared work
+the same idf floats through the same chunk kernel (kernel.py). The
+batch exists to amortize the shared work
 (one tokenize+tf pass declaratively; one bucket-pruned postings scan
 on the index) across the whole query set.
 """
