@@ -181,8 +181,8 @@ def _code_reader(spark: SparkSession, sf_dir: str) -> IndexReader:
 
 def _indexed_topk(spark, sf_dir, terms, mode, k=10) -> DataFrame:
     """BM25 top-k answered by the disk index (build_index →
-    IndexReader.search): codec decode, chunk pruning, block-max
-    pruning, bounded top-k — the flagship engine path, under the same
+    IndexReader.search): bucket-pruned postings scan, codec decode,
+    bounded top-k — the flagship engine path, under the same
     oracle as the declarative pipeline (they are rank- and
     score-identical by construction)."""
     res = _indexed_reader(spark, sf_dir).search(terms, mode, k=k)

@@ -176,7 +176,7 @@ def _measure(
     extra["q_not_indexed"] = round(time.time() - tq, 3)
     # metadata-filtered search: scope the OR query to two languages
     # (~27% of docs) — measures the allow-list registry scan + the
-    # filter-aware scoring stage (block-max pruning off under a filter)
+    # filter-aware scoring stage
     tq = time.time()
     reader.search(
         ["data", "join", "merge"],

@@ -4,7 +4,7 @@ A from-scratch, Spark-first re-expression of the capabilities of
 mmazurkevich/search-engine (reference at /root/reference): distributed
 inverted-index build (tokenize -> term/doc tf aggregation -> doc-range
 chunked, delta+varint block-encoded posting lists) and BM25 top-k query
-with block-max pruning, over a source-code corpus table
+over a source-code corpus table
 (repo, path, commit, lang, content).
 
 Design notes (scale-first):

@@ -273,6 +273,8 @@ def main(argv=None) -> int:
 
     args = p.parse_args(argv)
     # pure-argparse validation BEFORE paying Spark startup
+    if getattr(args, "k", 0) < 0:
+        p.error(f"--k must be >= 0, got {args.k}")
     if args.cmd == "search-many" and (
         (args.queries is None) == (args.queries_file is None)
     ):

@@ -4,7 +4,7 @@ Replaces the reference's in-heap primitive-int sets
 (reference engine/src/main/java/org/search/engine/tree/TreeNode.java:18,
 trove TIntHashSet) with the on-disk form the north star requires:
 docID-sorted, delta-encoded, varint-compressed blocks with a per-block
-``max_tf`` so the query side can do block-max WAND pruning.
+``max_tf``. The format keeps ``max_tf``, but no query reads it.
 
 All encode/decode work is numpy array arithmetic (no per-element Python
 loops over values — only over the ≤9 varint byte positions), so it is
@@ -71,7 +71,8 @@ def encode_blocks(
     ``doc_deltas`` is varint of successive docID deltas (the first entry
     is 0 — the block's first id lives in the struct field, so blocks are
     self-contained and independently skippable). ``tf_bytes`` is
-    varint(tf). ``max_tf`` per block powers block-max WAND.
+    varint(tf). ``max_tf`` is the block's largest tf; it stays in the
+    format, but no query reads it.
     """
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
     tfs = np.ascontiguousarray(tfs, dtype=np.int64)

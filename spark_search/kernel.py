@@ -2,7 +2,7 @@
 
 A chunk is ``chunk_span`` consecutive doc ids starting at ``base``; its
 doc lengths ``dls`` index by position (doc_id - base). A kernel row is
-one (term, chunk) postings row as ``(term, idf, blocks, term_ub)``.
+one (term, chunk) postings row as ``(term, idf, blocks)``.
 
 Rows always accumulate in sorted-term order, one batched
 ``decode_blocks`` and one scatter-add per row. Float addition is not
@@ -21,22 +21,6 @@ from .codec import decode_blocks
 from .pipeline import B, K1
 
 
-def _term_ub(idf: float, max_tf: int) -> float:
-    """Upper bound of a term's BM25 contribution given its max tf.
-    The dl-dependent denominator is minimized at dl -> 0
-    (tf + k1*(1-b)), so this bounds every real contribution.
-
-    Clamped at 0: idf goes NEGATIVE when a term's df exceeds live
-    n_docs (tombstoned deletes inflate df until compact), and a
-    negative "upper bound" would make every chunk_ub / rest-of-terms
-    sum UNDERestimate achievable scores — block-max pruning would then
-    drop chunks holding true top-k docs. A negative-idf term's real
-    contribution is <= 0, so 0 is the tight sound bound."""
-    return max(
-        0.0, idf * max_tf * (K1 + 1.0) / (max_tf + K1 * (1.0 - B))
-    )
-
-
 def _score_np(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
     # avgdl == 0 only when every live doc is empty/deleted; any match then
     # has tf == 0 so the score is 0 regardless — substitute 1.0 rather
@@ -46,28 +30,15 @@ def _score_np(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.nd
 
 
 def contributions(
-    rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float,
-    theta: float = 0.0,
+    rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float
 ) -> Iterator[Tuple[str, np.ndarray, np.ndarray]]:
-    """(term, positions, contributions) per row, in sorted-term order.
-
-    With ``theta`` > 0 a block is skipped unless its own upper bound
-    plus every other row's ``term_ub`` can beat ``theta`` (block-max
-    pruning against a static threshold)."""
-    rows = sorted(rows, key=lambda r: r[0])
-    ubs = np.array([r[3] for r in rows], dtype=np.float64)
-    total_ub = float(ubs.sum())
-    for (term, idf, blocks, _), ub in zip(rows, ubs):
-        idf = float(idf)
-        if theta > 0.0:
-            rest = total_ub - float(ub)
-            blocks = [
-                b for b in blocks
-                if _term_ub(idf, int(b["max_tf"])) + rest > theta
-            ]
+    """(term, positions, contributions) per row, in sorted-term order."""
+    for term, idf, blocks in sorted(rows, key=lambda r: r[0]):
         doc_ids, tfs = decode_blocks(blocks)
         pos = doc_ids - base
-        yield term, pos, _score_np(tfs.astype(np.float64), dls[pos], idf, avgdl)
+        yield term, pos, _score_np(
+            tfs.astype(np.float64), dls[pos], float(idf), avgdl
+        )
 
 
 def add(
@@ -82,13 +53,12 @@ def add(
 
 
 def accumulate(
-    rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float,
-    theta: float = 0.0,
+    rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float
 ) -> Tuple[np.ndarray, np.ndarray]:
     """-> (scores, matched-term counts) over the chunk's span."""
     scores = np.zeros(dls.size, dtype=np.float64)
     counts = np.zeros(dls.size, dtype=np.int32)
-    add(scores, counts, contributions(rows, dls, base, avgdl, theta))
+    add(scores, counts, contributions(rows, dls, base, avgdl))
     return scores, counts
 
 
@@ -126,10 +96,9 @@ def finish(
 def score(
     rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float,
     dels=None, allow=None, need: int = 0, keep: Optional[int] = None,
-    theta: float = 0.0,
 ) -> Tuple[np.ndarray, np.ndarray]:
     """One chunk, one query: ``accumulate`` then ``finish``."""
-    scores, counts = accumulate(rows, dls, base, avgdl, theta)
+    scores, counts = accumulate(rows, dls, base, avgdl)
     return finish(scores, counts, base, dels, allow, need, keep)
 
 

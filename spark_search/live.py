@@ -16,8 +16,7 @@ end state as the reference's per-event stream, delivered per commit
 point instead of per tree mutation (SURVEY.md §7.7).
 
 Scale: the distributed engine does all the work — each refresh runs
-``IndexReader.search`` (bucket-pruned scan, block-max pruning, bounded
-top-k). Only the two top-k snapshots being diffed are ever
+``IndexReader.search`` (bucket-pruned scan, bounded top-k). Only the two top-k snapshots being diffed are ever
 driver-side, so every structure here is O(k · registered queries),
 independent of corpus size. Diff emission appends one tiny parquet
 batch per refresh under ``<state_dir>/log`` — the live result sink

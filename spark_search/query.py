@@ -1,5 +1,5 @@
 """Disk-index query engine: exact/prefix/OR/AND retrieval, BM25,
-chunk- and block-level max-score pruning, bounded top-k.
+bounded top-k.
 
 The Spark replacement for the reference's query side
 (reference engine/src/main/java/org/search/engine/search/SimpleSearchManager.java:50-85
@@ -8,13 +8,13 @@ with the north-star BM25 ranking the reference lacks.
 
 Query lifecycle (SURVEY.md §3.1 Spark plan):
 
-  1. term-dictionary lookup (tiny: df, max_tf per query term; prefix
-     queries expand to the matching dictionary range) -> driver. Zero
-     jobs from the cached dictionary; otherwise ONE filtered terms/
-     scan with no shuffle, merged across segments on the driver.
-  2. idf + upper bounds computed driver-side (a few floats)
+  1. term-dictionary lookup (tiny: df per query term; prefix queries
+     expand to the matching dictionary range) -> driver. Zero jobs
+     from the cached dictionary; otherwise ONE filtered terms/ scan
+     with no shuffle, merged across segments on the driver.
+  2. idf computed driver-side (a few floats)
 
-  When Σ df ≤ ``_LOCAL_MAX_POSTINGS`` (2^20) and the matched rows touch
+  When Σ df ≤ ``_LOCAL_MAX_POSTINGS`` (2^21) and the matched rows touch
   ≤ ``_LOCAL_MAX_CHUNKS`` chunks, the rest runs on the driver: one
   postings scan collects the matched blocks and their ``n_docs`` (df
   is their sum, so idf needs no metadata), each (chunk, term) row
@@ -26,27 +26,26 @@ Query lifecycle (SURVEY.md §3.1 Spark plan):
   full dictionary fits, none shuffling; a missing-term query costs 0
   jobs with the full dictionary and 1 with the head. Prefix/contains
   queries past the cap keep the lookup (2 jobs). Only larger queries
-  take the distributed plan below. Measured crossover on serve_scale
-  (270k docs, 17 chunks, 4 cores; raw ms, identical top-k):
+  take the distributed plan below. Measured crossover, OR queries,
+  270k docs in 17 chunks, 4 cores, raw ms, identical top-k (rows to
+  1.03M on serve_scale; 2.05M and 4.02M on the same corpus generator
+  at 20 words per doc, 3 runs each):
 
-      Σ df    local      distributed unpruned   distributed pruned
-      82k     268-363    784-941                -
-      282k    559        1411                   2080
-      563k    660        1440                   2140
+      Σ df    local        distributed
+      82k     268-363      784-941
+      282k    559          1411
+      563k    660          1440
+      1.03M   960          1660
+      2.05M   1018-1170    1404-1630
+      4.02M   2047-2169    2078-2206
 
-  3. bootstrap threshold θ: the single most-promising chunk is decoded
-     driver-side; θ = its k-th best score.  θ is broadcast as the
-     block-max pruning bar — chunks whose summed term upper bounds
-     can't beat θ are never read, blocks within surviving chunks are
-     skipped by the same test (block-max WAND adapted to a static
-     distributed threshold; per-chunk heaps then raise the bar locally)
-  4. postings scan: ``bucket`` partition pruning + ``term`` predicate
+  3. postings scan: ``bucket`` partition pruning + ``term`` predicate
      pushed to parquet, so only query-term rows are ever deserialized
-  5. per-chunk numpy scoring inside ``applyInPandas`` (Arrow batches,
+  4. per-chunk numpy scoring inside ``applyInPandas`` (Arrow batches,
      no per-row Python), emitting ≤k local winners per chunk. Every
-     scoring path — this one, the driver-local path, the θ bootstrap
-     and ``search_many`` — runs the one chunk kernel in ``kernel.py``
-  6. global TakeOrderedAndProject -> (doc_id, score, rank)
+     scoring path — this one, the driver-local path and
+     ``search_many`` — runs the one chunk kernel in ``kernel.py``
+  5. global TakeOrderedAndProject -> (doc_id, score, rank)
 
 Scale: every stage's volume is bounded by (query terms × matched
 chunks), never by corpus size; the only exchange after the scan is the
@@ -72,13 +71,10 @@ from .build import IndexPaths, bucket_col, bucket_of
 from .checkpoint import BuildManifest
 from .codec import decode_block, decode_blocks, decode_positions
 from .frames import RESULT_FIELDS, literal_frame
-from .kernel import _term_ub
 from .pipeline import (
     AND_MATCH,
-    B,
     CONTAINS_MATCH,
     EXACT_MATCH,
-    K1,
     START_WITH,
     WITH_SUGGESTIONS,
 )
@@ -87,18 +83,16 @@ from .stats import CorpusStats
 # expansions up to this size are collected in one job (driver-side
 # metadata); beyond it the metadata stays fully distributed
 _META_COLLECT_CAP = 1024
-# skip the θ-bootstrap jobs when fewer matched postings than this —
-# pruning can't win back its own cost below it
-_PRUNE_MIN_POSTINGS = 200_000
 # driver-local path: when the term lookup proves the total matched
 # postings (Σ df) and touched chunk count are bounded, the matched
 # posting rows are collected and scored driver-side in numpy — no
 # shuffle, no Python-worker stage, one postings scan job. It beat the
-# distributed plan (pruned or not) at every Σ df measured up to 563k
-# (module docstring); queries past the gate stay distributed.
-# 1M postings × ~3 B of varint bytes + 16 B decoded, and 64 doclen
-# chunks × 64 KiB, stay within ~25 MB of driver memory.
-_LOCAL_MAX_POSTINGS = 1 << 20
+# distributed plan in every run up to Σ df 2.05M and tied it at 4.02M
+# (module docstring), so the gate is the largest power of two below
+# 4M; queries past it stay distributed. Each 1M postings (~3 B of
+# varint bytes + 16 B decoded each) holds ~25 MB of driver memory, so
+# ~50 MB at the gate, plus 64 doclen chunks × 64 KiB.
+_LOCAL_MAX_POSTINGS = 1 << 21
 _LOCAL_MAX_CHUNKS = 64
 # search_phrase's local gate: its collect holds per-(term, doc) plists
 # rows, not blocks, so it keeps the smaller bound
@@ -133,7 +127,7 @@ _DELS_BROADCAST_CAP = 5_000_000
 _DOCLENS_CACHE_CHUNKS = 512
 
 _DOCS_TERMS_FIELDS = [("doc_id", "long"), ("term", "string"), ("tf", "int")]
-_META_FIELDS = [("term", "string"), ("idf", "double"), ("term_ub", "double")]
+_META_FIELDS = [("term", "string"), ("idf", "double")]
 
 _LOCAL_SCHEMA = "doc_id long, score double"
 _MULTI_LOCAL_SCHEMA = "query_id string, " + _LOCAL_SCHEMA
@@ -154,8 +148,8 @@ def search_group(spark: SparkSession, tag: str):
     and result emission (reference
     search/SimpleSearchManager.java:87-89,188,76). The Spark analog is
     job-group cancellation: every job submitted from this thread while
-    the context is open (dictionary lookups, θ bootstrap, postings
-    scan, the final collect) belongs to ``search_job_group(tag)``, and
+    the context is open (dictionary lookups, postings scan, the final
+    collect) belongs to ``search_job_group(tag)``, and
     ``cancel_search(spark, tag)`` from any other thread aborts them
     all. The index is read-only, so cancellation needs no cleanup —
     the caller just sees the cancellation error.
@@ -182,8 +176,8 @@ def cancel_search(spark: SparkSession, tag: str) -> None:
     """Abort the search tagged ``tag`` (opened via ``search_group``).
     Thread-safe; a no-op if the search already finished.
 
-    A search is a SEQUENCE of jobs (dictionary lookup, θ bootstrap,
-    postings scan, collect), so like the reference's ``isCanceled``
+    A search is a SEQUENCE of jobs (dictionary lookup, postings scan,
+    collect), so like the reference's ``isCanceled``
     flag — which is checked between pipeline steps — cancellation must
     also stop the steps not yet submitted: on Spark ≥ 4 the group is
     marked cancelled for future jobs too (the JVM's
@@ -217,6 +211,11 @@ def _term_predicate(qterms: List[str], mode: str):
             cond = c if cond is None else (cond | c)
         return cond
     return F.col("term").isin(qterms)
+
+
+def _check_k(k: int) -> None:
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
 
 
 def _idf(n_docs: float, df: float) -> float:
@@ -298,17 +297,12 @@ class _Plan(NamedTuple):
         needs hits below the global top k, a scored frame all of them."""
         return self.cut == "topk" or (self.cut == "after" and self.arg is None)
 
-    def paths(self, mode: str, prune: bool, local_max_postings) -> tuple:
-        """(prune, local gate): the caller's limits, kept only for a
-        plain top-k over the whole corpus. A θ bar from unconstrained
-        scores could prune constrained winners or the hits past a
-        cursor or in a small group; the driver-local path implements
-        only the plain cut. AND gates chunks by term count instead."""
+    def local_gate(self, local_max_postings) -> int:
+        """The caller's driver-local Σ df limit, kept only for a plain
+        top-k over the whole corpus: the driver-local path implements
+        only the plain cut."""
         plain = self.cut == "topk" and not self.membership
-        return (
-            bool(prune) and plain and mode != AND_MATCH,
-            (local_max_postings or 0) if plain else 0,
-        )
+        return (local_max_postings or 0) if plain else 0
 
 
 def _hits_frame(ids: np.ndarray, scores: np.ndarray, qid=None) -> pd.DataFrame:
@@ -323,13 +317,11 @@ def _chunk_of(pdf: pd.DataFrame, span: int) -> Tuple[int, np.ndarray]:
 
 
 def _kernel_rows(pdf: pd.DataFrame):
-    """A chunk group's postings rows as kernel rows; ``term_ub`` is only
-    read when pruning, so frames without it carry 0."""
-    ubs = pdf["term_ub"] if "term_ub" in pdf else np.zeros(len(pdf))
-    return zip(pdf["term"], pdf["idf"], pdf["blocks"], ubs)
+    """A chunk group's postings rows as kernel rows."""
+    return zip(pdf["term"], pdf["idf"], pdf["blocks"])
 
 
-def _chunk_scorer(span: int, avgdl: float, keep, need=None, theta=0.0):
+def _chunk_scorer(span: int, avgdl: float, keep, need=None):
     """``applyInPandas`` body: one chunk's (or one (query_id, chunk)'s)
     ``_kernel_inputs`` rows -> its hits via ``kernel.score``. ``need``
     maps the group's query_id (None for a single query) to its AND term
@@ -342,7 +334,7 @@ def _chunk_scorer(span: int, avgdl: float, keep, need=None, theta=0.0):
             _kernel_rows(pdf), dls, base, avgdl,
             pdf["_dels"].iloc[0],
             pdf["_allow"].iloc[0] if "_allow" in pdf else None,
-            need[qid] if need else 0, keep, theta,
+            need[qid] if need else 0, keep,
         )
         return _hits_frame(ids, scores, qid)
 
@@ -455,10 +447,16 @@ class IndexReader:
     def deletes_df(self) -> Optional[DataFrame]:
         """(doc_id) of tombstoned docs, or None. Deleted docs are
         filtered at query time (Lucene-style); stats are corrected at
-        delete time, df per term only at compact time."""
+        delete time, df per term only at compact time. Memoized like
+        ``_multi``: each read infers the schema, which costs a job."""
         if not self.deletes_dir:
             return None
-        return self.spark.read.parquet(self.deletes_dir)
+        with self._cache_lock:
+            if "deletes" not in self._df_cache:
+                self._df_cache["deletes"] = self.spark.read.parquet(
+                    self.deletes_dir
+                )
+            return self._df_cache["deletes"]
 
     def _dels_by_chunk(self) -> Optional[DataFrame]:
         dels = self.deletes_df()
@@ -529,35 +527,35 @@ class IndexReader:
             .agg(F.sort_array(F.collect_list("pos")).alias("_allow"))
         )
 
+    def _meta_frame(self, expansion) -> DataFrame:
+        """A collected expansion's (term, idf) as a LocalRelation: the
+        driver-computed idf floats every scoring path consumes."""
+        n_docs = float(self.stats.n_docs)
+        return literal_frame(
+            self.spark,
+            [(t, _idf(n_docs, float(df_))) for t, df_, _, _ in expansion],
+            _META_FIELDS,
+        )
+
     def _meta_scan_df(self, pred, stats) -> DataFrame:
-        """Distributed per-term metadata (df, max_tf, bucket, idf,
-        term_ub) for expansions too wide to collect — Spark-side idf/ub
-        expressions, never driver literals."""
+        """Distributed per-term metadata (df, bucket, idf) for
+        expansions too wide to collect — a Spark-side idf expression,
+        never driver literals."""
         meta = (
             self.terms_df()
             .where(pred)
             .groupBy("term")
             .agg(
                 F.sum("df").alias("df"),
-                F.max("max_tf").alias("max_tf"),
                 F.first("bucket").alias("bucket"),
             )
         )
-        idf_col = F.log(
-            F.lit(1.0)
-            + (F.lit(float(stats.n_docs)) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        )
-        meta = meta.withColumn("idf", idf_col)
-        mtf = F.col("max_tf").cast("double")
         return meta.withColumn(
-            "term_ub",
-            # clamped at 0 for pruning soundness under negative idf
-            # (df > live n_docs before compact) — see _term_ub
-            F.greatest(
-                F.lit(0.0),
-                F.col("idf") * mtf * F.lit(K1 + 1.0)
-                / (mtf + F.lit(K1 * (1.0 - B))),
+            "idf",
+            F.log(
+                F.lit(1.0)
+                + (F.lit(float(stats.n_docs)) - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
             ),
         )
 
@@ -897,9 +895,10 @@ class IndexReader:
         Σ df over the excluded terms); composes with ``doc_filter``.
 
         ``local_max_postings`` gates the driver-local path on the
-        query's matched postings Σ df (default 2^20; 0/None disables
-        it; the distributed plan is always the fallback and produces
-        identical results).
+        query's matched postings Σ df (default ``_LOCAL_MAX_POSTINGS``;
+        0/None disables it; the distributed plan is always the
+        fallback and produces identical results). ``prune`` is
+        accepted for compatibility and ignored: no plan prunes.
 
         ``doc_filter`` (Column or SQL-expression string over the doc
         REGISTRY columns: repo, path, commit, lang) scopes the result
@@ -909,13 +908,10 @@ class IndexReader:
         (the filter predicate pushes down to the registry parquet) and
         joined into the scoring stage exactly like the doclens arrays —
         chunks with no allowed docs drop out of the plan entirely, and
-        no allowed-set ever concentrates on the driver. Block-max
-        pruning is disabled under a filter: a θ bar bootstrapped from
-        unfiltered scores could prune docs that belong in the FILTERED
-        top-k."""
+        no allowed-set ever concentrates on the driver."""
         return self._run(
             terms, mode, k, _Plan.of("topk", None, doc_filter, exclude_terms),
-            prune, local_max_postings,
+            local_max_postings,
         )
 
     def _run(
@@ -924,13 +920,14 @@ class IndexReader:
         mode: str,
         k: int,
         plan: "_Plan",
-        prune: bool = True,
         local_max_postings: Optional[int] = _LOCAL_MAX_POSTINGS,
     ) -> DataFrame:
         """Execute a resolved ``_Plan``: term metadata, then the
         driver-local path or the distributed chunk kernel, then the
-        plan's cut. ``prune``/``local_max_postings`` are upper limits;
-        ``_Plan.paths`` turns them off where the plan needs it."""
+        plan's cut. ``local_max_postings`` is an upper limit;
+        ``_Plan.local_gate`` turns it off where the plan needs it.
+        A negative ``k`` raises ``ValueError`` before any Spark job."""
+        _check_k(k)
         qterms = list(dict.fromkeys(terms))
         n_query_terms = len(qterms)
         group = plan.arg if plan.cut == "group" else None
@@ -938,19 +935,18 @@ class IndexReader:
             RESULT_FIELDS if group is None
             else [(group, "string")] + RESULT_FIELDS
         )
-        if not qterms:
+        if not qterms or k == 0:
             return self._no_hits(out_fields)
-        prune, local_max = plan.paths(mode, prune, local_max_postings)
+        local_max = plan.local_gate(local_max_postings)
 
         # ---- term metadata. The expansion costs zero jobs with the
         # cached dictionary and one shuffle-free terms scan without it
-        # (``_expand``); idf / upper bounds are then computed
-        # driver-side in python — the SAME floats both the local path
-        # and the distributed scorer consume. A prefix query can expand
-        # to millions of dictionary terms at corpus scale; their idf/ub
-        # must never become driver-side literals — past the cap only
-        # the *bucket list* (bounded by num_buckets) and two counters
-        # are ever collected.
+        # (``_expand``); idf is then computed driver-side in python —
+        # the SAME floats both the local path and the distributed
+        # scorer consume. A prefix query can expand to millions of
+        # dictionary terms at corpus scale; their idf must never become
+        # driver-side literals — past the cap only the *bucket list*
+        # (bounded by num_buckets) and two counters are ever collected.
         stats = self.stats
         pred = _term_predicate(qterms, mode)
         if local_max and mode not in (START_WITH, CONTAINS_MATCH):
@@ -972,20 +968,12 @@ class IndexReader:
                 local_max = 0
         cap = _META_COLLECT_CAP
         meta: Optional[DataFrame] = None
-        meta_rows: List[dict] = []
-        total_df: Optional[int] = None
         expansion = self._expand(qterms, mode, cap)
-        if expansion is not None and len(expansion) <= cap:
-            for t, df_, mtf_, b_ in expansion:
-                idf = _idf(float(stats.n_docs), float(df_))
-                meta_rows.append(
-                    {"term": t, "idf": idf, "term_ub": _term_ub(idf, mtf_)}
-                )
         if expansion is not None:
             # an expansion too wide for plan literals still keeps the
-            # driver-side gating counters (total_df gates the θ
-            # bootstrap and the local path for free); its per-term
-            # idf/ub are computed distributed (scan + expressions)
+            # driver-side gating counters (total_df gates the local
+            # path for free); its per-term idf is computed distributed
+            # (scan + expression)
             n_matched = len(expansion)
             buckets = sorted({b for _, _, _, b in expansion})
             total_df = sum(df_ for _, df_, _, _ in expansion)
@@ -1012,42 +1000,20 @@ class IndexReader:
             if out is not None:
                 return out
         if meta is None:
-            # bounded-size metadata as a LocalRelation (broadcast below),
-            # built only now that the distributed plan needs it
-            meta = literal_frame(
-                self.spark,
-                [(r["term"], r["idf"], r["term_ub"]) for r in meta_rows],
-                _META_FIELDS,
-            )
+            # bounded-size metadata (broadcast below), built only now
+            # that the distributed plan needs it
+            meta = self._meta_frame(expansion)
 
         # postings scan: bucket partition pruning + the original (small)
-        # term predicate pushed to parquet; idf/ub arrive via the join
+        # term predicate pushed to parquet; idf arrives via the join
         post = (
             self.postings_df()
             .where(F.col("bucket").isin(buckets))
             .where(pred)
             .select("term", "chunk", "blocks")
-            .join(
-                F.broadcast(meta.select("term", "idf", "term_ub")), "term"
-            )
+            .join(F.broadcast(meta.select("term", "idf")), "term")
         )
-
-        theta = 0.0
-        # θ bootstrap costs extra driver jobs; only worth it when enough
-        # postings could be skipped (unknown-size expansions always
-        # bootstrap — they are the heavy ones)
-        if prune and (total_df is None or total_df >= _PRUNE_MIN_POSTINGS):
-            theta = self._bootstrap_theta(post, k)
         need_all = mode == AND_MATCH
-
-        if theta > 0.0:
-            w_ub = (
-                post.groupBy("chunk")
-                .agg(F.sum("term_ub").alias("chunk_ub"))
-                .where(F.col("chunk_ub") > theta)
-                .select("chunk")
-            )
-            post = post.join(F.broadcast(w_ub), "chunk")
         if need_all:
             # a chunk missing any query term can't produce an AND match
             w_n = (
@@ -1068,7 +1034,6 @@ class IndexReader:
                 self.chunk_span, stats.avgdl,
                 k if plan.chunk_cut else None,
                 {None: n_query_terms} if need_all else None,
-                theta,
             ),
             _LOCAL_SCHEMA,
         )
@@ -1125,11 +1090,12 @@ class IndexReader:
         deterministic run-to-run (sorted-term accumulation), so a
         cursor from one page's last row is exact for the next.
 
-        Plan deltas vs ``search``: block-max pruning and the
-        chunk-local cut are off (θ bootstrapped ABOVE the cursor could
-        prune exactly the docs the page wants), so scored volume is
-        the match set (Σ df) — the same trade ``search_grouped``
-        makes. Declarative twin: ``pipeline.bm25_topk_after``."""
+        Plan delta vs ``search``: under a cursor the chunk-local cut
+        is off (a chunk's k best can all sit above the cursor, so the
+        cut could drop exactly the docs the page wants), so scored
+        volume is the match set (Σ df) — the same trade
+        ``search_grouped`` makes. Declarative twin:
+        ``pipeline.bm25_topk_after``."""
         cursor = (
             None
             if after_score is None
@@ -1272,12 +1238,11 @@ class IndexReader:
         is ``pipeline.bm25_topk_grouped``; scores are ``search``'s
         (``kernel.py``).
 
-        Plan deltas vs ``search``: block-max pruning off and the
-        chunk-local cut disabled (either could drop a small group's
-        best doc — correctness, not taste), so the scored volume is
-        the full match set (Σ df, the ``match_docs`` bound); the
-        per-group cut then runs through the salted two-phase
-        tournament, never a whole-group sort."""
+        Plan delta vs ``search``: the chunk-local cut is disabled (it
+        could drop a small group's best doc — correctness, not taste),
+        so the scored volume is the full match set (Σ df, the
+        ``match_docs`` bound); the per-group cut then runs through the
+        salted two-phase tournament, never a whole-group sort."""
         return self._run(
             terms, mode, k, _Plan.of("group", group, doc_filter, exclude_terms)
         )
@@ -1318,16 +1283,14 @@ class IndexReader:
         EXACT_MATCH / WITH_SUGGESTIONS (OR) / AND_MATCH / START_WITH
         (per-query prefix expansion; a term matched by several of one
         query's prefixes scores once). ``doc_filter`` — same Lucene
-        filter semantics as :meth:`search`, applied to every query.
+        filter semantics as :meth:`search`, applied to every query. A
+        negative ``k`` raises ``ValueError`` before any Spark job.
 
-        Block-max pruning is intentionally off here: θ bars are
-        per-query driver bootstraps (extra jobs each), which is exactly
-        the per-query cost this path exists to amortize; the batch's
-        economics come from sharing the scan, not skipping blocks.
         Returns a LAZY distributed frame — batch results are
         |queries|·k rows and need not bottleneck on the driver."""
         from .pipeline import normalize_queries, topk_per_query
 
+        _check_k(k)
         qmap = normalize_queries(queries)
         many_fields = [("query_id", "string")] + RESULT_FIELDS
         # Empty terms can never match as exact terms — kept out of the
@@ -1344,14 +1307,14 @@ class IndexReader:
             for t in ts
             if t or keep_empty
         ]
-        if not pairs:
+        if not pairs or k == 0:
             return self._no_hits(many_fields)
         union_terms = sorted({t for _, t in pairs})
 
         stats = self.stats
         pred = _term_predicate(union_terms, mode)
         # same expansion as search(): collected in zero or one
-        # shuffle-free job when small, so the idf/ub floats are the
+        # shuffle-free job when small, so the idf floats are the
         # SAME driver-computed values (Python math.log) search() uses
         # (bit-identical contract); wider expansions keep idf
         # distributed and collect only the bounded bucket list
@@ -1360,13 +1323,9 @@ class IndexReader:
         if expansion is not None and len(expansion) <= _META_COLLECT_CAP:
             if not expansion:
                 return self._no_hits(many_fields)
-            rows = []
-            for t, df_, mtf_, b_ in expansion:
-                idf = _idf(float(stats.n_docs), float(df_))
-                rows.append((t, idf, _term_ub(idf, mtf_)))
             buckets = sorted({b for _, _, _, b in expansion})
             expanded_terms = [t for t, _, _, _ in expansion]
-            meta = literal_frame(self.spark, rows, _META_FIELDS)
+            meta = self._meta_frame(expansion)
         else:
             meta = self._meta_scan_df(pred, stats)
             if expansion is not None:
@@ -1539,7 +1498,7 @@ class IndexReader:
         by_chunk: Dict[int, list] = {}
         for r in rows:
             by_chunk.setdefault(int(r["chunk"]), []).append(
-                (r["term"], idf_by_term[r["term"]], r["blocks"], 0.0)
+                (r["term"], idf_by_term[r["term"]], r["blocks"])
             )
         need = n_query_terms if mode == AND_MATCH else 0
         hits = [
@@ -1570,34 +1529,6 @@ class IndexReader:
             ],
             RESULT_FIELDS,
         )
-
-    def _bootstrap_theta(self, post: DataFrame, k: int) -> float:
-        """Score the single most-promising chunk driver-side with the
-        chunk kernel and return its k-th best live score (0 if it holds
-        < k live hits). One tiny collect — bounded by (query terms ×
-        blocks-in-one-chunk)."""
-        agg = (
-            post.groupBy("chunk")
-            .agg(F.count("*").alias("m"))
-            .orderBy(F.col("m").desc())
-            .limit(1)
-            .collect()
-        )
-        if not agg:
-            return 0.0
-        chunk = int(agg[0]["chunk"])
-        rows = post.where(F.col("chunk") == chunk).collect()
-        dls = self._doclens_for([chunk]).get(chunk)
-        if dls is None:
-            return 0.0
-        _, scores = kernel.score(
-            [(r["term"], r["idf"], r["blocks"], 0.0) for r in rows],
-            dls, chunk * self.chunk_span, self.stats.avgdl,
-            self._dels_for([chunk]).get(chunk), keep=k,
-        )
-        # the cut keeps the k best and their ties: its minimum is the
-        # k-th best score; a non-positive bar prunes nothing
-        return max(0.0, float(scores.min())) if scores.size >= k else 0.0
 
     # ----------------------------------------------- suggestion expansion
 
@@ -1752,9 +1683,9 @@ class IndexReader:
         match set (:meth:`match_docs`, Σ df volume) and intersects into
         the per-chunk allowed-position lists the filter channel already
         uses, so chunks with no qualifying docs drop before any block
-        decode and no doc set ever concentrates on the driver. Pruning
-        and the driver-local fast path are disabled under the
-        constraint, same rule as every filtered search."""
+        decode and no doc set ever concentrates on the driver. The
+        driver-local fast path is disabled under the constraint, same
+        rule as every filtered search."""
         groups = [
             [t for t in dict.fromkeys(g) if t] for g in (must or [])
         ]
@@ -1896,12 +1827,12 @@ class IndexReader:
         if doc_filter is None:
             # single-doc exclusion fast path (round 5): filtering ONE
             # doc through the generic registry-filter channel forces an
-            # allow-by-chunk registry scan and disables block-max
-            # pruning + the driver-local path. Fetching k+1 UNFILTERED
-            # rows and dropping the source driver-side is exact (the
-            # source occupies at most one slot; membership filters never
-            # change scores) and keeps every fast path live — measured
-            # 1.32 → ~0.9 s warm at sf0.1.
+            # allow-by-chunk registry scan and disables the driver-local
+            # path. Fetching k+1 UNFILTERED rows and dropping the source
+            # driver-side is exact (the source occupies at most one
+            # slot; membership filters never change scores) and keeps
+            # every fast path live — measured 1.32 → ~0.9 s warm at
+            # sf0.1.
             rows = self.search(sel, WITH_SUGGESTIONS, k=k + 1).collect()
             keep = [r for r in rows if int(r["doc_id"]) != src][:k]
             return literal_frame(
@@ -2262,6 +2193,7 @@ class IndexReader:
         )
 
         phrase = [t for t in phrase if t]
+        _check_k(k)
         if not phrase:
             return self._no_hits()
         positional = (

@@ -130,27 +130,11 @@ def test_synth_queries_match_oracle_and_pipeline(synth_index, synth):
         assert [d for d, _ in pipe] == [d for d, _ in oracle.search(terms, mode, k=10)]
 
 
-def test_pruning_matches_exhaustive(synth_index):
-    """Block-max pruning must not change results (WAND safety)."""
-    for terms, mode in [
-        (["import", "return", "def", "class"], P.WITH_SUGGESTIONS),
-        (["import"], P.EXACT_MATCH),
-    ]:
-        pruned = synth_index.search(terms, mode, k=10, prune=True).collect()
-        full = synth_index.search(terms, mode, k=10, prune=False).collect()
-        assert [(r["doc_id"], r["score"]) for r in pruned] == [
-            (r["doc_id"], r["score"]) for r in full
-        ]
-
-
-def test_local_fast_path_matches_distributed(
-    synth_index, two_seg_index, monkeypatch
-):
+def test_local_fast_path_matches_distributed(synth_index, two_seg_index):
     """The driver-side small-query fast path must be plan-invisible:
-    bit-identical (doc_id, score, rank) to the distributed plan, with
-    and without a bootstrapped θ, for every mode, including prefix
-    expansion and AND, on a fresh and on a tombstoned index."""
-    monkeypatch.setattr(Q, "_PRUNE_MIN_POSTINGS", 0)
+    bit-identical (doc_id, score, rank) to the distributed plan for
+    every mode, including prefix expansion and AND, on a fresh and on
+    a tombstoned index."""
     for reader in (synth_index, two_seg_index):
         for terms, mode in [
             (["import"], P.EXACT_MATCH),
@@ -161,11 +145,10 @@ def test_local_fast_path_matches_distributed(
         ]:
             for k in (10, 50):
                 local = _ranked(reader.search(terms, mode, k=k).collect())
-                for prune in (False, True):
-                    dist = reader.search(
-                        terms, mode, k=k, prune=prune, local_max_postings=0
-                    ).collect()
-                    assert _ranked(dist) == local, (terms, mode, k, prune)
+                dist = reader.search(
+                    terms, mode, k=k, local_max_postings=0
+                ).collect()
+                assert _ranked(dist) == local, (terms, mode, k)
 
 
 def test_local_path_job_counts(synth_index, jobs_of):
@@ -190,6 +173,32 @@ def test_local_path_job_counts(synth_index, jobs_of):
         ).collect()
     )
     assert rows == [] and n_jobs == 0
+
+
+def test_negative_k_raises_before_any_job(spark, synth, synth_index, jobs_of):
+    """k < 0 raises ValueError before any Spark job, on the driver-local,
+    the distributed, the batched and the phrase path, even on a cold
+    reader; k = 0 returns no rows on the first three."""
+    cold = IndexReader(spark, synth_index.paths.root)
+    terms, OR = ["import", "return"], P.WITH_SUGGESTIONS
+
+    def raises(run):
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            run()
+
+    for run in [
+        lambda: cold.search(terms, OR, k=-1),
+        lambda: cold.search(terms, OR, k=-1, local_max_postings=0),
+        lambda: cold.search_many([terms], OR, k=-1),
+        lambda: cold.search_phrase(terms, synth, k=-1),
+    ]:
+        _, n_jobs = jobs_of(lambda: raises(run))
+        assert n_jobs == 0
+    for gate in (Q._LOCAL_MAX_POSTINGS, 0):
+        assert synth_index.search(
+            terms, OR, k=0, local_max_postings=gate
+        ).collect() == []
+    assert synth_index.search_many([terms], OR, k=0).collect() == []
 
 
 # ------------------------------------------- uncached-dictionary lookup
@@ -289,6 +298,16 @@ def two_seg_index(spark, synth, tmp_path_factory):
     r = IndexReader(spark, d1)
     assert len(r.segments) == 2 and r.n_tombstones == 3
     return r
+
+
+def test_tombstones_are_read_once_per_reader(spark, two_seg_index, jobs_of):
+    """The tombstone frame's schema is inferred once per reader: after
+    the first ``docs_df()``, neither ``deletes_df()`` nor ``docs_df()``
+    runs a job."""
+    r = IndexReader(spark, two_seg_index.paths.root)
+    r.docs_df()
+    _, n_jobs = jobs_of(lambda: (r.deletes_df(), r.docs_df()))
+    assert n_jobs == 0
 
 
 def test_match_terms_sums_segments_like_grouped_scan(

@@ -37,3 +37,10 @@ def test_field_index_missing_weight_is_a_usage_error(spec, capsys):
         _multifield(spec)
     assert info.value.code == 2
     assert "missing :WEIGHT" in capsys.readouterr().err
+
+
+def test_negative_k_is_a_usage_error(capsys):
+    with pytest.raises(SystemExit) as info:
+        main(["search", "--index", "/nonexistent", "--terms", "a", "--k", "-1"])
+    assert info.value.code == 2
+    assert "--k must be >= 0" in capsys.readouterr().err

@@ -1,6 +1,6 @@
 """The one BM25 chunk kernel (spark_search.kernel) and the resolved
-search plan: which path each entry point takes, the θ bootstrap's bar,
-and a guard that the kernel's arithmetic has no second copy.
+search plan: which path each entry point takes, and a guard that the
+kernel's arithmetic has no second copy.
 """
 
 import pathlib
@@ -31,7 +31,7 @@ def tombstoned(spark, tmp_path_factory):
     r0 = IndexReader(spark, d0)
     best = {}
     for r in r0.search(
-        TERMS, P.WITH_SUGGESTIONS, k=1000, prune=False, local_max_postings=0
+        TERMS, P.WITH_SUGGESTIONS, k=1000, local_max_postings=0
     ).collect():
         best.setdefault(r["doc_id"] // r0.chunk_span, r["doc_id"])
     dead = sorted(best.values())
@@ -40,82 +40,26 @@ def tombstoned(spark, tmp_path_factory):
     return IndexReader(spark, d1), dead
 
 
-def _spy_paths(monkeypatch):
-    """Record "local" / "theta" each time ``_search_local`` /
-    ``_bootstrap_theta`` runs."""
+def _spy_local(monkeypatch):
+    """Record "local" each time ``_search_local`` runs."""
     calls = []
-    local, boot = IndexReader._search_local, IndexReader._bootstrap_theta
+    local = IndexReader._search_local
 
-    def spy_local(self, *a, **kw):
+    def spy(self, *a, **kw):
         calls.append("local")
         return local(self, *a, **kw)
 
-    def spy_boot(self, *a, **kw):
-        calls.append("theta")
-        return boot(self, *a, **kw)
-
-    monkeypatch.setattr(IndexReader, "_search_local", spy_local)
-    monkeypatch.setattr(IndexReader, "_bootstrap_theta", spy_boot)
+    monkeypatch.setattr(IndexReader, "_search_local", spy)
     return calls
 
 
-def test_theta_is_kth_best_live_score_of_bootstrap_chunk(
-    tombstoned, monkeypatch
-):
-    """θ equals, bit for bit, the k-th best score among the live docs
-    of the chunk it bootstraps from, as the unpruned distributed plan
-    scores them: the chunk's tombstoned best doc does not raise it."""
-    reader, dead = tombstoned
-    monkeypatch.setattr(Q, "_PRUNE_MIN_POSTINGS", 0)
-    seen = {"in": False, "theta": [], "chunks": []}
-    boot, doclens = IndexReader._bootstrap_theta, IndexReader._doclens_for
-
-    def spy_boot(self, post, k):
-        seen["in"] = True
-        try:
-            theta = boot(self, post, k)
-        finally:
-            seen["in"] = False
-        seen["theta"].append(theta)
-        return theta
-
-    def spy_doclens(self, chunks):
-        if seen["in"]:
-            seen["chunks"].append(list(chunks))
-        return doclens(self, chunks)
-
-    monkeypatch.setattr(IndexReader, "_bootstrap_theta", spy_boot)
-    monkeypatch.setattr(IndexReader, "_doclens_for", spy_doclens)
-    pruned = reader.search(
-        TERMS, P.WITH_SUGGESTIONS, k=K, local_max_postings=0
-    ).collect()
-    [theta] = seen["theta"]
-    [[chunk]] = seen["chunks"]
-    span = reader.chunk_span
-    assert any(d // span == chunk for d in dead)
-    full = reader.search(
-        TERMS, P.WITH_SUGGESTIONS, k=1000, prune=False, local_max_postings=0
-    ).collect()
-    assert not {r["doc_id"] for r in full} & set(dead)
-    in_chunk = sorted(
-        (r["score"] for r in full if r["doc_id"] // span == chunk),
-        reverse=True,
-    )
-    assert len(in_chunk) >= K
-    assert theta > 0.0 and theta == in_chunk[K - 1]
-    assert [(r["doc_id"], r["score"]) for r in pruned] == [
-        (r["doc_id"], r["score"]) for r in full[:K]
-    ]
-
-
-def test_each_entry_point_takes_its_path(tombstoned, monkeypatch):
-    """Only a plain top-k over the whole corpus goes driver-local or
-    bootstraps θ; a filter, an exclusion, AND, a cursor, a group,
-    must-groups or a scored multifield frame run the distributed
-    kernel without θ."""
+def test_each_entry_point_takes_its_path(tombstoned, monkeypatch, jobs_of):
+    """Only a plain top-k over the whole corpus goes driver-local; a
+    filter, an exclusion, a cursor, a group, must-groups, a scored
+    multifield frame or a zero local gate run the distributed kernel.
+    ``prune`` is a no-op: both values give the same rows and jobs."""
     reader, _ = tombstoned
-    monkeypatch.setattr(Q, "_PRUNE_MIN_POSTINGS", 0)
-    calls = _spy_paths(monkeypatch)
+    calls = _spy_local(monkeypatch)
     q, OR = TERMS[:2], P.WITH_SUGGESTIONS
 
     def taken(run):
@@ -126,15 +70,11 @@ def test_each_entry_point_takes_its_path(tombstoned, monkeypatch):
     assert taken(lambda: reader.search(q, OR, k=K)) == ["local"]
     assert taken(lambda: reader.search(q, P.AND_MATCH, k=K)) == ["local"]
     assert taken(lambda: reader.search_bool([q], k=K)) == ["local"]
-    assert taken(
-        lambda: reader.search(q, OR, k=K, local_max_postings=0)
-    ) == ["theta"]
-    assert taken(
-        lambda: reader.search(q, OR, k=K, prune=False, local_max_postings=0)
-    ) == []
     hits = reader.search(q, OR, k=K).collect()
     last = hits[-1]
     for run in [
+        lambda: reader.search(q, OR, k=K, local_max_postings=0),
+        lambda: reader.search(q, OR, k=K, prune=False, local_max_postings=0),
         lambda: reader.search(q, OR, k=K, doc_filter="lang = 'python'"),
         lambda: reader.search(q, OR, k=K, exclude_terms=["def"]),
         lambda: reader.search(q, P.AND_MATCH, k=K, local_max_postings=0),
@@ -147,8 +87,17 @@ def test_each_entry_point_takes_its_path(tombstoned, monkeypatch):
         lambda: Q.search_multifield({"content": (reader, 1.0)}, q, k=K),
     ]:
         assert taken(run) == []
-    monkeypatch.setattr(Q, "_PRUNE_MIN_POSTINGS", 1 << 40)
-    assert taken(lambda: reader.search(q, OR, k=K, local_max_postings=0)) == []
+    pruned, n_pruned = jobs_of(
+        lambda: reader.search(
+            q, OR, k=K, prune=True, local_max_postings=0
+        ).collect()
+    )
+    plain, n_plain = jobs_of(
+        lambda: reader.search(
+            q, OR, k=K, prune=False, local_max_postings=0
+        ).collect()
+    )
+    assert len(plain) == K and pruned == plain and n_pruned == n_plain
 
 
 # ------------------------------------------------------ source guard

@@ -461,11 +461,11 @@ def test_random_maintenance_chain_equals_fresh_build(spark, tmp_path):
         ), (terms, mode)
 
 
-def test_pruning_sound_with_negative_idf(spark, base_index, tmp_path):
+def test_negative_idf_local_matches_distributed(spark, base_index, tmp_path):
     """df counts tombstones until compact, so a hot term's idf can go
-    NEGATIVE once most docs are deleted; the block-max upper bounds
-    must clamp at 0 or chunk pruning drops true top-k docs. prune=True
-    must equal prune=False on such an index."""
+    NEGATIVE once most docs are deleted. On such an index the
+    driver-local and the distributed path must return the same rows,
+    with the rare doc first."""
     import pyspark.sql.functions as F
 
     from spark_search.corpus import CORPUS_SCHEMA
@@ -494,10 +494,15 @@ def test_pruning_sound_with_negative_idf(spark, base_index, tmp_path):
 
     n, df = r.stats.n_docs, 12
     assert math.log(1.0 + (n - df + 0.5) / (df + 0.5)) < 0  # premise
-    kw = dict(mode=P.WITH_SUGGESTIONS, k=4, local_max_postings=0)
-    pruned = [tuple(x) for x in r.search(["common", "rare"], prune=True, **kw).collect()]
-    full = [tuple(x) for x in r.search(["common", "rare"], prune=False, **kw).collect()]
-    assert pruned == full and full[0][0] == rare_id  # rare doc must win
+    kw = dict(mode=P.WITH_SUGGESTIONS, k=4)
+    local = [tuple(x) for x in r.search(["common", "rare"], **kw).collect()]
+    full = [
+        tuple(x)
+        for x in r.search(
+            ["common", "rare"], local_max_postings=0, **kw
+        ).collect()
+    ]
+    assert local == full and full[0][0] == rare_id  # rare doc must win
 
 
 def test_resume_discards_partial_with_different_config(spark, tmp_path):
