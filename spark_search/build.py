@@ -25,19 +25,27 @@ Resumability: stages record lineage in manifest.partial.json keyed by
 an input fingerprint; re-running build_index over the same input skips
 completed stages (per-bucket-group granularity for the heavy postings
 stage). Output dirs are written once per stage and become immutable.
+
+Layout ownership: this module defines the on-disk layout (``IndexPaths``,
+the schemas, ``bucket_col``) and holds its only writers
+(``write_postings``, ``write_terms``, ``write_doclens``, ``write_docs``)
+and its segment-union reader (``read_segments``). merge.py and
+maintain.py publish their sub-dirs through these, so a merged or
+rewritten index has the layout of a fresh build.
 """
 
 import contextlib
+import functools
 import os
 import shutil
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Callable, Dict, List, Optional
+from typing import Callable, Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import pipeline as P
 from .checkpoint import (
@@ -91,6 +99,23 @@ BLOCKS_SCHEMA = (
 # for removed (term, doc) pairs — the phrase query derives candidates
 # from blocks and semi-joins plists on them, so stale entries are inert
 PLISTS_SCHEMA = "array<struct<doc_id: long, poss: binary>>"
+
+
+# postings row columns, in file order (``plists`` follows on positional
+# indexes)
+POSTINGS_COLS = ["bucket", "term", "chunk", "n_docs", "sum_tf", "max_tf", "blocks"]
+
+
+def block_structs(blocks) -> List[dict]:
+    """Codec block tuples (first_doc, last_doc, n, max_tf, deltas, tfs)
+    as ``BLOCKS_SCHEMA`` struct values."""
+    return [
+        {
+            "first_doc": b[0], "last_doc": b[1], "n": b[2],
+            "max_tf": b[3], "deltas": b[4], "tfs": b[5],
+        }
+        for b in blocks
+    ]
 
 
 def bucket_col(term_col, num_buckets: int):
@@ -173,21 +198,7 @@ def _encode_udf(block_size: int):
         encoded = encode_blocks_batch(
             list(doc_ids), list(tfs), block_size=block_size
         )
-        out = [
-            [
-                {
-                    "first_doc": b[0],
-                    "last_doc": b[1],
-                    "n": b[2],
-                    "max_tf": b[3],
-                    "deltas": b[4],
-                    "tfs": b[5],
-                }
-                for b in blocks
-            ]
-            for blocks in encoded
-        ]
-        return pd.Series(out)
+        return pd.Series([block_structs(blocks) for blocks in encoded])
 
     return encode
 
@@ -222,6 +233,124 @@ class IndexPaths:
     @property
     def terms(self) -> str:
         return os.path.join(self.root, "terms")
+
+
+def read_segments(spark: SparkSession, roots: List[str], sub: str) -> DataFrame:
+    """``sub`` of every segment root, unioned by column name. Partition
+    discovery (the bucket=N dirs) runs per root, never across roots."""
+    dfs = [spark.read.parquet(os.path.join(r, sub)) for r in roots]
+    return functools.reduce(DataFrame.unionByName, dfs)
+
+
+# broadcast gate for the per-chunk tombstone frame (~8 B per id)
+_DELS_BROADCAST_CAP = 5_000_000
+
+
+def tombstones_by_chunk(
+    dels: DataFrame, span: int, n_tombstones: Optional[int]
+) -> DataFrame:
+    """(chunk, _dels): each chunk's sorted tombstoned doc_ids. Broadcast
+    only when the manifest's tombstone count proves the set bounded: an
+    unconditional hint would pull a delete-heavy index's whole
+    tombstone set onto the driver (compact runs exactly when the set is
+    at its largest); past the cap the chunk joins stay distributed
+    shuffles, with the same results."""
+    grouped = (
+        dels.select(
+            (F.col("doc_id") / span).cast("long").alias("chunk"), "doc_id"
+        )
+        .groupBy("chunk")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("_dels"))
+    )
+    if n_tombstones is not None and int(n_tombstones) <= _DELS_BROADCAST_CAP:
+        return F.broadcast(grouped)
+    return grouped
+
+
+# ------------------------------------------------------ sub-dir writers
+# Every write of postings/, terms/ and doclens/ — and every docs/ write
+# but the build's own — goes through one of these, so the on-disk
+# layout has one definition. Build, merge and maintenance differ only
+# in the exchange that feeds a writer.
+
+
+def write_postings(rows: DataFrame, out: str, mode: str = "overwrite") -> None:
+    """postings/ from rows whose partitions the caller's exchange has
+    clustered. bucket FIRST in the sort: the dynamic partitionBy writer
+    requires rows clustered by the partition column — sorting on it
+    explicitly (rather than relying on the writer's implicit inserted
+    sort) both pins the (term, chunk) order inside each bucket file
+    (row-group pruning depends on it) and keeps per-bucket file fan-out
+    at one file per task that holds the bucket instead of one per
+    (task, write batch)."""
+    cols = POSTINGS_COLS + (["plists"] if "plists" in rows.columns else [])
+    (
+        rows.select(*cols)
+        .sortWithinPartitions("bucket", "term", "chunk")
+        .write.mode(mode)
+        # block payloads are already delta+varint entropy-coded; a
+        # generic codec on top is pure CPU loss (measured ~15% of the
+        # build's postings stage at 500k docs)
+        .option("compression", "uncompressed")
+        .partitionBy("bucket")
+        .parquet(out)
+    )
+
+
+def write_doclens(chunks: DataFrame, out: str) -> None:
+    """doclens/ from (chunk, dls) rows. dls payloads are dense int32
+    arrays; snappy on them costs more CPU than the bytes it saves at
+    read time."""
+    chunks.write.mode("overwrite").option(
+        "compression", "uncompressed"
+    ).parquet(out)
+
+
+def write_docs(docs: DataFrame, out: str, parts: int) -> Tuple[int, int]:
+    """docs/ as a range write by doc_id (files disjoint in doc_id,
+    sorted within). Returns (n, Σ dl), observed on the write itself
+    rather than by a read-back job."""
+    obs = Observation("docs_write_stats")
+    (
+        docs.repartitionByRange(parts, "doc_id")
+        .observe(obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot"))
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    row = obs.get
+    return int(row["n"]), int(row["tot"] or 0)
+
+
+def write_terms(
+    spark: SparkSession, paths: IndexPaths, num_buckets: int, par: int
+) -> int:
+    """terms/ (df, cf, max_tf, bucket per term) derived from the written
+    postings/ under ``paths``; returns the vocabulary size. Column
+    pruning keeps the blocks out of the scan."""
+    terms = spark.read.parquet(paths.postings).groupBy("term").agg(
+        F.sum("n_docs").alias("df"),
+        F.sum("sum_tf").alias("cf"),
+        F.max("max_tf").alias("max_tf"),
+        # bucket is functional on term; storing it here lets the query
+        # side prune postings partitions without a second job
+        F.first("bucket").alias("bucket"),
+    )
+    # vocabulary size rides the write (CollectMetrics above the range
+    # exchange so its sampling pre-pass never executes the metrics
+    # node), recorded so the query side can decide to cache the
+    # dictionary driver-side without probing (a limit+collect probe runs
+    # as many sequential scale-up jobs — measured tens of seconds on a
+    # noisy machine)
+    obs = Observation("terms_stats")
+    (
+        terms.repartitionByRange(max(1, min(num_buckets, par)), "term")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(paths.terms)
+    )
+    return int(obs.get["n"])
 
 
 def build_job_group(index_dir: str) -> str:
@@ -500,8 +629,6 @@ def _build_stages(
         # corpus stats ride the write itself (CollectMetrics below the
         # partition-local sort) — one scan and one job fewer per build
         # than a separate read-back agg
-        from pyspark.sql import Observation
-
         obs = Observation("docs_stats")
         (
             docs.repartition(
@@ -555,11 +682,7 @@ def _build_stages(
                 ).alias("dls"),
             )
         )
-        # dls payloads are dense int32 arrays; snappy on them costs more
-        # CPU than the bytes it saves at read time
-        chunked.write.mode("overwrite").option(
-            "compression", "uncompressed"
-        ).parquet(paths.doclens)
+        write_doclens(chunked, paths.doclens)
         return {
             "stats": CorpusStats(n_docs, avgdl, total_dl).to_dict(),
             "rows": n_docs,
@@ -720,23 +843,7 @@ def _build_stages(
                     ),
                 )
             )
-            (
-                # bucket FIRST: the dynamic partitionBy writer requires
-                # rows clustered by the partition column — sorting on it
-                # explicitly (rather than relying on the writer's implicit
-                # inserted sort) both pins the (term, chunk) order inside
-                # each bucket file (row-group pruning depends on it) and
-                # keeps per-bucket file fan-out at one file per task that
-                # holds the bucket instead of one per (task, write batch)
-                chunk_rows.sortWithinPartitions("bucket", "term", "chunk")
-                .write.mode("append")
-                # block payloads are already delta+varint entropy-coded;
-                # a generic codec on top is pure CPU loss (measured ~15%
-                # of the stage at 500k docs)
-                .option("compression", "uncompressed")
-                .partitionBy("bucket")
-                .parquet(paths.postings)
-            )
+            write_postings(chunk_rows, paths.postings, mode="append")
             manifest.record_stage(
                 stage, fingerprint,
                 # cumulative across bucket groups (dirs append per group)
@@ -783,18 +890,13 @@ def _build_stages(
                     1, min(max_files_per_bucket, (8 * par) // num_buckets)
                 )
                 tmp_dir = paths.postings + ".compact.tmp"
-                (
-                    spark.read.parquet(paths.postings)
-                    .repartition(
+                write_postings(
+                    spark.read.parquet(paths.postings).repartition(
                         num_buckets * salt_mod,
                         "bucket",
                         F.pmod(F.col("chunk"), F.lit(salt_mod)),
-                    )
-                    .sortWithinPartitions("bucket", "term", "chunk")
-                    .write.mode("overwrite")
-                    .option("compression", "uncompressed")
-                    .partitionBy("bucket")
-                    .parquet(tmp_dir)
+                    ),
+                    tmp_dir,
                 )
                 old_dir = paths.postings + ".precompact"
                 os.rename(paths.postings, old_dir)
@@ -830,37 +932,7 @@ def _build_stages(
     # --------------------------------------------------------- stage: terms
     if not (resume and manifest.stage_done("terms", fingerprint)):
         tt = time.time()
-        postings = spark.read.parquet(paths.postings)
-        # column pruning: blocks are never read here (verified via explain)
-        terms = (
-            postings.groupBy("term")
-            .agg(
-                F.sum("n_docs").alias("df"),
-                F.sum("sum_tf").alias("cf"),
-                F.max("max_tf").alias("max_tf"),
-                # bucket is functional on term; storing it here lets the
-                # query side prune postings partitions without a second job
-                F.first("bucket").alias("bucket"),
-            )
-        )
-        nparts = max(1, min(num_buckets, par))
-        # vocabulary size rides the write (CollectMetrics above the
-        # range exchange so its sampling pre-pass never executes the
-        # metrics node), recorded so the query side can decide to cache
-        # the dictionary driver-side without probing (a limit+collect
-        # probe runs as many sequential scale-up jobs — measured tens
-        # of seconds on a noisy machine)
-        from pyspark.sql import Observation
-
-        obs_t = Observation("terms_stats")
-        (
-            terms.repartitionByRange(nparts, "term")
-            .observe(obs_t, F.count(F.lit(1)).alias("n"))
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(paths.terms)
-        )
-        n_terms = int(obs_t.get["n"])
+        n_terms = write_terms(spark, paths, num_buckets, par)
         manifest.stats = {**manifest.stats, "n_terms": n_terms}
         manifest.record_stage(
             "terms", fingerprint, rows=n_terms,

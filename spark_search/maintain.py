@@ -32,19 +32,36 @@ Tests pin both properties (tests/test_maintain.py).
 Every operation writes a NEW index directory (copy-on-write at the
 directory level, data shared by reference) and commits it atomically
 via the manifest rename — readers of the old index are never disturbed.
+This module writes only the tombstone list itself: the postings/,
+terms/, docs/ and doclens/ sub-dirs that ``compact`` and
+``delete_term_postings`` publish go through build.py's sub-dir writers,
+so a rewritten index has the layout of a fresh build.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from typing import Iterable, List, Optional, Union
+from typing import Callable, Iterable, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import BLOCKS_SCHEMA, PLISTS_SCHEMA, build_index
+from .build import (
+    BLOCKS_SCHEMA,
+    PLISTS_SCHEMA,
+    POSTINGS_COLS,
+    IndexPaths,
+    block_structs,
+    build_index,
+    read_segments,
+    tombstones_by_chunk,
+    write_docs,
+    write_doclens,
+    write_postings,
+    write_terms,
+)
 from .checkpoint import BuildManifest
 from .codec import decode_block, encode_blocks
 from .ids import with_doc_ids
@@ -57,15 +74,9 @@ SEGMENTS_SUB = "segments"
 # (queries broadcast the whole list; a single file is optimal while
 # |deletes| << |docs|). Past it, the write shards by doc_id range so
 # the union never funnels through one task — the reader is unchanged
-# (it reads the directory; query.py already gates broadcast-vs-join on
-# _DELS_CACHE_CAP).
+# (it reads the directory; the per-chunk tombstone frame gates its
+# broadcast on build._DELS_BROADCAST_CAP).
 TOMBSTONE_SHARD_DOCS = 1 << 22  # ~4M ids ≈ 32 MB of int64
-
-# broadcast gate for per-chunk tombstone joins (same rationale and cap
-# as query.py's _DELS_BROADCAST_CAP): compact runs exactly when the
-# tombstone set is at its largest, so forcing the broadcast would pull
-# cluster-scale state onto the driver at the worst possible moment
-_DELS_BROADCAST_CAP = 5_000_000
 
 
 def _write_tombstones(all_dels: DataFrame, dels_out: str, n_total: int) -> int:
@@ -112,9 +123,7 @@ def _check_out_dir(out_dir: str, index_dir: str, segs: List[str]) -> None:
 
 def _filter_block_rows(blks, drop, block_size):
     """Decode ``blks``, drop postings whose doc_id ∈ ``drop``, re-encode.
-    Returns (n_docs, sum_tf, max_tf, out_blocks, rem_ids, rem_tfs) —
-    the shared kernel of delete_term_postings' and compact's rewrite
-    UDFs (one copy; a codec change lands once)."""
+    Returns (n_docs, sum_tf, max_tf, out_blocks, rem_ids, rem_tfs)."""
     ids_all, tfs_all, rem_ids, rem_tfs = [], [], [], []
     for b in blks:
         ids, tfs = decode_block(
@@ -134,31 +143,105 @@ def _filter_block_rows(blks, drop, block_size):
         return 0, 0, 0, [], r_ids, r_tfs
     ids = np.concatenate(ids_all)
     tfs = np.concatenate(tfs_all)
-    enc = encode_blocks(ids, tfs, block_size=block_size)
-    out_blocks = [
-        {
-            "first_doc": e[0], "last_doc": e[1], "n": e[2],
-            "max_tf": e[3], "deltas": e[4], "tfs": e[5],
-        }
-        for e in enc
-    ]
+    out_blocks = block_structs(encode_blocks(ids, tfs, block_size=block_size))
     return (
         int(ids.size), int(tfs.sum()), int(tfs.max()), out_blocks,
         r_ids, r_tfs,
     )
 
 
+def _rewrite_postings(
+    posts: DataFrame, drop: str, block_size: int, filter_plists: bool
+) -> Tuple[DataFrame, DataFrame]:
+    """Remove postings from ``posts`` rows by their ``drop`` column (the
+    sorted doc_ids to remove; NULL leaves the row as it is). Rows with
+    nothing to drop never enter Python — their encoded bytes stay
+    JVM-side; the rest are decoded, filtered and re-encoded, and rows
+    left empty drop out. ``filter_plists`` also drops the removed docs'
+    position lists (otherwise stale-but-inert, see build.PLISTS_SCHEMA).
+
+    Returns (the rewritten rows with their ``_rw`` struct, which lists
+    each row's removed doc_ids and tfs; every output postings row)."""
+
+    @F.pandas_udf(
+        f"struct<n_docs: long, sum_tf: long, max_tf: int, "
+        f"blocks: {BLOCKS_SCHEMA}, removed_ids: array<long>, "
+        f"removed_tfs: array<long>>"
+    )
+    def rewrite(blocks: pd.Series, drops: pd.Series) -> pd.DataFrame:
+        cols: List[list] = [[], [], [], [], [], []]
+        for blks, dl in zip(blocks, drops):
+            res = _filter_block_rows(
+                blks, np.asarray(dl, dtype=np.int64), block_size
+            )
+            for col, v in zip(cols, res):
+                col.append(v)
+        n_docs, sum_tf, max_tf, out_blocks, r_ids, r_tfs = cols
+        return pd.DataFrame(
+            {
+                "n_docs": pd.Series(n_docs, dtype="int64"),
+                "sum_tf": pd.Series(sum_tf, dtype="int64"),
+                "max_tf": pd.Series(max_tf, dtype="int32"),
+                "blocks": out_blocks,
+                "removed_ids": [r.tolist() for r in r_ids],
+                "removed_tfs": [r.tolist() for r in r_tfs],
+            }
+        )
+
+    @F.pandas_udf(PLISTS_SCHEMA)
+    def drop_plists(plists: pd.Series, drops: pd.Series) -> pd.Series:
+        out = []
+        for pl, dl in zip(plists, drops):
+            gone = set(int(x) for x in dl)
+            out.append(
+                pl if pl is None
+                else [e for e in pl if int(e["doc_id"]) not in gone]
+            )
+        return pd.Series(out)
+
+    has_plists = "plists" in posts.columns
+    cols = POSTINGS_COLS + (["plists"] if has_plists else [])
+    rw = posts.where(F.col(drop).isNotNull()).withColumn(
+        "_rw", rewrite(F.col("blocks"), F.col(drop))
+    )
+    plists = []
+    if has_plists:
+        plists = [
+            drop_plists(F.col("plists"), F.col(drop)).alias("plists")
+            if filter_plists else "plists"
+        ]
+    new_rows = rw.select(
+        "bucket", "term", "chunk",
+        "_rw.n_docs", "_rw.sum_tf", "_rw.max_tf", "_rw.blocks", *plists,
+    ).where(F.col("n_docs") > 0)
+    kept = posts.where(F.col(drop).isNull()).select(*cols)
+    return rw, kept.unionByName(new_rows)
+
+
+def _patch_doclens(span: int):
+    """Pandas UDF over packed doclens: subtract ``rm`` at the positions
+    of ``ids``, or zero those slots when ``rm`` is NULL."""
+
+    @F.pandas_udf("binary")
+    def patch(dls: pd.Series, ids: pd.Series, rm: pd.Series) -> pd.Series:
+        out = []
+        for buf, i, r in zip(dls, ids, rm):
+            if i is None or len(i) == 0:
+                out.append(buf)
+                continue
+            arr = np.frombuffer(buf, dtype=np.int32).copy()
+            pos = np.asarray(i, dtype=np.int64) % span
+            ok = (pos >= 0) & (pos < arr.size)
+            sub = arr[pos[ok]] if r is None else np.asarray(r, np.int32)[ok]
+            arr[pos[ok]] -= sub
+            out.append(arr.tobytes())
+        return pd.Series(out)
+
+    return patch
+
+
 def _segments(m: BuildManifest, index_dir: str) -> List[str]:
     return [os.path.abspath(p) for p in m.config.get("segments", [index_dir])]
-
-
-def _multi(spark: SparkSession, segs: List[str], sub: str) -> DataFrame:
-    # per-root reads unioned (partition discovery is per segment root)
-    dfs = [spark.read.parquet(os.path.join(s, sub)) for s in segs]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
 
 
 def _as_ids_df(
@@ -195,7 +278,7 @@ def _deleted_dl_sum(
             out.append(int(arr[idx].sum()))
         return pd.Series(out, dtype="int64")
 
-    joined = _multi(spark, segs, "doclens").join(by_chunk, "chunk")
+    joined = read_segments(spark, segs, "doclens").join(by_chunk, "chunk")
     row = joined.select(sum_at("dls", "pos").alias("s")).agg(
         F.sum("s").alias("t")
     ).collect()[0]
@@ -207,8 +290,45 @@ def _exact_stats(m: BuildManifest, spark, segs: List[str]) -> CorpusStats:
     if s.total_dl >= 0:
         return s
     # pre-v2 manifest: recompute the integer total from docs metadata
-    row = _multi(spark, segs, "docs").agg(F.sum("dl").alias("t")).collect()[0]
+    row = read_segments(spark, segs, "docs").agg(
+        F.sum("dl").alias("t")
+    ).collect()[0]
     return CorpusStats(s.n_docs, s.avgdl, int(row["t"] or 0))
+
+
+def _tombstone(
+    spark: SparkSession,
+    m: BuildManifest,
+    segs: List[str],
+    out_dir: str,
+    victims: Callable[[DataFrame], DataFrame],
+) -> Tuple[int, int, dict, int]:
+    """Tombstone the live docs that ``victims`` picks from ``live`` —
+    the segments' (doc_id, repo, path) rows not yet tombstoned — and
+    write the merged tombstone set under ``out_dir``. Returns (n newly
+    tombstoned, their Σ dl, the manifest config entries, shard count)."""
+    cfg = m.config
+    old = spark.read.parquet(cfg["deletes_dir"]) if cfg.get("deletes_dir") else None
+    live = read_segments(spark, segs, "docs").select("doc_id", "repo", "path")
+    if old is not None:
+        live = live.join(old, "doc_id", "left_anti")
+    new = victims(live).select("doc_id").distinct()
+    n_new = new.count()
+    removed_dl = (
+        _deleted_dl_sum(spark, segs, new, int(cfg["chunk_span"]))
+        if n_new else 0
+    )
+    n_old = int(cfg.get("n_tombstones") or 0)
+    if old is not None and "n_tombstones" not in cfg:
+        n_old = old.count()
+    dels_out = os.path.join(os.path.abspath(out_dir), DELETES_SUB)
+    shards = _write_tombstones(
+        new if old is None else old.union(new).distinct(),
+        dels_out,
+        n_old + n_new,
+    )
+    entries = {"deletes_dir": dels_out, "n_tombstones": n_old + n_new}
+    return n_new, removed_dl, entries, shards
 
 
 # -------------------------------------------------------------- delete
@@ -225,41 +345,16 @@ def delete_docs(
     m = _load_committed(index_dir)
     segs = _segments(m, index_dir)
     _check_out_dir(out_dir, index_dir, segs)
-    span = int(m.config["chunk_span"])
     t0 = time.time()
 
     ids = _as_ids_df(spark, doc_ids)
-    live_docs = _multi(spark, segs, "docs").select("doc_id")
-    old_dels_dir = m.config.get("deletes_dir")
-    if old_dels_dir:
-        old = spark.read.parquet(old_dels_dir)
-        live = live_docs.join(old, "doc_id", "left_anti")
-    else:
-        old = None
-        live = live_docs
-    new_dels = ids.join(live, "doc_id", "left_semi").distinct()
-    n_new = new_dels.count()
-
-    stats = _exact_stats(m, spark, segs)
-    removed_dl = (
-        _deleted_dl_sum(spark, segs, new_dels, span) if n_new else 0
+    n_new, removed_dl, entries, shards = _tombstone(
+        spark, m, segs, out_dir,
+        lambda live: ids.join(live, "doc_id", "left_semi"),
     )
-
-    dels_out = os.path.join(os.path.abspath(out_dir), DELETES_SUB)
-    all_dels = new_dels if old is None else old.union(new_dels).distinct()
-    n_old = int(m.config.get("n_tombstones") or 0)
-    if old is not None and "n_tombstones" not in m.config:
-        n_old = old.count()
-    n_tomb = n_old + n_new
-    shards = _write_tombstones(all_dels, dels_out, n_tomb)
-
+    stats = _exact_stats(m, spark, segs)
     out = BuildManifest(out_dir)
-    out.config = {
-        **m.config,
-        "segments": segs,
-        "deletes_dir": dels_out,
-        "n_tombstones": n_tomb,
-    }
+    out.config = {**m.config, "segments": segs, **entries}
     out.stats = CorpusStats.combine(
         stats.n_docs - n_new, stats.total_dl - removed_dl
     ).to_dict()
@@ -297,22 +392,9 @@ def upsert_docs(
     span = int(cfg["chunk_span"])
     t0 = time.time()
 
-    # 1. which live docs does this batch replace?
-    live = _multi(spark, segs, "docs").select("doc_id", "repo", "path")
-    old_dels_dir = cfg.get("deletes_dir")
-    old_dels = spark.read.parquet(old_dels_dir) if old_dels_dir else None
-    if old_dels is not None:
-        live = live.join(old_dels, "doc_id", "left_anti")
-    replaced = live.join(
-        new_docs.select("repo", "path").distinct(), ["repo", "path"]
-    ).select("doc_id").distinct()
-    n_replaced = replaced.count()
-    removed_dl = (
-        _deleted_dl_sum(spark, segs, replaced, span) if n_replaced else 0
-    )
-
-    # 2. new segment at a fresh chunk boundary (id spaces never collide)
-    max_chunk = _multi(spark, segs, "doclens").agg(
+    # 1. new ids start at a fresh chunk boundary (id spaces never
+    # collide); a batch that breaks this is refused before any write
+    max_chunk = read_segments(spark, segs, "doclens").agg(
         F.max("chunk").alias("c")
     ).collect()[0]["c"]
     base = (int(max_chunk) + 1) * span
@@ -332,6 +414,16 @@ def upsert_docs(
         with_ids = new_docs
     else:
         with_ids = with_doc_ids(new_docs, num_partitions, start=base)
+
+    # 2. tombstone the live docs this batch replaces
+    n_replaced, removed_dl, entries, shards = _tombstone(
+        spark, m, segs, out_dir,
+        lambda live: live.join(
+            new_docs.select("repo", "path").distinct(), ["repo", "path"]
+        ),
+    )
+
+    # 3. the batch's own segment
     seg_dir = os.path.join(
         os.path.abspath(out_dir), SEGMENTS_SUB, f"seg-{len(segs)}"
     )
@@ -350,25 +442,10 @@ def upsert_docs(
     )
     seg_stats = CorpusStats.from_dict(seg_manifest.stats)
 
-    # 3. merged tombstones + exact combined stats
-    dels_out = os.path.join(os.path.abspath(out_dir), DELETES_SUB)
-    all_dels = (
-        replaced if old_dels is None else old_dels.union(replaced).distinct()
-    )
-    n_old = int(cfg.get("n_tombstones") or 0)
-    if old_dels is not None and "n_tombstones" not in cfg:
-        n_old = old_dels.count()
-    n_tomb = n_old + n_replaced
-    shards = _write_tombstones(all_dels, dels_out, n_tomb)
-
+    # 4. exact combined stats
     stats = _exact_stats(m, spark, segs)
     out = BuildManifest(out_dir)
-    out.config = {
-        **cfg,
-        "segments": segs + [seg_dir],
-        "deletes_dir": dels_out,
-        "n_tombstones": n_tomb,
-    }
+    out.config = {**cfg, "segments": segs + [seg_dir], **entries}
     out.stats = CorpusStats.combine(
         stats.n_docs - n_replaced + seg_stats.n_docs,
         stats.total_dl - removed_dl + seg_stats.total_dl,
@@ -436,10 +513,10 @@ def delete_term_postings(
     _check_out_dir(out_dir, index_dir, segs)
     cfg = m.config
     span = int(cfg["chunk_span"])
-    block_size = int(cfg.get("block_size", 128))
     num_buckets = int(cfg["num_buckets"])
+    par = spark.sparkContext.defaultParallelism
     t0 = time.time()
-    out_abs = os.path.abspath(out_dir)
+    out_paths = IndexPaths(os.path.abspath(out_dir))
 
     if not isinstance(pairs, DataFrame):
         pairs = spark.createDataFrame(
@@ -463,58 +540,24 @@ def delete_term_postings(
         .groupBy("term", "chunk")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("_tdel"))
     )
-
-    posts = _multi(spark, segs, "postings").join(
-        F.broadcast(tdel), ["term", "chunk"], "left"
+    # positional indexes: plists pass through UNCHANGED. An entry whose
+    # (term, doc) pair was just removed from blocks is stale-but-inert
+    # by the plists contract (build.py PLISTS_SCHEMA): phrase candidates
+    # derive from blocks, and the positional scan semi-joins plists on
+    # candidates, so a doc that no longer matches this term can never
+    # surface its stale positions. compact() reclaims the bytes.
+    rw, new_posts = _rewrite_postings(
+        read_segments(spark, segs, "postings").join(
+            F.broadcast(tdel), ["term", "chunk"], "left"
+        ),
+        "_tdel", int(cfg.get("block_size", 128)), filter_plists=False,
     )
-    # touched/untouched split: only rows whose (term, chunk) actually
-    # holds a requested pair enter the Python rewrite — every other
-    # row's encoded bytes stay JVM-side (the previous single-plan
-    # F.when() form shipped the ENTIRE index's blocks through Arrow to
-    # emit discarded sentinels for a surgical few-pair delete)
-    touched = posts.where(F.col("_tdel").isNotNull())
-    untouched = posts.where(F.col("_tdel").isNull())
-
-    @F.pandas_udf(
-        f"struct<n_docs: long, sum_tf: long, max_tf: int, removed: long, "
-        f"removed_ids: array<long>, removed_tfs: array<long>, "
-        f"blocks: {BLOCKS_SCHEMA}>"
-    )
-    def rewrite(blocks: pd.Series, dels_col: pd.Series) -> pd.DataFrame:
-        n_docs, sum_tf, max_tf = [], [], []
-        removed, removed_ids, removed_tfs, out_blocks = [], [], [], []
-        for blks, dl in zip(blocks, dels_col):
-            drop = np.asarray(dl, dtype=np.int64)
-            nd, st, mt, blocks_out, r_ids, r_tfs = _filter_block_rows(
-                blks, drop, block_size
-            )
-            n_docs.append(nd)
-            sum_tf.append(st)
-            max_tf.append(mt)
-            out_blocks.append(blocks_out)
-            removed.append(int(r_tfs.sum()))
-            removed_ids.append([int(x) for x in r_ids])
-            removed_tfs.append([int(x) for x in r_tfs])
-        return pd.DataFrame(
-            {
-                "n_docs": pd.Series(n_docs, dtype="int64"),
-                "sum_tf": pd.Series(sum_tf, dtype="int64"),
-                "max_tf": pd.Series(max_tf, dtype="int32"),
-                "removed": pd.Series(removed, dtype="int64"),
-                "removed_ids": removed_ids,
-                "removed_tfs": removed_tfs,
-                "blocks": out_blocks,
-            }
-        )
-
-    rw = touched.withColumn("_rw", rewrite(F.col("blocks"), F.col("_tdel")))
 
     # (doc_id, removed tf) of every surgically removed posting — needed
-    # to correct dl arrays, docs.dl, and total_dl exactly. Only touched
-    # rows carry entries, so this stays O(|pairs|).
-    removed_by_doc = (
-        rw.where(F.col("_rw.removed") > 0)
-        .select(
+    # to correct dl arrays, docs.dl, and total_dl exactly. Only
+    # rewritten rows carry entries, so this stays O(|pairs|).
+    removed_rows = (
+        rw.select(
             F.explode(
                 F.arrays_zip(
                     F.col("_rw.removed_ids").alias("doc_id"),
@@ -522,80 +565,24 @@ def delete_term_postings(
                 )
             ).alias("z")
         )
-        .select(
-            F.col("z.doc_id").cast("long").alias("doc_id"),
-            F.col("z.tf").cast("long").alias("tf"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("tf").alias("_rm_dl"))
+        .groupBy(F.col("z.doc_id").cast("long").alias("doc_id"))
+        .agg(F.sum("z.tf").alias("_rm_dl"))
+        .collect()  # bounded by |pairs|
     )
-    removed_rows = removed_by_doc.collect()  # bounded by |pairs|
     removed_total = sum(int(r["_rm_dl"]) for r in removed_rows)
     rm_by_chunk: dict = {}
     for r in removed_rows:
         i = int(r["doc_id"])
         rm_by_chunk.setdefault(i // span, []).append((i, int(r["_rm_dl"])))
 
-    has_plists = "plists" in posts.columns
-    base_cols = ["bucket", "term", "chunk", "n_docs", "sum_tf", "max_tf",
-                 "blocks", *(["plists"] if has_plists else [])]
-    new_touched = (
-        rw.select(
-            "bucket",
-            "term",
-            "chunk",
-            F.col("_rw.n_docs").alias("n_docs"),
-            F.col("_rw.sum_tf").alias("sum_tf"),
-            F.col("_rw.max_tf").alias("max_tf"),
-            F.col("_rw.blocks").alias("blocks"),
-            # positional indexes: plists pass through UNCHANGED. An
-            # entry whose (term, doc) pair was just removed from blocks
-            # is stale-but-inert by the plists contract (build.py
-            # PLISTS_SCHEMA): phrase candidates derive from blocks, and
-            # the positional scan semi-joins plists on candidates, so a
-            # doc that no longer matches this term can never surface
-            # its stale positions. compact() reclaims the bytes.
-            *(["plists"] if has_plists else []),
-        )
-        .where(F.col("n_docs") > 0)
-    )
-    new_posts = untouched.select(*base_cols).unionByName(new_touched)
-    (
-        new_posts.repartition(num_buckets, "bucket")
-        .sortWithinPartitions("term", "chunk")
-        .write.mode("overwrite")
-        .option("compression", "uncompressed")
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_abs, "postings"))
-    )
-
-    # terms: exact df/cf from the rewritten postings metadata
-    terms = spark.read.parquet(os.path.join(out_abs, "postings")).groupBy(
-        "term"
-    ).agg(
-        F.sum("n_docs").alias("df"),
-        F.sum("sum_tf").alias("cf"),
-        F.max("max_tf").alias("max_tf"),
-        F.first("bucket").alias("bucket"),
-    )
-    nparts = max(1, min(num_buckets, spark.sparkContext.defaultParallelism))
-    # n_terms rides the write (build.py's Observation pattern) instead
-    # of a read-back count job over the terms directory
-    obs_t = Observation("delete_terms_stats")
-    (
-        terms.repartitionByRange(nparts, "term")
-        .observe(obs_t, F.count(F.lit(1)).alias("n"))
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_abs, "terms"))
-    )
-    n_terms = int(obs_t.get["n"])
+    write_postings(new_posts.repartition(num_buckets, "bucket"), out_paths.postings)
+    n_terms = write_terms(spark, out_paths, num_buckets, par)
 
     # docs: decrement dl of affected docs (identity otherwise). The
     # patch is fed from the ALREADY-COLLECTED rows — re-joining the
-    # removed_by_doc plan here would run the decode pipeline a third
+    # removed-rows plan here would run the decode pipeline a third
     # time (once for the collect, once for the postings write).
-    docs = _multi(spark, segs, "docs")
+    docs = read_segments(spark, segs, "docs")
     if removed_rows:
         patch_doc = spark.createDataFrame(
             [(int(r["doc_id"]), int(r["_rm_dl"])) for r in removed_rows],
@@ -606,16 +593,12 @@ def delete_term_postings(
             (F.col("dl") - F.coalesce(F.col("_rm_dl"), F.lit(0)))
             .cast("int").alias("dl"),
         )
-    parts = spark.sparkContext.defaultParallelism
-    (
-        docs.repartitionByRange(parts, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_abs, "docs"))
-    )
+    # the registry keeps tombstoned docs, so its observed totals are
+    # not the live corpus stats: those come from the arithmetic below
+    write_docs(docs, out_paths.docs, par)
 
     # doclens: patch only the chunks that lost occurrences
-    doclens = _multi(spark, segs, "doclens")
+    doclens = read_segments(spark, segs, "doclens")
     if rm_by_chunk:
         patch_df = spark.createDataFrame(
             [
@@ -624,29 +607,11 @@ def delete_term_postings(
             ],
             "chunk long, _ids array<long>, _rm array<long>",
         )
-
-        @F.pandas_udf("binary")
-        def patch(dls: pd.Series, ids: pd.Series, rm: pd.Series) -> pd.Series:
-            out = []
-            for buf, i, r in zip(dls, ids, rm):
-                if i is None or len(i) == 0:
-                    out.append(buf)
-                    continue
-                arr = np.frombuffer(buf, dtype=np.int32).copy()
-                pos = np.asarray(i, dtype=np.int64) % span
-                ok = (pos >= 0) & (pos < arr.size)
-                arr[pos[ok]] -= np.asarray(r, dtype=np.int64)[ok].astype(
-                    np.int32
-                )
-                out.append(arr.tobytes())
-            return pd.Series(out)
-
         doclens = doclens.join(F.broadcast(patch_df), "chunk", "left").select(
-            "chunk", patch(F.col("dls"), F.col("_ids"), F.col("_rm")).alias("dls")
+            "chunk",
+            _patch_doclens(span)("dls", "_ids", "_rm").alias("dls"),
         )
-    doclens.write.mode("overwrite").option(
-        "compression", "uncompressed"
-    ).parquet(os.path.join(out_abs, "doclens"))
+    write_doclens(doclens, out_paths.doclens)
 
     stats = _exact_stats(m, spark, segs)
     out = BuildManifest(out_dir)
@@ -685,189 +650,38 @@ def compact(
     _check_out_dir(out_dir, index_dir, segs)
     cfg = m.config
     span = int(cfg["chunk_span"])
-    block_size = int(cfg.get("block_size", 128))
     num_buckets = int(cfg["num_buckets"])
+    par = spark.sparkContext.defaultParallelism
     t0 = time.time()
-    out_abs = os.path.abspath(out_dir)
+    out_paths = IndexPaths(os.path.abspath(out_dir))
 
-    dels_dir = cfg.get("deletes_dir")
-    dels = spark.read.parquet(dels_dir) if dels_dir else None
-    dels_by_chunk = None
-    if dels is not None:
-        dels_by_chunk = (
-            dels.select(
-                (F.col("doc_id") / span).cast("long").alias("chunk"),
-                "doc_id",
-            )
-            .groupBy("chunk")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("_dels"))
+    posts = read_segments(spark, segs, "postings")
+    docs = read_segments(spark, segs, "docs")
+    doclens = read_segments(spark, segs, "doclens")
+    if cfg.get("deletes_dir"):
+        dels = spark.read.parquet(cfg["deletes_dir"])
+        by_chunk = tombstones_by_chunk(dels, span, cfg.get("n_tombstones"))
+        # positional indexes: compact is where stale plists bytes
+        # (tombstoned docs) are reclaimed
+        _, posts = _rewrite_postings(
+            posts.join(by_chunk, "chunk", "left"), "_dels",
+            int(cfg.get("block_size", 128)), filter_plists=True,
         )
-        # compact runs exactly when tombstones are at their largest —
-        # broadcast only when the manifest proves the set bounded;
-        # past the cap the chunk joins stay distributed shuffles
-        n_tomb = cfg.get("n_tombstones")
-        if n_tomb is not None and int(n_tomb) <= _DELS_BROADCAST_CAP:
-            dels_by_chunk = F.broadcast(dels_by_chunk)
-
-    # ---- postings: pass-through or decode/filter/re-encode per row
-    posts = _multi(spark, segs, "postings")
-    has_plists = "plists" in posts.columns
-    if dels_by_chunk is not None:
-        posts = posts.join(dels_by_chunk, "chunk", "left")
-        # touched/untouched split: rows in tombstone-free chunks never
-        # enter Python — their encoded bytes stay JVM-side
-        untouched = posts.where(F.col("_dels").isNull())
-        touched = posts.where(F.col("_dels").isNotNull())
-
-        if has_plists:
-            # positional indexes: compact is where stale plists bytes
-            # (tombstoned docs) are reclaimed — entries are dropped by
-            # embedded doc_id, untouched rows pass through as-is
-            @F.pandas_udf(PLISTS_SCHEMA)
-            def filter_plists(
-                plists: pd.Series, dels_col: pd.Series
-            ) -> pd.Series:
-                out = []
-                for pl, dl in zip(plists, dels_col):
-                    if dl is None or len(dl) == 0 or pl is None:
-                        out.append(pl)
-                        continue
-                    drop = set(int(x) for x in dl)
-                    out.append(
-                        [e for e in pl if int(e["doc_id"]) not in drop]
-                    )
-                return pd.Series(out)
-
-        @F.pandas_udf(
-            f"struct<n_docs: long, sum_tf: long, max_tf: int, blocks: {BLOCKS_SCHEMA}>"
-        )
-        def rewrite(blocks: pd.Series, dels_col: pd.Series) -> pd.DataFrame:
-            n_docs, sum_tf, max_tf, out_blocks = [], [], [], []
-            for blks, dl in zip(blocks, dels_col):
-                drop = np.asarray(dl, dtype=np.int64)
-                nd, st, mt, blocks_out, _, _ = _filter_block_rows(
-                    blks, drop, block_size
-                )
-                n_docs.append(nd)
-                sum_tf.append(st)
-                max_tf.append(mt)
-                out_blocks.append(blocks_out)
-            return pd.DataFrame(
-                {
-                    "n_docs": pd.Series(n_docs, dtype="int64"),
-                    "sum_tf": pd.Series(sum_tf, dtype="int64"),
-                    "max_tf": pd.Series(max_tf, dtype="int32"),
-                    "blocks": out_blocks,
-                }
-            )
-
-        base_cols = [
-            "bucket", "term", "chunk", "n_docs", "sum_tf", "max_tf",
-            "blocks", *(["plists"] if has_plists else []),
-        ]
-        new_touched = (
-            touched.withColumn(
-                "_rw", rewrite(F.col("blocks"), F.col("_dels"))
-            )
-            .select(
-                "bucket",
-                "term",
-                "chunk",
-                F.col("_rw.n_docs").alias("n_docs"),
-                F.col("_rw.sum_tf").alias("sum_tf"),
-                F.col("_rw.max_tf").alias("max_tf"),
-                F.col("_rw.blocks").alias("blocks"),
-                *(
-                    [
-                        filter_plists(
-                            F.col("plists"), F.col("_dels")
-                        ).alias("plists")
-                    ]
-                    if has_plists
-                    else []
-                ),
-            )
-            .where(F.col("n_docs") > 0)
-        )
-        posts = untouched.select(*base_cols).unionByName(new_touched)
-    else:
-        posts = posts.select(
-            "bucket", "term", "chunk", "n_docs", "sum_tf", "max_tf", "blocks",
-            *(["plists"] if has_plists else []),
-        )
-
-    (
-        posts.repartition(num_buckets, "bucket")
-        .sortWithinPartitions("term", "chunk")
-        .write.mode("overwrite")
-        .option("compression", "uncompressed")  # blocks are varint-coded
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_abs, "postings"))
-    )
-
-    # ---- terms: exact df from the rewritten postings
-    new_posts = spark.read.parquet(os.path.join(out_abs, "postings"))
-    terms = new_posts.groupBy("term").agg(
-        F.sum("n_docs").alias("df"),
-        F.sum("sum_tf").alias("cf"),
-        F.max("max_tf").alias("max_tf"),
-        F.first("bucket").alias("bucket"),
-    )
-    nparts = max(1, min(num_buckets, spark.sparkContext.defaultParallelism))
-    # n_terms rides the write (build.py's Observation pattern), recorded
-    # so readers gate the driver dictionary cache without a probe job
-    obs_t = Observation("compact_terms_stats")
-    (
-        terms.repartitionByRange(nparts, "term")
-        .observe(obs_t, F.count(F.lit(1)).alias("n"))
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_abs, "terms"))
-    )
-    n_terms = int(obs_t.get["n"])
-
-    # ---- docs / doclens: filter tombstones (doclens entries of removed
-    # docs are zeroed; gap positions are never referenced by postings)
-    docs = _multi(spark, segs, "docs")
-    if dels is not None:
         docs = docs.join(dels, "doc_id", "left_anti")
-    parts = spark.sparkContext.defaultParallelism
-    (
-        docs.repartitionByRange(parts, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_abs, "docs"))
-    )
+        # removed docs' doclens slots are zeroed; gap positions are
+        # never referenced by postings
+        doclens = doclens.join(by_chunk, "chunk", "left").select(
+            "chunk",
+            _patch_doclens(span)(
+                "dls", "_dels", F.lit(None).cast("array<long>")
+            ).alias("dls"),
+        )
 
-    doclens = _multi(spark, segs, "doclens")
-    if dels_by_chunk is not None:
-        @F.pandas_udf("binary")
-        def zero_at(dls: pd.Series, dels_col: pd.Series) -> pd.Series:
-            out = []
-            for buf, dl in zip(dls, dels_col):
-                if dl is None or len(dl) == 0:
-                    out.append(buf)
-                    continue
-                arr = np.frombuffer(buf, dtype=np.int32).copy()
-                # doc_id -> position within this chunk
-                ids = np.asarray(dl, dtype=np.int64)
-                pos = ids % span
-                pos = pos[(pos >= 0) & (pos < arr.size)]
-                arr[pos] = 0
-                out.append(arr.tobytes())
-            return pd.Series(out)
+    write_postings(posts.repartition(num_buckets, "bucket"), out_paths.postings)
+    n_terms = write_terms(spark, out_paths, num_buckets, par)
+    n_docs, total_dl = write_docs(docs, out_paths.docs, par)
+    write_doclens(doclens, out_paths.doclens)
 
-        doclens = doclens.join(
-            dels_by_chunk, "chunk", "left"  # broadcast-hinted iff gated
-        ).select("chunk", zero_at(F.col("dls"), F.col("_dels")).alias("dls"))
-    doclens.write.mode("overwrite").option(
-        "compression", "uncompressed"
-    ).parquet(os.path.join(out_abs, "doclens"))
-
-    # ---- exact stats + fresh single-segment manifest
-    row = spark.read.parquet(os.path.join(out_abs, "docs")).agg(
-        F.count("*").alias("n"), F.sum("dl").alias("t")
-    ).collect()[0]
     out = BuildManifest(out_dir)
     out.config = {
         k: v
@@ -875,13 +689,13 @@ def compact(
         if k not in ("segments", "deletes_dir", "n_tombstones")
     }
     out.stats = {
-        **CorpusStats.combine(int(row["n"]), int(row["t"] or 0)).to_dict(),
+        **CorpusStats.combine(n_docs, total_dl).to_dict(),
         "n_terms": n_terms,
     }
     out.record_stage(
         "compact",
         fingerprint=f"{len(segs)}segs",
-        n_docs=int(row["n"]),
+        n_docs=n_docs,
         wall_s=time.time() - t0,
     )
     out.commit()

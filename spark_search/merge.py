@@ -33,6 +33,12 @@ shard built with ``ids.with_doc_ids(start=...)`` at chunk boundaries
 fast path: zero posting bytes cross the Python boundary; only groups
 with 2+ source rows pay the Arrow round-trip + re-encode.
 
+This module owns only the merge itself (which rows collide and how
+their blocks and doclens combine). Every sub-dir it publishes goes
+through build.py's writers: postings/, terms/ and doclens/ through the
+very ones a build uses, docs/ through the range writer maintenance
+shares.
+
 Reference analog: the reference engine holds ONE in-heap tree and adds
 documents to it serially (index/DocumentIndexManager.java); sharded
 build + merge is the distributed replacement for that serial add loop
@@ -50,12 +56,21 @@ from typing import List, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from .build import BLOCKS_SCHEMA, PLISTS_SCHEMA, IndexPaths
+from .build import (
+    BLOCKS_SCHEMA,
+    PLISTS_SCHEMA,
+    IndexPaths,
+    block_structs,
+    read_segments,
+    write_docs,
+    write_doclens,
+    write_postings,
+    write_terms,
+)
 from .checkpoint import BuildManifest
 from .codec import encode_blocks_batch, varint_decode
-from .maintain import _multi
 from .progress import dir_bytes
 from .stats import CorpusStats
 
@@ -207,20 +222,7 @@ def _merge_postings_udf(block_size: int, has_plists: bool):
         )
         sum_tf = np.add.reduceat(tfs, g_starts)
         max_tf = np.maximum.reduceat(tfs, g_starts)
-        blocks_out = [
-            [
-                {
-                    "first_doc": e[0],
-                    "last_doc": e[1],
-                    "n": e[2],
-                    "max_tf": e[3],
-                    "deltas": e[4],
-                    "tfs": e[5],
-                }
-                for e in blocks
-            ]
-            for blocks in enc
-        ]
+        blocks_out = [block_structs(blocks) for blocks in enc]
         data = {
             "n_docs": pd.Series(counts, dtype="int64"),
             "sum_tf": pd.Series(sum_tf, dtype="int64"),
@@ -300,7 +302,7 @@ def merge_indexes(
             for d, m in zip(src_dirs, manifests)
         )
     )
-    docs = _multi(spark, src_dirs, "docs")
+    docs = read_segments(spark, src_dirs, "docs")
     if validate:
         # Disjointness is the correctness precondition for everything
         # below (block merge assumes no (term, doc) pair exists twice);
@@ -342,33 +344,16 @@ def merge_indexes(
     # ------------------------------------------------------------- docs
     t0 = time.time()
     if not (resume and manifest.stage_done("merge-docs", fingerprint)):
-        from pyspark.sql import Observation
-
-        obs = Observation("merge_docs_stats")
-        (
-            docs.repartitionByRange(par, "doc_id")
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("dl").alias("tot"),
-            )
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(paths.docs)
-        )
-        row = obs.get
-        n_docs, total_dl = int(row["n"]), int(row["tot"] or 0)
+        n_docs, total_dl = write_docs(docs, paths.docs, par)
 
         # ------------------------------------------------------ doclens
         combine = _combine_doclens_udf()
-        (
-            _multi(spark, src_dirs, "doclens")
+        write_doclens(
+            read_segments(spark, src_dirs, "doclens")
             .groupBy("chunk")
             .agg(F.collect_list("dls").alias("_g"))
-            .select("chunk", combine(F.col("_g")).alias("dls"))
-            .write.mode("overwrite")
-            .option("compression", "uncompressed")
-            .parquet(paths.doclens)
+            .select("chunk", combine(F.col("_g")).alias("dls")),
+            paths.doclens,
         )
         manifest.stats = CorpusStats.combine(n_docs, total_dl).to_dict()
         manifest.record_stage(
@@ -378,7 +363,7 @@ def merge_indexes(
     # --------------------------------------------------------- postings
     t1 = time.time()
     if not (resume and manifest.stage_done("merge-postings", fingerprint)):
-        posts = _multi(spark, src_dirs, "postings")
+        posts = read_segments(spark, src_dirs, "postings")
         src_struct = ["n_docs", "sum_tf", "max_tf", "blocks"] + (
             ["plists"] if has_plists else []
         )
@@ -403,41 +388,17 @@ def merge_indexes(
             # partition keys)
             .agg(F.collect_list(F.struct(*src_struct)).alias("srcs"))
         )
-        one = F.col("srcs")[0]
         singles = grouped.where(F.size("srcs") == 1).select(
-            "bucket",
-            "term",
-            "chunk",
-            one.getField("n_docs").alias("n_docs"),
-            one.getField("sum_tf").alias("sum_tf"),
-            one.getField("max_tf").alias("max_tf"),
-            one.getField("blocks").alias("blocks"),
-            *([one.getField("plists").alias("plists")] if has_plists else []),
-        )
+            "bucket", "term", "chunk", F.col("srcs")[0].alias("_r")
+        ).select("bucket", "term", "chunk", "_r.*")
         merge_srcs = _merge_postings_udf(block_size, has_plists)
         multis = grouped.where(F.size("srcs") > 1).select(
-            "bucket", "term", "chunk", merge_srcs(F.col("srcs")).alias("_m")
-        ).select(
-            "bucket",
-            "term",
-            "chunk",
-            F.col("_m.n_docs").alias("n_docs"),
-            F.col("_m.sum_tf").alias("sum_tf"),
-            F.col("_m.max_tf").alias("max_tf"),
-            F.col("_m.blocks").alias("blocks"),
-            *([F.col("_m.plists").alias("plists")] if has_plists else []),
-        )
-        (
-            # the two branches re-read ONE shuffle (ReusedExchange: same
-            # child plan under both filters); the union keeps rows of
-            # each task clustered by bucket for the partitioned write
-            singles.unionByName(multis)
-            .sortWithinPartitions("bucket", "term", "chunk")
-            .write.mode("overwrite")
-            .option("compression", "uncompressed")  # varint-coded already
-            .partitionBy("bucket")
-            .parquet(paths.postings)
-        )
+            "bucket", "term", "chunk", merge_srcs(F.col("srcs")).alias("_r")
+        ).select("bucket", "term", "chunk", "_r.*")
+        # the two branches re-read ONE shuffle (ReusedExchange: same
+        # child plan under both filters); the union keeps rows of each
+        # task clustered by bucket for the partitioned write
+        write_postings(singles.unionByName(multis), paths.postings)
         manifest.record_stage(
             "merge-postings", fingerprint, wall_s=time.time() - t1
         )
@@ -445,28 +406,7 @@ def merge_indexes(
     # ------------------------------------------------------------ terms
     t2 = time.time()
     if not (resume and manifest.stage_done("merge-terms", fingerprint)):
-        new_posts = spark.read.parquet(paths.postings)
-        terms = new_posts.groupBy("term").agg(
-            F.sum("n_docs").alias("df"),
-            F.sum("sum_tf").alias("cf"),
-            F.max("max_tf").alias("max_tf"),
-            F.first("bucket").alias("bucket"),
-        )
-        nparts = max(1, min(num_buckets, par))
-        # vocabulary size rides the write (build.py's Observation
-        # pattern) — a read-back count would schedule one avoidable
-        # listing+footer scan of the terms directory per merge
-        from pyspark.sql import Observation
-
-        obs_t = Observation("merge_terms_stats")
-        (
-            terms.repartitionByRange(nparts, "term")
-            .observe(obs_t, F.count(F.lit(1)).alias("n"))
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(paths.terms)
-        )
-        n_terms = int(obs_t.get["n"])
+        n_terms = write_terms(spark, paths, num_buckets, par)
         manifest.stats = {**manifest.stats, "n_terms": n_terms}
         manifest.record_stage(
             "merge-terms",

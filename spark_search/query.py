@@ -67,7 +67,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import kernel
-from .build import IndexPaths, bucket_col, bucket_of
+from .build import (
+    IndexPaths,
+    bucket_col,
+    bucket_of,
+    read_segments,
+    tombstones_by_chunk,
+)
 from .checkpoint import BuildManifest
 from .codec import decode_block, decode_blocks, decode_positions
 from .frames import RESULT_FIELDS, literal_frame
@@ -114,16 +120,14 @@ _LOCAL_MAX_POSITIONS = 4_000_000
 #     exact/OR/AND query's Σ df with no terms/ job, and rare terms are
 #     routed to their bucket by ``build.bucket_of``. The head path
 #     stops applying once (T−1) × the number of rare query terms
-#     exceeds the 2^20 local gate: roughly total_dl > 5·10^10 for
-#     5-term queries.
+#     exceeds the 2^21 local gate: roughly total_dl > 1.1·10^11 for
+#     5-term queries (T > 419,431, times 2^18).
 #   * doclens — per-chunk int32 arrays, LRU-bounded (~512 × span×4 B).
 #   * deletes — chunk → sorted doc_id arrays iff |deletes| ≤ cap.
 # Caches never go stale: maintain/compact/streaming always publish NEW
 # index directories (copy-on-write), an open reader's files are immutable.
 _DICT_CACHE_CAP = 1 << 18
 _DELS_CACHE_CAP = 2_000_000
-# broadcast gate for the per-chunk tombstone join (bytes ~ 8/id):
-_DELS_BROADCAST_CAP = 5_000_000
 _DOCLENS_CACHE_CHUNKS = 512
 
 _DOCS_TERMS_FIELDS = [("doc_id", "long"), ("term", "string"), ("tf", "int")]
@@ -407,23 +411,15 @@ class IndexReader:
     # ------------------------------------------------------------ pieces
 
     def _multi(self, sub: str) -> DataFrame:
-        # per-root reads unioned: partition discovery (bucket=N dirs)
-        # must run per segment root, not across them. Memoized — the
-        # files of an open snapshot are immutable, and re-listing +
-        # re-inferring the schema per query is pure per-query overhead.
+        # ``build.read_segments``, memoized: the files of an open
+        # snapshot are immutable, and re-listing + re-inferring the
+        # schema per query is pure per-query overhead.
         with self._cache_lock:
-            cached = self._df_cache.get(sub)
-            if cached is not None:
-                return cached
-            dfs = [
-                self.spark.read.parquet(os.path.join(s, sub))
-                for s in self.segments
-            ]
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d)
-            self._df_cache[sub] = out
-            return out
+            if sub not in self._df_cache:
+                self._df_cache[sub] = read_segments(
+                    self.spark, self.segments, sub
+                )
+            return self._df_cache[sub]
 
     def terms_df(self) -> DataFrame:
         return self._multi("terms")
@@ -462,26 +458,7 @@ class IndexReader:
         dels = self.deletes_df()
         if dels is None:
             return None
-        span = self.chunk_span
-        grouped = (
-            dels.select(
-                (F.col("doc_id") / span).cast("long").alias("chunk"),
-                "doc_id",
-            )
-            .groupBy("chunk")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("_dels"))
-        )
-        # broadcast only when the manifest proves the tombstone set is
-        # bounded — an unconditional hint would pull a delete-heavy
-        # (not yet compacted) index's ENTIRE tombstone set onto the
-        # driver; past the cap the chunk join stays a distributed
-        # shuffle, same results
-        if (
-            self.n_tombstones is not None
-            and self.n_tombstones <= _DELS_BROADCAST_CAP
-        ):
-            return F.broadcast(grouped)
-        return grouped
+        return tombstones_by_chunk(dels, self.chunk_span, self.n_tombstones)
 
     def _allow_by_chunk(
         self, doc_filter=None, exclude_terms=None, require_docs=None
@@ -981,13 +958,12 @@ class IndexReader:
                 meta = self._meta_scan_df(pred, stats)
         else:
             # a prefix/contains expansion proven wider than the cap:
-            # fully distributed metadata, never collected
+            # fully distributed metadata, never collected. Nothing below
+            # needs its exact size or bucket set (a wide mode has no AND
+            # gate), so no job counts them: every bucket is a superset
+            # the term predicate still narrows
             meta = self._meta_scan_df(pred, stats)
-            info = meta.agg(
-                F.count("*").alias("n"),
-                F.collect_set("bucket").alias("buckets"),
-            ).collect()[0]
-            n_matched, buckets = int(info["n"]), sorted(info["buckets"] or [])
+            n_matched, buckets = cap + 1, list(range(self.num_buckets))
         if n_matched == 0 or (mode == AND_MATCH and n_matched < n_query_terms):
             return self._no_hits(out_fields)
 
@@ -1328,13 +1304,12 @@ class IndexReader:
             meta = self._meta_frame(expansion)
         else:
             meta = self._meta_scan_df(pred, stats)
-            if expansion is not None:
-                buckets = sorted({b for _, _, _, b in expansion})
-            else:
-                info = meta.agg(
-                    F.collect_set("bucket").alias("buckets")
-                ).collect()[0]
-                buckets = sorted(info["buckets"] or [])
+            # past the scan limit: every bucket, as in search()
+            buckets = (
+                sorted({b for _, _, _, b in expansion})
+                if expansion is not None
+                else list(range(self.num_buckets))
+            )
 
         # term -> [query_ids]: when this map is derivable driver-side
         # (always for exact/OR/AND — the terms ARE the input; for
@@ -2402,13 +2377,17 @@ def search_multifield(
     terms, never corpus volume — no collect, no literal-plan tail),
     rounded to 6 dp per field before the weighted full-outer combine —
     the shared ``combine_field_scores`` protocol. Cost ≈ one plain
-    search per field."""
+    search per field. A negative ``k`` or an empty ``field_readers``
+    raises ``ValueError`` before any Spark job."""
     from .pipeline import combine_field_scores
 
+    _check_k(k)
+    if not field_readers:
+        raise ValueError("search_multifield needs at least one field reader")
     qterms = [t for t in dict.fromkeys(terms) if t]
-    if not qterms or not field_readers:
-        spark = next(iter(field_readers.values()))[0].spark if field_readers else None
-        return literal_frame(spark, [], RESULT_FIELDS) if spark else None
+    if not qterms:
+        spark = next(iter(field_readers.values()))[0].spark
+        return literal_frame(spark, [], RESULT_FIELDS)
     parts = []
     for fld in sorted(field_readers):
         rd, w = field_readers[fld]

@@ -177,8 +177,9 @@ def test_local_path_job_counts(synth_index, jobs_of):
 
 def test_negative_k_raises_before_any_job(spark, synth, synth_index, jobs_of):
     """k < 0 raises ValueError before any Spark job, on the driver-local,
-    the distributed, the batched and the phrase path, even on a cold
-    reader; k = 0 returns no rows on the first three."""
+    the distributed, the batched, the phrase and the multifield path,
+    even on a cold reader; k = 0 returns no rows on the first three.
+    Multifield with no field readers is a ValueError too."""
     cold = IndexReader(spark, synth_index.paths.root)
     terms, OR = ["import", "return"], P.WITH_SUGGESTIONS
 
@@ -191,9 +192,12 @@ def test_negative_k_raises_before_any_job(spark, synth, synth_index, jobs_of):
         lambda: cold.search(terms, OR, k=-1, local_max_postings=0),
         lambda: cold.search_many([terms], OR, k=-1),
         lambda: cold.search_phrase(terms, synth, k=-1),
+        lambda: Q.search_multifield({"content": (cold, 1.0)}, terms, k=-1),
     ]:
         _, n_jobs = jobs_of(lambda: raises(run))
         assert n_jobs == 0
+    with pytest.raises(ValueError, match="at least one field reader"):
+        Q.search_multifield({}, terms)
     for gate in (Q._LOCAL_MAX_POSTINGS, 0):
         assert synth_index.search(
             terms, OR, k=0, local_max_postings=gate
@@ -243,12 +247,16 @@ def test_uncached_local_search_runs_one_shuffle_free_job(
 
 
 def test_uncached_prefix_past_cap_stays_distributed(
-    spark, synth_index, monkeypatch
+    spark, synth_index, monkeypatch, jobs_of
 ):
     """A prefix expansion that reaches the scan limit proves more than
     ``_META_COLLECT_CAP`` terms: its metadata stays distributed
-    (``_meta_scan_df``), with the same top-k."""
+    (``_meta_scan_df``), with the same top-k, for one query and for a
+    batch. No job counts the wide expansion's terms or buckets: a warm
+    search runs at most 7 jobs."""
     want = synth_index.search(["c"], P.START_WITH, k=10).collect()
+    batch = {"qc": ["c"], "qs": ["s"]}
+    want_many = synth_index.search_many(batch, P.START_WITH, k=10).collect()
     r = _uncached_reader(spark, synth_index, monkeypatch)
     monkeypatch.setattr(Q, "_META_COLLECT_CAP", 2)
     assert r._expand(["c"], P.START_WITH, 2) is None
@@ -269,6 +277,21 @@ def test_uncached_prefix_past_cap_stays_distributed(
     for g, w in zip(got, want):
         # Spark-side idf vs driver-side idf may differ by 1 ulp
         assert g["score"] == pytest.approx(w["score"], rel=1e-12)
+    _, n_jobs = jobs_of(
+        lambda: r.search(["c"], P.START_WITH, k=10).collect()
+    )
+    assert n_jobs <= 7
+
+    def by_query(rows):
+        return sorted((x["query_id"], x["rank"], x["doc_id"]) for x in rows)
+
+    got_many = r.search_many(batch, P.START_WITH, k=10).collect()
+    assert by_query(got_many) == by_query(want_many)
+    score = {(x["query_id"], x["doc_id"]): x["score"] for x in want_many}
+    for g in got_many:
+        assert g["score"] == pytest.approx(
+            score[(g["query_id"], g["doc_id"])], rel=1e-12
+        )
 
 
 @pytest.fixture(scope="module")

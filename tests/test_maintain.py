@@ -4,6 +4,8 @@ deltas and match-set changes after remove/update), plus the staleness
 contract: match sets exact immediately, scores exact after compact."""
 
 import os
+import pathlib
+import re
 import sys
 import tempfile
 
@@ -25,6 +27,8 @@ from spark_search.maintain import (
     upsert_file,
 )
 from spark_search.query import IndexReader
+
+from index_rows import postings_rows, rows
 
 
 @pytest.fixture(scope="module")
@@ -616,3 +620,141 @@ def test_delete_term_postings_skips_tombstoned_docs(
     delete_term_postings(spark, d1, d3, [("mila", other)])
     assert IndexReader(spark, d3).stats.avgdl < avgdl_before
     assert _ids(IndexReader(spark, d3), ["mila"]) == []
+
+
+# ------------------------------------------- layout pins (rows on disk)
+
+
+@pytest.fixture(scope="module")
+def synth_base(spark, tmp_path_factory):
+    from spark_search.corpus import synthetic_corpus
+
+    d = str(tmp_path_factory.mktemp("maint") / "synth0")
+    corpus = with_doc_ids(synthetic_corpus(spark, 300)).cache()
+    corpus.count()
+    build_index(spark, corpus, d, num_buckets=4, chunk_span=64)
+    return d, corpus
+
+
+def _doclens_trimmed(spark, d):
+    """chunk -> packed dl array without its trailing zero slots (a
+    rewrite zeroes a removed doc's slot where a fresh build packs only
+    up to the last occupied position); all-zero chunks drop out."""
+    import numpy as np
+
+    out = {}
+    for chunk, dls in rows(spark, d, "doclens", ["chunk"]):
+        arr = np.trim_zeros(np.frombuffer(dls, dtype=np.int32), "b")
+        if arr.size:
+            out[chunk] = arr.tolist()
+    return out
+
+
+def test_compact_layout_equals_fresh_build(spark, synth_base, tmp_path):
+    """delete_docs + compact leaves the postings (block bytes included),
+    terms and docs rows of a fresh build over the surviving corpus with
+    the same doc ids; doclens match up to trailing zero slots."""
+    d0, corpus = synth_base
+    victims = [5, 17, 64, 65, 130, 200, 299]
+    d1, d2 = str(tmp_path / "del"), str(tmp_path / "cmp")
+    delete_docs(spark, d0, d1, victims)
+    compact(spark, d1, d2)
+    fresh = str(tmp_path / "fresh")
+    build_index(
+        spark, corpus.where(~F.col("doc_id").isin(victims)), fresh,
+        num_buckets=4, chunk_span=64,
+    )
+    assert postings_rows(spark, d2) == postings_rows(spark, fresh)
+    for sub, order in (("terms", ["term"]), ("docs", ["doc_id"])):
+        assert rows(spark, d2, sub, order) == rows(spark, fresh, sub, order)
+    assert _doclens_trimmed(spark, d2) == _doclens_trimmed(spark, fresh)
+
+
+def test_delete_term_postings_layout_equals_fresh_build(
+    spark, synth_base, tmp_path
+):
+    """delete_term_postings leaves the postings, terms and doclens rows
+    of a fresh build over the corpus with those term occurrences cut;
+    docs rows agree except content_sha256 (the fresh build hashes the
+    edited text)."""
+    from spark_search.maintain import delete_term_postings
+    from spark_search.tokenizer import tokenize
+
+    d0, corpus = synth_base
+    texts = {
+        r["doc_id"]: r["content"]
+        for r in corpus.select("doc_id", "content").collect()
+    }
+    pairs = []
+    for term, lo in (("import", 0), ("return", 64), ("def", 128)):
+        doc = min(i for i, t in texts.items() if i >= lo and term in tokenize(t))
+        pairs.append((term, doc))
+    edited = {
+        doc: " ".join(t for t in tokenize(texts[doc]) if t != term)
+        for term, doc in pairs
+    }
+    d1 = str(tmp_path / "tdel")
+    delete_term_postings(spark, d0, d1, pairs)
+    edit = F.col("content")
+    for doc, text in edited.items():
+        edit = F.when(F.col("doc_id") == doc, F.lit(text)).otherwise(edit)
+    fresh = str(tmp_path / "fresh")
+    build_index(
+        spark, corpus.withColumn("content", edit), fresh,
+        num_buckets=4, chunk_span=64,
+    )
+    assert postings_rows(spark, d1) == postings_rows(spark, fresh)
+    assert rows(spark, d1, "terms", ["term"]) == rows(
+        spark, fresh, "terms", ["term"]
+    )
+    assert rows(spark, d1, "doclens", ["chunk"]) == rows(
+        spark, fresh, "doclens", ["chunk"]
+    )
+
+    def docs_rows(d):
+        df = spark.read.parquet(os.path.join(d, "docs")).drop("content_sha256")
+        return [tuple(r) for r in df.orderBy("doc_id").collect()]
+
+    assert docs_rows(d1) == docs_rows(fresh)
+
+
+# ------------------------------------------------------ source guard
+
+# (pattern, its number of copies in build.py)
+_LAYOUT_WRITES = [
+    (re.compile(r'partitionBy\(\s*"bucket"\s*\)'), 1),  # postings write
+    (re.compile(r'F\.sum\(\s*"n_docs"\s*\)\.alias\(\s*"df"\s*\)'), 1),  # terms
+    (re.compile(r'"compression",\s*"uncompressed"'), 2),  # postings, doclens
+]
+
+
+def _layout_offenders(name: str, src: str):
+    return [
+        f"{name}:{src.count(chr(10), 0, m.start()) + 1}: {m.group(0)}"
+        for pat, _ in _LAYOUT_WRITES
+        for m in pat.finditer(src)
+    ]
+
+
+def test_index_layout_is_written_only_in_build_py():
+    """Guard: the postings partitionBy("bucket") write, the terms
+    aggregate and the uncompressed postings and doclens writes exist
+    once each, in build.py's sub-dir writers; a second copy in merge or
+    maintenance could drift from the layout a fresh build writes."""
+    caught = _layout_offenders(
+        "x.py",
+        '.partitionBy("bucket")\nF.sum("n_docs").alias("df")\n'
+        '.option("compression", "uncompressed")\nF.sum("dl")\n',
+    )
+    assert [c.split(":")[1] for c in caught] == ["1", "2", "3"]
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "spark_search"
+    offenders = [
+        hit
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "build.py"
+        for hit in _layout_offenders(path.name, path.read_text())
+    ]
+    assert not offenders, "\n".join(offenders)
+    src = (pkg / "build.py").read_text()
+    for pat, copies in _LAYOUT_WRITES:
+        assert len(pat.findall(src)) == copies, pat.pattern

@@ -17,44 +17,7 @@ from spark_search.build import build_index
 from spark_search.merge import merge_indexes
 from spark_search.query import IndexReader
 
-
-def _rows(spark, d, sub, order):
-    df = spark.read.parquet(os.path.join(d, sub))
-    return [
-        tuple(
-            bytes(v) if isinstance(v, (bytes, bytearray)) else v
-            for v in r
-        )
-        for r in df.orderBy(*order).select(sorted(df.columns)).collect()
-    ]
-
-
-def _postings_rows(spark, d):
-    """Postings rows with blocks — and, on positional indexes, plists —
-    flattened to comparable tuples, so 'content-identical' covers the
-    position lists the merge UDF reconstructs by hand."""
-    df = spark.read.parquet(os.path.join(d, "postings"))
-    cols = ["bucket", "term", "chunk", "n_docs", "sum_tf", "max_tf"]
-    has_plists = "plists" in df.columns
-    out = []
-    for r in df.orderBy("bucket", "term", "chunk").collect():
-        blocks = tuple(
-            (
-                b["first_doc"], b["last_doc"], b["n"], b["max_tf"],
-                bytes(b["deltas"]), bytes(b["tfs"]),
-            )
-            for b in r["blocks"]
-        )
-        row = tuple(r[c] for c in cols) + (blocks,)
-        if has_plists:
-            row += (
-                tuple(
-                    (p["doc_id"], bytes(p["poss"]))
-                    for p in (r["plists"] or [])
-                ),
-            )
-        out.append(row)
-    return out
+from index_rows import postings_rows, rows
 
 
 def _split(corpus):
@@ -80,14 +43,14 @@ def merged_setup(spark, fixture_corpus, tmp_path_factory):
 
 def test_merged_content_identical_to_monolithic(spark, merged_setup):
     mono, _, _, out = merged_setup
-    assert _postings_rows(spark, out) == _postings_rows(spark, mono)
-    assert _rows(spark, out, "terms", ["term"]) == _rows(
+    assert postings_rows(spark, out) == postings_rows(spark, mono)
+    assert rows(spark, out, "terms", ["term"]) == rows(
         spark, mono, "terms", ["term"]
     )
-    assert _rows(spark, out, "docs", ["doc_id"]) == _rows(
+    assert rows(spark, out, "docs", ["doc_id"]) == rows(
         spark, mono, "docs", ["doc_id"]
     )
-    assert _rows(spark, out, "doclens", ["chunk"]) == _rows(
+    assert rows(spark, out, "doclens", ["chunk"]) == rows(
         spark, mono, "doclens", ["chunk"]
     )
 
@@ -124,7 +87,7 @@ def test_merge_positional_shards_phrase_content_free(
     got = ro.search_phrase(["mac", "os"], k=5).collect()  # corpus=None
     want = IndexReader(spark, mono).search_phrase(["mac", "os"], k=5).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    assert _postings_rows(spark, out) == _postings_rows(spark, mono)
+    assert postings_rows(spark, out) == postings_rows(spark, mono)
 
 
 def test_merge_chunk_disjoint_shards(spark, fixture_corpus, tmp_path):
@@ -284,20 +247,20 @@ def test_merge_resume_skips_completed_stages(spark, merged_setup, tmp_path):
         for f in fs
     )
     assert post_mtime == postings_mtime
-    assert _postings_rows(spark, out) == _postings_rows(spark, mono)
+    assert postings_rows(spark, out) == postings_rows(spark, mono)
 
 
 def test_merge_reuses_one_postings_exchange(spark, fixture_corpus, tmp_path):
     """Scale pin: the singles/multis branches must re-read ONE shuffle
     of the postings (ReusedExchange), not shuffle the bytes twice."""
-    from spark_search.maintain import _multi
+    from spark_search.build import read_segments
     from spark_search.merge import _merge_postings_udf
 
     da, db = str(tmp_path / "a"), str(tmp_path / "b")
     a, b = _split(fixture_corpus)
     build_index(spark, a, da)
     build_index(spark, b, db)
-    posts = _multi(spark, [da, db], "postings")
+    posts = read_segments(spark, [da, db], "postings")
     grouped = (
         posts.repartition(8, "bucket", "chunk")
         .groupBy("bucket", "term", "chunk")
