@@ -253,6 +253,8 @@ def _index_content_hash(spark, index_dir: str) -> str:
     encoded block bytes."""
     from pyspark.sql import functions as F
 
+    from spark_search.build import read_segments
+
     def rowsum(df, *cols):
         r = df.agg(
             F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
@@ -260,7 +262,7 @@ def _index_content_hash(spark, index_dir: str) -> str:
         ).collect()[0]
         return f"{r['n']}:{r['h']}"
 
-    posts = spark.read.parquet(os.path.join(index_dir, "postings"))
+    posts = read_segments(spark, [index_dir], "postings")
     pb = posts.select(
         "term", "chunk", "n_docs", "sum_tf", "max_tf",
         F.explode("blocks").alias("b"),
@@ -270,9 +272,9 @@ def _index_content_hash(spark, index_dir: str) -> str:
         F.col("b.max_tf").alias("bmax"), F.col("b.deltas"), F.col("b.tfs"),
     )
     h1 = rowsum(pb, *pb.columns)
-    terms = spark.read.parquet(os.path.join(index_dir, "terms"))
+    terms = read_segments(spark, [index_dir], "terms")
     h2 = rowsum(terms, "term", "df", "cf", "max_tf")
-    lens = spark.read.parquet(os.path.join(index_dir, "doclens"))
+    lens = read_segments(spark, [index_dir], "doclens")
     h3 = rowsum(lens, "chunk", "dls")
     return f"{h1}|{h2}|{h3}"
 

@@ -27,11 +27,12 @@ completed stages (per-bucket-group granularity for the heavy postings
 stage). Output dirs are written once per stage and become immutable.
 
 Layout ownership: this module defines the on-disk layout (``IndexPaths``,
-the schemas, ``bucket_col``) and holds its only writers
-(``write_postings``, ``write_terms``, ``write_doclens``, ``write_docs``)
-and its segment-union reader (``read_segments``). merge.py and
-maintain.py publish their sub-dirs through these, so a merged or
-rewritten index has the layout of a fresh build.
+one schema per sub-dir and for a tombstone dir, ``bucket_col``) and holds
+its only writers (``write_postings``, ``write_terms``, ``write_doclens``,
+``write_docs``, ``write_tombstones``) and readers (``read_segments``,
+``read_tombstones``). merge.py, maintain.py and query.py write and read
+their sub-dirs through these, so a merged or rewritten index has the
+layout of a fresh build, and no read pays a schema-inference job.
 """
 
 import contextlib
@@ -46,6 +47,15 @@ from typing import Callable, Dict, List, Optional, Tuple
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from . import pipeline as P
 from .checkpoint import (
@@ -87,10 +97,20 @@ def _postings_file_counts(postings_dir: str) -> dict:
             )
     return out
 
-BLOCKS_SCHEMA = (
-    "array<struct<first_doc: long, last_doc: long, n: int, max_tf: int,"
-    " deltas: binary, tfs: binary>>"
+
+def _struct(*fields) -> StructType:
+    """A nullable-field struct: parquet reads every column as nullable."""
+    return StructType([StructField(n, t, True) for n, t in fields])
+
+
+_BLOCKS_TYPE = ArrayType(
+    _struct(
+        ("first_doc", LongType()), ("last_doc", LongType()),
+        ("n", IntegerType()), ("max_tf", IntegerType()),
+        ("deltas", BinaryType()), ("tfs", BinaryType()),
+    )
 )
+BLOCKS_SCHEMA = _BLOCKS_TYPE.simpleString()
 
 # per-(term, doc) varint-encoded token positions, present on postings
 # rows only when the index was built with positions=True. doc_id is
@@ -98,12 +118,59 @@ BLOCKS_SCHEMA = (
 # the blocks column), so maintenance rewrites may leave stale entries
 # for removed (term, doc) pairs — the phrase query derives candidates
 # from blocks and semi-joins plists on them, so stale entries are inert
-PLISTS_SCHEMA = "array<struct<doc_id: long, poss: binary>>"
+_PLISTS_TYPE = ArrayType(_struct(("doc_id", LongType()), ("poss", BinaryType())))
+PLISTS_SCHEMA = _PLISTS_TYPE.simpleString()
 
 
-# postings row columns, in file order (``plists`` follows on positional
-# indexes)
-POSTINGS_COLS = ["bucket", "term", "chunk", "n_docs", "sum_tf", "max_tf", "blocks"]
+# The schema of every index sub-dir and of a tombstone dir, as a read
+# sees it (the postings/ partition column ``bucket`` last). Each writer
+# below selects exactly these columns with these types, and every read
+# passes the schema instead of inferring it, which would cost a Spark
+# job per read.
+TERMS_SCHEMA = _struct(
+    ("term", StringType()), ("df", LongType()), ("cf", LongType()),
+    ("max_tf", IntegerType()), ("bucket", IntegerType()),
+)
+_POSTINGS_FIELDS = [
+    ("term", StringType()), ("chunk", LongType()), ("n_docs", IntegerType()),
+    ("sum_tf", LongType()), ("max_tf", IntegerType()), ("blocks", _BLOCKS_TYPE),
+]
+POSTINGS_SCHEMA = _struct(*_POSTINGS_FIELDS, ("bucket", IntegerType()))
+POSITIONAL_POSTINGS_SCHEMA = _struct(
+    *_POSTINGS_FIELDS, ("plists", _PLISTS_TYPE), ("bucket", IntegerType())
+)
+DOCLENS_SCHEMA = _struct(("chunk", LongType()), ("dls", BinaryType()))
+DOCS_SCHEMA = _struct(
+    ("doc_id", LongType()), ("repo", StringType()), ("path", StringType()),
+    ("commit", StringType()), ("lang", StringType()),
+    ("content_sha256", StringType()), ("dl", IntegerType()),
+)
+TOMBSTONES_SCHEMA = _struct(("doc_id", LongType()))
+
+
+def sub_schema(sub: str, positions: bool = False) -> StructType:
+    """The schema of index sub-dir ``sub``; ``positions`` selects the
+    postings/ schema with the ``plists`` column."""
+    if sub == "postings":
+        return POSITIONAL_POSTINGS_SCHEMA if positions else POSTINGS_SCHEMA
+    return {
+        "terms": TERMS_SCHEMA, "doclens": DOCLENS_SCHEMA, "docs": DOCS_SCHEMA,
+    }[sub]
+
+
+def conform(rows: DataFrame, schema: StructType) -> DataFrame:
+    """``rows`` as exactly ``schema``'s columns and types: what a writer
+    stores, so a read with the schema sees what was written. A column
+    already of its type (nullability aside) is selected as it is."""
+    have = {f.name: f.dataType.simpleString() for f in rows.schema.fields}
+    return rows.select(
+        *[
+            F.col(f.name)
+            if have.get(f.name) == f.dataType.simpleString()
+            else F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
+    )
 
 
 def block_structs(blocks) -> List[dict]:
@@ -235,11 +302,35 @@ class IndexPaths:
         return os.path.join(self.root, "terms")
 
 
-def read_segments(spark: SparkSession, roots: List[str], sub: str) -> DataFrame:
-    """``sub`` of every segment root, unioned by column name. Partition
-    discovery (the bucket=N dirs) runs per root, never across roots."""
-    dfs = [spark.read.parquet(os.path.join(r, sub)) for r in roots]
+def read_segments(
+    spark: SparkSession, roots: List[str], sub: str, positions: bool = False
+) -> DataFrame:
+    """``sub`` of every segment root, read with its known schema
+    (``sub_schema``) and unioned by column name. Partition discovery
+    (the bucket=N dirs) runs per root, never across roots."""
+    schema = sub_schema(sub, positions)
+    dfs = [spark.read.schema(schema).parquet(os.path.join(r, sub)) for r in roots]
     return functools.reduce(DataFrame.unionByName, dfs)
+
+
+def read_tombstones(spark: SparkSession, deletes_dir: str) -> DataFrame:
+    """A tombstone dir's (doc_id) rows, read with its known schema."""
+    return spark.read.schema(TOMBSTONES_SCHEMA).parquet(deletes_dir)
+
+
+def write_tombstones(dels: DataFrame, out: str, shards: int) -> None:
+    """A tombstone dir from (doc_id) rows: one file, or ``shards``
+    doc_id ranges, each sorted."""
+    dels = conform(dels, TOMBSTONES_SCHEMA)
+    if shards == 1:
+        dels.repartition(1).write.mode("overwrite").parquet(out)
+    else:
+        (
+            dels.repartitionByRange(shards, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
 
 
 # broadcast gate for the per-chunk tombstone frame (~8 B per id)
@@ -283,9 +374,9 @@ def write_postings(rows: DataFrame, out: str, mode: str = "overwrite") -> None:
     (row-group pruning depends on it) and keeps per-bucket file fan-out
     at one file per task that holds the bucket instead of one per
     (task, write batch)."""
-    cols = POSTINGS_COLS + (["plists"] if "plists" in rows.columns else [])
+    schema = sub_schema("postings", "plists" in rows.columns)
     (
-        rows.select(*cols)
+        conform(rows, schema)
         .sortWithinPartitions("bucket", "term", "chunk")
         .write.mode(mode)
         # block payloads are already delta+varint entropy-coded; a
@@ -301,7 +392,7 @@ def write_doclens(chunks: DataFrame, out: str) -> None:
     """doclens/ from (chunk, dls) rows. dls payloads are dense int32
     arrays; snappy on them costs more CPU than the bytes it saves at
     read time."""
-    chunks.write.mode("overwrite").option(
+    conform(chunks, DOCLENS_SCHEMA).write.mode("overwrite").option(
         "compression", "uncompressed"
     ).parquet(out)
 
@@ -312,7 +403,8 @@ def write_docs(docs: DataFrame, out: str, parts: int) -> Tuple[int, int]:
     rather than by a read-back job."""
     obs = Observation("docs_write_stats")
     (
-        docs.repartitionByRange(parts, "doc_id")
+        conform(docs, DOCS_SCHEMA)
+        .repartitionByRange(parts, "doc_id")
         .observe(obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
@@ -328,7 +420,7 @@ def write_terms(
     """terms/ (df, cf, max_tf, bucket per term) derived from the written
     postings/ under ``paths``; returns the vocabulary size. Column
     pruning keeps the blocks out of the scan."""
-    terms = spark.read.parquet(paths.postings).groupBy("term").agg(
+    terms = read_segments(spark, [paths.root], "postings").groupBy("term").agg(
         F.sum("n_docs").alias("df"),
         F.sum("sum_tf").alias("cf"),
         F.max("max_tf").alias("max_tf"),
@@ -344,7 +436,8 @@ def write_terms(
     # noisy machine)
     obs = Observation("terms_stats")
     (
-        terms.repartitionByRange(max(1, min(num_buckets, par)), "term")
+        conform(terms, TERMS_SCHEMA)
+        .repartitionByRange(max(1, min(num_buckets, par)), "term")
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .sortWithinPartitions("term")
         .write.mode("overwrite")
@@ -359,6 +452,28 @@ def build_job_group(index_dir: str) -> str:
     cancelJobGroupAndFutureJobs poisons a group id for the session, so
     a rebuild of the same path must not reuse the cancelled id)."""
     return f"spark_search.build:{os.path.abspath(index_dir)}"
+
+
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
+
+
+@contextlib.contextmanager
+def job_group(spark: SparkSession, group: str, description: str):
+    """Run the block's Spark jobs (from this thread) under the
+    cancellable job group ``group``, then give the thread back the job
+    group it had before: a build nested in a caller's group (an upsert
+    inside a ``search_group``) must leave the caller's later jobs in
+    the caller's group, not in none."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+    sc.setJobGroup(group, description, interruptOnCancel=True)
+    try:
+        yield group
+    finally:
+        for k, v in zip(_JOB_GROUP_PROPS, saved):
+            sc.setLocalProperty(k, v)
 
 
 # abspath(index_dir) -> the nonce'd group id of the build currently
@@ -497,27 +612,24 @@ def build_index(
     key = os.path.abspath(index_dir)
     group = f"{build_job_group(index_dir)}#{uuid.uuid4().hex[:8]}"
     _ACTIVE_BUILD_GROUPS[key] = group
-    spark.sparkContext.setJobGroup(
-        group, f"spark_search build -> {index_dir}", interruptOnCancel=True
-    )
     reporter = (
         ProgressReporter(spark, group, progress)
         if progress is not None
         else contextlib.nullcontext()
     )
     try:
-        with reporter:
-            return _build_stages(
-                spark, corpus, paths, index_dir, num_buckets, chunk_span,
-                block_size, bucket_groups, tokenizer, resume,
-                doc_id_partitions, postings_exchange, max_files_per_bucket,
-                plan_parallelism, positions,
-            )
-    finally:
-        # ALWAYS detach the job group — a stage failure must not leave
-        # later unrelated jobs on this thread attributable to (and
+        # the group is left even when a stage fails, so later unrelated
+        # jobs on this thread are never attributable to (and
         # cancellable via) cancel_build
-        spark.sparkContext.setJobGroup("", "")
+        with job_group(spark, group, f"spark_search build -> {index_dir}"):
+            with reporter:
+                return _build_stages(
+                    spark, corpus, paths, index_dir, num_buckets, chunk_span,
+                    block_size, bucket_groups, tokenizer, resume,
+                    doc_id_partitions, postings_exchange,
+                    max_files_per_bucket, plan_parallelism, positions,
+                )
+    finally:
         if _ACTIVE_BUILD_GROUPS.get(key) == group:
             del _ACTIVE_BUILD_GROUPS[key]
 
@@ -610,8 +722,8 @@ def _build_stages(
     # a holder and the MAIN thread records the stage after join.
     def _docs_stage_body(base_df) -> dict:
         t0 = time.time()
-        docs = with_doc_length(with_content_hash(base_df), tokenizer).select(
-            "doc_id", "repo", "path", "commit", "lang", "content_sha256", "dl"
+        docs = conform(
+            with_doc_length(with_content_hash(base_df), tokenizer), DOCS_SCHEMA
         )
         # 2x parallelism: multiple waves per level even when the plan
         # width equals the big level's core count (a single wave has
@@ -647,7 +759,7 @@ def _build_stages(
         row = obs.get
         n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
         total_dl = int(row["tot"] or 0)
-        docs_on_disk = spark.read.parquet(paths.docs)
+        docs_on_disk = read_segments(spark, [paths.root], "docs")
 
         # doclens: dense per-chunk int32 dl arrays. The mapping is
         # 0-based (chunk = doc_id // span, position = doc_id % span) so
@@ -728,7 +840,7 @@ def _build_stages(
         if base is None:
             # re-derive ids by joining the persisted docs (resume-safe: ids
             # come from disk, not from a recomputed shuffle)
-            docs_ids = spark.read.parquet(paths.docs).select(
+            docs_ids = read_segments(spark, [paths.root], "docs").select(
                 "doc_id", "repo", "path", "commit"
             )
             base = corpus.join(docs_ids, ["repo", "path", "commit"])
@@ -891,7 +1003,9 @@ def _build_stages(
                 )
                 tmp_dir = paths.postings + ".compact.tmp"
                 write_postings(
-                    spark.read.parquet(paths.postings).repartition(
+                    read_segments(
+                        spark, [paths.root], "postings", positions
+                    ).repartition(
                         num_buckets * salt_mod,
                         "bucket",
                         F.pmod(F.col("chunk"), F.lit(salt_mod)),

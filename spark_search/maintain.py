@@ -32,10 +32,9 @@ Tests pin both properties (tests/test_maintain.py).
 Every operation writes a NEW index directory (copy-on-write at the
 directory level, data shared by reference) and commits it atomically
 via the manifest rename — readers of the old index are never disturbed.
-This module writes only the tombstone list itself: the postings/,
-terms/, docs/ and doclens/ sub-dirs that ``compact`` and
-``delete_term_postings`` publish go through build.py's sub-dir writers,
-so a rewritten index has the layout of a fresh build.
+Every sub-dir this module reads or publishes — the tombstone list
+included — goes through build.py's readers and writers, so a rewritten
+index has the layout of a fresh build.
 """
 
 from __future__ import annotations
@@ -51,16 +50,18 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .build import (
     BLOCKS_SCHEMA,
     PLISTS_SCHEMA,
-    POSTINGS_COLS,
     IndexPaths,
     block_structs,
     build_index,
     read_segments,
+    read_tombstones,
+    sub_schema,
     tombstones_by_chunk,
     write_docs,
     write_doclens,
     write_postings,
     write_terms,
+    write_tombstones,
 )
 from .checkpoint import BuildManifest
 from .codec import decode_block, encode_blocks
@@ -77,23 +78,6 @@ SEGMENTS_SUB = "segments"
 # (it reads the directory; the per-chunk tombstone frame gates its
 # broadcast on build._DELS_BROADCAST_CAP).
 TOMBSTONE_SHARD_DOCS = 1 << 22  # ~4M ids ≈ 32 MB of int64
-
-
-def _write_tombstones(all_dels: DataFrame, dels_out: str, n_total: int) -> int:
-    """Write the merged tombstone list, sharding by doc_id range once
-    it outgrows a single task's comfortable share. Returns the shard
-    count (recorded in the manifest for observability)."""
-    shards = max(1, -(-n_total // TOMBSTONE_SHARD_DOCS))
-    if shards == 1:
-        all_dels.repartition(1).write.mode("overwrite").parquet(dels_out)
-    else:
-        (
-            all_dels.repartitionByRange(shards, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(dels_out)
-        )
-    return shards
 
 
 # ------------------------------------------------------------- helpers
@@ -200,7 +184,7 @@ def _rewrite_postings(
         return pd.Series(out)
 
     has_plists = "plists" in posts.columns
-    cols = POSTINGS_COLS + (["plists"] if has_plists else [])
+    cols = sub_schema("postings", has_plists).fieldNames()
     rw = posts.where(F.col(drop).isNotNull()).withColumn(
         "_rw", rewrite(F.col("blocks"), F.col(drop))
     )
@@ -308,7 +292,7 @@ def _tombstone(
     write the merged tombstone set under ``out_dir``. Returns (n newly
     tombstoned, their Σ dl, the manifest config entries, shard count)."""
     cfg = m.config
-    old = spark.read.parquet(cfg["deletes_dir"]) if cfg.get("deletes_dir") else None
+    old = read_tombstones(spark, cfg["deletes_dir"]) if cfg.get("deletes_dir") else None
     live = read_segments(spark, segs, "docs").select("doc_id", "repo", "path")
     if old is not None:
         live = live.join(old, "doc_id", "left_anti")
@@ -322,10 +306,10 @@ def _tombstone(
     if old is not None and "n_tombstones" not in cfg:
         n_old = old.count()
     dels_out = os.path.join(os.path.abspath(out_dir), DELETES_SUB)
-    shards = _write_tombstones(
-        new if old is None else old.union(new).distinct(),
-        dels_out,
-        n_old + n_new,
+    # the shard count is recorded in the manifest for observability
+    shards = max(1, -(-(n_old + n_new) // TOMBSTONE_SHARD_DOCS))
+    write_tombstones(
+        new if old is None else old.union(new).distinct(), dels_out, shards
     )
     entries = {"deletes_dir": dels_out, "n_tombstones": n_old + n_new}
     return n_new, removed_dl, entries, shards
@@ -533,7 +517,7 @@ def delete_term_postings(
         # time — removing them here would subtract the tf a second time
         # and skew avgdl for every later score. compact reclaims them.
         pairs = pairs.join(
-            spark.read.parquet(old_dels_dir), "doc_id", "left_anti"
+            read_tombstones(spark, old_dels_dir), "doc_id", "left_anti"
         )
     tdel = (
         pairs.withColumn("chunk", (F.col("doc_id") / span).cast("long"))
@@ -547,9 +531,9 @@ def delete_term_postings(
     # candidates, so a doc that no longer matches this term can never
     # surface its stale positions. compact() reclaims the bytes.
     rw, new_posts = _rewrite_postings(
-        read_segments(spark, segs, "postings").join(
-            F.broadcast(tdel), ["term", "chunk"], "left"
-        ),
+        read_segments(
+            spark, segs, "postings", bool(cfg.get("positions"))
+        ).join(F.broadcast(tdel), ["term", "chunk"], "left"),
         "_tdel", int(cfg.get("block_size", 128)), filter_plists=False,
     )
 
@@ -655,11 +639,11 @@ def compact(
     t0 = time.time()
     out_paths = IndexPaths(os.path.abspath(out_dir))
 
-    posts = read_segments(spark, segs, "postings")
+    posts = read_segments(spark, segs, "postings", bool(cfg.get("positions")))
     docs = read_segments(spark, segs, "docs")
     doclens = read_segments(spark, segs, "doclens")
     if cfg.get("deletes_dir"):
-        dels = spark.read.parquet(cfg["deletes_dir"])
+        dels = read_tombstones(spark, cfg["deletes_dir"])
         by_chunk = tombstones_by_chunk(dels, span, cfg.get("n_tombstones"))
         # positional indexes: compact is where stale plists bytes
         # (tombstoned docs) are reclaimed

@@ -363,7 +363,7 @@ def merge_indexes(
     # --------------------------------------------------------- postings
     t1 = time.time()
     if not (resume and manifest.stage_done("merge-postings", fingerprint)):
-        posts = read_segments(spark, src_dirs, "postings")
+        posts = read_segments(spark, src_dirs, "postings", has_plists)
         src_struct = ["n_docs", "sum_tf", "max_tf", "blocks"] + (
             ["plists"] if has_plists else []
         )

@@ -55,10 +55,13 @@ chunk-grouped shuffle of already-filtered postings rows.
 from __future__ import annotations
 
 import bisect
+import functools
+import hashlib
+import json
 import math
 import os
 import threading
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from contextlib import contextmanager
 from typing import Dict, Iterable, List, NamedTuple, Optional, Tuple
 
@@ -69,12 +72,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import kernel
 from .build import (
     IndexPaths,
-    bucket_col,
     bucket_of,
+    job_group,
     read_segments,
+    read_tombstones,
     tombstones_by_chunk,
 )
-from .checkpoint import BuildManifest
+from .checkpoint import MANIFEST, BuildManifest
 from .codec import decode_block, decode_blocks, decode_positions
 from .frames import RESULT_FIELDS, literal_frame
 from .pipeline import (
@@ -107,34 +111,154 @@ _PHRASE_LOCAL_MAX_POSTINGS = 65_536
 # phrase's terms): ~4 M int32 positions ≈ tens of MB of Row overhead,
 # the same order of driver memory the _search_local gates allow
 _LOCAL_MAX_POSITIONS = 4_000_000
-# driver-side caches (all hard-gated so a 10^12-file index never tries
-# to pull cluster-scale state onto the driver):
-#   * term dictionary — the full dictionary, or its df ≥ T head. The
-#     full dictionary is cached iff vocab ≤ cap (~25 MB); a warm
-#     exact/prefix lookup then costs ZERO Spark jobs instead of one
-#     terms scan per query. Past the cap the reader caches the terms/
-#     rows with df ≥ T, T = max(2, ⌈total_dl / cap⌉): Σ df ≤ total_dl,
+# Driver-side data a reader loads — each segment's term dictionary (or
+# its df ≥ T head), each segment's doclens arrays and a snapshot's
+# tombstone arrays — lives in ONE process-wide cache, ``_SEGMENT_CACHE``,
+# shared by every reader. A segment's entries are keyed on (its absolute
+# path, the SHA-256 of its manifest.json bytes), a tombstone dir's on the
+# snapshot's manifest the same way, so a reader of a new snapshot loads
+# only the segments (and tombstones) no earlier reader loaded, and a
+# rebuild into the same path — a new manifest — never reads old entries.
+# The cache holds numpy arrays and dicts, never DataFrames, and is an LRU
+# bounded by ``_SEGMENT_CACHE_BYTES`` of estimated driver memory. What
+# may load is still hard-gated, so a 10^12-file index never tries to
+# pull cluster-scale state onto the driver:
+#   * term dictionary — every segment's, iff Σ n_terms over the
+#     segments (their manifests record it) ≤ cap (~25 MB at the cap); a
+#     warm exact/prefix lookup then costs ZERO Spark jobs instead of one
+#     terms scan per query. Past the cap each segment's terms/ rows with
+#     df ≥ T load instead, T = max(2, ⌈total_dl / cap⌉): Σ df ≤ total_dl,
 #     so at most cap rows qualify (a limit(cap+1) guard catches the
-#     tombstone-inflated case and caches nothing). A term without a
-#     head row in a segment has df ≤ T−1 there, so the head bounds an
+#     tombstone-inflated case and loads nothing). A term without a head
+#     row in a segment has df ≤ T−1 there, so the heads bound an
 #     exact/OR/AND query's Σ df with no terms/ job, and rare terms are
-#     routed to their bucket by ``build.bucket_of``. The head path
-#     stops applying once (T−1) × the number of rare query terms
-#     exceeds the 2^21 local gate: roughly total_dl > 1.1·10^11 for
-#     5-term queries (T > 419,431, times 2^18).
-#   * doclens — per-chunk int32 arrays, LRU-bounded (~512 × span×4 B).
+#     routed to their bucket by ``build.bucket_of``. The head path stops
+#     applying once (T−1) × the number of rare query terms exceeds the
+#     2^21 local gate: roughly total_dl > 1.1·10^11 for 5-term queries
+#     (T > 419,431, times 2^18).
+#   * doclens — per-(segment, chunk) float64 arrays, loaded for the
+#     chunks a query touches.
 #   * deletes — chunk → sorted doc_id arrays iff |deletes| ≤ cap.
-# Caches never go stale: maintain/compact/streaming always publish NEW
-# index directories (copy-on-write), an open reader's files are immutable.
+# Entries never go stale: maintain/compact/streaming always publish NEW
+# index directories (copy-on-write), and an open reader's files are
+# immutable.
 _DICT_CACHE_CAP = 1 << 18
 _DELS_CACHE_CAP = 2_000_000
-_DOCLENS_CACHE_CHUNKS = 512
+_SEGMENT_CACHE_BYTES = 256 << 20
+# the most doclens chunks a driver-local phrase finish reads
+_PHRASE_LOCAL_MAX_CHUNKS = 512
 
 _DOCS_TERMS_FIELDS = [("doc_id", "long"), ("term", "string"), ("tf", "int")]
 _META_FIELDS = [("term", "string"), ("idf", "double")]
 
 _LOCAL_SCHEMA = "doc_id long, score double"
 _MULTI_LOCAL_SCHEMA = "query_id string, " + _LOCAL_SCHEMA
+
+
+_MISS = object()
+
+
+class _SegmentCache:
+    """The process-wide LRU of driver-side index data (see above),
+    bounded by the estimated bytes of its entries. Keys are tuples
+    ``(kind, owner, ...)`` whose owner is (absolute path, manifest
+    SHA-256); an owner without a manifest hash is never stored. Lookups
+    and stores take a short lock; loads run one at a time under
+    ``load_lock``, so concurrent readers never load one entry twice.
+    ``loads`` counts the entries stored per (kind, owner path)."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self.load_lock = threading.RLock()
+        self._lock = threading.Lock()
+        self._entries: "OrderedDict[tuple, Tuple[object, int]]" = OrderedDict()
+        self._bytes = 0
+        self.loads: "Counter[Tuple[str, str]]" = Counter()
+
+    def get(self, key: tuple):
+        """The entry's value (most recently used now), or ``_MISS``."""
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is None:
+                return _MISS
+            self._entries.move_to_end(key)
+            return hit[0]
+
+    def put(self, key: tuple, value, nbytes: int) -> None:
+        """Store a loaded entry, then evict least recently used entries
+        until the bound holds."""
+        with self._lock:
+            self.loads[(key[0], key[1][0])] += 1
+            if key[1][1] is None:
+                return
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._bytes -= old[1]
+            self._entries[key] = (value, nbytes)
+            self._bytes += nbytes
+            while self._bytes > self.max_bytes and self._entries:
+                self._bytes -= self._entries.popitem(last=False)[1][1]
+
+    def fetch(self, keys: List[tuple], load) -> Dict[tuple, object]:
+        """{key: value} for ``keys``: the cached ones, and the rest from
+        ``load(missing keys)`` -> {key: (value, nbytes)}."""
+        out = {k: v for k in keys if (v := self.get(k)) is not _MISS}
+        if len(out) < len(keys):
+            with self.load_lock:
+                out.update(
+                    {k: v for k in keys if k not in out
+                     and (v := self.get(k)) is not _MISS}
+                )
+                missing = [k for k in keys if k not in out]
+                if missing:
+                    for k, (v, n) in load(missing).items():
+                        self.put(k, v, n)
+                        out[k] = v
+        return out
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+            self._bytes = 0
+            self.loads.clear()
+
+
+_SEGMENT_CACHE = _SegmentCache(_SEGMENT_CACHE_BYTES)
+
+# estimated driver bytes per cached dictionary / head entry (dict slot,
+# term string, value tuple, its place in the sorted term list)
+_DICT_ENTRY_BYTES = 250
+_HEAD_ENTRY_BYTES = 150
+_ARRAY_ENTRY_BYTES = 100  # per cached numpy array, beyond its data
+
+
+def _owner(root: str) -> Tuple[Tuple[str, Optional[str]], dict]:
+    """(absolute path, SHA-256 of its manifest.json bytes) — the cache
+    owner key of a segment or snapshot — and the parsed manifest; the
+    hash is None and the manifest {} when the file cannot be read."""
+    root = os.path.abspath(root)
+    try:
+        with open(os.path.join(root, MANIFEST), "rb") as f:
+            raw = f.read()
+    except OSError:
+        return (root, None), {}
+    return (root, hashlib.sha256(raw).hexdigest()), json.loads(raw)
+
+
+class _SegDict:
+    """One segment's term dictionary: term -> (df, max_tf, bucket), and
+    its terms sorted, computed on first use (prefix lookups only)."""
+
+    __slots__ = ("terms", "_sorted")
+
+    def __init__(self, terms: Dict[str, Tuple[int, int, int]]):
+        self.terms = terms
+        self._sorted: Optional[List[str]] = None
+
+    def sorted_terms(self) -> List[str]:
+        if self._sorted is None:
+            self._sorted = sorted(self.terms)
+        return self._sorted
 
 
 def search_job_group(tag: str) -> str:
@@ -162,18 +286,12 @@ def search_group(spark: SparkSession, tag: str):
             rows = reader.search(terms, mode, k=10).collect()
 
     Job groups are thread-local: open the context in the thread that
-    runs the search.
+    runs the search. On exit the thread's previous job group is back.
     """
-    sc = spark.sparkContext
-    sc.setJobGroup(
-        search_job_group(tag),
-        f"spark_search search {tag}",
-        interruptOnCancel=True,
-    )
-    try:
-        yield search_job_group(tag)
-    finally:
-        sc.setJobGroup("", "")
+    with job_group(
+        spark, search_job_group(tag), f"spark_search search {tag}"
+    ) as group:
+        yield group
 
 
 def cancel_search(spark: SparkSession, tag: str) -> None:
@@ -227,18 +345,18 @@ def _idf(n_docs: float, df: float) -> float:
 
 
 def _merge_segments(rows) -> Dict[str, List[int]]:
-    """term -> [df, max_tf, bucket] from per-segment terms/ rows: df
-    sums and max_tf maxes across the segments a term appears in. df
-    counts tombstoned docs until compact() — the standard Lucene-style
-    staleness, exact again after segment merge."""
+    """term -> [df, max_tf, bucket] from per-segment (term, df, max_tf,
+    bucket) rows: df sums and max_tf maxes across the segments a term
+    appears in. df counts tombstoned docs until compact() — the
+    standard Lucene-style staleness, exact again after segment merge."""
     agg: Dict[str, List[int]] = {}
-    for r in rows:
-        cur = agg.get(r["term"])
+    for term, df, max_tf, bucket in rows:
+        cur = agg.get(term)
         if cur is None:
-            agg[r["term"]] = [int(r["df"]), int(r["max_tf"]), int(r["bucket"])]
+            agg[term] = [int(df), int(max_tf), int(bucket)]
         else:
-            cur[0] += int(r["df"])
-            cur[1] = max(cur[1], int(r["max_tf"]))
+            cur[0] += int(df)
+            cur[1] = max(cur[1], int(max_tf))
     return agg
 
 
@@ -360,6 +478,12 @@ class IndexReader:
     "manifest present" equivalent to "index complete", so refusing is
     the snapshot-isolation-correct translation of the reference's
     recovery intent (see README).
+
+    Opening runs no Spark job: sub-dirs are read with their known
+    schemas (``build.read_segments``), and the driver-side data queries
+    need comes from ``_SEGMENT_CACHE``, shared by every reader, so a
+    reader of a snapshot that shares segments with an earlier one loads
+    only what changed — Lucene's ``DirectoryReader.openIfChanged`` idea.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -390,36 +514,36 @@ class IndexReader:
         # True iff every segment's postings rows carry the plists
         # column (build positions=True; upsert/compact inherit the flag)
         self.has_positions = bool(cfg.get("positions", False))
-        # lazy driver-side caches (see the _*_CACHE_* gates above).
-        # The RLock serializes cache population/LRU mutation so ONE
-        # reader can serve concurrent searches from multiple driver
-        # threads (LiveResults.refresh fans out over a thread pool;
-        # Spark job submission itself is already thread-safe).
-        self._cache_lock = threading.RLock()
+        # cache owners (see _SEGMENT_CACHE): each segment's, and the
+        # snapshot's for its tombstones; each segment's vocabulary size
+        # from its own manifest gates the dictionary load
+        owners = [_owner(p) for p in self.segments]
+        self._seg_owners = [o for o, _ in owners]
+        self._seg_n_terms = [m.get("stats", {}).get("n_terms") for _, m in owners]
+        self._snap_owner = _owner(index_dir)[0]
+        # this reader's lazily built DataFrames over the snapshot (the
+        # lock lets one reader serve concurrent searches from several
+        # driver threads, as LiveResults.refresh does)
+        self._df_lock = threading.RLock()
         self._df_cache: Dict[str, DataFrame] = {}
-        self._dict: Optional[Dict[str, List[int]]] = None
-        self._dict_terms: Optional[List[str]] = None
-        self._dict_state = 0  # 0 unknown, 1 cached, -1 too big / old layout
-        # past the cap: term -> (Σ df of its head rows, head row count)
-        self._head: Optional[Dict[str, Tuple[int, int]]] = None
-        self._head_min_df = 0
-        self._head_state = 0  # 0 unknown, 1 cached, -1 unavailable
-        self._doclens_cache: "OrderedDict[int, np.ndarray]" = OrderedDict()
-        self._dels_arrays_state = 0  # 0 unknown, 1 cached, -1 too big
-        self._dels_arrays: Dict[int, np.ndarray] = {}
 
     # ------------------------------------------------------------ pieces
 
+    def _memo(self, name: str, make) -> DataFrame:
+        # the files of an open snapshot are immutable, so each frame
+        # over them is built (its files listed) once per reader
+        with self._df_lock:
+            if name not in self._df_cache:
+                self._df_cache[name] = make()
+            return self._df_cache[name]
+
     def _multi(self, sub: str) -> DataFrame:
-        # ``build.read_segments``, memoized: the files of an open
-        # snapshot are immutable, and re-listing + re-inferring the
-        # schema per query is pure per-query overhead.
-        with self._cache_lock:
-            if sub not in self._df_cache:
-                self._df_cache[sub] = read_segments(
-                    self.spark, self.segments, sub
-                )
-            return self._df_cache[sub]
+        return self._memo(
+            sub,
+            lambda: read_segments(
+                self.spark, self.segments, sub, self.has_positions
+            ),
+        )
 
     def terms_df(self) -> DataFrame:
         return self._multi("terms")
@@ -443,16 +567,12 @@ class IndexReader:
     def deletes_df(self) -> Optional[DataFrame]:
         """(doc_id) of tombstoned docs, or None. Deleted docs are
         filtered at query time (Lucene-style); stats are corrected at
-        delete time, df per term only at compact time. Memoized like
-        ``_multi``: each read infers the schema, which costs a job."""
+        delete time, df per term only at compact time."""
         if not self.deletes_dir:
             return None
-        with self._cache_lock:
-            if "deletes" not in self._df_cache:
-                self._df_cache["deletes"] = self.spark.read.parquet(
-                    self.deletes_dir
-                )
-            return self._df_cache["deletes"]
+        return self._memo(
+            "deletes", lambda: read_tombstones(self.spark, self.deletes_dir)
+        )
 
     def _dels_by_chunk(self) -> Optional[DataFrame]:
         dels = self.deletes_df()
@@ -538,111 +658,145 @@ class IndexReader:
 
     # --------------------------------------------- driver-side caches
 
-    def _ensure_dict(self) -> Optional[Dict[str, List[int]]]:
-        """Load the term dictionary driver-side iff it fits the cache
-        gate. One job on first use; every later exact/prefix expansion
-        costs zero jobs. Returns None when the vocabulary exceeds the
-        cap (corpus-scale indexes keep the terms/ lookup; exact/OR/AND
-        queries may skip it through the head, ``_head_bound``)."""
-        with self._cache_lock:
-            return self._ensure_dict_locked()
+    def _tagged(self, sub: str, idx: List[int]) -> DataFrame:
+        """``sub`` of the segments at ``idx``, each row tagged with its
+        segment's index (``_seg``): one job loads many segments."""
+        return functools.reduce(
+            DataFrame.unionByName,
+            [
+                read_segments(
+                    self.spark, [self.segments[i]], sub, self.has_positions
+                ).withColumn("_seg", F.lit(i))
+                for i in idx
+            ],
+        )
 
-    def _ensure_dict_locked(self) -> Optional[Dict[str, List[int]]]:
-        if self._dict_state == 0:
-            t = self.terms_df()
-            # manifest-recorded vocab size (sum across segments when
-            # known) gates the cache WITHOUT a probe job; unknown sizes
-            # (pre-v3 manifests) use a limit probe instead.
-            n_terms = self.manifest.stats.get("n_terms")
-            if "bucket" not in t.columns:  # pre-v2 layout: stay distributed
-                self._dict_state = -1
-            elif n_terms is not None and int(n_terms) > _DICT_CACHE_CAP:
-                self._dict_state = -1
-            else:
-                sel = t.select("term", "df", "max_tf", "bucket")
-                if n_terms is None:
-                    rows = sel.limit(_DICT_CACHE_CAP + 1).collect()
-                else:
-                    rows = sel.collect()
-                if len(rows) > _DICT_CACHE_CAP:
-                    self._dict_state = -1
-                else:
-                    agg = _merge_segments(rows)
-                    self._dict = agg
-                    self._dict_terms = sorted(agg)
-                    self._dict_state = 1
-        return self._dict if self._dict_state == 1 else None
+    def _ensure_dict(self) -> Optional[List[_SegDict]]:
+        """Every segment's term dictionary iff the segments' summed
+        vocabulary fits the cache gate; one job loads the segments no
+        reader has loaded, after which an exact/prefix expansion costs
+        zero jobs. Returns None past the cap (corpus-scale indexes keep
+        the terms/ lookup; exact/OR/AND queries may skip it through the
+        heads, ``_head_bound``) or when a segment's manifest does not
+        record its vocabulary size."""
+        n_terms = self._seg_n_terms
+        if any(n is None for n in n_terms) or sum(n_terms) > _DICT_CACHE_CAP:
+            return None
+        keys = [("dict", o) for o in self._seg_owners]
+
+        def load(missing):
+            idx = [self._seg_owners.index(k[1]) for k in missing]
+            by_seg: Dict[int, Dict[str, Tuple[int, int, int]]] = {
+                i: {} for i in idx
+            }
+            for seg, term, df, max_tf, bucket in (
+                self._tagged("terms", idx)
+                .select("_seg", "term", "df", "max_tf", "bucket")
+                .collect()
+            ):
+                by_seg[seg][term] = (df, max_tf, bucket)
+            return {
+                k: (_SegDict(by_seg[i]), _DICT_ENTRY_BYTES * len(by_seg[i]))
+                for k, i in zip(missing, idx)
+            }
+
+        got = _SEGMENT_CACHE.fetch(keys, load)
+        return [got[k] for k in keys]
+
+    def _heads(self) -> Optional[Tuple[List[Dict[str, int]], int]]:
+        """(each segment's dictionary head: term -> df for its terms/
+        rows with df ≥ T, T) — see ``_DICT_CACHE_CAP``. None when the
+        full dictionary is cached, or when the heads hold more than cap
+        rows together (the snapshot remembers that, so it is probed
+        once)."""
+        total_dl = self.stats.total_dl
+        if (
+            self._ensure_dict() is not None
+            or total_dl < 0
+            or _DICT_CACHE_CAP <= 0
+        ):
+            return None
+        t_min = max(2, -(-total_dl // _DICT_CACHE_CAP))
+        over = ("head-over", self._snap_owner, t_min, _DICT_CACHE_CAP)
+        if _SEGMENT_CACHE.get(over) is not _MISS:
+            return None
+        keys = [("head", o, t_min, _DICT_CACHE_CAP) for o in self._seg_owners]
+
+        def load(missing):
+            idx = [self._seg_owners.index(k[1]) for k in missing]
+            rows = (
+                self._tagged("terms", idx)
+                .where(F.col("df") >= t_min)
+                .select("_seg", "term", "df")
+                .limit(_DICT_CACHE_CAP + 1)
+                .collect()
+            )
+            if len(rows) > _DICT_CACHE_CAP:
+                return {}
+            by_seg: Dict[int, Dict[str, int]] = {i: {} for i in idx}
+            for seg, term, df in rows:
+                by_seg[seg][term] = df
+            return {
+                k: (by_seg[i], _HEAD_ENTRY_BYTES * len(by_seg[i]))
+                for k, i in zip(missing, idx)
+            }
+
+        got = _SEGMENT_CACHE.fetch(keys, load)
+        if len(got) < len(keys) or sum(len(h) for h in got.values()) > (
+            _DICT_CACHE_CAP
+        ):
+            _SEGMENT_CACHE.put(over, True, _ARRAY_ENTRY_BYTES)
+            return None
+        return [got[k] for k in keys], t_min
 
     def _head_bound(self, qterms: List[str]) -> Optional[int]:
         """Upper bound on an exact/OR/AND query's Σ df from the cached
-        dictionary head (see ``_DICT_CACHE_CAP``): each term counts its
-        head df plus T−1 for every segment without a head row for it.
-        None when the full dictionary is cached or no head is. The head
-        (``term``, ``df`` of rows with df ≥ T) loads on first use."""
-        with self._cache_lock:
-            if self._head_state == 0:
-                self._head_state = -1
-                total_dl = self.stats.total_dl
-                if (
-                    self._ensure_dict_locked() is None
-                    and total_dl >= 0
-                    and _DICT_CACHE_CAP > 0
-                    and "bucket" in self.terms_df().columns
-                ):
-                    t_min = max(2, -(-total_dl // _DICT_CACHE_CAP))
-                    rows = (
-                        self.terms_df()
-                        .where(F.col("df") >= t_min)
-                        .select("term", "df")
-                        .limit(_DICT_CACHE_CAP + 1)
-                        .collect()
-                    )
-                    if len(rows) <= _DICT_CACHE_CAP:
-                        head: Dict[str, Tuple[int, int]] = {}
-                        for r in rows:
-                            df, n = head.get(r["term"], (0, 0))
-                            head[r["term"]] = (df + int(r["df"]), n + 1)
-                        self._head = head
-                        self._head_min_df = t_min
-                        self._head_state = 1
-            if self._head_state != 1:
-                return None
-            head, slack = self._head, self._head_min_df - 1
-        n_seg = len(self.segments)
-        bound = 0
-        for t in qterms:
-            df, n = head.get(t, (0, 0))
-            bound += df + slack * (n_seg - n)
-        return bound
+        dictionary heads (see ``_DICT_CACHE_CAP``): each term counts its
+        head df in every segment whose head holds it, and T−1 in every
+        other. None when the full dictionary is cached or no head is."""
+        got = self._heads()
+        if got is None:
+            return None
+        heads, t_min = got
+        return sum(h.get(t, t_min - 1) for t in qterms for h in heads)
 
     def _dict_expand(
         self, qterms: List[str], mode: str
     ) -> Optional[List[Tuple[str, int, int, int]]]:
-        """[(term, df, max_tf, bucket)] from the cached dictionary, or
+        """[(term, df, max_tf, bucket)] from the cached dictionaries, or
         None when uncached. Prefix expansion is a bisect range scan on
-        the sorted term list."""
-        d = self._ensure_dict()
-        if d is None:
+        each segment's sorted term list; the matched terms' rows merge
+        across segments (``_merge_segments``)."""
+        segs = self._ensure_dict()
+        if segs is None:
             return None
         if mode == START_WITH:
-            ts = self._dict_terms
-            hit: List[str] = []
-            for q in qterms:
-                lo = bisect.bisect_left(ts, q)
-                hi = bisect.bisect_left(ts, q + "\U0010ffff")
-                hit.extend(ts[lo:hi])
-            matched = sorted(dict.fromkeys(hit))
+            hit = set()
+            for sd in segs:
+                ts = sd.sorted_terms()
+                for q in qterms:
+                    lo = bisect.bisect_left(ts, q)
+                    hi = bisect.bisect_left(ts, q + "\U0010ffff")
+                    hit.update(ts[lo:hi])
+            matched = sorted(hit)
         elif mode == CONTAINS_MATCH:
             # substring match has no sorted-order structure: one linear
             # pass over the cached vocabulary (bounded by the vocab
             # cache gate; the distributed fallback handles the rest)
-            ts = self._dict_terms
             matched = sorted(
-                dict.fromkeys(t for t in ts if any(q in t for q in qterms))
+                {
+                    t
+                    for sd in segs
+                    for t in sd.terms
+                    if any(q in t for q in qterms)
+                }
             )
         else:
-            matched = [t for t in qterms if t in d]
-        return [(t, d[t][0], d[t][1], d[t][2]) for t in matched]
+            matched = [t for t in qterms if any(t in sd.terms for sd in segs)]
+        agg = _merge_segments(
+            (t, *sd.terms[t]) for t in matched for sd in segs if t in sd.terms
+        )
+        return [(t, *agg[t]) for t in matched]
 
     def _expand(
         self, qterms: List[str], mode: str, cap: Optional[int] = None
@@ -664,10 +818,11 @@ class IndexReader:
             return cached
         # same predicate helper the postings scan pushes — the two
         # must never diverge (metadata lookup and scan see one filter)
-        t = self.terms_df().where(_term_predicate(qterms, mode))
-        if "bucket" not in t.columns:  # pre-v2 index layout
-            t = t.withColumn("bucket", bucket_col(F.col("term"), self.num_buckets))
-        sel = t.select("term", "df", "max_tf", "bucket")
+        sel = (
+            self.terms_df()
+            .where(_term_predicate(qterms, mode))
+            .select("term", "df", "max_tf", "bucket")
+        )
         wide = mode in (START_WITH, CONTAINS_MATCH)
         if wide and cap is not None:
             limit = (cap + 1) * len(self.segments)
@@ -681,68 +836,71 @@ class IndexReader:
         return [(t, *agg[t]) for t in matched]
 
     def _doclens_for(self, chunks: List[int]) -> Dict[int, np.ndarray]:
-        """chunk -> float64 dl array, LRU-cached (bounded driver memory;
-        chunks are disjoint across segments by construction)."""
-        with self._cache_lock:
-            cache = self._doclens_cache
-            # mark THIS request's cached chunks most-recent FIRST: the
-            # post-insert trim below must never evict a chunk the
-            # caller is about to read (an evicted requested chunk would
-            # silently vanish from the kernel's top-k)
-            for c in chunks:
-                if c in cache:
-                    cache.move_to_end(c)
-            missing = [c for c in chunks if c not in cache]
-            if missing:
-                for r in (
-                    self.doclens_df()
-                    .where(F.col("chunk").isin(missing))
-                    .collect()
-                ):
-                    cache[int(r["chunk"])] = np.frombuffer(
-                        r["dls"], dtype=np.int32
-                    ).astype(np.float64)
-                requested = set(chunks)
-                while len(cache) > _DOCLENS_CACHE_CHUNKS:
-                    oldest = next(iter(cache))
-                    if oldest in requested:
-                        # cache smaller than one query's chunk set:
-                        # stop trimming rather than drop requested data
+        """chunk -> float64 dl array, from the process-wide cache; one
+        doclens scan loads the chunks no reader of these segments has
+        loaded (chunks are disjoint across segments by construction).
+        The returned arrays are held before any eviction, so a cache
+        smaller than one query's chunk set never drops requested data."""
+        owners = self._seg_owners
+        out: Dict[int, np.ndarray] = {}
+
+        def hits(cs):
+            for c in cs:
+                for o in owners:
+                    v = _SEGMENT_CACHE.get(("doclens", o, c))
+                    if v is not _MISS:
+                        out[c] = v
                         break
-                    cache.popitem(last=False)
-            out = {}
-            for c in chunks:
-                if c in cache:
-                    out[c] = cache[c]
-            return out
+            return [c for c in cs if c not in out]
+
+        missing = hits(chunks)
+        if missing:
+            with _SEGMENT_CACHE.load_lock:
+                missing = hits(missing)
+                if missing:
+                    tagged = self._memo(
+                        "doclens_tagged",
+                        lambda: self._tagged("doclens", list(range(len(owners)))),
+                    )
+                    for seg, c, dls in (
+                        tagged.where(F.col("chunk").isin(missing))
+                        .select("_seg", "chunk", "dls")
+                        .collect()
+                    ):
+                        arr = np.frombuffer(dls, dtype=np.int32).astype(
+                            np.float64
+                        )
+                        _SEGMENT_CACHE.put(
+                            ("doclens", owners[seg], c), arr,
+                            arr.nbytes + _ARRAY_ENTRY_BYTES,
+                        )
+                        out[c] = arr
+        return out
 
     def _dels_cached(self) -> Optional[Dict[int, np.ndarray]]:
         """chunk -> sorted tombstoned doc_ids, cached iff bounded; {} if
         the index has no deletes; None when too many to cache (callers
         fall back to the distributed join)."""
-        with self._cache_lock:
-            return self._dels_cached_locked()
+        if not self.deletes_dir:
+            return {}
+        key = ("dels", self._snap_owner, _DELS_CACHE_CAP)
 
-    def _dels_cached_locked(self) -> Optional[Dict[int, np.ndarray]]:
-        if self._dels_arrays_state == 0:
-            if not self.deletes_dir:
-                self._dels_arrays_state = 1
-            else:
-                rows = self.deletes_df().limit(_DELS_CACHE_CAP + 1).collect()
-                if len(rows) > _DELS_CACHE_CAP:
-                    self._dels_arrays_state = -1
-                else:
-                    span = self.chunk_span
-                    by_chunk: Dict[int, List[int]] = {}
-                    for r in rows:
-                        i = int(r["doc_id"])
-                        by_chunk.setdefault(i // span, []).append(i)
-                    self._dels_arrays = {
-                        c: np.array(sorted(v), dtype=np.int64)
-                        for c, v in by_chunk.items()
-                    }
-                    self._dels_arrays_state = 1
-        return self._dels_arrays if self._dels_arrays_state == 1 else None
+        def load(_missing):
+            rows = self.deletes_df().limit(_DELS_CACHE_CAP + 1).collect()
+            if len(rows) > _DELS_CACHE_CAP:
+                return {key: (None, _ARRAY_ENTRY_BYTES)}
+            span = self.chunk_span
+            by_chunk: Dict[int, List[int]] = {}
+            for (i,) in rows:
+                by_chunk.setdefault(i // span, []).append(i)
+            arrays = {
+                c: np.array(sorted(v), dtype=np.int64)
+                for c, v in by_chunk.items()
+            }
+            nbytes = sum(a.nbytes + _ARRAY_ENTRY_BYTES for a in arrays.values())
+            return {key: (arrays, nbytes + _ARRAY_ENTRY_BYTES)}
+
+        return _SEGMENT_CACHE.fetch([key], load)[key]
 
     def _dels_for(self, chunks: List[int]) -> Dict[int, np.ndarray]:
         """chunk -> sorted tombstoned doc_ids for ``chunks``: the cached
@@ -1525,11 +1683,11 @@ class IndexReader:
         qterms = [t for t in dict.fromkeys(terms) if t]
         if not qterms:
             return []
-        d = self._ensure_dict()
-        if d is not None:
+        segs = self._ensure_dict()
+        if segs is not None:
             out = set()
             by_len: Dict[int, List[str]] = {}
-            for t in self._dict_terms:
+            for t in {t for sd in segs for t in sd.terms}:
                 by_len.setdefault(len(t), []).append(t)
             for q in qterms:
                 for t in by_len.get(len(q), ()):
@@ -2111,7 +2269,7 @@ class IndexReader:
         span = self.chunk_span
         chunk_arr = ids // span
         chunks = sorted(set(chunk_arr.tolist()))
-        if len(chunks) > _DOCLENS_CACHE_CHUNKS:
+        if len(chunks) > _PHRASE_LOCAL_MAX_CHUNKS:
             return None
         dls_by_chunk = self._doclens_for(chunks)
         if any(c not in dls_by_chunk for c in chunks):

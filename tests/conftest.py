@@ -75,3 +75,19 @@ def jobs_of(job_stages_of):
         return out, len(stages)
 
     return run
+
+
+@pytest.fixture
+def spark_jobs_of(spark):
+    """``spark_jobs_of(fn)`` -> (fn's result, number of Spark jobs the
+    SparkContext started while fn ran), read off the DAG scheduler's
+    job counter: every job counts, whatever its job group, so a nested
+    build's jobs cannot make a pin undercount."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def run(fn):
+        before = scheduler.nextJobId()
+        out = fn()
+        return out, scheduler.nextJobId() - before
+
+    return run

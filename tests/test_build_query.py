@@ -324,12 +324,11 @@ def two_seg_index(spark, synth, tmp_path_factory):
 
 
 def test_tombstones_are_read_once_per_reader(spark, two_seg_index, jobs_of):
-    """The tombstone frame's schema is inferred once per reader: after
-    the first ``docs_df()``, neither ``deletes_df()`` nor ``docs_df()``
-    runs a job."""
+    """The tombstone and registry frames are read with their known
+    schemas: on a fresh reader neither the first ``docs_df()`` nor a
+    later ``deletes_df()`` or ``docs_df()`` runs a job."""
     r = IndexReader(spark, two_seg_index.paths.root)
-    r.docs_df()
-    _, n_jobs = jobs_of(lambda: (r.deletes_df(), r.docs_df()))
+    _, n_jobs = jobs_of(lambda: (r.docs_df(), r.deletes_df(), r.docs_df()))
     assert n_jobs == 0
 
 
@@ -381,7 +380,7 @@ def test_head_search_matches_full_dictionary(
     tombstones and a segment-local term included."""
     full = two_seg_index
     r = _uncached_reader(spark, full, monkeypatch, cap=_HEAD_CAP)
-    assert r._head_bound(["import"]) is not None and r._head
+    assert r._head_bound(["import"]) is not None and r._heads()
     for terms, mode in [
         (["import"], P.EXACT_MATCH),
         (["zzonly"], P.EXACT_MATCH),
@@ -407,8 +406,7 @@ def test_head_bound_covers_segments_without_a_head_row(
     from pyspark.sql import functions as F
 
     r = _uncached_reader(spark, two_seg_index, monkeypatch, cap=_HEAD_CAP)
-    r._head_bound([])  # load the head
-    t_min = r._head_min_df
+    heads, t_min = r._heads()
     seg_df = [
         {
             x["term"]: int(x["df"])
@@ -419,7 +417,8 @@ def test_head_bound_covers_segments_without_a_head_row(
         for seg in r.segments
     ]
     assert seg_df[0]["import"] >= t_min > seg_df[1]["import"] > 0
-    assert r._head["import"] == (seg_df[0]["import"], 1)
+    assert heads[0]["import"] == seg_df[0]["import"]
+    assert "import" not in heads[1]
     assert r._head_bound(["import"]) == seg_df[0]["import"] + t_min - 1
     terms = ["import", "zzonly", "return", "def", "nosuchterm"]
     true_df = {t: df for t, df, _, _ in r.match_terms(terms, P.EXACT_MATCH)}

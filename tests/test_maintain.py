@@ -551,7 +551,12 @@ def test_doclens_lru_never_evicts_requested_chunk(
     d = str(tmp_path / "lru_idx")
     build_index(spark, corpus, d, num_buckets=2, chunk_span=1)
     r = IndexReader(spark, d)
-    monkeypatch.setattr(Q, "_DOCLENS_CACHE_CHUNKS", 4)
+    r._doclens_for([1])
+    one = (
+        Q._SEGMENT_CACHE.get(("doclens", r._seg_owners[0], 1)).nbytes
+        + Q._ARRAY_ENTRY_BYTES
+    )
+    monkeypatch.setattr(Q._SEGMENT_CACHE, "max_bytes", 4 * one)
 
     r._doclens_for([1, 2, 3, 4])      # warm: 1 is now the LRU-oldest
     out = r._doclens_for([1, 5, 6, 7])  # insert 3 new -> trim must

@@ -278,14 +278,18 @@ def test_batch_respects_tombstones(spark, synth, synth_index, tmp_path):
     assert got == exp
 
 
-def test_batch_uncached_dictionary_path_matches(spark, synth, synth_index):
+def test_batch_uncached_dictionary_path_matches(
+    spark, synth, synth_index, monkeypatch
+):
     """Past the vocab cache gate (_dict_expand -> None) the batch must
     still return the same bit-identical results: its raw-collect
     bootstrap computes the same driver-side idf floats search() does."""
+    from spark_search import query as Q
     from spark_search.query import IndexReader
 
+    monkeypatch.setattr(Q, "_DICT_CACHE_CAP", 0)  # no cached dictionary
     rd = IndexReader(spark, synth_index.paths.root)
-    rd._dict_state = -1  # force the no-cached-dictionary tier
+    assert rd._ensure_dict() is None
     got = _rows(rd.search_many(QS, P.WITH_SUGGESTIONS, k=10))
     exp = _per_query(
         lambda ts, **kw: rd.search(ts, P.WITH_SUGGESTIONS, **kw), QS, k=10
