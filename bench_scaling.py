@@ -279,17 +279,6 @@ def _index_content_hash(spark, index_dir: str) -> str:
     return f"{h1}|{h2}|{h3}"
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _d, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
 # The physical plan every child runs, regardless of its core count:
 # pinning plan_parallelism (and the session's shuffle.partitions, in
 # _session) means both cluster sizes execute IDENTICAL task graphs —
@@ -306,8 +295,10 @@ PLAN_PARALLELISM = int(os.environ.get("SPARK_GRAFT_PLAN_PAR", "8"))
 
 def child(cpus: int, reps: int, corpus_dir: str,
           exchange: str = "fused") -> None:
+    from spark_search.progress import dir_bytes
+
     # shuffle spill ~ 3x corpus bytes (tokens exchange), index ~ 1.5x
-    corpus_bytes = _dir_bytes(corpus_dir)
+    corpus_bytes = dir_bytes(corpus_dir)
     spark = _session(cpus, scratch_need=3 * corpus_bytes)
     spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql import functions as F

@@ -10,7 +10,8 @@ Pipeline (all DataFrame ops + one Arrow-batched encode UDF):
     -> (bucket, chunk, term, doc_id) tf   exchange-free hash agg
     -> groupBy(bucket, term, chunk): docID-sorted arrays (exchange-free)
     -> delta+varint block encode (pandas UDF, numpy)
-    -> write postings/ partitioned by bucket(term), sorted by (term, chunk)
+    -> repartition(bucket) of the encoded rows (cheap second exchange)
+    -> write postings/: one zstd file per bucket, sorted by (term, chunk)
     -> terms/ dictionary (df, cf) from chunk metadata  [stage terms]
     -> manifest commit (stats + per-stage lineage)
 
@@ -33,6 +34,13 @@ its only writers (``write_postings``, ``write_terms``, ``write_doclens``,
 ``read_tombstones``). merge.py, maintain.py and query.py write and read
 their sub-dirs through these, so a merged or rewritten index has the
 layout of a fresh build, and no read pays a schema-inference job.
+
+Codecs: postings/ and docs/ are zstd, doclens/ is uncompressed and
+terms/ keeps Spark's default (snappy). The old claim that a generic
+codec on postings is "pure CPU loss" was measured with snappy; zstd
+cuts the serve_scale postings 13.1 -> 3.8 MB and docs 31.8 -> 16.6 MB
+at equal write wall and query latency. Parquet records the codec in
+each file, so an index written before the switch reads unchanged.
 """
 
 import contextlib
@@ -73,14 +81,6 @@ from .stats import CorpusStats
 DEFAULT_NUM_BUCKETS = 32
 DEFAULT_CHUNK_SPAN = 1 << 14
 DEFAULT_BLOCK_SIZE = 128
-# Postings file fan-out bound: the (bucket, chunk)-keyed exchange
-# writes ≤1 file per (reduce task, bucket) pair, so files-per-bucket
-# grows as min(n_chunks, shuffle partitions) — i.e. with cluster size.
-# Past this bound a compaction pass rewrites each bucket into few
-# sorted files (the pass touches only the encoded postings, typically
-# ~5-10% of raw corpus bytes — cheap relative to open()-cost of
-# thousands of small files on every query scan).
-DEFAULT_MAX_FILES_PER_BUCKET = 32
 
 
 def _postings_file_counts(postings_dir: str) -> dict:
@@ -359,30 +359,39 @@ def tombstones_by_chunk(
 
 
 # ------------------------------------------------------ sub-dir writers
-# Every write of postings/, terms/ and doclens/ — and every docs/ write
-# but the build's own — goes through one of these, so the on-disk
-# layout has one definition. Build, merge and maintenance differ only
-# in the exchange that feeds a writer.
+# Every write of an index sub-dir goes through one of these, so the
+# on-disk layout has one definition. Build, merge and maintenance
+# differ only in the exchange that feeds a writer.
 
 
-def write_postings(rows: DataFrame, out: str, mode: str = "overwrite") -> None:
-    """postings/ from rows whose partitions the caller's exchange has
-    clustered. bucket FIRST in the sort: the dynamic partitionBy writer
-    requires rows clustered by the partition column — sorting on it
-    explicitly (rather than relying on the writer's implicit inserted
-    sort) both pins the (term, chunk) order inside each bucket file
-    (row-group pruning depends on it) and keeps per-bucket file fan-out
-    at one file per task that holds the bucket instead of one per
-    (task, write batch)."""
+def write_postings(
+    rows: DataFrame, out: str, num_buckets: int, mode: str = "overwrite"
+) -> None:
+    """postings/ from (bucket, term, chunk, ...) rows: one zstd file per
+    bucket, sorted by (term, chunk). The writer's own exchange, a
+    hash repartition on bucket alone, sends each bucket to one task,
+    whatever exchange produced the rows, so every writer (build,
+    merge, compact, term delete) leaves the same layout at any cluster
+    size. It moves only encoded rows, which is cheap next to the
+    caller's exchange. bucket FIRST in the sort: the dynamic
+    partitionBy writer requires rows clustered by the partition column,
+    and the (term, chunk) order inside each file is what row-group
+    pruning depends on. One file per bucket matters at query time: a
+    scan pays each file's open and footer read (13 files per bucket
+    cost serve_scale mid queries ~25% of their latency). The price is
+    a write stage num_buckets tasks wide: an index whose encoded
+    postings outgrow that many tasks wants more buckets."""
     schema = sub_schema("postings", "plists" in rows.columns)
     (
         conform(rows, schema)
+        .repartition(num_buckets, "bucket")
         .sortWithinPartitions("bucket", "term", "chunk")
         .write.mode(mode)
-        # block payloads are already delta+varint entropy-coded; a
-        # generic codec on top is pure CPU loss (measured ~15% of the
-        # build's postings stage at 500k docs)
-        .option("compression", "uncompressed")
+        # block payloads are delta+varint coded, yet zstd still takes
+        # postings to 29% of their uncompressed bytes at no measurable
+        # write or query cost (snappy: 50%, and ~15% of the postings
+        # stage at 500k docs, which is why this was once uncompressed)
+        .option("compression", "zstd")
         .partitionBy("bucket")
         .parquet(out)
     )
@@ -391,27 +400,39 @@ def write_postings(rows: DataFrame, out: str, mode: str = "overwrite") -> None:
 def write_doclens(chunks: DataFrame, out: str) -> None:
     """doclens/ from (chunk, dls) rows. dls payloads are dense int32
     arrays; snappy on them costs more CPU than the bytes it saves at
-    read time."""
+    read time (not re-measured with zstd: doclens are about 1% of an
+    index)."""
     conform(chunks, DOCLENS_SCHEMA).write.mode("overwrite").option(
         "compression", "uncompressed"
     ).parquet(out)
 
 
-def write_docs(docs: DataFrame, out: str, parts: int) -> Tuple[int, int]:
-    """docs/ as a range write by doc_id (files disjoint in doc_id,
-    sorted within). Returns (n, Σ dl), observed on the write itself
-    rather than by a read-back job."""
+def _write_docs_partitioned(docs: DataFrame, out: str) -> Tuple[int, int]:
+    """docs/ from DOCS_SCHEMA rows the caller's exchange has
+    partitioned: each file sorted by doc_id, zstd (snappy does little
+    for the hex ``commit`` and ``content_sha256`` columns; zstd halves
+    docs/). Returns (n, Σ dl), observed on the write itself rather than
+    by a read-back job."""
     obs = Observation("docs_write_stats")
     (
-        conform(docs, DOCS_SCHEMA)
-        .repartitionByRange(parts, "doc_id")
-        .observe(obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot"))
+        docs.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot")
+        )
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
+        .option("compression", "zstd")
         .parquet(out)
     )
     row = obs.get
     return int(row["n"]), int(row["tot"] or 0)
+
+
+def write_docs(docs: DataFrame, out: str, parts: int) -> Tuple[int, int]:
+    """docs/ as a range write by doc_id (files disjoint in doc_id,
+    sorted within). Returns (n, Σ dl)."""
+    return _write_docs_partitioned(
+        conform(docs, DOCS_SCHEMA).repartitionByRange(parts, "doc_id"), out
+    )
 
 
 def write_terms(
@@ -555,7 +576,6 @@ def build_index(
     doc_id_partitions: Optional[int] = None,
     progress: Optional[Callable] = None,
     postings_exchange: str = "fused",
-    max_files_per_bucket: int = DEFAULT_MAX_FILES_PER_BUCKET,
     plan_parallelism: Optional[int] = None,
     positions: bool = False,
 ) -> BuildManifest:
@@ -627,7 +647,7 @@ def build_index(
                     spark, corpus, paths, index_dir, num_buckets, chunk_span,
                     block_size, bucket_groups, tokenizer, resume,
                     doc_id_partitions, postings_exchange,
-                    max_files_per_bucket, plan_parallelism, positions,
+                    plan_parallelism, positions,
                 )
     finally:
         if _ACTIVE_BUILD_GROUPS.get(key) == group:
@@ -647,7 +667,6 @@ def _build_stages(
     resume: bool,
     doc_id_partitions: Optional[int],
     postings_exchange: str = "fused",
-    max_files_per_bucket: int = DEFAULT_MAX_FILES_PER_BUCKET,
     plan_parallelism: Optional[int] = None,
     positions: bool = False,
 ) -> BuildManifest:
@@ -657,8 +676,9 @@ def _build_stages(
     # SAME physical plan — exchange widths, file layout, task
     # boundaries — runs at any executor count: the property a
     # two-cluster-size scaling comparison needs (equal work by
-    # construction), and the property a production pipeline wants when
-    # an index must be byte-stable across differently-sized clusters.
+    # construction). postings/ files are byte-identical at any ``par``
+    # (write_postings' own bucket exchange); how terms/ and docs/ split
+    # into files still follows ``par``.
     par = plan_parallelism or spark.sparkContext.defaultParallelism
     # Input-parallelism floor. A small-relative-to-cluster input (or a
     # coarse maxPartitionBytes) can leave the scan with ~1 split per
@@ -741,24 +761,10 @@ def _build_stages(
         # corpus stats ride the write itself (CollectMetrics below the
         # partition-local sort) — one scan and one job fewer per build
         # than a separate read-back agg
-        obs = Observation("docs_stats")
-        (
-            docs.repartition(
-                parts, (F.col("doc_id") / chunk_span).cast("long")
-            )
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("tot"),
-            )
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(paths.docs)
+        by_chunk = (F.col("doc_id") / chunk_span).cast("long")
+        n_docs, total_dl = _write_docs_partitioned(
+            docs.repartition(parts, by_chunk), paths.docs
         )
-        row = obs.get
-        n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-        total_dl = int(row["tot"] or 0)
         docs_on_disk = read_segments(spark, [paths.root], "docs")
 
         # doclens: dense per-chunk int32 dl arrays. The mapping is
@@ -796,7 +802,7 @@ def _build_stages(
         )
         write_doclens(chunked, paths.doclens)
         return {
-            "stats": CorpusStats(n_docs, avgdl, total_dl).to_dict(),
+            "stats": CorpusStats.combine(n_docs, total_dl).to_dict(),
             "rows": n_docs,
             "bytes": dir_bytes(paths.docs) + dir_bytes(paths.doclens),
             "wall_s": time.time() - t0,
@@ -830,7 +836,7 @@ def _build_stages(
             # path stays sequential
             _record_docs(_docs_stage_body(with_doc_ids(corpus)))
 
-    # postings + compaction run while the docs branch is in flight; a
+    # the postings stage runs while the docs branch is in flight; a
     # failure here must not leave that thread writing into the index
     # dir (a clean rebuild into the same dir would race it), and a
     # docs-branch failure is chained onto the error the caller sees
@@ -871,11 +877,13 @@ def _build_stages(
             # ONE shuffle for the whole postings pipeline, keyed on
             # (bucket, chunk). Both are grouping keys of BOTH aggregations
             # below, so the exchange satisfies their clustering
-            # requirements and tf counting, posting-list collection,
-            # encode, and the partitionBy write all run exchange-free on
-            # top of it. (Measured against the two-exchange variant —
-            # partial-agged tf shuffle + bucket repartition — the fused
-            # plan is ~3x faster at the quiet-machine floor.)
+            # requirements and tf counting, posting-list collection and
+            # encode all run exchange-free on top of it; only the encoded
+            # rows go through write_postings' cheap bucket exchange, which
+            # gives one file per bucket. (Measured against the
+            # two-exchange variant — partial-agged tf shuffle + bucket
+            # repartition — the fused plan is ~3x faster at the
+            # quiet-machine floor.)
             #
             # Caveat for network-bound clusters: the fused exchange moves
             # RAW token rows, i.e. ~avg-tf times more shuffle bytes than
@@ -955,7 +963,9 @@ def _build_stages(
                     ),
                 )
             )
-            write_postings(chunk_rows, paths.postings, mode="append")
+            write_postings(
+                chunk_rows, paths.postings, num_buckets, mode="append"
+            )
             manifest.record_stage(
                 stage, fingerprint,
                 # cumulative across bucket groups (dirs append per group)
@@ -963,64 +973,15 @@ def _build_stages(
                 wall_s=time.time() - tg,
             )
 
-        # ------------------------------------- stage: postings file-fan-out bound
-        # The exchange above writes ≤1 file per (reduce task, bucket), so
-        # files-per-bucket grows as min(n_chunks, shuffle partitions) —
-        # fine at small scale, but on a 1000-executor build a bucket would
-        # collect thousands of small files and every query scan pays their
-        # open cost. Past the bound, rewrite each bucket into few large
-        # (term, chunk)-sorted files; the pass moves only encoded postings.
+        # ------------------------------------- stage: postings layout record
+        # write_postings leaves one file per bucket; the record keeps
+        # the file counts and bytes on the manifest for benchmarks and
+        # operators
         if not (resume and manifest.stage_done("postings-compact", fingerprint)):
             tc = time.time()
-            # crash recovery for the two-rename swap below: a crash between
-            # the renames leaves the data stranded in .precompact with no
-            # postings dir (roll it back and redo the rewrite); a crash
-            # after both renames leaks .precompact (drop it). Same recovery
-            # discipline as live.py's event-log swap.
-            _pre = paths.postings + ".precompact"
-            if os.path.isdir(_pre):
-                if not os.path.isdir(paths.postings):
-                    os.rename(_pre, paths.postings)
-                else:
-                    shutil.rmtree(_pre)
-            _tmp = paths.postings + ".compact.tmp"
-            if os.path.isdir(_tmp):
-                shutil.rmtree(_tmp)  # incomplete rewrite from a dead run
             fcounts = _postings_file_counts(paths.postings)
-            max_files = max(fcounts.values()) if fcounts else 0
-            compacted = False
-            if max_files > max_files_per_bucket:
-                # salt the rewrite by chunk-group: keyed on bucket alone it
-                # is a num_buckets-task stage — a single straggler-bound
-                # wave once the cluster has ~num_buckets cores. The salt
-                # spreads each bucket over salt_mod reducers (so ≤ salt_mod
-                # files per bucket, still within the bound) and widens the
-                # stage to the postings exchange's own width; a pinned-plan
-                # function of (par, num_buckets), so the rewritten layout
-                # stays identical at any cluster size.
-                salt_mod = max(
-                    1, min(max_files_per_bucket, (8 * par) // num_buckets)
-                )
-                tmp_dir = paths.postings + ".compact.tmp"
-                write_postings(
-                    read_segments(
-                        spark, [paths.root], "postings", positions
-                    ).repartition(
-                        num_buckets * salt_mod,
-                        "bucket",
-                        F.pmod(F.col("chunk"), F.lit(salt_mod)),
-                    ),
-                    tmp_dir,
-                )
-                old_dir = paths.postings + ".precompact"
-                os.rename(paths.postings, old_dir)
-                os.rename(tmp_dir, paths.postings)
-                shutil.rmtree(old_dir)
-                fcounts = _postings_file_counts(paths.postings)
-                compacted = True
             manifest.record_stage(
                 "postings-compact", fingerprint,
-                compacted=compacted,
                 files_total=sum(fcounts.values()),
                 files_per_bucket_max=max(fcounts.values()) if fcounts else 0,
                 n_bucket_dirs=len(fcounts),

@@ -559,7 +559,7 @@ def delete_term_postings(
         i = int(r["doc_id"])
         rm_by_chunk.setdefault(i // span, []).append((i, int(r["_rm_dl"])))
 
-    write_postings(new_posts.repartition(num_buckets, "bucket"), out_paths.postings)
+    write_postings(new_posts, out_paths.postings, num_buckets)
     n_terms = write_terms(spark, out_paths, num_buckets, par)
 
     # docs: decrement dl of affected docs (identity otherwise). The
@@ -661,7 +661,7 @@ def compact(
             ).alias("dls"),
         )
 
-    write_postings(posts.repartition(num_buckets, "bucket"), out_paths.postings)
+    write_postings(posts, out_paths.postings, num_buckets)
     n_terms = write_terms(spark, out_paths, num_buckets, par)
     n_docs, total_dl = write_docs(docs, out_paths.docs, par)
     write_doclens(doclens, out_paths.doclens)

@@ -26,7 +26,9 @@ terms rows, same docs registry, same packed doclens, same stats.
 Scale shape: ONE exchange keyed (bucket, chunk) over the encoded
 postings (index bytes, typically ~5-10% of raw corpus bytes — never
 the content), the same salted key the build itself shuffles on, so a
-hot term's chunks spread over reducers identically. The common case —
+hot term's chunks spread over reducers identically; the merged rows
+then take write_postings' bucket exchange to one file per bucket, as
+a build's do. The common case —
 shard doc-id ranges are chunk-aligned and never collide, e.g. every
 shard built with ``ids.with_doc_ids(start=...)`` at chunk boundaries
 (the ``upsert_docs`` discipline, maintain.py) — takes the JVM-only
@@ -396,9 +398,11 @@ def merge_indexes(
             "bucket", "term", "chunk", merge_srcs(F.col("srcs")).alias("_r")
         ).select("bucket", "term", "chunk", "_r.*")
         # the two branches re-read ONE shuffle (ReusedExchange: same
-        # child plan under both filters); the union keeps rows of each
-        # task clustered by bucket for the partitioned write
-        write_postings(singles.unionByName(multis), paths.postings)
+        # child plan under both filters); write_postings' bucket
+        # exchange then gives one file per bucket
+        write_postings(
+            singles.unionByName(multis), paths.postings, num_buckets
+        )
         manifest.record_stage(
             "merge-postings", fingerprint, wall_s=time.time() - t1
         )

@@ -2,6 +2,7 @@
 two indexes whose rows compare equal here are indistinguishable to
 every reader (block bytes and position lists included)."""
 
+import glob
 import os
 
 
@@ -44,3 +45,22 @@ def postings_rows(spark, d):
             )
         out.append(row)
     return out
+
+
+def bucket_files(d):
+    """{bucket=N dir name: its sorted parquet file paths} of ``d``'s
+    postings/."""
+    base = os.path.join(d, "postings")
+    return {
+        b: sorted(glob.glob(os.path.join(base, b, "*.parquet")))
+        for b in os.listdir(base)
+        if b.startswith("bucket=")
+    }
+
+
+def codec(path):
+    """The parquet compression codec of the file at ``path`` (first
+    column chunk), e.g. "ZSTD"."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.row_group(0).column(0).compression

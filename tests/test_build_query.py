@@ -636,25 +636,28 @@ def test_custom_tokenizer_registry(spark, tmp_path):
         == [1]
 
 
-def test_postings_fanout_compaction(spark, synth, synth_index, tmp_path):
-    """With the files-per-bucket bound forced low, the build's
-    compaction stage must rewrite each bucket into few files while
-    preserving the logical index exactly (same postings sets, same
+def test_postings_layout_is_the_same_at_any_parallelism(
+    spark, synth, synth_index, tmp_path
+):
+    """Builds planned for 2 and for 8 cores write exactly one postings
+    file per bucket, byte-identical between the two, holding the
+    logical index of the default build (same postings sets, same
     search results)."""
-    d2 = str(tmp_path / "fanout_index")
-    m = build_index(spark, synth, d2, num_buckets=8, chunk_span=64,
-                    block_size=16, max_files_per_bucket=1)
-    rec = m.stages["postings-compact"]
-    assert rec["compacted"] is True
-    assert rec["files_per_bucket_max"] <= 1
-    # one file per bucket dir on disk
-    import glob
+    from index_rows import bucket_files
 
-    for bdir in glob.glob(os.path.join(d2, "postings", "bucket=*")):
-        files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
-        assert len(files) == 1, (bdir, files)
+    dirs = {par: str(tmp_path / f"par{par}") for par in (2, 8)}
+    for par, d in dirs.items():
+        build_index(spark, synth, d, num_buckets=8, chunk_span=64,
+                    block_size=16, plan_parallelism=par)
+    files = {par: bucket_files(d) for par, d in dirs.items()}
+    assert files[2] and files[2].keys() == files[8].keys()
+    for b, f2 in files[2].items():
+        f8 = files[8][b]
+        assert len(f2) == len(f8) == 1, (b, f2, f8)
+        with open(f2[0], "rb") as x, open(f8[0], "rb") as y:
+            assert x.read() == y.read(), b
 
-    r2 = IndexReader(spark, d2)
+    r2 = IndexReader(spark, dirs[8])
 
     def logical(reader):
         out = set()

@@ -3,6 +3,7 @@ DocumentRemoveTaskTest / DocumentUpdateTaskTest (expected index-size
 deltas and match-set changes after remove/update), plus the staleness
 contract: match sets exact immediately, scores exact after compact."""
 
+import glob
 import os
 import pathlib
 import re
@@ -28,7 +29,7 @@ from spark_search.maintain import (
 )
 from spark_search.query import IndexReader
 
-from index_rows import postings_rows, rows
+from index_rows import bucket_files, codec, postings_rows, rows
 
 
 @pytest.fixture(scope="module")
@@ -723,13 +724,138 @@ def test_delete_term_postings_layout_equals_fresh_build(
     assert docs_rows(d1) == docs_rows(fresh)
 
 
+def test_every_postings_writer_leaves_one_file_per_bucket(
+    spark, synth_base, tmp_path
+):
+    """merge_indexes, an upsert's segment, compact and
+    delete_term_postings each leave exactly one postings file per
+    bucket, as a fresh build does, over inputs spread across several
+    chunks and files."""
+    from spark_search.checkpoint import BuildManifest
+    from spark_search.corpus import synthetic_corpus
+    from spark_search.maintain import delete_term_postings
+    from spark_search.merge import merge_indexes
+
+    d0, corpus = synth_base
+    shards = [str(tmp_path / f"shard{i}") for i in (0, 1)]
+    for i, d in enumerate(shards):
+        build_index(spark, corpus.where(F.col("doc_id") % 2 == i), d,
+                    num_buckets=4, chunk_span=64)
+    outs = {name: str(tmp_path / name) for name in (
+        "merge", "upsert", "delete", "compact", "delete_terms")}
+    merge_indexes(spark, shards, outs["merge"])
+    # 200 new docs span 4 chunks of the new segment
+    batch = synthetic_corpus(spark, 200, seed=7).withColumn(
+        "path", F.concat(F.lit("new/"), F.col("path"))
+    )
+    upsert_docs(spark, d0, outs["upsert"], batch)
+    delete_docs(spark, outs["upsert"], outs["delete"], [5, 17, 64, 130])
+    compact(spark, outs["delete"], outs["compact"])
+    delete_term_postings(spark, d0, outs["delete_terms"],
+                         [("import", 1), ("def", 70), ("return", 140)])
+
+    segment = BuildManifest.load(outs["upsert"]).config["segments"][-1]
+    for name, d in (
+        ("merge", outs["merge"]), ("upsert segment", segment),
+        ("compact", outs["compact"]),
+        ("delete_term_postings", outs["delete_terms"]),
+    ):
+        files = bucket_files(d)
+        assert len(files) == 4, (name, files)
+        assert all(len(f) == 1 for f in files.values()), (name, files)
+        assert {codec(f[0]) for f in files.values()} == {"ZSTD"}, name
+
+
+def _old_layout_copy(spark, src, dst):
+    """A copy of index ``src`` at ``dst`` in the layout older builds
+    wrote: postings/ uncompressed in several files per bucket, docs/
+    snappy. Same rows, so every reader must see the same index."""
+    import shutil
+
+    from spark_search.build import read_segments
+
+    shutil.copytree(src, dst)
+    for sub in ("postings", "docs"):
+        shutil.rmtree(os.path.join(dst, sub))
+    (
+        read_segments(spark, [src], "postings")
+        .repartition(3, "chunk")
+        .sortWithinPartitions("bucket", "term", "chunk")
+        .write.option("compression", "uncompressed")
+        .partitionBy("bucket")
+        .parquet(os.path.join(dst, "postings"))
+    )
+    read_segments(spark, [src], "docs").write.option(
+        "compression", "snappy"
+    ).parquet(os.path.join(dst, "docs"))
+    files = bucket_files(dst)
+    assert max(len(f) for f in files.values()) > 1
+    assert codec(files["bucket=0"][0]) == "UNCOMPRESSED"
+    docs = glob.glob(os.path.join(dst, "docs", "*.parquet"))
+    assert {codec(f) for f in docs} == {"SNAPPY"}
+
+
+def test_old_layout_index_stays_readable(spark, synth_base, tmp_path):
+    """An index in the pre-zstd layout (uncompressed postings in several
+    files per bucket, snappy docs) answers every query with the rows
+    and exact scores of the same index in the current layout, also as
+    the base segment of an upsert snapshot; compact of it writes the
+    current layout."""
+    d0, corpus = synth_base
+    old = str(tmp_path / "old")
+    _old_layout_copy(spark, d0, old)
+
+    def answers(d):
+        r = IndexReader(spark, d)
+        return [
+            [
+                (x["doc_id"], x["score"])
+                for x in r.search(terms, mode, k=20).orderBy("rank").collect()
+            ]
+            for terms, mode in (
+                (["import"], P.EXACT_MATCH),
+                (["import", "return", "def"], P.WITH_SUGGESTIONS),
+                (["import", "def"], P.AND_MATCH),
+                (["ret"], P.START_WITH),
+            )
+        ]
+
+    want = answers(d0)
+    assert all(want)
+    assert answers(old) == want
+
+    batch = corpus.where(F.col("doc_id") <= 40).select(
+        "repo", "path", "commit", "lang",
+        F.concat(F.col("content"), F.lit(" import extra")).alias("content"),
+    )
+    ups = {d: str(tmp_path / f"{name}_ups") for name, d in (
+        ("new", d0), ("old", old))}
+    for d, out in ups.items():
+        upsert_docs(spark, d, out, batch)
+    assert answers(ups[old]) == answers(ups[d0])
+
+    cmp = str(tmp_path / "old_compacted")
+    compact(spark, old, cmp)
+    files = bucket_files(cmp)
+    assert all(len(f) == 1 for f in files.values()), files
+    assert {codec(f[0]) for f in files.values()} == {"ZSTD"}
+    docs = glob.glob(os.path.join(cmp, "docs", "*.parquet"))
+    assert {codec(f) for f in docs} == {"ZSTD"}
+    assert postings_rows(spark, cmp) == postings_rows(spark, d0)
+    assert answers(cmp) == want
+
+
 # ------------------------------------------------------ source guard
 
 # (pattern, its number of copies in build.py)
 _LAYOUT_WRITES = [
     (re.compile(r'partitionBy\(\s*"bucket"\s*\)'), 1),  # postings write
     (re.compile(r'F\.sum\(\s*"n_docs"\s*\)\.alias\(\s*"df"\s*\)'), 1),  # terms
-    (re.compile(r'"compression",\s*"uncompressed"'), 2),  # postings, doclens
+    (re.compile(r'"compression",\s*"uncompressed"'), 1),  # doclens
+    # postings, and the one docs writer both docs writes go through
+    (re.compile(r'"compression",\s*"zstd"'), 2),
+    # postings: one file per bucket
+    (re.compile(r'repartition\(\s*[\w.]+,\s*"bucket"\s*\)'), 1),
 ]
 
 
@@ -742,16 +868,20 @@ def _layout_offenders(name: str, src: str):
 
 
 def test_index_layout_is_written_only_in_build_py():
-    """Guard: the postings partitionBy("bucket") write, the terms
-    aggregate and the uncompressed postings and doclens writes exist
-    once each, in build.py's sub-dir writers; a second copy in merge or
-    maintenance could drift from the layout a fresh build writes."""
+    """Guard: the postings partitionBy("bucket") write and its bucket
+    exchange, the terms aggregate, the uncompressed doclens write and
+    the zstd postings and docs writes exist only in build.py's sub-dir
+    writers; a second copy in merge or maintenance could drift from the
+    layout a fresh build writes."""
     caught = _layout_offenders(
         "x.py",
         '.partitionBy("bucket")\nF.sum("n_docs").alias("df")\n'
-        '.option("compression", "uncompressed")\nF.sum("dl")\n',
+        '.option("compression", "uncompressed")\n'
+        '.option("compression", "zstd")\n'
+        '.repartition(num_buckets, "bucket")\n'
+        'F.sum("dl")\n.repartition(n, "bucket", "chunk")\n',
     )
-    assert [c.split(":")[1] for c in caught] == ["1", "2", "3"]
+    assert [c.split(":")[1] for c in caught] == ["1", "2", "3", "4", "5"]
     pkg = pathlib.Path(__file__).resolve().parent.parent / "spark_search"
     offenders = [
         hit
