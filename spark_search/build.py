@@ -31,9 +31,11 @@ Layout ownership: this module defines the on-disk layout (``IndexPaths``,
 one schema per sub-dir and for a tombstone dir, ``bucket_col``) and holds
 its only writers (``write_postings``, ``write_terms``, ``write_doclens``,
 ``write_docs``, ``write_tombstones``) and readers (``read_segments``,
-``read_tombstones``). merge.py, maintain.py and query.py write and read
-their sub-dirs through these, so a merged or rewritten index has the
-layout of a fresh build, and no read pays a schema-inference job.
+``read_tombstones``, and ``read_postings_local``, the driver-side
+pyarrow read of a few buckets' postings rows). merge.py, maintain.py
+and query.py write and read their sub-dirs through these, so a merged
+or rewritten index has the layout of a fresh build, and no read pays a
+schema-inference job.
 
 Codecs: postings/ and docs/ are zstd, doclens/ is uncompressed and
 terms/ keeps Spark's default (snappy). The old claim that a generic
@@ -45,6 +47,7 @@ each file, so an index written before the switch reads unchanged.
 
 import contextlib
 import functools
+import operator
 import os
 import shutil
 import time
@@ -311,6 +314,65 @@ def read_segments(
     schema = sub_schema(sub, positions)
     dfs = [spark.read.schema(schema).parquet(os.path.join(r, sub)) for r in roots]
     return functools.reduce(DataFrame.unionByName, dfs)
+
+
+@functools.lru_cache(maxsize=None)
+def _arrow_postings_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(POSTINGS_SCHEMA)
+
+
+# Spark pushes a term IN-list of up to this many values into parquet as
+# an OR of equalities (spark.sql.parquet.pushdown.inFilterThreshold),
+# the form whose min/max stats prune row groups. pyarrow's is_in prunes
+# none, and an OR of more equalities costs more than it saves (100 row
+# groups: 5 terms 10 vs 25 ms, 64 terms 176 vs 25 ms as is_in).
+_PRUNING_MAX_TERMS = 10
+
+
+def read_postings_local(roots: List[str], term_buckets: List[Tuple[str, int]]):
+    """The (term, chunk, n_docs, blocks) postings rows of the (term,
+    bucket) pairs in every segment root, as a pyarrow Table read on the
+    driver: no Spark job. Only ``<root>/postings/bucket=<b>/`` of the
+    pairs' buckets is listed; a missing bucket dir holds no rows, and
+    ``_``/``.`` files are skipped, as Spark skips them. Files are read
+    with the Arrow form of ``POSTINGS_SCHEMA``, and each sees only its
+    bucket's terms as the filter (``_PRUNING_MAX_TERMS``), so row
+    groups prune on term."""
+    import pyarrow.dataset as ds
+    from pyarrow import fs
+
+    by_bucket: Dict[int, List[str]] = {}
+    for t, b in term_buckets:
+        by_bucket.setdefault(int(b), []).append(t)
+    term = ds.field("term")
+    paths, parts, conds = [], [], []
+    for b, terms in sorted(by_bucket.items()):
+        part = ds.field("bucket") == b
+        for root in roots:
+            d = os.path.join(root, "postings", f"bucket={b}")
+            if not os.path.isdir(d):
+                continue
+            files = [
+                os.path.join(d, n) for n in sorted(os.listdir(d))
+                if not n.startswith(("_", "."))
+            ]
+            paths += files
+            parts += [part] * len(files)
+        conds.append(part & (
+            functools.reduce(operator.or_, [term == t for t in terms])
+            if len(terms) <= _PRUNING_MAX_TERMS
+            else term.isin(terms)
+        ))
+    schema = _arrow_postings_schema()
+    columns = ["term", "chunk", "n_docs", "blocks"]
+    if not paths:
+        return schema.empty_table().select(columns)
+    return ds.FileSystemDataset.from_paths(
+        paths, schema=schema, format=ds.ParquetFileFormat(),
+        filesystem=fs.LocalFileSystem(), partitions=parts,
+    ).to_table(columns=columns, filter=functools.reduce(operator.or_, conds))
 
 
 def read_tombstones(spark: SparkSession, deletes_dir: str) -> DataFrame:

@@ -15,21 +15,28 @@ Query lifecycle (SURVEY.md §3.1 Spark plan):
   2. idf computed driver-side (a few floats)
 
   When Σ df ≤ ``_LOCAL_MAX_POSTINGS`` (2^21) and the matched rows touch
-  ≤ ``_LOCAL_MAX_CHUNKS`` chunks, the rest runs on the driver: one
-  postings scan collects the matched blocks and their ``n_docs`` (df
-  is their sum, so idf needs no metadata), each (chunk, term) row
-  decodes in one batched pass (``codec.decode_blocks``) and scores in
-  numpy. Past the full-dictionary cap an exact/OR/AND query skips the
-  lookup: the cached df ≥ T dictionary head bounds its Σ df and
+  ≤ ``_LOCAL_MAX_CHUNKS`` chunks, the rest runs on the driver with no
+  Spark job: pyarrow reads the matched blocks and their ``n_docs``
+  (df is their sum, so idf needs no metadata) from the routed bucket
+  files of each segment (``build.read_postings_local``), each (chunk,
+  term) row decodes in one batched pass (``codec.decode_blocks``),
+  scores in numpy and is cut to its chunk's k best. Past the
+  full-dictionary cap an exact/OR/AND query skips the lookup: the
+  cached df ≥ T dictionary head bounds its Σ df and
   ``build.bucket_of`` routes its terms (``_DICT_CACHE_CAP``). A warm
-  exact/OR/AND local query therefore costs 1 job whether or not the
-  full dictionary fits, none shuffling; a missing-term query costs 0
-  jobs with the full dictionary and 1 with the head. Prefix/contains
-  queries past the cap keep the lookup (2 jobs). Only larger queries
+  exact/OR/AND local query, a missing-term one included, therefore
+  costs 0 jobs whether or not the full dictionary fits. Prefix/contains
+  queries past the cap keep only the lookup's terms/ scan (its
+  limited collect may take a second job). Only larger queries
   take the distributed plan below. Measured crossover, OR queries,
   270k docs in 17 chunks, 4 cores, raw ms, identical top-k (rows to
   1.03M on serve_scale; 2.05M and 4.02M on the same corpus generator
-  at 20 words per doc, 3 runs each):
+  at 20 words per doc, 3 runs each). The local column was measured
+  when a Spark collect fetched the postings rows. The pyarrow read
+  fetches a mid query's 85 rows in 17-27 ms against the collect's
+  155-270 ms, and a hot query's 102 rows in 45-48 against 185-300 ms
+  (same host, 7 warm runs each). The 2^21 gate is left where this
+  table put it:
 
       Σ df    local        distributed
       82k     268-363      784-941
@@ -74,6 +81,7 @@ from .build import (
     IndexPaths,
     bucket_of,
     job_group,
+    read_postings_local,
     read_segments,
     read_tombstones,
     tombstones_by_chunk,
@@ -95,13 +103,14 @@ from .stats import CorpusStats
 _META_COLLECT_CAP = 1024
 # driver-local path: when the term lookup proves the total matched
 # postings (Σ df) and touched chunk count are bounded, the matched
-# posting rows are collected and scored driver-side in numpy — no
-# shuffle, no Python-worker stage, one postings scan job. It beat the
+# posting rows are read on the driver with pyarrow and scored in numpy
+# — no Spark job. With a Spark collect fetching the rows it beat the
 # distributed plan in every run up to Σ df 2.05M and tied it at 4.02M
 # (module docstring), so the gate is the largest power of two below
-# 4M; queries past it stay distributed. Each 1M postings (~3 B of
-# varint bytes + 16 B decoded each) holds ~25 MB of driver memory, so
-# ~50 MB at the gate, plus 64 doclen chunks × 64 KiB.
+# 4M; queries past it stay distributed. The cheaper read moves that
+# crossover up, but the gate stays until it is measured again. Each 1M
+# postings (~3 B of varint bytes + 16 B decoded each) holds ~25 MB of
+# driver memory, so ~50 MB at the gate, plus 64 doclen chunks × 64 KiB.
 _LOCAL_MAX_POSTINGS = 1 << 21
 _LOCAL_MAX_CHUNKS = 64
 # search_phrase's local gate: its collect holds per-(term, doc) plists
@@ -132,7 +141,8 @@ _LOCAL_MAX_POSITIONS = 4_000_000
 #     tombstone-inflated case and loads nothing). A term without a head
 #     row in a segment has df ≤ T−1 there, so the heads bound an
 #     exact/OR/AND query's Σ df with no terms/ job, and rare terms are
-#     routed to their bucket by ``build.bucket_of``. The head path stops
+#     routed to their bucket by ``build.bucket_of``: such a query runs
+#     no Spark job, as with the full dictionary. The head path stops
 #     applying once (T−1) × the number of rare query terms exceeds the
 #     2^21 local gate: roughly total_dl > 1.1·10^11 for 5-term queries
 #     (T > 419,431, times 2^18).
@@ -957,10 +967,7 @@ class IndexReader:
         blocks before any decode."""
         span = self.chunk_span
         chunk = doc_id // span
-        dels = self.deletes_df()
-        if dels is not None and dels.where(
-            F.col("doc_id") == doc_id
-        ).count():
+        if doc_id in self._dels_for([chunk]).get(chunk, ()):
             return self._no_hits(_DOCS_TERMS_FIELDS[1:])
         target = doc_id
 
@@ -1083,60 +1090,55 @@ class IndexReader:
         # driver-side literals — past the cap only the *bucket list*
         # (bounded by num_buckets) and two counters are ever collected.
         stats = self.stats
-        pred = _term_predicate(qterms, mode)
         if local_max and mode not in (START_WITH, CONTAINS_MATCH):
             # past the full-dictionary cap: when the dictionary head
-            # bounds Σ df within the gate, the postings scan is the
-            # query's only job (bucket_of routes the terms, the scan's
-            # own n_docs give df). A chunk-gate decline falls through
-            # to the lookup + distributed plan.
+            # bounds Σ df within the gate, the query runs no job
+            # (bucket_of routes the terms to the bucket files the local
+            # read opens, whose n_docs give df). A chunk-gate decline
+            # falls through to the lookup + distributed plan.
             bound = self._head_bound(qterms)
             if bound is not None and bound <= local_max:
-                buckets = sorted(
-                    {bucket_of(t, self.num_buckets) for t in qterms}
-                )
                 out = self._search_local(
-                    pred, buckets, mode, k, n_query_terms
+                    [(t, bucket_of(t, self.num_buckets)) for t in qterms],
+                    mode, k, n_query_terms,
                 )
                 if out is not None:
                     return out
                 local_max = 0
         cap = _META_COLLECT_CAP
-        meta: Optional[DataFrame] = None
         expansion = self._expand(qterms, mode, cap)
+        # an expansion too wide for plan literals stays distributed: its
+        # per-term idf is computed by a scan + expression
+        wide = expansion is None or len(expansion) > cap
         if expansion is not None:
-            # an expansion too wide for plan literals still keeps the
-            # driver-side gating counters (total_df gates the local
-            # path for free); its per-term idf is computed distributed
-            # (scan + expression)
             n_matched = len(expansion)
             buckets = sorted({b for _, _, _, b in expansion})
             total_df = sum(df_ for _, df_, _, _ in expansion)
-            if len(expansion) > cap:
-                meta = self._meta_scan_df(pred, stats)
         else:
-            # a prefix/contains expansion proven wider than the cap:
-            # fully distributed metadata, never collected. Nothing below
-            # needs its exact size or bucket set (a wide mode has no AND
-            # gate), so no job counts them: every bucket is a superset
-            # the term predicate still narrows
-            meta = self._meta_scan_df(pred, stats)
+            # a prefix/contains expansion proven wider than the cap,
+            # never collected. Nothing below needs its exact size or
+            # bucket set (a wide mode has no AND gate), so no job
+            # counts them: every bucket is a superset the term
+            # predicate still narrows
             n_matched, buckets = cap + 1, list(range(self.num_buckets))
         if n_matched == 0 or (mode == AND_MATCH and n_matched < n_query_terms):
             return self._no_hits(out_fields)
 
-        if (
-            local_max
-            and meta is None  # wide expansions stay distributed
-            and total_df <= local_max
-        ):
-            out = self._search_local(pred, buckets, mode, k, n_query_terms)
+        if local_max and not wide and total_df <= local_max:
+            out = self._search_local(
+                [(t, b) for t, _, _, b in expansion], mode, k, n_query_terms
+            )
             if out is not None:
                 return out
-        if meta is None:
-            # bounded-size metadata (broadcast below), built only now
-            # that the distributed plan needs it
-            meta = self._meta_frame(expansion)
+        # the Spark-side term predicate and metadata are built only now
+        # that the distributed plan needs them: even unexecuted, their
+        # Columns cost py4j round trips (~9 ms for 5 terms) the local
+        # path skips. Bounded-size metadata is broadcast below.
+        pred = _term_predicate(qterms, mode)
+        meta = (
+            self._meta_scan_df(pred, stats) if wide
+            else self._meta_frame(expansion)
+        )
 
         # postings scan: bucket partition pruning + the original (small)
         # term predicate pushed to parquet; idf arrives via the join
@@ -1589,28 +1591,22 @@ class IndexReader:
 
     def _search_local(
         self,
-        pred,
-        buckets: List[int],
+        term_buckets: List[Tuple[str, int]],
         mode: str,
         k: int,
         n_query_terms: int,
     ) -> Optional[DataFrame]:
         """Driver-local path: score the matched postings (Σ df within
-        ``_LOCAL_MAX_POSTINGS``) driver-side. One postings scan job
-        (term predicate + bucket pruning pushed to parquet), plus a
-        doclens scan for chunks not yet cached, then the chunk kernel
-        per chunk and one top-k. A term's df is the Σ ``n_docs`` of its
-        collected rows — the integer its terms/ rows hold (terms/
-        aggregates postings), so idf is the lookup's. Returns None
-        (caller falls back to the distributed plan) if the
+        ``_LOCAL_MAX_POSTINGS``) driver-side. The (term, bucket) pairs'
+        postings rows are read with pyarrow from their bucket dirs
+        (``build.read_postings_local``): no Spark job, only a doclens
+        scan for chunks not yet cached. Then the chunk kernel cuts each
+        chunk to its k best and one top-k merges them. A term's df is
+        the Σ ``n_docs`` of its rows — the integer its terms/ rows hold
+        (terms/ aggregates postings), so idf is the lookup's. Returns
+        None (caller falls back to the distributed plan) if the
         touched-chunk count would exceed the driver-memory gate."""
-        rows = (
-            self.postings_df()
-            .where(F.col("bucket").isin(buckets))
-            .where(pred)
-            .select("term", "chunk", "n_docs", "blocks")
-            .collect()
-        )
+        rows = read_postings_local(self.segments, term_buckets).to_pylist()
         df_by_term: Dict[str, int] = {}
         for r in rows:
             t = r["term"]
@@ -1637,7 +1633,7 @@ class IndexReader:
         hits = [
             kernel.score(
                 by_chunk[c], dls_by_chunk[c], c * self.chunk_span,
-                self.stats.avgdl, dels_by_chunk.get(c), need=need,
+                self.stats.avgdl, dels_by_chunk.get(c), need=need, keep=k,
             )
             for c in chunks
             if c in dls_by_chunk

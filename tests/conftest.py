@@ -91,3 +91,21 @@ def spark_jobs_of(spark):
         return out, scheduler.nextJobId() - before
 
     return run
+
+
+@pytest.fixture
+def local_calls(monkeypatch):
+    """A list recording, per ``IndexReader._search_local`` call, whether
+    it answered (True) or declined to the distributed plan (False)."""
+    from spark_search.query import IndexReader
+
+    calls = []
+    search_local = IndexReader._search_local
+
+    def spy(self, *a, **kw):
+        out = search_local(self, *a, **kw)
+        calls.append(out is not None)
+        return out
+
+    monkeypatch.setattr(IndexReader, "_search_local", spy)
+    return calls

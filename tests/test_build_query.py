@@ -151,18 +151,66 @@ def test_local_fast_path_matches_distributed(synth_index, two_seg_index):
                 assert _ranked(dist) == local, (terms, mode, k)
 
 
+def test_local_path_reads_segments_with_missing_bucket_dirs(
+    spark, synth, tmp_path, local_calls
+):
+    """A snapshot whose upserted segment holds 2 docs has bucket dirs
+    only for its few terms' buckets (of 32), and tombstones in segment
+    0. The driver-local read skips the missing dirs and returns the
+    distributed plan's rows and exact scores, for terms in both
+    segments, in one only, and in none."""
+    import glob
+
+    from spark_search.corpus import CORPUS_SCHEMA
+    from spark_search.maintain import upsert_docs
+
+    d0, d1 = str(tmp_path / "base"), str(tmp_path / "up")
+    build_index(spark, synth, d0, num_buckets=32, chunk_span=64,
+                block_size=16)
+    (repo, path), = [
+        (r["repo"], r["path"])
+        for r in synth.orderBy("doc_id").limit(1).collect()
+    ]
+    upsert_docs(spark, d0, d1, spark.createDataFrame(
+        [
+            (repo, path, "v2", "python", "import zzsmall return"),
+            ("r2", "small/0.py", "v2", "python", "zzsmall zzsmall def"),
+        ],
+        CORPUS_SCHEMA,
+    ))
+    r = IndexReader(spark, d1)
+    assert len(r.segments) == 2 and r.n_tombstones == 1
+    seg_buckets = glob.glob(os.path.join(r.segments[1], "postings", "bucket=*"))
+    assert 0 < len(seg_buckets) < 32
+    for terms, mode in [
+        (["import"], P.EXACT_MATCH),
+        (["zzsmall"], P.EXACT_MATCH),
+        (["import", "zzsmall", "return", "def"], P.WITH_SUGGESTIONS),
+        (["import", "zzsmall"], P.AND_MATCH),
+        (["im", "zz"], P.START_WITH),
+        (["nosuchterm"], P.EXACT_MATCH),
+    ]:
+        local_calls.clear()
+        local = _ranked(r.search(terms, mode, k=20).collect())
+        assert local_calls == ([] if terms == ["nosuchterm"] else [True]), terms
+        dist = r.search(terms, mode, k=20, local_max_postings=0).collect()
+        assert _ranked(dist) == local, (terms, mode)
+        if terms != ["nosuchterm"]:
+            assert local, terms
+
+
 def test_local_path_job_counts(synth_index, jobs_of):
     """On a warm reader (dictionary, doclens and tombstones cached) a
-    driver-local search costs exactly its postings scan; the result
-    frame, the skipped metadata frame and every empty result are
-    zero-job local relations."""
+    driver-local search runs no Spark job: its postings rows are read
+    with pyarrow, and the result frame, the skipped metadata frame and
+    every empty result are zero-job local relations."""
     terms = ["import", "return"]
     synth_index.search(terms, P.WITH_SUGGESTIONS, k=10).collect()  # warm
     assert synth_index._dict_expand(terms, P.WITH_SUGGESTIONS) is not None
     rows, n_jobs = jobs_of(
         lambda: synth_index.search(terms, P.WITH_SUGGESTIONS, k=10).collect()
     )
-    assert len(rows) == 10 and n_jobs == 1
+    assert len(rows) == 10 and n_jobs == 0
     rows, n_jobs = jobs_of(
         lambda: synth_index.search([], P.EXACT_MATCH, k=10).collect()
     )
@@ -228,8 +276,8 @@ def test_uncached_local_search_runs_one_shuffle_free_job(
     spark, synth_index, monkeypatch, job_stages_of
 ):
     """Without the full cached dictionary a warm driver-local search
-    costs only its postings scan (the dictionary head bounds Σ df and
-    ``bucket_of`` routes the terms): one job of one stage, and the
+    runs no Spark job (the dictionary head bounds Σ df, ``bucket_of``
+    routes the terms and pyarrow reads their postings rows), with the
     cached-dictionary reader's exact answer."""
     terms = ["import", "return", "def"]
     want = _ranked(synth_index.search(terms, P.WITH_SUGGESTIONS, k=10).collect())
@@ -239,7 +287,7 @@ def test_uncached_local_search_runs_one_shuffle_free_job(
         lambda: r.search(terms, P.WITH_SUGGESTIONS, k=10).collect()
     )
     assert _ranked(rows) == want and len(want) == 10
-    assert stages == [1]
+    assert stages == []
     for mode in (P.EXACT_MATCH, P.AND_MATCH, P.START_WITH):
         q = ["im"] if mode == P.START_WITH else terms[:2]
         got = _ranked(r.search(q, mode, k=10).collect())
@@ -375,8 +423,8 @@ _HEAD_CAP = 512  # below the synth vocabulary; T = ⌈total_dl / 512⌉ ≈ 46
 def test_head_search_matches_full_dictionary(
     spark, two_seg_index, monkeypatch, jobs_of
 ):
-    """Past the cap, warm EXACT/OR/AND queries run one postings scan
-    and return the full-dictionary reader's ids and bit-equal scores,
+    """Past the cap, warm EXACT/OR/AND queries run no Spark job and
+    return the full-dictionary reader's ids and bit-equal scores,
     tombstones and a segment-local term included."""
     full = two_seg_index
     r = _uncached_reader(spark, full, monkeypatch, cap=_HEAD_CAP)
@@ -394,7 +442,7 @@ def test_head_search_matches_full_dictionary(
         r.search(terms, mode, k=10).collect()  # warm doclens
         rows, n_jobs = jobs_of(lambda: r.search(terms, mode, k=10).collect())
         assert _ranked(rows) == want, (terms, mode)
-        assert n_jobs == 1, (terms, mode)
+        assert n_jobs == 0, (terms, mode)
     assert r._ensure_dict() is None
 
 
@@ -600,6 +648,22 @@ def test_doc_terms_reverse_lookup(fixture_index, fixture_corpus, spark):
     got = {r["term"]: r["tf"] for r in reader.doc_terms(3).collect()}
     assert got == dict(want)
     assert reader.doc_terms(99999).count() == 0
+
+
+def test_warm_doc_terms_checks_tombstones_without_a_job(
+    spark, two_seg_index, jobs_of
+):
+    """On a tombstoned index a warm ``doc_terms`` reads the cached
+    tombstone arrays: a live doc costs only its postings job, a deleted
+    one no job and no rows."""
+    r = IndexReader(spark, two_seg_index.paths.root)
+    dels = r._dels_cached()  # loads the tombstone arrays
+    deleted = {int(d) for ids in dels.values() for d in ids}
+    live = min(set(range(1, 64)) - deleted)  # doc ids start at 1
+    rows, n_jobs = jobs_of(lambda: r.doc_terms(live).collect())
+    assert rows and n_jobs == 1
+    rows, n_jobs = jobs_of(lambda: r.doc_terms(min(deleted)).collect())
+    assert rows == [] and n_jobs == 0
 
 
 def test_custom_tokenizer_registry(spark, tmp_path):

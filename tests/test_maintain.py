@@ -795,34 +795,42 @@ def _old_layout_copy(spark, src, dst):
     assert {codec(f) for f in docs} == {"SNAPPY"}
 
 
-def test_old_layout_index_stays_readable(spark, synth_base, tmp_path):
+def test_old_layout_index_stays_readable(
+    spark, synth_base, tmp_path, local_calls
+):
     """An index in the pre-zstd layout (uncompressed postings in several
     files per bucket, snappy docs) answers every query with the rows
     and exact scores of the same index in the current layout, also as
-    the base segment of an upsert snapshot; compact of it writes the
-    current layout."""
+    the base segment of an upsert snapshot; its driver-local answers
+    equal its distributed ones; compact of it writes the current
+    layout."""
     d0, corpus = synth_base
     old = str(tmp_path / "old")
     _old_layout_copy(spark, d0, old)
+    queries = (
+        (["import"], P.EXACT_MATCH),
+        (["import", "return", "def"], P.WITH_SUGGESTIONS),
+        (["import", "def"], P.AND_MATCH),
+        (["ret"], P.START_WITH),
+    )
 
-    def answers(d):
+    def answers(d, **kw):
         r = IndexReader(spark, d)
         return [
             [
                 (x["doc_id"], x["score"])
-                for x in r.search(terms, mode, k=20).orderBy("rank").collect()
+                for x in r.search(terms, mode, k=20, **kw)
+                .orderBy("rank").collect()
             ]
-            for terms, mode in (
-                (["import"], P.EXACT_MATCH),
-                (["import", "return", "def"], P.WITH_SUGGESTIONS),
-                (["import", "def"], P.AND_MATCH),
-                (["ret"], P.START_WITH),
-            )
+            for terms, mode in queries
         ]
 
     want = answers(d0)
     assert all(want)
+    local_calls.clear()
     assert answers(old) == want
+    assert local_calls == [True] * len(queries)
+    assert answers(old, local_max_postings=0) == want
 
     batch = corpus.where(F.col("doc_id") <= 40).select(
         "repo", "path", "commit", "lang",

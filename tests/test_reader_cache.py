@@ -4,6 +4,7 @@ and the process-wide per-segment driver cache (``query._SEGMENT_CACHE``).
 Job counts are read off the SparkContext's job counter
 (``spark_jobs_of``), so every job a call starts counts."""
 
+import inspect
 import os
 import pathlib
 import re
@@ -13,7 +14,12 @@ import pytest
 
 from spark_search import pipeline as P
 from spark_search import query as Q
-from spark_search.build import build_index, build_job_group, sub_schema
+from spark_search.build import (
+    build_index,
+    build_job_group,
+    read_postings_local,
+    sub_schema,
+)
 from spark_search.build import TOMBSTONES_SCHEMA
 from spark_search.corpus import CORPUS_SCHEMA, synthetic_corpus
 from spark_search.ids import with_doc_ids
@@ -68,23 +74,23 @@ def base_dir(spark, synth, tmp_path_factory):
 def test_cold_then_cached_reader_first_query_jobs(
     spark, base_dir, spark_jobs_of
 ):
-    """In a fresh process state a first exact query runs ≤ 3 jobs (the
-    dictionary, the postings scan, the doclens): no schema inference. A
-    second reader of the same snapshot answers its first query with the
-    postings scan alone, with the first reader's rows and scores, which
-    are the distributed plan's."""
+    """In a fresh process state a first exact query runs ≤ 2 jobs (the
+    dictionary, the doclens; pyarrow reads the postings rows): no
+    schema inference. A second reader of the same snapshot answers its
+    first query with no Spark job, with the first reader's rows and
+    scores, which are the distributed plan's."""
     terms = ["import"]
     Q._SEGMENT_CACHE.clear()
     first, n_cold = spark_jobs_of(
         lambda: IndexReader(spark, base_dir)
         .search(terms, P.EXACT_MATCH, k=10).collect()
     )
-    assert first and n_cold <= 3
+    assert first and n_cold <= 2
     second, n_cached = spark_jobs_of(
         lambda: IndexReader(spark, base_dir)
         .search(terms, P.EXACT_MATCH, k=10).collect()
     )
-    assert n_cached == 1
+    assert n_cached == 0
     dist = IndexReader(spark, base_dir).search(
         terms, P.EXACT_MATCH, k=10, local_max_postings=0
     ).collect()
@@ -255,10 +261,24 @@ _SCHEMALESS_INDEX_READ = re.compile(
 )
 
 
+# a pyarrow parquet read in any spelling: the reader calls, and every
+# import that binds pyarrow's parquet or dataset module (or a name from
+# them) under any alias
+_PYARROW_READ = re.compile(
+    r"\b(?:pq|parquet)\.(?:read_table|read_pandas|ParquetFile|ParquetDataset)\("
+    r"|\b(?:ds|dataset)\.(?:dataset|FileSystemDataset)\b"
+    r"|^\s*(?:import|from)\s+pyarrow\.(?:parquet|dataset)\b"
+    r"|^\s*from\s+pyarrow\s+import\s+[^\n]*\b(?:parquet|dataset)\b",
+    re.M,
+)
+
+
 def test_index_sub_dirs_are_read_only_through_build_py():
     """Guard: outside build.py no program file reads an index sub-dir
-    or a tombstone dir with a schema-inferring ``spark.read.parquet``;
-    they go through ``read_segments`` / ``read_tombstones``."""
+    or a tombstone dir with a schema-inferring ``spark.read.parquet``
+    (they go through ``read_segments`` / ``read_tombstones``) or with
+    pyarrow (``read_postings_local``, the only pyarrow reader in
+    build.py, is the driver-side read)."""
     assert _SCHEMALESS_INDEX_READ.search(
         'spark.read.parquet(os.path.join(d, "postings"))'
     )
@@ -266,6 +286,27 @@ def test_index_sub_dirs_are_read_only_through_build_py():
     assert not _SCHEMALESS_INDEX_READ.search(
         'spark.read.parquet(f"{sf_dir}/documents.parquet")'
     )
+    for read in (
+        'pq.read_table(os.path.join(seg, "postings"))',
+        "pq.ParquetFile(path)",
+        "pyarrow.parquet.read_table(path)",
+        "pyarrow.dataset.dataset(paths)",
+        "ds.dataset(paths, format='parquet')",
+        "ds.FileSystemDataset.from_paths(paths)",
+        "import pyarrow.parquet as pyq",
+        "import pyarrow.dataset as pads",
+        "from pyarrow import parquet as pqt",
+        "from pyarrow.parquet import read_table as rt",
+        "    from pyarrow import dataset",
+    ):
+        assert _PYARROW_READ.search(read), read
+    for other in (
+        "import pyarrow as pa",
+        "pa.table({'term': terms})",
+        "from pyspark.sql.pandas.types import to_arrow_schema",
+        'spark.read.parquet(f"{sf_dir}/documents.parquet")',
+    ):
+        assert not _PYARROW_READ.search(other), other
     root = pathlib.Path(__file__).resolve().parent.parent
     files = sorted((root / "spark_search").rglob("*.py")) + sorted(
         root.glob("*.py")
@@ -275,6 +316,12 @@ def test_index_sub_dirs_are_read_only_through_build_py():
         for path in files
         if path.name != "build.py"
         for src in [path.read_text()]
-        for m in _SCHEMALESS_INDEX_READ.finditer(src)
+        for pat in (_SCHEMALESS_INDEX_READ, _PYARROW_READ)
+        for m in pat.finditer(src)
     ]
     assert not offenders, offenders
+    build_src = (root / "spark_search" / "build.py").read_text()
+    reader_src = inspect.getsource(read_postings_local)
+    assert len(_PYARROW_READ.findall(build_src)) == len(
+        _PYARROW_READ.findall(reader_src)
+    ) > 0
