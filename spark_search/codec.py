@@ -8,7 +8,10 @@ docID-sorted, delta-encoded, varint-compressed blocks with a per-block
 
 All encode/decode work is numpy array arithmetic (no per-element Python
 loops over values — only over the ≤9 varint byte positions), so it is
-fast inside Arrow-batched pandas UDFs.
+fast inside Arrow-batched pandas UDFs. Every batched decode runs one
+decoder, ``_decode``: ``decode_column`` feeds it a pyarrow ``blocks``
+column's buffers as numpy views, ``decode_rows`` and ``decode_blocks``
+feed it block structs already converted to Python.
 """
 
 from __future__ import annotations
@@ -26,10 +29,7 @@ def varint_encode(values: np.ndarray) -> bytes:
     a = np.ascontiguousarray(values, dtype=np.uint64)
     if a.size == 0:
         return b""
-    # exact byte length per value: 1 + number of 7-bit groups above the first
-    nbytes = np.ones(a.shape, dtype=np.int64)
-    for j in range(1, 10):
-        nbytes += (a >= np.uint64(1) << np.uint64(7 * j)).astype(np.int64)
+    nbytes = _varint_nbytes(a)
     offsets = np.zeros(a.size, dtype=np.int64)
     np.cumsum(nbytes[:-1], out=offsets[1:])
     out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
@@ -43,22 +43,24 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode LEB128 bytes back to a uint64 array (vectorized)."""
+def varint_decode(buf) -> np.ndarray:
+    """Decode LEB128 bytes (any bytes-like, or a uint8 array) back to a
+    uint64 array; bytes after the last terminator are ignored. A buffer
+    of one-byte values is its own decoding; otherwise each continuation
+    pass touches only the values still longer than its byte position."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    ends = np.flatnonzero((b & 0x80) == 0)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(ends.size, dtype=np.uint64)
-    for j in range(int(lengths.max())):
-        mask = lengths > j
-        vals[mask] |= (b[starts[mask] + j] & np.uint64(0x7F)).astype(
-            np.uint64
-        ) << np.uint64(7 * j)
+    if b.size == 0 or b.max() < 0x80:
+        return b.astype(np.uint64)
+    ends = np.flatnonzero(b < 0x80)
+    starts = np.append(0, ends[:-1] + 1)
+    vals = (b[starts] & 0x7F).astype(np.uint64)
+    multi = np.flatnonzero(ends > starts)
+    j = 1
+    while multi.size:
+        at = starts[multi] + j
+        vals[multi] |= (b[at] & 0x7F).astype(np.uint64) << np.uint64(7 * j)
+        multi = multi[at < ends[multi]]
+        j += 1
     return vals
 
 
@@ -108,39 +110,95 @@ def decode_block(
     return doc_ids, tfs
 
 
-def decode_blocks(blocks) -> Tuple[np.ndarray, np.ndarray]:
-    """Batch form of :func:`decode_block` over a sequence of block
-    structs (``first_doc``, ``deltas``, ``tfs`` fields) -> the
-    concatenated (doc_ids, tfs), element-wise identical to decoding
-    each block and concatenating (tested).
+def _decode(
+    firsts: np.ndarray, dbytes: np.ndarray, dstarts: np.ndarray,
+    tbytes: np.ndarray, row_ends: np.ndarray,
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one batched block decoder: block i's ``deltas`` bytes start
+    at ``dbytes[dstarts[i]]``, its ``tfs`` bytes follow the previous
+    block's in ``tbytes``, row r's blocks end before block
+    ``row_ends[r]`` -> (doc_ids, tfs, offsets), row r's postings at
+    ``[offsets[r], offsets[r + 1])``; per block as :func:`decode_block`.
 
-    One varint pass over the joined ``deltas`` bytes and one over the
-    joined ``tfs`` bytes, then a segmented cumsum: block boundaries are
-    the value counts of each block's bytes (one terminator byte per
-    varint), each block's leading 0 delta is its reset point, and its
-    ``first_doc`` is added back per value. The cumsum may wrap on
-    int64 only when the running total does; the per-block difference
-    taken from it is exact modulo 2^64 and the true value fits, so the
-    ids are exact either way."""
-    if len(blocks) == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    dparts = [b["deltas"] for b in blocks]
-    dbuf = b"".join(dparts)
-    d = varint_decode(dbuf).astype(np.int64)
-    tfs = varint_decode(b"".join(b["tfs"] for b in blocks)).astype(np.int64)
-    # value index of each block's first delta = terminator bytes before it
-    byte_starts = np.zeros(len(dparts), dtype=np.int64)
-    np.cumsum([len(p) for p in dparts[:-1]], out=byte_starts[1:])
-    ends = np.flatnonzero(np.frombuffer(dbuf, dtype=np.uint8) < 0x80)
-    starts = np.searchsorted(ends, byte_starts)
-    counts = np.diff(np.append(starts, d.size))
-    firsts = np.fromiter(
-        (b["first_doc"] for b in blocks), dtype=np.int64, count=len(blocks)
-    )
+    One varint pass per column, then a segmented cumsum (a block starts
+    at the value index of its first byte and resets at its leading 0
+    delta). The cumsum may wrap on int64, but each block's difference
+    taken from it is exact modulo 2^64 and the true id fits."""
+    d = varint_decode(dbytes).view(np.int64)
+    tfs = varint_decode(tbytes).view(np.int64)
+    if d.size == dbytes.size:  # every byte is a terminator
+        starts = dstarts.astype(np.int64)
+    else:
+        starts = np.searchsorted(np.flatnonzero(dbytes < 0x80), dstarts)
+    ends = np.append(starts, d.size)
     d[starts] = 0
-    cs = np.cumsum(d)
-    doc_ids = np.repeat(firsts - cs[starts], counts) + cs
-    return doc_ids, tfs
+    np.cumsum(d, out=d)
+    d += np.repeat(firsts - d[starts], np.diff(ends))
+    return d, tfs, np.append(0, ends[row_ends])
+
+
+def _cat(parts: List[np.ndarray], dtype) -> np.ndarray:
+    if len(parts) == 1:
+        return parts[0]
+    return np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
+
+
+def _binary(arr) -> Tuple[np.ndarray, np.ndarray]:
+    """A pyarrow binary array -> (its values' bytes end to end, each
+    value's start in them), as numpy views of its buffers."""
+    _, offs, data = arr.buffers()
+    o = np.frombuffer(offs, dtype=np.int32)[arr.offset : arr.offset + len(arr) + 1]
+    b = np.frombuffer(data or b"", dtype=np.uint8)
+    return b[o[0] : o[-1]], o[:-1] - o[0]
+
+
+def decode_column(blocks) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every block of a pyarrow ``blocks`` column (a list<struct> Array
+    or ChunkedArray, sliced or not) -> (doc_ids, tfs, offsets) as
+    :func:`_decode` gives them. ``first_doc``, ``deltas`` and ``tfs``
+    are read as numpy views of the Arrow buffers; the only copies join
+    the chunks of a ChunkedArray."""
+    firsts, dparts, dstarts, tparts, row_ends = [], [], [], [], []
+    n_blocks = n_bytes = 0
+    for arr in getattr(blocks, "chunks", [blocks]):
+        lo = arr.offsets.to_numpy()
+        structs = arr.values.slice(lo[0], lo[-1] - lo[0])
+        row_ends.append(lo[1:] - lo[0] + n_blocks)
+        n_blocks += len(structs)
+        firsts.append(structs.field("first_doc").to_numpy())
+        dbytes, starts = _binary(structs.field("deltas"))
+        dparts.append(dbytes)
+        dstarts.append(starts + n_bytes)
+        n_bytes += dbytes.size
+        tparts.append(_binary(structs.field("tfs"))[0])
+    return _decode(
+        _cat(firsts, np.int64), _cat(dparts, np.uint8),
+        _cat(dstarts, np.int64), _cat(tparts, np.uint8),
+        _cat(row_ends, np.int64),
+    )
+
+
+def decode_rows(rows) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`decode_column` for rows already converted to Python: a
+    sequence of rows, each a sequence of block structs (mappings with
+    ``first_doc``, ``deltas`` and ``tfs``), as pandas and Spark rows
+    hold them."""
+    blocks = [b for row in rows for b in row]
+    dparts = [b["deltas"] for b in blocks]
+    dstarts = np.zeros(len(blocks), dtype=np.int64)
+    np.cumsum([len(p) for p in dparts[:-1]], out=dstarts[1:])
+    return _decode(
+        np.array([b["first_doc"] for b in blocks], dtype=np.int64),
+        np.frombuffer(b"".join(dparts), dtype=np.uint8),
+        dstarts,
+        np.frombuffer(b"".join(b["tfs"] for b in blocks), dtype=np.uint8),
+        np.cumsum([len(row) for row in rows], dtype=np.int64),
+    )
+
+
+def decode_blocks(blocks) -> Tuple[np.ndarray, np.ndarray]:
+    """One row of block structs -> the concatenated (doc_ids, tfs)."""
+    return decode_rows([blocks])[:2]
 
 
 def encode_positions_batch(pos_lists: List) -> List[bytes]:

@@ -35,7 +35,7 @@ def _cell(v, sql_type: str) -> str:
         return repr(f) + "D"
     if sql_type == "STRING":
         return f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
-    return f"CAST({int(v)} AS {sql_type})"
+    return f"{int(v)}L" if sql_type == "BIGINT" else str(int(v))
 
 
 def literal_frame(
@@ -48,15 +48,17 @@ def literal_frame(
     parallelize. ``fields`` is ``[(name, type), ...]`` with type one of
     string / double / long / int.
 
-    The rows render as ``SELECT CAST(col1 AS T) AS `name`, … FROM
-    VALUES (…), …``; the empty case is ``SELECT CAST(NULL AS T) AS
-    `name`, … WHERE false`` with the same schema. Literal rules:
+    The rows render as ``SELECT * FROM VALUES (…), … AS t(`name`,
+    …)`` with typed literals, so each column's type is its literals'
+    type and Spark parses no per-column cast; the empty case is
+    ``SELECT CAST(NULL AS T) AS `name`, … WHERE false`` with the same
+    schema. Literal rules:
 
     * doubles — ``repr(float(v)) + "D"``, Python's shortest round-trip
       form, which Java's ``parseDouble`` reads back to the identical
       bits; NaN / ±Infinity as ``CAST('NaN' AS DOUBLE)`` and the like;
-    * longs / ints — ``CAST(n AS BIGINT|INT)``; ``None`` in any column
-      is a typed ``CAST(NULL AS T)``;
+    * longs — ``nL``; ints — a plain ``n``; ``None`` in any column is
+      a typed ``CAST(NULL AS T)``;
     * strings are query input and are NEVER spliced in as quoted text:
       each renders as its UTF-8 hex, ``CAST(X'…' AS STRING)`` —
       injection-proof by construction;
@@ -78,12 +80,8 @@ def literal_frame(
     if not rows:
         cols = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in zip(names, types))
         return spark.sql(f"SELECT {cols} WHERE false")
-    cols = ", ".join(
-        f"CAST(col{i + 1} AS {t}) AS {n}"
-        for i, (n, t) in enumerate(zip(names, types))
-    )
     values = ", ".join(
         "(" + ", ".join(_cell(v, t) for v, t in zip(row, types)) + ")"
         for row in rows
     )
-    return spark.sql(f"SELECT {cols} FROM VALUES {values}")
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({', '.join(names)})")

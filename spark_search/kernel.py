@@ -1,27 +1,28 @@
-"""The BM25 chunk kernel: numpy only, shared by every index scoring path.
+"""The BM25 kernel: numpy only, shared by every index scoring path.
 
-A chunk is ``chunk_span`` consecutive doc ids starting at ``base``; its
-doc lengths ``dls`` index by position (doc_id - base). A kernel row is
-one (term, chunk) postings row as ``(term, idf, blocks)``.
-
-Rows always accumulate in sorted-term order, one batched
-``decode_blocks`` and one scatter-add per row. Float addition is not
-associative and a shuffle does not order rows within a group, so this
-fixed order is what makes the driver-local, distributed and batched
-paths score bit-identically and every search deterministic.
+Its input is :class:`Rows`, a query's (term, chunk) postings rows in
+columnar form, decoded in one pass (``codec.decode_column`` or
+``codec.decode_rows``). A chunk is ``chunk_span`` consecutive doc ids;
+its doc lengths index by position in it. Every touched chunk
+accumulates into one span buffer: per-posting BM25 over all postings at
+once, then one weighted ``np.bincount`` over postings stably ordered by
+term. ``np.bincount`` adds in input order and a (term, chunk) pair has
+one row, so each doc's terms add from 0.0 in sorted-term order on every
+path. Float addition is not associative and a shuffle does not order
+rows within a group, so this fixed order is what makes the driver-local,
+distributed and batched paths score bit-identically.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Optional, Tuple
+from typing import Dict, NamedTuple, Optional, Tuple
 
 import numpy as np
 
-from .codec import decode_blocks
 from .pipeline import B, K1
 
 
-def _score_np(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
+def _score_np(tf: np.ndarray, dl: np.ndarray, idf, avgdl: float) -> np.ndarray:
     # avgdl == 0 only when every live doc is empty/deleted; any match then
     # has tf == 0 so the score is 0 regardless — substitute 1.0 rather
     # than emit a numpy divide warning on the degenerate index.
@@ -29,57 +30,93 @@ def _score_np(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.nd
     return idf * tf * (K1 + 1.0) / denom
 
 
-def contributions(
-    rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float
-) -> Iterator[Tuple[str, np.ndarray, np.ndarray]]:
-    """(term, positions, contributions) per row, in sorted-term order."""
-    for term, idf, blocks in sorted(rows, key=lambda r: r[0]):
-        doc_ids, tfs = decode_blocks(blocks)
-        pos = doc_ids - base
-        yield term, pos, _score_np(
-            tfs.astype(np.float64), dls[pos], float(idf), avgdl
+class Rows(NamedTuple):
+    """(term, chunk) postings rows in columnar form. Per row: ``terms``
+    (any keys that sort in term order), ``idf`` and ``chunk``; row r's
+    postings are ``doc_ids``/``tfs`` ``[offsets[r]:offsets[r + 1]]``."""
+
+    terms: np.ndarray
+    idf: np.ndarray
+    chunk: np.ndarray
+    doc_ids: np.ndarray
+    tfs: np.ndarray
+    offsets: np.ndarray
+
+    def take(self, sel: np.ndarray) -> "Rows":
+        """The rows ``sel``, in that order, with their postings."""
+        sizes = np.diff(self.offsets)[sel]
+        offsets = np.append(0, np.cumsum(sizes, dtype=np.int64))
+        idx = np.repeat(self.offsets[sel] - offsets[:-1], sizes) + np.arange(offsets[-1])
+        return Rows(
+            self.terms[sel], self.idf[sel], self.chunk[sel],
+            self.doc_ids[idx], self.tfs[idx], offsets,
         )
 
 
-def add(
-    scores: np.ndarray, counts: np.ndarray,
-    parts: Iterable[Tuple[str, np.ndarray, np.ndarray]],
-) -> None:
-    """Scatter-add each part into the chunk's span buffers. A term's
-    positions are unique, so each posting adds exactly once."""
-    for _, pos, contrib in parts:
-        scores[pos] += contrib
-        counts[pos] += 1
+def _accumulate(
+    rows: Rows, dls_by_chunk: Dict[int, np.ndarray], chunk_span: int,
+    avgdl: float, need: int = 0,
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """-> (scores, matched-term counts, or a matched mask when ``need``
+    is 0, chunks, starts) of one span buffer: touched chunk ``chunks[i]``
+    sits at slots ``[starts[i], starts[i + 1])``, by position. Rows of a
+    chunk without doc lengths are left out."""
+    chunks = np.unique(rows.chunk)
+    chunks = chunks[[c in dls_by_chunk for c in chunks.tolist()]]
+    dls = [dls_by_chunk[c] for c in chunks.tolist()]
+    starts = np.append(0, np.cumsum([d.size for d in dls], dtype=np.int64))
+    order = np.flatnonzero(np.isin(rows.chunk, chunks))
+    order = order[np.argsort(rows.terms[order], kind="stable")]
+    if order.size != rows.chunk.size or (np.diff(order) != 1).any():
+        rows = rows.take(order)
+    sizes = np.diff(rows.offsets)
+    slot = rows.doc_ids + np.repeat(
+        starts[np.searchsorted(chunks, rows.chunk)] - rows.chunk * chunk_span,
+        sizes,
+    )
+    contrib = _score_np(
+        rows.tfs.astype(np.float64),
+        (np.concatenate(dls) if dls else np.empty(0))[slot],
+        np.repeat(rows.idf, sizes), avgdl,
+    )
+    n = int(starts[-1])
+    if need:
+        counts = np.bincount(slot, minlength=n)
+    else:
+        counts = np.zeros(n, dtype=bool)
+        counts[slot] = True
+    return np.bincount(slot, weights=contrib, minlength=n), counts, chunks, starts
 
 
-def accumulate(
-    rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float
+def score(
+    rows: Rows, dls_by_chunk: Dict[int, np.ndarray], chunk_span: int,
+    avgdl: float, dels: Optional[Dict[int, np.ndarray]] = None,
+    allow: Optional[Dict[int, np.ndarray]] = None, need: int = 0,
+    keep: Optional[int] = None,
 ) -> Tuple[np.ndarray, np.ndarray]:
-    """-> (scores, matched-term counts) over the chunk's span."""
-    scores = np.zeros(dls.size, dtype=np.float64)
-    counts = np.zeros(dls.size, dtype=np.int32)
-    add(scores, counts, contributions(rows, dls, base, avgdl))
-    return scores, counts
+    """One query over every chunk its rows touch -> its hits (doc_ids,
+    scores), doc_id ascending.
 
-
-def finish(
-    scores: np.ndarray, counts: np.ndarray, base: int,
-    dels=None, allow=None, need: int = 0, keep: Optional[int] = None,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """The chunk's hits -> (doc_ids, scores), doc_id ascending unless cut.
-
-    ``dels``: tombstoned doc ids (absolute); ``allow``: allowed
-    positions, or None for all; ``need``: AND_MATCH's term count (0:
-    any matched term qualifies). ``keep`` cuts to the ``keep`` best,
-    keeping every doc tied with the last one, so a global top-k over
-    the chunks' survivors stays exact. ``counts`` is modified."""
-    if dels is not None and len(dels):
-        dp = np.asarray(dels, dtype=np.int64) - base
-        counts[dp[(dp >= 0) & (dp < counts.size)]] = 0
-    if allow is not None:
-        ap = np.asarray(allow, dtype=np.int64)
-        ok = np.zeros(counts.size, dtype=bool)
-        ok[ap[ap < counts.size]] = True
+    ``dels``: chunk -> tombstoned doc ids (absolute; a value may be
+    None); ``allow``: chunk -> allowed positions, or None for all;
+    ``need``: AND_MATCH's term count (0: any matched term qualifies).
+    ``keep`` cuts to the ``keep`` best, keeping every doc tied with the
+    last one, so a top-k over the survivors stays exact."""
+    scores, counts, chunks, starts = _accumulate(
+        rows, dls_by_chunk, chunk_span, avgdl, need
+    )
+    bases, widths = chunks * chunk_span, np.diff(starts)
+    ok = None if allow is None else np.zeros(counts.size, dtype=bool)
+    for i, c in enumerate(chunks.tolist()):
+        d = (dels or {}).get(c)
+        if d is not None:
+            dp = np.asarray(d, dtype=np.int64) - bases[i]
+            counts[starts[i] + dp[(dp >= 0) & (dp < widths[i])]] = 0
+        a = None if ok is None else allow.get(c)
+        if a is not None:
+            ap = np.asarray(a, dtype=np.int64)
+            ok[starts[i] + ap[ap < widths[i]]] = True
+    if ok is not None:
         counts[~ok] = 0
     hit = np.flatnonzero(counts)
     if need:
@@ -90,16 +127,8 @@ def finish(
         sc = scores[hit]
         kth = np.partition(sc, sc.size - keep)[sc.size - keep]
         hit = hit[sc >= kth]
-    return (hit + base).astype(np.int64), scores[hit]
-
-
-def score(
-    rows: Iterable[tuple], dls: np.ndarray, base: int, avgdl: float,
-    dels=None, allow=None, need: int = 0, keep: Optional[int] = None,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """One chunk, one query: ``accumulate`` then ``finish``."""
-    scores, counts = accumulate(rows, dls, base, avgdl)
-    return finish(scores, counts, base, dels, allow, need, keep)
+    at = np.searchsorted(starts, hit, side="right") - 1
+    return hit - starts[at] + bases[at], scores[hit]
 
 
 def topk(
@@ -108,12 +137,3 @@ def topk(
     """The k best by (score desc, doc_id asc), in rank order."""
     order = np.lexsort((ids, -scores))[:k]
     return ids[order], scores[order]
-
-
-def rank_term(
-    ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, idf: float,
-    avgdl: float, k: int,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """One (pseudo-)term's complete match set, e.g. a phrase's, scored
-    and cut to its k best."""
-    return topk(ids, _score_np(tfs, dls, idf, avgdl), k)

@@ -64,7 +64,7 @@ from .build import (
     write_tombstones,
 )
 from .checkpoint import BuildManifest
-from .codec import decode_block, encode_blocks
+from .codec import decode_blocks, encode_blocks
 from .ids import with_doc_ids
 from .stats import CorpusStats
 
@@ -108,25 +108,12 @@ def _check_out_dir(out_dir: str, index_dir: str, segs: List[str]) -> None:
 def _filter_block_rows(blks, drop, block_size):
     """Decode ``blks``, drop postings whose doc_id ∈ ``drop``, re-encode.
     Returns (n_docs, sum_tf, max_tf, out_blocks, rem_ids, rem_tfs)."""
-    ids_all, tfs_all, rem_ids, rem_tfs = [], [], [], []
-    for b in blks:
-        ids, tfs = decode_block(
-            int(b["first_doc"]), bytes(b["deltas"]), bytes(b["tfs"])
-        )
-        hit = np.isin(ids, drop)
-        if hit.any():
-            rem_ids.append(ids[hit])
-            rem_tfs.append(tfs[hit])
-        keep = ~hit
-        if keep.any():
-            ids_all.append(ids[keep])
-            tfs_all.append(tfs[keep])
-    r_ids = np.concatenate(rem_ids) if rem_ids else np.empty(0, np.int64)
-    r_tfs = np.concatenate(rem_tfs) if rem_tfs else np.empty(0, np.int64)
-    if not ids_all:
+    ids, tfs = decode_blocks(blks)
+    hit = np.isin(ids, drop)
+    r_ids, r_tfs = ids[hit], tfs[hit]
+    if hit.all():
         return 0, 0, 0, [], r_ids, r_tfs
-    ids = np.concatenate(ids_all)
-    tfs = np.concatenate(tfs_all)
+    ids, tfs = ids[~hit], tfs[~hit]
     out_blocks = block_structs(encode_blocks(ids, tfs, block_size=block_size))
     return (
         int(ids.size), int(tfs.sum()), int(tfs.max()), out_blocks,

@@ -72,7 +72,7 @@ from .build import (
     write_terms,
 )
 from .checkpoint import BuildManifest
-from .codec import encode_blocks_batch, varint_decode
+from .codec import decode_rows, encode_blocks_batch
 from .progress import dir_bytes
 from .stats import CorpusStats
 
@@ -160,12 +160,11 @@ def _merge_postings_udf(block_size: int, has_plists: bool):
     def merge_srcs(srcs: pd.Series) -> pd.DataFrame:
         # Batch-vectorized across the whole Arrow batch (the codec's
         # encode_blocks_batch pattern, applied to decode+merge too):
-        # one varint decode over ALL blocks' concatenated buffers, one
-        # segment-cumsum to materialize doc ids, one lexsort to
-        # merge-sort every group at once, one batched re-encode. The
-        # per-group Python loop below touches only metadata lists —
-        # measured necessary: the bench's interleaved sf0.1 split puts
-        # 100% of postings through this UDF (single-chunk id space).
+        # one batched decode of ALL blocks (``codec.decode_rows``), one
+        # lexsort to merge-sort every group at once, one batched
+        # re-encode — measured necessary: the bench's interleaved sf0.1
+        # split puts 100% of postings through this UDF (single-chunk id
+        # space).
         n_groups = len(srcs)
         if n_groups == 0:
             data = {
@@ -177,46 +176,14 @@ def _merge_postings_udf(block_size: int, has_plists: bool):
             if has_plists:
                 data["plists"] = []
             return pd.DataFrame(data)
-        first_docs: list = []
-        ns: list = []
-        d_bufs: list = []
-        t_bufs: list = []
-        g_of_block: list = []
-        plists_out: list = []
-        for gi, group in enumerate(srcs):
-            pl: list = []
-            for src in group:
-                for b in src["blocks"]:
-                    first_docs.append(int(b["first_doc"]))
-                    ns.append(int(b["n"]))
-                    d_bufs.append(bytes(b["deltas"]))
-                    t_bufs.append(bytes(b["tfs"]))
-                    g_of_block.append(gi)
-                if has_plists and src["plists"] is not None:
-                    pl.extend(src["plists"])
-            if has_plists:
-                plists_out.append(
-                    sorted(pl, key=lambda e: int(e["doc_id"]))
-                )
-        ns_arr = np.asarray(ns, dtype=np.int64)
-        # LEB128 is self-delimiting: decoding the concatenation yields
-        # exactly sum(ns) values in block order
-        vals = varint_decode(b"".join(d_bufs)).astype(np.int64)
-        tfs = varint_decode(b"".join(t_bufs)).astype(np.int64)
-        starts = np.zeros(ns_arr.size, dtype=np.int64)
-        np.cumsum(ns_arr[:-1], out=starts[1:])
-        vals[starts] = first_docs  # encoded first delta is 0
-        cum = np.cumsum(vals)
-        prev = np.empty_like(cum)
-        prev[0] = 0
-        prev[1:] = cum[:-1]
-        doc_ids = cum - np.repeat(prev[starts], ns_arr)
-        g = np.repeat(np.asarray(g_of_block, dtype=np.int64), ns_arr)
+        doc_ids, tfs, offsets = decode_rows(
+            [[b for src in group for b in src["blocks"]] for group in srcs]
+        )
+        counts = np.diff(offsets)
+        g = np.repeat(np.arange(n_groups, dtype=np.int64), counts)
         order = np.lexsort((doc_ids, g))
         doc_ids, tfs = doc_ids[order], tfs[order]
-        counts = np.bincount(g, minlength=n_groups)
-        g_starts = np.zeros(n_groups, dtype=np.int64)
-        np.cumsum(counts[:-1], out=g_starts[1:])
+        g_starts = offsets[:-1]  # the lexsort keeps each group in place
         enc = encode_blocks_batch(
             np.split(doc_ids, g_starts[1:]),
             np.split(tfs, g_starts[1:]),
@@ -232,7 +199,14 @@ def _merge_postings_udf(block_size: int, has_plists: bool):
             "blocks": blocks_out,
         }
         if has_plists:
-            data["plists"] = plists_out
+            data["plists"] = [
+                sorted(
+                    (e for src in group if src["plists"] is not None
+                     for e in src["plists"]),
+                    key=lambda e: int(e["doc_id"]),
+                )
+                for group in srcs
+            ]
         return pd.DataFrame(data)
 
     return merge_srcs

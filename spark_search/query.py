@@ -18,9 +18,11 @@ Query lifecycle (SURVEY.md §3.1 Spark plan):
   ≤ ``_LOCAL_MAX_CHUNKS`` chunks, the rest runs on the driver with no
   Spark job: pyarrow reads the matched blocks and their ``n_docs``
   (df is their sum, so idf needs no metadata) from the routed bucket
-  files of each segment (``build.read_postings_local``), each (chunk,
-  term) row decodes in one batched pass (``codec.decode_blocks``),
-  scores in numpy and is cut to its chunk's k best. Past the
+  files of each segment (``build.read_postings_local``). One columnar
+  pass decodes every matched block from the Arrow buffers
+  (``codec.decode_column``) and scores all touched chunks in one span
+  buffer with one tie-kept cut, bit-identical to the other paths
+  (``kernel.py`` says why). Past the
   full-dictionary cap an exact/OR/AND query skips the lookup: the
   cached df ≥ T dictionary head bounds its Σ df and
   ``build.bucket_of`` routes its terms (``_DICT_CACHE_CAP``). A warm
@@ -87,7 +89,12 @@ from .build import (
     tombstones_by_chunk,
 )
 from .checkpoint import MANIFEST, BuildManifest
-from .codec import decode_block, decode_blocks, decode_positions
+from .codec import (
+    decode_blocks,
+    decode_column,
+    decode_positions,
+    decode_rows,
+)
 from .frames import RESULT_FIELDS, literal_frame
 from .pipeline import (
     AND_MATCH,
@@ -442,15 +449,21 @@ def _hits_frame(ids: np.ndarray, scores: np.ndarray, qid=None) -> pd.DataFrame:
     return pd.DataFrame(out if qid is None else {"query_id": qid, **out})
 
 
-def _chunk_of(pdf: pd.DataFrame, span: int) -> Tuple[int, np.ndarray]:
-    """A chunk group's (first doc id, doc lengths)."""
+def _chunk_of(pdf: pd.DataFrame) -> Tuple[int, np.ndarray]:
+    """A chunk group's (chunk, doc lengths)."""
     dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32)
-    return int(pdf["chunk"].iloc[0]) * span, dls.astype(np.float64)
+    return int(pdf["chunk"].iloc[0]), dls.astype(np.float64)
 
 
-def _kernel_rows(pdf: pd.DataFrame):
-    """A chunk group's postings rows as kernel rows."""
-    return zip(pdf["term"], pdf["idf"], pdf["blocks"])
+def _kernel_rows(pdf: pd.DataFrame) -> kernel.Rows:
+    """A chunk group's postings rows as kernel rows, decoded at once."""
+    doc_ids, tfs, offsets = decode_rows(pdf["blocks"])
+    return kernel.Rows(
+        pdf["term"].to_numpy(dtype=object),
+        pdf["idf"].to_numpy(dtype=np.float64),
+        pdf["chunk"].to_numpy(dtype=np.int64),
+        doc_ids, tfs, offsets,
+    )
 
 
 def _chunk_scorer(span: int, avgdl: float, keep, need=None):
@@ -460,12 +473,12 @@ def _chunk_scorer(span: int, avgdl: float, keep, need=None):
     count; a query_id column is kept on the output."""
 
     def body(pdf: pd.DataFrame) -> pd.DataFrame:
-        base, dls = _chunk_of(pdf, span)
+        chunk, dls = _chunk_of(pdf)
         qid = pdf["query_id"].iloc[0] if "query_id" in pdf else None
         ids, scores = kernel.score(
-            _kernel_rows(pdf), dls, base, avgdl,
-            pdf["_dels"].iloc[0],
-            pdf["_allow"].iloc[0] if "_allow" in pdf else None,
+            _kernel_rows(pdf), {chunk: dls}, span, avgdl,
+            {chunk: pdf["_dels"].iloc[0]},
+            {chunk: pdf["_allow"].iloc[0]} if "_allow" in pdf else None,
             need[qid] if need else 0, keep,
         )
         return _hits_frame(ids, scores, qid)
@@ -963,8 +976,8 @@ class IndexReader:
         docID set contains the id, reference
         tree/SearchEngineConcurrentTree.java:203-233). Here chunk
         pruning reduces the scan to the doc's single chunk, and the
-        per-row block range [first_doc, last_doc] skips non-covering
-        blocks before any decode."""
+        row's block range [first_doc, last_doc] skips non-covering rows
+        before any decode."""
         span = self.chunk_span
         chunk = doc_id // span
         if doc_id in self._dels_for([chunk]).get(chunk, ()):
@@ -973,30 +986,20 @@ class IndexReader:
 
         @F.pandas_udf("int")
         def tf_of(blocks: pd.Series) -> pd.Series:
-            out = []
-            for blks in blocks:
-                v = None
-                for b in blks:
-                    if int(b["first_doc"]) <= target <= int(b["last_doc"]):
-                        ids, tfs = decode_block(
-                            int(b["first_doc"]),
-                            bytes(b["deltas"]),
-                            bytes(b["tfs"]),
-                        )
-                        i = int(np.searchsorted(ids, target))
-                        if i < ids.size and ids[i] == target:
-                            v = int(tfs[i])
-                        break
-                out.append(v)
-            return pd.Series(out, dtype="Int32")
+            """The target's tf in each row; 0 where the row lacks it."""
+            ids, tfs, offsets = decode_rows(blocks)
+            hit = np.flatnonzero(ids == target)
+            tf = np.zeros(len(blocks), dtype=np.int32)
+            tf[np.searchsorted(offsets, hit, side="right") - 1] = tfs[hit]
+            return pd.Series(tf)
 
         # JVM-side covering-range prefilter BEFORE the Arrow UDF: blocks
         # are doc-sorted, so a term can contain the doc only if
         # first(blocks).first_doc <= doc <= last(blocks).last_doc —
         # plain codegen struct-field access that drops the (vast)
         # majority of the chunk's vocabulary without shipping their
-        # heavy blocks bytes into Python. The UDF then re-checks
-        # per-block ranges and decodes at most one block per term.
+        # heavy blocks bytes into Python. The UDF then decodes the
+        # covering rows in one batched pass.
         covers = (
             (F.element_at(F.col("blocks"), 1)["first_doc"] <= target)
             & (F.element_at(F.col("blocks"), -1)["last_doc"] >= target)
@@ -1007,7 +1010,7 @@ class IndexReader:
             .where(F.size("blocks") > 0)
             .where(covers)
             .select("term", tf_of(F.col("blocks")).alias("tf"))
-            .where(F.col("tf").isNotNull())
+            .where(F.col("tf") > 0)
         )
 
     # ------------------------------------------------------------- search
@@ -1543,36 +1546,26 @@ class IndexReader:
         )
 
         def score_chunk_shared(pdf: pd.DataFrame) -> pd.DataFrame:
-            """One chunk, ALL queries: decode each term's blocks ONCE
-            into sparse (pos, contrib) arrays, then score queries one
-            at a time against two REUSED span buffers.
-
-            Memory shape: the decode pass holds O(postings-in-chunk)
-            — the same rows the Arrow batch already carries, in decoded
-            form — while the scoring pass holds exactly ONE scores +
-            counts span pair regardless of batch size. The obvious
-            alternative (a span pair per query, filled during the term
-            fan-out) is O(|queries| x chunk_span) per task — ~100 MB
-            transient per task slot at 500 registered queries — which
-            defeats the kernel's own many-queries purpose."""
-            base, dls = _chunk_of(pdf, span)
-            rows = [r for r in _kernel_rows(pdf) if r[0] in q_by_term]
-            parts_by_q: Dict[str, list] = {}
-            for part in kernel.contributions(rows, dls, base, avgdl):
-                for qid in q_by_term[part[0]]:
-                    parts_by_q.setdefault(qid, []).append(part)
-            dels = pdf["_dels"].iloc[0]
-            allow = pdf["_allow"].iloc[0] if "_allow" in pdf else None
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
+            """One chunk, ALL queries: decode the chunk's rows ONCE,
+            then score the queries one at a time over their own rows.
+            Each query holds only its postings and one span buffer,
+            freed before the next: a buffer per query would be
+            O(|queries| x chunk_span) per task — ~100 MB per task slot
+            at 500 registered queries."""
+            chunk, dls = _chunk_of(pdf)
+            rows = _kernel_rows(pdf[pdf["term"].isin(list(q_by_term))])
+            rows = rows.take(np.argsort(rows.terms, kind="stable"))
+            sel_by_q: Dict[str, List[int]] = {}
+            for r, t in enumerate(rows.terms):
+                for qid in q_by_term[t]:
+                    sel_by_q.setdefault(qid, []).append(r)
+            dels = {chunk: pdf["_dels"].iloc[0]}
+            allow = {chunk: pdf["_allow"].iloc[0]} if "_allow" in pdf else None
             outs = []
-            for qid in sorted(parts_by_q):
-                scores.fill(0.0)
-                counts.fill(0)
-                kernel.add(scores, counts, parts_by_q[qid])
-                ids, sc = kernel.finish(
-                    scores, counts, base, dels, allow,
-                    need[qid] if need else 0, k,
+            for qid in sorted(sel_by_q):
+                ids, sc = kernel.score(
+                    rows.take(np.asarray(sel_by_q[qid])), {chunk: dls},
+                    span, avgdl, dels, allow, need[qid] if need else 0, k,
                 )
                 outs.append(_hits_frame(ids, sc, qid))
             if not outs:
@@ -1600,53 +1593,39 @@ class IndexReader:
         ``_LOCAL_MAX_POSTINGS``) driver-side. The (term, bucket) pairs'
         postings rows are read with pyarrow from their bucket dirs
         (``build.read_postings_local``): no Spark job, only a doclens
-        scan for chunks not yet cached. Then the chunk kernel cuts each
-        chunk to its k best and one top-k merges them. A term's df is
+        scan for chunks not yet cached. The blocks decode in one
+        columnar pass (``codec.decode_column``); one kernel call scores
+        every touched chunk and cuts once. A term's df is
         the Σ ``n_docs`` of its rows — the integer its terms/ rows hold
         (terms/ aggregates postings), so idf is the lookup's. Returns
         None (caller falls back to the distributed plan) if the
         touched-chunk count would exceed the driver-memory gate."""
-        rows = read_postings_local(self.segments, term_buckets).to_pylist()
-        df_by_term: Dict[str, int] = {}
-        for r in rows:
-            t = r["term"]
-            df_by_term[t] = df_by_term.get(t, 0) + int(r["n_docs"])
-        if not rows or (
-            mode == AND_MATCH and len(df_by_term) < n_query_terms
-        ):
+        tbl = read_postings_local(self.segments, term_buckets)
+        if tbl.num_rows == 0:
             return self._no_hits()
-        n_docs = float(self.stats.n_docs)
-        idf_by_term = {
-            t: _idf(n_docs, float(df)) for t, df in df_by_term.items()
-        }
-        chunks = sorted({int(r["chunk"]) for r in rows})
+        # rows in term order (a stable sort, on UTF-8 bytes, so in Python's
+        # str order): the kernel gathers no postings, and the table is
+        # one chunk. A row's term rank keys the kernel's order and its df.
+        tbl = tbl.sort_by("term")
+        terms, rank = np.unique(tbl.column("term").to_numpy(), return_inverse=True)
+        if mode == AND_MATCH and terms.size < n_query_terms:
+            return self._no_hits()
+        df = np.zeros(terms.size, dtype=np.int64)
+        np.add.at(df, rank, tbl.column("n_docs").to_numpy())
+        idf = np.array([_idf(float(self.stats.n_docs), float(d)) for d in df.tolist()])
+        chunk = tbl.column("chunk").to_numpy()
+        chunks = np.unique(chunk).tolist()
         if len(chunks) > _LOCAL_MAX_CHUNKS:
             return None
-        dls_by_chunk = self._doclens_for(chunks)
-        dels_by_chunk = self._dels_for(chunks)
-        by_chunk: Dict[int, list] = {}
-        for r in rows:
-            by_chunk.setdefault(int(r["chunk"]), []).append(
-                (r["term"], idf_by_term[r["term"]], r["blocks"])
-            )
-        need = n_query_terms if mode == AND_MATCH else 0
-        hits = [
-            kernel.score(
-                by_chunk[c], dls_by_chunk[c], c * self.chunk_span,
-                self.stats.avgdl, dels_by_chunk.get(c), need=need, keep=k,
-            )
-            for c in chunks
-            if c in dls_by_chunk
-        ]
-        if not hits:
-            return self._no_hits()
-        return self._ranked_frame(
-            *kernel.topk(
-                np.concatenate([h[0] for h in hits]),
-                np.concatenate([h[1] for h in hits]),
-                k,
-            )
+        ids, scores = kernel.score(
+            kernel.Rows(
+                rank, idf[rank], chunk, *decode_column(tbl.column("blocks"))
+            ),
+            self._doclens_for(chunks), self.chunk_span, self.stats.avgdl,
+            self._dels_for(chunks),
+            need=n_query_terms if mode == AND_MATCH else 0, keep=k,
         )
+        return self._ranked_frame(*kernel.topk(ids, scores, k))
 
     def _ranked_frame(self, ids: np.ndarray, scores: np.ndarray) -> DataFrame:
         """(doc_id, score, rank) of hits already in rank order."""
@@ -1723,8 +1702,8 @@ class IndexReader:
         scan reads only those chunks, a broadcast per-chunk [lo, hi]
         bound drops non-covering vocabulary rows JVM-side before the
         Arrow decode (the same codegen prefilter as doc_terms), and the
-        decode UDF binary-searches each covering block once for ALL
-        targets that fall in its range. Tombstoned ids are dropped
+        decode UDF decodes each batch's rows in one pass and keeps the
+        targets' postings. Tombstoned ids are dropped
         up front. Volume is Σ (chunk vocab of the touched chunks),
         independent of how many target docs share a chunk."""
         ids = sorted({int(d) for d in doc_ids})
@@ -1759,35 +1738,18 @@ class IndexReader:
             )
             .select("term", "chunk", "blocks")
         )
-        tmap = {c: np.asarray(sorted(v), dtype=np.int64) for c, v in by_chunk.items()}
+        targets = np.asarray(ids, dtype=np.int64)
 
         def _decode(batches):
             for pdf in batches:
-                od, ot, ov = [], [], []
-                for term, chunk, blks in zip(
-                    pdf["term"], pdf["chunk"], pdf["blocks"]
-                ):
-                    tgts = tmap[int(chunk)]
-                    for b in blks:
-                        fd, ld = int(b["first_doc"]), int(b["last_doc"])
-                        i0 = int(np.searchsorted(tgts, fd))
-                        i1 = int(np.searchsorted(tgts, ld, side="right"))
-                        if i0 == i1:
-                            continue
-                        bids, btfs = decode_block(
-                            fd, bytes(b["deltas"]), bytes(b["tfs"])
-                        )
-                        pos = np.searchsorted(bids, tgts[i0:i1])
-                        for t_, p_ in zip(tgts[i0:i1], pos):
-                            if p_ < bids.size and bids[p_] == t_:
-                                od.append(int(t_))
-                                ot.append(term)
-                                ov.append(int(btfs[p_]))
+                doc_ids, tfs, offsets = decode_rows(pdf["blocks"])
+                hit = np.flatnonzero(np.isin(doc_ids, targets))
+                row = np.searchsorted(offsets, hit, side="right") - 1
                 yield pd.DataFrame(
                     {
-                        "doc_id": pd.Series(od, dtype="int64"),
-                        "term": pd.Series(ot, dtype="object"),
-                        "tf": pd.Series(ov, dtype="int32"),
+                        "doc_id": doc_ids[hit],
+                        "term": pdf["term"].to_numpy(dtype=object)[row],
+                        "tf": tfs[hit].astype(np.int32),
                     }
                 )
 
@@ -2007,19 +1969,19 @@ class IndexReader:
 
         def _decode(batches):
             for pdf in batches:
-                terms_out: List[str] = []
-                ids_out: List[np.ndarray] = []
-                for t, blocks in zip(pdf["term"], pdf["blocks"]):
-                    ids, _ = decode_blocks(blocks)
-                    ids_out.append(ids)
-                    terms_out.extend([t] * ids.size)
-                if ids_out:
-                    yield pd.DataFrame(
-                        {
-                            "term": pd.Series(terms_out, dtype="string"),
-                            "doc_id": np.concatenate(ids_out).astype("int64"),
-                        }
-                    )
+                ids, _, offsets = decode_rows(pdf["blocks"])
+                yield pd.DataFrame(
+                    {
+                        "term": pd.Series(
+                            np.repeat(
+                                pdf["term"].to_numpy(dtype=object),
+                                np.diff(offsets),
+                            ),
+                            dtype="string",
+                        ),
+                        "doc_id": ids,
+                    }
+                )
 
         decoded = post.mapInPandas(_decode, "term string, doc_id long")
         if mode == AND_MATCH:
@@ -2262,22 +2224,22 @@ class IndexReader:
         matched docs touch more chunks than the doclens cache bound (or
         a chunk is missing) — caller falls back to the distributed
         finish."""
-        span = self.chunk_span
-        chunk_arr = ids // span
-        chunks = sorted(set(chunk_arr.tolist()))
-        if len(chunks) > _PHRASE_LOCAL_MAX_CHUNKS:
+        order = np.argsort(ids)
+        ids, tfs = ids[order], tfs[order]
+        chunks, first = np.unique(ids // self.chunk_span, return_index=True)
+        if chunks.size > _PHRASE_LOCAL_MAX_CHUNKS:
             return None
-        dls_by_chunk = self._doclens_for(chunks)
-        if any(c not in dls_by_chunk for c in chunks):
+        dls_by_chunk = self._doclens_for(chunks.tolist())
+        if len(dls_by_chunk) < chunks.size:
             return None
-        dls = np.empty(ids.size, dtype=np.float64)
-        for c in chunks:
-            m = chunk_arr == c
-            dls[m] = dls_by_chunk[c][ids[m] - c * span]
         idf = _idf(float(self.stats.n_docs), float(ids.size))
-        return self._ranked_frame(
-            *kernel.rank_term(ids, tfs, dls, idf, self.stats.avgdl, k)
+        # the phrase is one pseudo-term: one kernel row per chunk
+        rows = kernel.Rows(
+            np.zeros(chunks.size), np.full(chunks.size, idf), chunks,
+            ids, tfs, np.append(first, ids.size),
         )
+        hits = kernel.score(rows, dls_by_chunk, self.chunk_span, self.stats.avgdl)
+        return self._ranked_frame(*kernel.topk(*hits, k))
 
     def search_phrase(
         self,

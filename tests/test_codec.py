@@ -167,3 +167,141 @@ def test_decode_blocks_edge_cases():
         for b in _block_structs(doc_ids, tf, 2)
     ]
     assert decode_blocks(blocks)[0].tolist() == doc_ids.tolist()
+
+
+def _varint_decode_loop(buf):
+    """The reference decoder: one masked pass per byte position over
+    every value (the codec's decoder before its fast paths)."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    if b.size == 0:
+        return np.empty(0, dtype=np.uint64)
+    ends = np.flatnonzero((b & 0x80) == 0)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    lengths = ends - starts + 1
+    vals = np.zeros(ends.size, dtype=np.uint64)
+    for j in range(int(lengths.max())):
+        mask = lengths > j
+        vals[mask] |= (b[starts[mask] + j] & np.uint64(0x7F)).astype(
+            np.uint64
+        ) << np.uint64(7 * j)
+    return vals
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.integers(min_value=0, max_value=127),
+            st.integers(min_value=0, max_value=2**64 - 1),
+        ),
+        min_size=1,
+        max_size=300,
+    ),
+    st.lists(st.integers(min_value=0x80, max_value=0xFF), max_size=3),
+)
+def test_varint_decode_equals_loop(vals, trailing):
+    """One-byte, mixed and 10-byte values, with and without trailing
+    continuation bytes (which both decoders ignore)."""
+    buf = varint_encode(np.array(vals, dtype=np.uint64)) + bytes(trailing)
+    got = varint_decode(buf)
+    assert got.dtype == np.uint64
+    assert np.array_equal(got, _varint_decode_loop(buf))
+    assert got.tolist() == vals
+
+
+def test_varint_decode_fast_path_cases():
+    for vals in ([0, 1, 127] * 50, [2**64 - 1, 0, 2**63, 127, 128]):
+        buf = varint_encode(np.array(vals, dtype=np.uint64))
+        assert varint_decode(buf).tolist() == vals
+        assert np.array_equal(varint_decode(buf), _varint_decode_loop(buf))
+    assert len(varint_encode(np.array([2**64 - 1], dtype=np.uint64))) == 10
+    # a uint8 view decodes like the bytes it views
+    buf = varint_encode(np.array([5, 300, 7], dtype=np.uint64))
+    assert varint_decode(np.frombuffer(buf, dtype=np.uint8)).tolist() == [5, 300, 7]
+    assert varint_decode(buf + b"\x80\x80").tolist() == [5, 300, 7]
+
+
+def _blocks_array(rows, block_size):
+    """Posting rows [(doc_ids, tfs)] -> the index's pyarrow ``blocks``
+    column, one list of block structs per row."""
+    import pyarrow as pa
+
+    from spark_search.build import _arrow_postings_schema
+
+    return pa.array(
+        [_block_structs(ids, tfs, block_size) for ids, tfs in rows],
+        type=_arrow_postings_schema().field("blocks").type,
+    )
+
+
+def _per_block(rows, block_size):
+    """The reference: every block of every row through decode_block,
+    concatenated, with each row's posting count."""
+    ids, tfs, counts = [], [], []
+    for r_ids, r_tfs in rows:
+        got = _concat_decode_block(_block_structs(r_ids, r_tfs, block_size))
+        ids.append(got[0])
+        tfs.append(got[1])
+        counts.append(got[0].size)
+    offsets = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    return np.concatenate(ids), np.concatenate(tfs), offsets
+
+
+_posting_rows = st.lists(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=2**40),  # multi-byte gaps
+            st.integers(min_value=1, max_value=2**20),  # multi-byte tfs
+        ),
+        min_size=1,
+        max_size=60,
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    _posting_rows,
+    st.integers(min_value=1, max_value=70),  # 1: many blocks; 70: one
+    st.data(),
+)
+def test_decode_column_equals_per_block_decode(rows, block_size, data):
+    """The columnar decoder equals concatenated per-block decode_block
+    on the Arrow column, on a slice of it with a non-zero offset, on a
+    ChunkedArray of several chunks (as several bucket files give) and,
+    through decode_rows, on the same rows as Python structs."""
+    import pyarrow as pa
+
+    from spark_search.codec import decode_column, decode_rows
+
+    rows = [
+        (np.cumsum([g for g, _ in r]), np.array([t for _, t in r]))
+        for r in rows
+    ]
+    arr = _blocks_array(rows, block_size)
+    lo = data.draw(st.integers(min_value=0, max_value=len(rows) - 1))
+    hi = data.draw(st.integers(min_value=lo, max_value=len(rows)))
+    cut = data.draw(st.integers(min_value=lo, max_value=hi))
+    cases = [
+        (arr, rows),
+        (arr.slice(lo, hi - lo), rows[lo:hi]),
+        (pa.chunked_array([arr.slice(lo, cut - lo), arr.slice(cut, hi - cut),
+                           arr.slice(0, lo)]), rows[lo:hi] + rows[:lo]),
+    ]
+    for col, want_rows in cases:
+        got = decode_column(col)
+        if not want_rows:
+            assert [g.size for g in got] == [0, 0, 1]
+            continue
+        want = _per_block(want_rows, block_size)
+        assert [g.dtype for g in got] == [np.int64] * 3
+        for g, w in zip(got, want):
+            assert np.array_equal(g, w)
+    structs = [_block_structs(i, t, block_size) for i, t in rows]
+    for g, w in zip(decode_rows(structs), _per_block(rows, block_size)):
+        assert np.array_equal(g, w)

@@ -94,6 +94,37 @@ def test_empty_frame_is_typed(spark):
     ]
 
 
+def test_result_fields_struct_type_is_pinned(spark):
+    """The result frame's full schema, nullability included: literal
+    rows give non-null columns, a NULL, NaN or ±Infinity cell makes its
+    column nullable, and the empty frame's columns are nullable."""
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, LongType, StructField, StructType,
+    )
+
+    from spark_search.frames import RESULT_FIELDS
+
+    def struct(*nullable):
+        return StructType([
+            StructField(n, t, null) for (n, t), null in zip(
+                [("doc_id", LongType()), ("score", DoubleType()),
+                 ("rank", IntegerType())],
+                nullable,
+            )
+        ])
+
+    for rows, want in [
+        ([(7, 0.7654057669503643, 1), (3, 0.25, 2)], struct(False, False, False)),
+        ([(7, float("nan"), 1)], struct(False, True, False)),
+        ([(7, float("-inf"), 1), (2**62, 0.5, None)], struct(False, True, True)),
+        ([(None, 1.0, 1)], struct(True, False, False)),
+        ([], struct(True, True, True)),
+    ]:
+        df = literal_frame(spark, rows, RESULT_FIELDS)
+        assert df.schema == want, rows
+        assert len(df.collect()) == len(rows)
+
+
 def test_collect_launches_zero_jobs(spark, jobs_of):
     fields = [("doc_id", "long"), ("score", "double"), ("q", "string")]
     rows = [(i, i / 7.0, f"t{i}") for i in range(50)]
