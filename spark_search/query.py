@@ -22,7 +22,10 @@ Query lifecycle (SURVEY.md §3.1 Spark plan):
   pass decodes every matched block from the Arrow buffers
   (``codec.decode_column``) and scores all touched chunks in one span
   buffer with one tie-kept cut, bit-identical to the other paths
-  (``kernel.py`` says why). Past the
+  (``kernel.py`` says why). The result frame holds its (doc_id, score,
+  rank) rows on the driver (``frames.literal_frame``) and answers
+  ``collect``, ``limit`` and ``schema`` from them, so collecting a warm
+  local query's result sends nothing to the JVM. Past the
   full-dictionary cap an exact/OR/AND query skips the lookup: the
   cached df ≥ T dictionary head bounds its Σ df and
   ``build.bucket_of`` routes its terms (``_DICT_CACHE_CAP``). A warm
@@ -54,7 +57,10 @@ Query lifecycle (SURVEY.md §3.1 Spark plan):
      no per-row Python), emitting ≤k local winners per chunk. Every
      scoring path — this one, the driver-local path and
      ``search_many`` — runs the one chunk kernel in ``kernel.py``
-  5. global TakeOrderedAndProject -> (doc_id, score, rank)
+  5. global TakeOrderedAndProject, collected -> (doc_id, score, rank)
+     rows held on the driver by ``frames.literal_frame``; its
+     ``LocalRelation`` is built only if the caller uses the result as a
+     Spark input (a join, union, ``orderBy``, ``count`` …)
 
 Scale: every stage's volume is bounded by (query terms × matched
 chunks), never by corpus size; the only exchange after the scan is the
@@ -1017,7 +1023,9 @@ class IndexReader:
 
     def _no_hits(self, fields=RESULT_FIELDS) -> DataFrame:
         """Typed zero-row result — built at the ``return`` that needs
-        it, a zero-job LocalRelation."""
+        it. It holds no rows on the driver, so ``collect``, ``limit``
+        and ``schema`` cost no JVM call; its zero-job ``LocalRelation``
+        is built only on first JVM use."""
         return literal_frame(self.spark, [], fields)
 
     def search(

@@ -37,6 +37,19 @@ def fixture_corpus(spark):
     return df
 
 
+@pytest.fixture(scope="session")
+def fixture_index(spark, fixture_corpus, tmp_path_factory):
+    """An ``IndexReader`` over the fixture corpus's index (4 buckets,
+    chunks of 2 docs, blocks of 2 postings). Tests only read it."""
+    from spark_search.build import build_index
+    from spark_search.query import IndexReader
+
+    d = str(tmp_path_factory.mktemp("idx") / "fixture_index")
+    build_index(spark, fixture_corpus, d, num_buckets=4, chunk_span=2,
+                block_size=2)
+    return IndexReader(spark, d)
+
+
 @pytest.fixture
 def job_stages_of(spark):
     """``job_stages_of(fn)`` -> (fn's result, [stage count of each

@@ -7,6 +7,7 @@ pure-Python oracle, the reference's random-word property test
 resume-from-checkpoint, and build determinism across input partitioning.
 """
 
+import gc
 import os
 
 import pytest
@@ -35,14 +36,6 @@ def _assert_topk_matches(res_df, oracle_topk):
     for (gd, gs), (od, os_) in zip(got, oracle_topk):
         assert gd == od
         assert gs == pytest.approx(os_, rel=REL)
-
-
-@pytest.fixture(scope="module")
-def fixture_index(spark, fixture_corpus, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("idx") / "fixture_index")
-    build_index(spark, fixture_corpus, d, num_buckets=4, chunk_span=2,
-                block_size=2)
-    return IndexReader(spark, d)
 
 
 @pytest.fixture(scope="module")
@@ -221,6 +214,57 @@ def test_local_path_job_counts(synth_index, jobs_of):
         ).collect()
     )
     assert rows == [] and n_jobs == 0
+
+
+def test_warm_local_search_sends_no_py4j_command(
+    spark, synth_index, spark_jobs_of, monkeypatch
+):
+    """A warm driver-local search and the collect of its result frame
+    never cross into the JVM: the rows are read with pyarrow, scored on
+    the driver, and the result frame answers ``collect`` from the rows
+    it holds. Counted at py4j's one send point; the distributed plan
+    (``local_max_postings=0``) shows the counter sees JVM calls."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(*a, **kw):
+        sent.append(a[0][:40] if a and isinstance(a[0], str) else a)
+        return send(*a, **kw)
+
+    def commands_of(fn):
+        # py4j releases a proxy's JVM object when Python frees the
+        # proxy; collect the garbage of earlier work first and hold the
+        # collector off, so every command counted is fn's own
+        gc.collect()
+        gc.disable()
+        sent.clear()
+        monkeypatch.setattr(client, "send_command", counting)
+        try:
+            out = fn()
+        finally:
+            monkeypatch.setattr(client, "send_command", send)
+            gc.enable()
+        return out, len(sent)
+
+    for terms, mode in [
+        (["import"], P.EXACT_MATCH),
+        (["import", "return", "def"], P.WITH_SUGGESTIONS),
+        (["import", "return"], P.AND_MATCH),
+        (["nosuchterm", "zzqq"], P.WITH_SUGGESTIONS),
+    ]:
+        warm = synth_index.search(terms, mode, k=10).collect()
+        (rows, n_cmds), n_jobs = spark_jobs_of(lambda: commands_of(
+            lambda: synth_index.search(terms, mode, k=10).collect()
+        ))
+        assert (n_cmds, n_jobs) == (0, 0), (terms, mode, sent)
+        assert rows == warm and bool(rows) == (terms[0] != "nosuchterm")
+    rows, n_cmds = commands_of(lambda: synth_index.search(
+        ["import"], P.EXACT_MATCH, k=10, local_max_postings=0
+    ).collect())
+    assert n_cmds > 0 and rows == synth_index.search(
+        ["import"], P.EXACT_MATCH, k=10
+    ).collect()
 
 
 def test_negative_k_raises_before_any_job(spark, synth, synth_index, jobs_of):
